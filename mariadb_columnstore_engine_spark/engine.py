@@ -2346,7 +2346,7 @@ class Engine:
         import pyspark.sql.functions as F
 
         from mariadb_columnstore_engine_spark import statements as st
-        from mariadb_columnstore_engine_spark.sources import dml
+        from mariadb_columnstore_engine_spark.sources import dml, manifest
 
         def tsql(text: str) -> str:
             """Dialect-translate an expression fragment (a SET/WHERE/
@@ -2955,6 +2955,7 @@ class Engine:
                 ):
                     if info.get("db") == parsed.arg:
                         _shutil.rmtree(info["path"], ignore_errors=True)
+                        manifest.forget(info["path"])
                         self.spark.catalog.dropTempView(tn)
                         del self._user_tables[tn]
                 _shutil.rmtree(
@@ -3120,6 +3121,7 @@ class Engine:
                         "supported (snapshots reference the directory)"
                     )
                 shutil.rmtree(info["path"], ignore_errors=True)
+                manifest.forget(info["path"])
                 del self._user_tables[parsed.arg]
                 self.spark.catalog.dropTempView(parsed.arg)
                 return None
@@ -3443,11 +3445,13 @@ class Engine:
                     ]
                 )
                 validate_checks(out, table_checks(path))
+                before = manifest.state(self.spark, path)
                 strip_collations(out).write.mode("append").parquet(path)
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
+            n = manifest.record(self.spark, path, before).rows
             self._refresh(parsed.table)
-            return self.spark.read.parquet(path).count()
+            return n
 
         info = self._writable(parsed.table)
         path = info["path"]
@@ -3457,6 +3461,10 @@ class Engine:
             )
 
             src = self.sql(parsed.source_sql, dialect=dialect)
+            local_src = (
+                src._jdf.queryExecution().analyzed().getClass()
+                .getSimpleName() == "LocalRelation"
+            )
             # logical schema (through the evolution sidecar), not the
             # physical file schema — else an instant-ALTER-added column
             # named in the INSERT would be silently dropped
@@ -3630,8 +3638,14 @@ class Engine:
                     strip_collations,
                 )
 
-                strip_collations(out).write.mode("append").parquet(path)
-                n = self.spark.read.parquet(path).count()
+                written = strip_collations(out)
+                if local_src:
+                    # a VALUES list is a LocalRelation split across up
+                    # to nproc slices: one file, not one per row
+                    written = written.coalesce(1)
+                before = manifest.state(self.spark, path)
+                written.write.mode("append").parquet(path)
+                n = manifest.record(self.spark, path, before).rows
             if ai:
                 # counter = table max + 1 (covers both assigned and
                 # explicit values; parquet footer stats make the max a
@@ -3641,7 +3655,10 @@ class Engine:
                 )
 
                 mx = (
-                    self.spark.read.parquet(path)
+                    self.spark.read.schema(
+                        manifest.state(self.spark, path).schema
+                    )
+                    .parquet(path)
                     .agg(F.max(ai["column"]))
                     .first()[0]
                 )

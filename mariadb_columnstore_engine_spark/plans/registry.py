@@ -80,7 +80,9 @@ def _cached_plan(name: str, fn):
     DML, no engine session state) take this path. ``MCS_PLAN_CACHE=0``
     disables it process-wide — tests/conftest.py sets it so plan-shape
     tests that monkeypatch builder internals keep building fresh
-    plans.
+    plans. A session whose first hit cannot be wrapped (no classic JVM
+    surface) is marked ``_mcs_plan_cache_unusable`` and bypasses the
+    memo from then on.
 
     A hit returns a FRESH Dataset over the cached ANALYZED logical
     plan (Dataset.ofRows), never the memoized DataFrame object itself:
@@ -109,7 +111,9 @@ def _cached_plan(name: str, fn):
             return None
 
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        if os.environ.get("MCS_PLAN_CACHE", "1") == "0":
+        if os.environ.get("MCS_PLAN_CACHE", "1") == "0" or getattr(
+            spark, "_mcs_plan_cache_unusable", False
+        ):
             return fn(spark, sf_dir)
         fp = _fixture_fingerprint(sf_dir)
         if fp is None:
@@ -136,7 +140,14 @@ def _cached_plan(name: str, fn):
             fresh = _fresh(spark, hit[1])
             if fresh is not None:
                 return fresh
-            return fn(spark, sf_dir)  # cannot wrap → rebuild honestly
+            # cannot wrap → rebuild honestly, and stop paying the
+            # fingerprint scan for hits this session can never use
+            cache.clear()
+            try:
+                spark._mcs_plan_cache_unusable = True
+            except AttributeError:  # frozen session wrapper
+                pass
+            return fn(spark, sf_dir)
         df = fn(spark, sf_dir)
         nanos = (
             spark.conf.get(

@@ -10,6 +10,18 @@ swap is a directory rename (atomic on a single POSIX filesystem; on
 object stores you would layer a table format for the commit protocol —
 the transform logic is unchanged).
 
+Table state comes from the manifest (``sources.manifest``), the extent
+map analogue: the rewrite reads through ``read_table_evolved`` with the
+recorded physical schema (no schema-merge job), and after the swap it
+records the new file set from the footers it just wrote — their row
+counts give the statement's return value and their Spark schema the
+table's next read schema, so a DELETE or UPDATE runs one Spark job, the
+write. Every manifest use checks the recorded file set against a
+listing of the directory; anything else that changes the directory
+(another process, compaction, ROLLBACK) makes the next use rebuild the
+state with one ``mergeSchema`` read, so correctness never depends on a
+writer remembering to record.
+
 Scale notes: the rewrite is a full scan + write of affected data only if
 you partition wisely — pass ``partition_filter`` to rewrite only the
 hive partitions that can contain matches (partition pruning bounds the
@@ -23,6 +35,8 @@ import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
+
+from mariadb_columnstore_engine_spark.sources import manifest
 
 
 def _as_bool(predicate: Column) -> Column:
@@ -41,7 +55,8 @@ def _as_bool(predicate: Column) -> Column:
 def _rewrite(spark: SparkSession, path: str,
              transform, partition_filter: Column | None,
              alias: str | None = None) -> int:
-    """Common copy-on-write machinery; returns the new row count.
+    """Common copy-on-write machinery; returns the new visible row count
+    (the written files' footer row counts, disabled partitions aside).
 
     Reads through the schema-evolution sidecar (read_table_evolved), so
     transforms see the LOGICAL schema — instant-ALTER-added and generated
@@ -99,7 +114,6 @@ def _rewrite(spark: SparkSession, path: str,
 
     out = strip_collations(out)
     out.write.parquet(tmp)
-    n = spark.read.parquet(tmp).count()  # visible rows (pre-carry)
     # disabled partitions are invisible to queries AND to DML (the
     # reference blocks DML/import on them) — read_table_evolved excluded
     # their files above, so carry them through the swap byte-wise or the
@@ -154,7 +168,7 @@ def _rewrite(spark: SparkSession, path: str,
         _write_evolution(path, surviving)
     # the swapped directory invalidates any cached file listing
     spark.catalog.clearCache()
-    return n
+    return manifest.record(spark, path).live_rows
 
 
 def delete_where(spark: SparkSession, path: str, predicate: Column,

@@ -451,53 +451,34 @@ def _live_data_files(path: str, disabled: set[str]) -> list[str]:
     analogue of ha_mcs_partition.cpp's partition ids)."""
     import os
 
-    files: list[str] = []
-    for root, _dirs, fnames in os.walk(path):
-        for fn in sorted(fnames):
-            if (
-                fn.endswith((".parquet", ".orc"))
-                and not fn.startswith("_")
-                and fn not in disabled
-            ):
-                files.append(os.path.join(root, fn))
-    return files
+    from mariadb_columnstore_engine_spark.sources.manifest import _listing
+
+    return [
+        os.path.join(path, rel) for rel in _listing(path)
+        if os.path.basename(rel) not in disabled
+    ]
 
 
 def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Read a table through its evolution sidecar: mergeSchema unions
-    old and new file schemas, added columns get their declared default
-    where files predate them, dropped columns are projected away.
-    Disabled partitions (caldisablepartitions analogue) are excluded at
-    the FILE level — their extents are never opened, exactly the
-    reference's extent-elimination of disabled partitions."""
+    """Read a table through its evolution sidecar: added columns get
+    their declared default where files predate them, dropped columns
+    are projected away, renames/retypes/generated columns/collations
+    apply on read. Disabled partitions (caldisablepartitions analogue)
+    are excluded at the FILE level — their extents are never opened,
+    exactly the reference's extent-elimination of disabled partitions.
+
+    The physical schema comes from the table manifest
+    (``sources.manifest``), not from the files: a read is a listing of
+    the directory checked against the recorded file set, then
+    ``spark.read.schema(...)`` — no schema-merge job. When the listing
+    does not match (another writer, a swapped directory, a first read)
+    the manifest rebuilds with one ``mergeSchema`` read first."""
     import pyspark.sql.functions as F
 
+    from mariadb_columnstore_engine_spark.sources import manifest
+
     evo = _evolution(path)
-    disabled = set(evo.get("disabled_partitions", []))
-    if disabled:
-        live = _live_data_files(path, disabled)
-        reader = (
-            spark.read.option("mergeSchema", "true")
-            # basePath keeps hive partition-directory columns resolvable
-            # when reading an explicit file list
-            .option("basePath", path)
-        )
-        if live:
-            df = reader.parquet(*live)
-        else:
-            # every partition disabled: empty relation, full schema
-            df = (
-                spark.read.option("mergeSchema", "true")
-                .option("recursiveFileLookup", "false")
-                .parquet(path)
-                .limit(0)
-            )
-    else:
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .option("recursiveFileLookup", "false")
-            .parquet(path)
-        )
+    df = manifest.read(spark, path)
     for c in evo["added"]:
         if c["name"] not in df.columns:
             df = df.withColumn(
@@ -512,9 +493,20 @@ def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
             )
     # instant renames/retypes: metadata-only on write, projections on
     # read, in ALTER order (a later rename may target an earlier one's
-    # result)
+    # result). Files written after a rename carry the new name, older
+    # ones the old: each row has one of the two, so they coalesce at
+    # whichever position the merged file schema put first.
     for r in evo.get("renamed", []):
-        df = df.withColumnRenamed(r["from"], r["to"])
+        pair = (r["from"], r["to"])
+        if all(c in df.columns for c in pair):
+            first = min(pair, key=df.columns.index)
+            df = df.select(*[
+                F.coalesce(*map(F.col, pair)).alias(r["to"])
+                if c == first else F.col(c)
+                for c in df.columns if c not in pair or c == first
+            ])
+        else:
+            df = df.withColumnRenamed(r["from"], r["to"])
     for r in evo.get("retyped", []):
         df = df.withColumn(r["name"], F.col(r["name"]).cast(r["dtype"]))
     for c in evo.get("generated", []):

@@ -18,10 +18,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Plan-shape tests monkeypatch builder internals (verify-join hints,
 # barrier devices) and must see a FRESH build every call — disable the
-# registry's session-scoped built-plan memo for the whole suite. The
-# memo itself has its own focused test (test_registry_plan_cache.py,
-# which re-enables it locally).
-os.environ.setdefault("MCS_PLAN_CACHE", "0")
+# registry's session-scoped built-plan memo for the whole suite, even
+# when the calling shell exported MCS_PLAN_CACHE=1. The memo itself has
+# its own focused test (test_registry_plan_cache.py, which re-enables
+# it locally).
+os.environ["MCS_PLAN_CACHE"] = "0"
 
 
 @pytest.fixture(scope="session")

@@ -11,11 +11,14 @@ with results.
 
 from __future__ import annotations
 
+import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 
-from mariadb_columnstore_engine_spark.plans import load_all
+from mariadb_columnstore_engine_spark.plans import load_all, registry
 from mariadb_columnstore_engine_spark.plans.registry import (
     _fixture_fingerprint,
 )
@@ -32,6 +35,8 @@ def plan_cache_on(monkeypatch, spark):
     yield
     if hasattr(spark, "_mcs_query_plan_cache"):
         spark._mcs_query_plan_cache.clear()
+    if hasattr(spark, "_mcs_plan_cache_unusable"):
+        del spark._mcs_plan_cache_unusable
 
 
 def test_cache_hit_returns_fresh_wrap_over_same_plan(
@@ -115,3 +120,46 @@ def test_events_nanos_conf_reasserted_on_hit(spark, sf_dir, plan_cache_on):
     )
     # and the cached plan still executes
     assert df2.limit(1).collect() is not None
+
+
+def test_suite_runs_with_plan_cache_off():
+    assert os.environ["MCS_PLAN_CACHE"] == "0"
+
+
+def test_suite_turns_plan_cache_off_even_when_inherited():
+    """conftest must force the memo off, not merely default it: a shell
+    that exported MCS_PLAN_CACHE=1 would otherwise hand plan-shape tests
+    memoized plans."""
+    here = os.path.abspath(__file__)
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
+         f"{here}::test_suite_runs_with_plan_cache_off"],
+        cwd=os.path.dirname(os.path.dirname(here)),
+        env=dict(os.environ, MCS_PLAN_CACHE="1"),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+
+
+def test_fresh_failure_bypasses_memo_for_the_session(
+    spark, sf_dir, plan_cache_on, monkeypatch
+):
+    """Once a hit cannot be wrapped in a fresh Dataset, the session's
+    memo is unusable: later builds go straight to the builder instead
+    of paying the fingerprint scan for a hit they cannot use."""
+    name = "tpch_q6_forecast_revenue"
+    fn = SPECS[name].fn
+    fn(spark, sf_dir)
+    cache = spark._mcs_query_plan_cache
+    key = next(k for k in cache if k[0] == name)
+    fp, _df, nanos = cache[key]
+    cache[key] = (fp, object(), nanos)  # no JVM plan to wrap
+    assert fn(spark, sf_dir) is not None
+    assert spark._mcs_plan_cache_unusable is True
+    scans = []
+    monkeypatch.setattr(
+        registry, "_fixture_fingerprint",
+        lambda d: scans.append(d) or _fixture_fingerprint(d),
+    )
+    assert fn(spark, sf_dir) is not None
+    assert scans == []
