@@ -226,14 +226,17 @@ def _rewrite_group_concat(masked: str, store: list[str]) -> str:
                 + ")"
             )
         out.append(masked[i : m.start()])
-        if limit is None:
+        if limit is None and not (distinct and order_key is not None):
             out.append(f"listagg({distinct}{inner}, {sep}){order}")
         else:
             # GROUP_CONCAT(... LIMIT n) — MariaDB 10.6 extension
             # (dbcon/joblist/groupconcat.cpp's limit): first n of the
-            # ordered (deduped) list, spelled as the same collect →
-            # sort → [distinct] → slice pipeline dialect.group_concat
-            # builds (listagg has no limit in any dialect)
+            # ordered (deduped) list — and DISTINCT with ORDER BY,
+            # which listagg rejects for non-string input (it casts its
+            # input to string, which then no longer matches the order
+            # key: MISMATCH_WITH_DISTINCT_INPUT). Both are spelled as
+            # the collect → sort → [distinct] → [slice] pipeline
+            # dialect.group_concat builds.
             if order_key is None:
                 coll = (
                     f"collect_set({inner})" if distinct
@@ -243,7 +246,8 @@ def _rewrite_group_concat(masked: str, store: list[str]) -> str:
             else:
                 if _top_level_search(r",", order_key):
                     raise ValueError(
-                        "GROUP_CONCAT LIMIT supports one ORDER BY key"
+                        "GROUP_CONCAT with LIMIT or DISTINCT supports"
+                        " one ORDER BY key"
                     )
                 asc = "true" if order_asc else "false"
                 vals = (
@@ -253,9 +257,19 @@ def _rewrite_group_concat(masked: str, store: list[str]) -> str:
                 )
                 if distinct:
                     vals = f"array_distinct({vals})"
-            out.append(
-                f"array_join(slice({vals}, 1, {limit}), {sep})"
-            )
+            if limit is not None:
+                out.append(
+                    f"array_join(slice({vals}, 1, {limit}), {sep})"
+                )
+            else:
+                # fold the non-NULL values from a NULL start, so a
+                # group of only NULLs stays NULL, as in listagg
+                out.append(
+                    f"aggregate(array_compact({vals}),"
+                    " CAST(NULL AS STRING),"
+                    f" (acc, s) -> concat_ws({sep}, acc,"
+                    " CAST(s AS STRING)))"
+                )
         i = end
     return "".join(out)
 
@@ -1974,10 +1988,13 @@ def translate_statement(
         # shadowing guard: any `AS <name>` alias target in the statement
         # may redefine <name> with non-catalog semantics — drop those
         # names from the fast-path set (conservative: table aliases and
-        # unrelated column aliases only disable an optimization)
+        # unrelated column aliases only disable an optimization).
+        # Quoted aliases (`x`, 'x') are mask placeholders: resolve them.
         shadowed = {
-            m.group(1).lower()
-            for m in re.finditer(r"\bAS\s+`?(\w+)`?", masked, re.IGNORECASE)
+            (m.group(1) or store[int(m.group(2))].strip("`'\"")).lower()
+            for m in re.finditer(
+                r"\bAS\s+(?:(\w+)|\x00(\d+)\x00)", masked, re.IGNORECASE
+            )
         }
         if shadowed & numeric_columns:
             numeric_columns = numeric_columns - frozenset(shadowed)

@@ -64,7 +64,8 @@ def _fixture_fingerprint(sf_dir: str):
 
 def _cached_plan(name: str, fn):
     """Session-scoped memo of the BUILT (lazy, analyzed) DataFrame per
-    (query, sf_dir, fixture fingerprint) — VERDICT r12 #7.
+    (query, sf_dir, shuffle partitions, fixture fingerprint) — VERDICT
+    r12 #7.
 
     This is plan reuse, not result caching: the DataFrame holds no
     rows; every action still scans the parquet inputs. It is the
@@ -118,7 +119,14 @@ def _cached_plan(name: str, fn):
         fp = _fixture_fingerprint(sf_dir)
         if fp is None:
             return fn(spark, sf_dir)
-        key = (name, sf_dir.rstrip("/"))
+        # the shuffle partition count is the one runtime-settable
+        # input a build reads besides the fixtures (minhash's
+        # verify-join hint sizes its builds by it; heap, cores and
+        # memory.fraction are fixed per JVM)
+        key = (
+            name, sf_dir.rstrip("/"),
+            spark.conf.get("spark.sql.shuffle.partitions"),
+        )
         try:
             cache = spark._mcs_query_plan_cache
         except AttributeError:

@@ -77,6 +77,21 @@ ENGINE_CONF: dict[str, str] = {
     "spark.ui.retainedJobs": "100",
     "spark.ui.retainedStages": "100",
     "spark.ui.retainedTasks": "1000",
+    # Compile once, run many (the reference compiles a statement into a
+    # JobList once; PrimProc then runs precompiled block primitives).
+    # Whole-stage codegen classes live in one JVM-wide cache of 100
+    # entries by default, far below a long-lived engine's repertoire:
+    # the 11 olap_headline queries compile 203 classes, the whole
+    # 213-query registry 2,104. A recurring workload cycles through
+    # more than 100 classes, so each is evicted before its next use and
+    # every pass recompiled 136-186 classes in Janino (~10 ms each) and
+    # ran them interpreted until the JIT warmed up again (sf0.1,
+    # local[4]). 4096 holds the whole registry twice over, with room
+    # for the 2 single-use classes each DML statement compiles (Spark
+    # inlines primitive literals into generated code). Cost: about
+    # +14 MB metaspace and +10 MB JIT code heap. Launch-time conf;
+    # only effective on the process's first session.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # JDK-17 G1 GCLocker workaround: a large allocation (e.g. a 128 MB
     # broadcast-build array) retries only twice by default while JNI
     # critical sections (Arrow/Parquet native buffers) hold the GCLocker,

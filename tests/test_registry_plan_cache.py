@@ -4,9 +4,11 @@
 The suite-wide default is MCS_PLAN_CACHE=0 (conftest) so plan-shape
 tests that monkeypatch builder internals always build fresh; these
 tests re-enable the memo locally via monkeypatch.setenv and pin its
-contract: hit on identical (query, sf_dir, fixture fingerprint),
-rebuild on fixture rewrite, rebuild when disabled, no interference
-with results.
+contract: hit on identical (query, sf_dir, shuffle partitions, fixture
+fingerprint), rebuild on fixture rewrite, rebuild when disabled, no
+interference with results. The last test pins the other half of
+"compile once, run many": repeated executions reuse Spark's generated
+code.
 """
 
 from __future__ import annotations
@@ -163,3 +165,76 @@ def test_fresh_failure_bypasses_memo_for_the_session(
     )
     assert fn(spark, sf_dir) is not None
     assert scans == []
+
+
+def test_partition_change_rebuilds_verify_hint(
+    spark, sf_dir, plan_cache_on, monkeypatch
+):
+    """minhash's verify-join hint reads spark.sql.shuffle.partitions at
+    build time; a memo hit must not keep the hint chosen under another
+    partition count."""
+    from mariadb_columnstore_engine_spark.plans import text_plans
+
+    monkeypatch.setattr(
+        text_plans, "_choose_verify_hint",
+        lambda _raw, _heap, _frac, _cores, parts:
+            "merge" if parts > 8 else "shuffle_hash",
+    )
+    fn = SPECS["text_minhash_lsh_dedup"].fn
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+
+    def analyzed_plan() -> str:
+        plan = fn(spark, sf_dir)._jdf.queryExecution().analyzed()
+        return plan.toString()
+
+    try:
+        spark.conf.set(conf, "8")
+        assert "strategy=shuffle_hash" in analyzed_plan()
+        spark.conf.set(conf, "16")
+        assert "strategy=merge" in analyzed_plan()
+    finally:
+        spark.conf.set(conf, saved)
+
+
+def _codegen_cache(spark):
+    """Spark's JVM-wide whole-stage codegen class cache (private)."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    return field.get(None)
+
+
+def test_generated_code_survives_repeated_bench_passes(
+    spark, sf_dir, plan_cache_on
+):
+    """Compile once, run many: a second pass over the bench queries
+    must reuse every generated class instead of recompiling it.
+
+    Their working set (~200 classes) exceeds Spark's default 100-entry
+    codegen cache, so a cyclic pass evicts each class before its next
+    use. The cache is emptied first so the first pass really compiles
+    the whole working set, whatever ran earlier in the session. The
+    plan memo is on, as in perfbench: minhash's ``rand()`` draws a new
+    seed per fresh build and Spark inlines it into generated code."""
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    specs = [s for s in SPECS.values() if s.bench]
+    assert len(specs) == 11
+    _codegen_cache(spark).invalidateAll()
+    per_pass = []
+    for _ in range(2):
+        before = compiled.getCount()
+        for spec in specs:
+            df = spec.fn(spark, sf_dir)
+            if spec.sink == "noop":
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.collect()
+        per_pass.append(compiled.getCount() - before)
+    assert per_pass[0] > 100, per_pass  # the working set outgrows 100
+    assert per_pass[1] == 0, per_pass

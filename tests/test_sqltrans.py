@@ -58,8 +58,10 @@ def test_group_concat_full_form():
             "SELECT GROUP_CONCAT(DISTINCT n_name ORDER BY n_name DESC"
             " SEPARATOR '|') FROM nation"
         )
-        == "SELECT listagg(DISTINCT n_name, '|')"
-        " WITHIN GROUP (ORDER BY n_name DESC) FROM nation"
+        == "SELECT aggregate(array_compact(array_distinct(transform("
+        "sort_array(collect_list(struct((n_name) AS k, (n_name) AS v)),"
+        " false), s -> s.v))), CAST(NULL AS STRING),"
+        " (acc, s) -> concat_ws('|', acc, CAST(s AS STRING))) FROM nation"
     )
 
 
@@ -1665,3 +1667,27 @@ def test_format_stringish_arg(spark):
         " format('12345.678', 2) b, format(9876.5, 1) c"
     )).collect()[0]
     assert (r.a, r.b, r.c) == ("1,234,567", "12,345.68", "9,876.5")
+
+
+def test_group_concat_distinct_ordered_numeric_executes(spark):
+    # listagg casts its input to string, so DISTINCT x with ORDER BY x
+    # raised MISMATCH_WITH_DISTINCT_INPUT for numeric x; the collect →
+    # sort → array_distinct pipeline dedups the typed values instead
+    df = spark.createDataFrame(
+        [("g", 3), ("g", 10), ("g", 3), ("g", None), ("g", 2),
+         ("n", None), ("n", None)],
+        "g string, x int",
+    )
+    df.createOrReplaceTempView("_gc_dist_num")
+    rows = spark.sql(
+        translate_statement(
+            "SELECT g,"
+            " GROUP_CONCAT(DISTINCT x ORDER BY x) AS up,"
+            " GROUP_CONCAT(DISTINCT x ORDER BY x DESC SEPARATOR '|')"
+            "   AS down"
+            " FROM _gc_dist_num GROUP BY g ORDER BY g"
+        )
+    ).collect()
+    assert (rows[0].up, rows[0].down) == ("2,3,10", "10|3|2")
+    # a group whose values are all NULL stays NULL, as with listagg
+    assert (rows[1].up, rows[1].down) == (None, None)

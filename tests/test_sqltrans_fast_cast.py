@@ -250,6 +250,14 @@ def test_alias_shadowing_disables_fast_path(spark):
     shadowed = translate_statement(stmt, numeric_columns=frozenset({"x"}))
     plain = translate_statement(stmt)
     assert shadowed == plain, "shadowed name must not take the fast path"
+    # a backtick-quoted alias is masked text; it shadows just the same
+    stmt_bt = (
+        "SELECT CAST(x AS SIGNED) AS v FROM "
+        "(SELECT '12abc' AS `X` FROM t) d"
+    )
+    assert translate_statement(
+        stmt_bt, numeric_columns=frozenset({"x"})
+    ) == translate_statement(stmt_bt), "backtick alias must shadow too"
     # an alias that does NOT shadow the operand leaves the fast path on
     stmt2 = "SELECT CAST(x AS SIGNED) AS v FROM t"
     assert translate_statement(
