@@ -17,14 +17,22 @@ and ingest/DML helpers (sources/).
 from __future__ import annotations
 
 import logging
+import os
+import re
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG = logging.getLogger(__name__)
 
+# statements.parse and sources.dml.* resolve through their modules at
+# call time, so a wrapper installed on the module attribute sees every
+# call (perfbench/tracing.py relies on this)
+from mariadb_columnstore_engine_spark import statements as st
 from mariadb_columnstore_engine_spark.catalog import TABLES, Catalog
 from mariadb_columnstore_engine_spark.functions.udf import register_all
 from mariadb_columnstore_engine_spark.session import get_session
+from mariadb_columnstore_engine_spark.sources import dml, manifest
 
 # Stored-SQL-function bookkeeping, keyed on the SparkSession: the
 # TEMPORARY FUNCTIONs themselves live on the shared session, so their
@@ -39,6 +47,21 @@ _SQL_FUNCTIONS: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
 
 def _session_sql_functions(spark: SparkSession) -> set[str]:
     return _SQL_FUNCTIONS.setdefault(spark, set())
+
+
+#: statement kind (statements.KINDS) → the Engine method that runs it
+_HANDLERS: dict = {}
+
+
+def _handles(*kinds: str):
+    """Register the decorated Engine method as the handler of ``kinds``."""
+
+    def register(fn):
+        for kind in kinds:
+            _HANDLERS[kind] = fn
+        return fn
+
+    return register
 
 
 class SqlSignal(ValueError):
@@ -94,6 +117,28 @@ class Engine:
     def __init__(self, spark: SparkSession, sf_dir: str,
                  warehouse: str | None = None):
         self.spark = spark
+        # session state (one MariaDB connection's worth)
+        #: attached user tables: name → {"path", "keys"[, "db", ...]}
+        self._user_tables: dict[str, dict] = {}
+        #: open BEGIN: table name → pre-image snapshot directory
+        self._txn: dict[str, str] | None = None
+        self._user_vars: dict[str, object] = {}
+        self._prepared: dict[str, str] = {}
+        self._procedures: dict[str, dict] = {}
+        self._triggers: dict[str, dict] = {}
+        self._in_trigger = False
+        self._sysvars: dict[str, str] = {}
+        #: SHOW WARNINGS rows: (level, code, message)
+        self._warnings: list[tuple] = []
+        self._databases = {"default"}
+        self._current_db = "default"
+        self._last_insert_id = 0
+        #: FOUND_ROWS(): a count, or the last plain SELECT to count
+        self._found_rows: int | DataFrame = 0
+        self._found_rows_calc = False
+        self._trace = False
+        self._last_trace: str | None = None
+        self._string_cols_cache: frozenset[str] | None = None
         self.catalog = Catalog(spark, sf_dir)
         #: directory CREATE TABLE AS SELECT materializes into
         self.warehouse = warehouse
@@ -113,7 +158,7 @@ class Engine:
         contexts, exactly as the server's parser (which has the
         catalog) does. Computed once; schemas are already loaded by
         register_views so this reads no new footers."""
-        cached = getattr(self, "_string_cols_cache", None)
+        cached = self._string_cols_cache
         if cached is None:
             from pyspark.sql.types import StringType
 
@@ -142,7 +187,7 @@ class Engine:
                 translate_statement,
             )
 
-            if getattr(self, "_sysvars", {}).get("sql_mode") == "ORACLE":
+            if self._sysvars.get("sql_mode") == "ORACLE":
                 from mariadb_columnstore_engine_spark.functions.sqltrans import (  # noqa: E501
                     oracle_mode_prepass,
                 )
@@ -150,10 +195,8 @@ class Engine:
                 query = oracle_mode_prepass(query)
             query = translate_statement(query, self._string_columns())
             query = self._normalize_setop_types(query)
-        import re as _re_is
-
-        if _re_is.search(
-            r"\binformation_schema_\w+\b", query, _re_is.IGNORECASE
+        if re.search(
+            r"\binformation_schema_\w+\b", query, re.IGNORECASE
         ):
             # i_s plugin-table reads (i_s.test) see CURRENT metadata:
             # rebuild the views on demand, like the reference's i_s
@@ -199,7 +242,7 @@ class Engine:
                     df = self.spark.sql(query)
         else:
             df = self.spark.sql(query)
-        if getattr(self, "_trace", False):
+        if self._trace:
             # calsettrace(1) → calgettrace() reads the compiled physical
             # plan of the last statement (ha_mcs_client_udfs.cpp:910 —
             # the reference returns the joblist trace the same way)
@@ -214,8 +257,6 @@ class Engine:
         """Split a statement on depth-0 UNION/INTERSECT/EXCEPT outside
         quotes. Returns (branches, operators); a single branch means no
         top-level set operation."""
-        import re
-
         parts: list[str] = []
         ops: list[str] = []
         kw = re.compile(
@@ -269,8 +310,6 @@ class Engine:
         branches to CAST that position AS STRING. No-conflict
         statements return unchanged; any analysis error defers to the
         normal execution path for its real message."""
-        import re
-
         if not re.search(r"\b(UNION|INTERSECT|EXCEPT)\b", query,
                          re.IGNORECASE):
             return query
@@ -455,7 +494,7 @@ class Engine:
             return query
 
     def table(self, name: str) -> DataFrame:
-        if name in getattr(self, "_user_tables", {}):
+        if name in self._user_tables:
             return self.spark.table(name)
         return self.catalog.table(name)
 
@@ -479,16 +518,12 @@ class Engine:
             raise ValueError(
                 f"{name!r} is a read-only catalog fixture table name"
             )
-        if not hasattr(self, "_user_tables"):
-            self._user_tables: dict[str, dict] = {}
         read_table_evolved(self.spark, path).createOrReplaceTempView(name)
         self._user_tables[name] = {"path": path, "keys": keys or []}
 
     def _writable(self, table: str) -> dict:
-        info = getattr(self, "_user_tables", {}).get(table)
+        info = self._user_tables.get(table)
         if info is None:
-            from mariadb_columnstore_engine_spark.catalog import TABLES
-
             if table not in TABLES:
                 try:
                     is_view = self.spark.catalog.tableExists(table)
@@ -537,10 +572,10 @@ class Engine:
             snapshot_tree,
         )
 
-        if getattr(self, "_txn", None) is not None:
+        if self._txn is not None:
             raise ValueError("transaction already open (COMMIT/ROLLBACK first)")
         snap: dict[str, str] = {}
-        for name, info in getattr(self, "_user_tables", {}).items():
+        for name, info in self._user_tables.items():
             backup = f"{info['path'].rstrip('/')}__txn_{uuid.uuid4().hex[:8]}"
             snapshot_tree(info["path"], backup)
             snap[name] = backup
@@ -551,7 +586,7 @@ class Engine:
         post-commit cleanup)."""
         import shutil
 
-        txn = getattr(self, "_txn", None)
+        txn = self._txn
         if txn is None:
             raise ValueError("no open transaction")
         for backup in txn.values():
@@ -564,10 +599,9 @@ class Engine:
         popped from the transaction one by one, so a failure mid-way
         leaves only the OUTSTANDING tables in the open transaction — a
         repeat ROLLBACK retries exactly those, never a consumed backup."""
-        import os
         import shutil
 
-        txn = getattr(self, "_txn", None)
+        txn = self._txn
         if txn is None:
             raise ValueError("no open transaction")
         try:
@@ -588,10 +622,9 @@ class Engine:
         mysql-test/columnstore basic i_s coverage; columnstore_extents
         has its own API: sources.maintenance.extent_map)."""
         tables, columns = [], []
-        names = list(TABLES) + sorted(getattr(self, "_user_tables", {}))
+        names = list(TABLES) + sorted(self._user_tables)
         for tn in names:
-            kind = "user" if tn in getattr(self, "_user_tables", {}) else \
-                "catalog"
+            kind = "user" if tn in self._user_tables else "catalog"
             fields = self.describe(tn)
             tables.append((tn, kind, len(fields)))
             for pos, (cn, ct) in enumerate(fields, start=1):
@@ -613,7 +646,7 @@ class Engine:
 
         extents = []
         for tn in names:
-            if tn in getattr(self, "_user_tables", {}):
+            if tn in self._user_tables:
                 path = self._user_tables[tn]["path"]
             else:
                 path = f"{self.catalog._sf_dir}/{tn}.parquet"
@@ -640,28 +673,26 @@ class Engine:
         )
 
         files = []
-        import os as _os
-
         for tn in names:
-            if tn in getattr(self, "_user_tables", {}):
+            if tn in self._user_tables:
                 path = self._user_tables[tn]["path"]
             else:
                 path = f"{self.catalog._sf_dir}/{tn}.parquet"
             try:
-                if _os.path.isdir(path):
+                if os.path.isdir(path):
                     disabled = set(
                         _evolution(path).get("disabled_partitions", [])
                     )
                     for f in _live_data_files(path, set()):
-                        nm = _os.path.basename(f)
+                        nm = os.path.basename(f)
                         files.append(
-                            (tn, nm, _os.path.getsize(f),
+                            (tn, nm, os.path.getsize(f),
                              "Disabled" if nm in disabled else "Enabled")
                         )
                 else:
                     files.append(
-                        (tn, _os.path.basename(path),
-                         _os.path.getsize(path), "Enabled")
+                        (tn, os.path.basename(path),
+                         os.path.getsize(path), "Enabled")
                     )
             except OSError:
                 continue
@@ -749,8 +780,6 @@ class Engine:
         leading IF token followed by a top-level THEN is unambiguous);
         everything else is a leaf executed through the normal
         statement router."""
-        import re
-
         from mariadb_columnstore_engine_spark.functions.sqltrans import (
             _mask,
             _unmask,
@@ -1282,10 +1311,41 @@ class Engine:
         nodes, _ = parse_block(())
         return nodes
 
-    def _handle_procedure_stmt(self, stmt: str, dialect: str):
-        """CREATE/DROP PROCEDURE + CALL (mcs17). Returns None when the
-        statement is not procedure-related, else a 1-tuple with the
-        result.
+    @_handles("create_procedure")
+    def _create_procedure(self, p, dialect):
+        """CREATE PROCEDURE (mcs17): the body parses now, runs at CALL."""
+        body = self._parse_proc_body(p.body)
+        if p.name in self._procedures and not p.or_replace:
+            if p.if_not_exists:
+                return None
+            raise ValueError(
+                f"procedure {p.name!r} already exists "
+                "(ER_SP_ALREADY_EXISTS; use OR REPLACE)"
+            )
+        self._procedures[p.name] = {
+            "params": p.params, "body": body, "comment": p.comment,
+        }
+
+    @_handles("drop_procedure", "drop_procedure_if_exists")
+    def _drop_procedure(self, p, dialect):
+        if p.arg not in self._procedures:
+            if p.kind == "drop_procedure_if_exists":
+                return None
+            raise ValueError(
+                f"unknown procedure {p.arg!r} (ER_SP_DOES_NOT_EXIST)"
+            )
+        del self._procedures[p.arg]
+
+    @_handles("show_procedure_status")
+    def _show_procedure_status(self, p, dialect):
+        return [
+            (n, "PROCEDURE", proc["comment"])
+            for n, proc in sorted(self._procedures.items())
+        ]
+
+    @_handles("call")
+    def _call(self, p, dialect):
+        """CALL a stored procedure (mcs17).
 
         Scope (documented): statement lists with interpreted control
         flow — IF/ELSEIF/ELSE, WHILE, REPEAT..UNTIL (both loops behind
@@ -1307,155 +1367,28 @@ class Engine:
         gets all of procedural SQL from mysqld:
         mysql-test/columnstore/basic/t/mcs17_procedures_define_call_drop.test).
         """
-        import re
-
         from mariadb_columnstore_engine_spark.functions.sqltrans import (
-            _find_balanced,
             _mask,
             _split_top_level_commas,
             _unmask,
-            split_script,
-        )
-        from mariadb_columnstore_engine_spark.statements import (
-            _map_column_type,
         )
 
-        procs = getattr(self, "_procedures", None)
-        if procs is None:
-            procs = self._procedures = {}
-
-        m = re.match(
-            r"\s*CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+"
-            r"(IF\s+NOT\s+EXISTS\s+)?([\w`]+)\s*\(",
-            stmt,
-            re.IGNORECASE,
-        )
-        if m:
-            masked, store = _mask(stmt)
-            mm = re.match(
-                r"\s*CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+"
-                r"(IF\s+NOT\s+EXISTS\s+)?([\w`]+)\s*\(",
-                masked,
-                re.IGNORECASE,
-            )
-            name = mm.group(3).strip("`").lower()
-            open_at = masked.index("(", mm.end() - 1)
-            end = _find_balanced(masked, open_at)
-            params = []
-            for p in _split_top_level_commas(
-                masked[open_at + 1 : end - 1]
-            ):
-                if not p.strip():
-                    continue
-                pm = re.match(
-                    r"\s*(IN|OUT|INOUT)?\s*(\w+)\s+(.+?)\s*$",
-                    p,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not pm:
-                    raise ValueError(f"bad procedure parameter: {p!r}")
-                params.append(
-                    (
-                        (pm.group(1) or "IN").upper(),
-                        pm.group(2).lower(),
-                        _map_column_type(pm.group(3)),
-                    )
-                )
-            tail = masked[end:]
-            tm = re.match(
-                r"\s*(?:COMMENT\s+(\x00\d+\x00)\s*)?"
-                r"(?:(?:NOT\s+)?DETERMINISTIC\s*|CONTAINS\s+SQL\s*"
-                r"|NO\s+SQL\s*|READS\s+SQL\s+DATA\s*"
-                r"|MODIFIES\s+SQL\s+DATA\s*|LANGUAGE\s+SQL\s*)*"
-                r"BEGIN\b(.*)\bEND\s*;?\s*$",
-                tail,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not tm:
-                raise ValueError(
-                    "CREATE PROCEDURE expects a BEGIN .. END body"
-                )
-            body_text = _unmask(tm.group(2), store).strip()
-            body = self._parse_proc_body(body_text)
-            comment = None
-            if tm.group(1):
-                raw = store[int(tm.group(1).strip("\x00"))]
-                comment = raw[1:-1]
-            if name in procs and not mm.group(1):
-                if mm.group(2):
-                    return (None,)
-                raise ValueError(
-                    f"procedure {name!r} already exists "
-                    "(ER_SP_ALREADY_EXISTS; use OR REPLACE)"
-                )
-            procs[name] = {
-                "params": params, "body": body, "comment": comment,
-            }
-            return (None,)
-
-        m = re.match(
-            r"\s*DROP\s+PROCEDURE\s+(IF\s+EXISTS\s+)?([\w`]+)\s*;?\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if m:
-            name = m.group(2).strip("`").lower()
-            if name not in procs:
-                if m.group(1):
-                    return (None,)
-                raise ValueError(
-                    f"unknown procedure {name!r} (ER_SP_DOES_NOT_EXIST)"
-                )
-            del procs[name]
-            return (None,)
-
-        m = re.match(
-            r"\s*SHOW\s+PROCEDURE\s+STATUS\s*;?\s*$", stmt, re.IGNORECASE
-        )
-        if m:
-            return (
-                [
-                    (n, "PROCEDURE", p["comment"])
-                    for n, p in sorted(procs.items())
-                ],
-            )
-
-        m = re.match(r"\s*CALL\s+([\w`]+)\s*(\(|;?\s*$)", stmt, re.IGNORECASE)
-        if not m:
-            return None
-        name = m.group(1).strip("`").lower()
-        if name not in procs:
+        name, args = p.name, p.args
+        if name not in self._procedures:
             raise ValueError(
                 f"unknown procedure {name!r} (ER_SP_DOES_NOT_EXIST)"
             )
-        proc = procs[name]
-        masked, store = _mask(stmt)
-        cm = re.match(r"\s*CALL\s+[\w`]+\s*(\()?", masked, re.IGNORECASE)
-        if cm.group(1):
-            open_at = masked.index("(", cm.end() - 1)
-            end = _find_balanced(masked, open_at)
-            args = [
-                a.strip()
-                for a in _split_top_level_commas(
-                    masked[open_at + 1 : end - 1]
-                )
-                if a.strip()
-            ]
-        else:
-            args = []
+        proc = self._procedures[name]
         if len(args) != len(proc["params"]):
             raise ValueError(
                 f"procedure {name!r} expects {len(proc['params'])} "
                 f"argument(s), got {len(args)} (ER_SP_WRONG_NO_OF_ARGS)"
             )
-        uvars = getattr(self, "_user_vars", None)
-        if uvars is None:
-            uvars = self._user_vars = {}
+        uvars = self._user_vars
         subs: dict[str, str] = {}   # param name -> literal SQL
         out_targets: dict[str, str] = {}  # param name -> @var name
         locals_: dict[str, object] = {}
-        for (mode, pname, _ptype), arg in zip(proc["params"], args):
-            arg_raw = _unmask(arg, store).strip()
+        for (mode, pname, _ptype), arg_raw in zip(proc["params"], args):
             if mode in ("OUT", "INOUT"):
                 if not re.fullmatch(r"@\w+", arg_raw):
                     raise ValueError(
@@ -2010,129 +1943,98 @@ class Engine:
             ) from None
         for pname, varname in out_targets.items():
             uvars[varname] = locals_.get(pname)
-        return (results[-1] if results else None,)
+        return results[-1] if results else None
 
-    def _handle_trigger_stmt(self, stmt: str, dialect: str):
-        """CREATE/DROP TRIGGER + SHOW TRIGGERS (mcs60_trigger.test).
-        Returns None when the statement is not trigger-related, else a
-        1-tuple with the result.
-
-        Set-based trigger semantics (sources/triggers.py module doc):
-        BEFORE INSERT/UPDATE bodies compile to one per-column
-        projection; AFTER bodies run once per STATEMENT over the
-        affected-row relation. BEFORE DELETE is refused (no row image
-        to rewrite); WHILE/REPEAT loops in bodies are refused (no
-        set-based reading)."""
-        import re
-
+    @_handles("create_trigger")
+    def _create_trigger(self, p, dialect):
+        """CREATE TRIGGER (mcs60_trigger.test), set-based semantics
+        (sources/triggers.py module doc): BEFORE INSERT/UPDATE bodies
+        compile to one per-column projection; AFTER bodies run once per
+        STATEMENT over the affected-row relation. BEFORE DELETE is
+        refused (no row image to rewrite); WHILE/REPEAT loops in bodies
+        are refused (no set-based reading)."""
         from mariadb_columnstore_engine_spark.sources.triggers import (
             compile_before_transform,
-            parse_create_trigger,
         )
 
-        trgs = getattr(self, "_triggers", None)
-        if trgs is None:
-            trgs = self._triggers = {}
-
-        parsed = parse_create_trigger(stmt)
-        if parsed:
-            name = parsed["name"]
-            if name in trgs and not parsed["replace"]:
-                if parsed["if_not_exists"]:
-                    return (None,)
-                raise ValueError(
-                    f"trigger {name!r} already exists "
-                    "(use OR REPLACE)"
-                )
-            if parsed["timing"] == "BEFORE" and parsed["event"] == "DELETE":
-                # no row image to rewrite — the supported subset is
-                # audit-style bodies over the OLD relation (same
-                # statement-level reading as AFTER DELETE, fired
-                # before the copy-on-write removes the rows). SET
-                # NEW.x / NEW references are meaningless here.
-                from mariadb_columnstore_engine_spark.functions.sqltrans import (  # noqa: E501
-                    _mask as _trg_mask,
-                )
-
-                masked_body, _ = _trg_mask(parsed["body"])
-                if re.search(r"\bNEW\s*\.", masked_body, re.IGNORECASE):
-                    raise ValueError(
-                        "BEFORE DELETE trigger bodies cannot reference "
-                        "NEW.x (no new row image); use OLD.x"
-                    )
-            # table must exist (MariaDB ER_NO_SUCH_TABLE)
-            cols = [c for c, _ in self.describe(parsed["table"])]
-            nodes = self._parse_proc_body(parsed["body"])
-
-            def _no_loops(ns):
-                for n in ns:
-                    if n[0] in ("while", "repeat", "loop", "leave",
-                                "iterate"):
-                        raise ValueError(
-                            "loops in trigger bodies have no set-based "
-                            "reading and are not supported"
-                        )
-                    if n[0] in (
-                        "cursor", "open", "fetch", "close",
-                        "not_found_handler",
-                    ):
-                        raise ValueError(
-                            "cursors in trigger bodies have no "
-                            "set-based reading and are not supported"
-                        )
-                    if n[0] == "if":
-                        for _, b in n[1]:
-                            _no_loops(b)
-                        _no_loops(n[2])
-
-            _no_loops(nodes)
-            if parsed["timing"] == "BEFORE" and parsed["event"] != "DELETE":
-                # compile NOW so malformed bodies fail at CREATE, like
-                # mysqld's parse-time validation (BEFORE DELETE has no
-                # row transform — its audit body runs statement-level,
-                # like AFTER bodies, just before the rewrite)
-                compile_before_transform(
-                    nodes, cols, event=parsed["event"]
-                )
-            trgs[name] = {**parsed, "nodes": nodes, "columns": cols}
-            return (None,)
-
-        m = re.match(
-            r"\s*DROP\s+TRIGGER\s+(IF\s+EXISTS\s+)?([\w`]+)\s*;?\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if m:
-            name = m.group(2).strip("`").lower()
-            if name not in trgs:
-                if m.group(1):
-                    return (None,)
-                raise ValueError(f"unknown trigger {name!r}")
-            del trgs[name]
-            return (None,)
-
-        if re.match(r"\s*SHOW\s+TRIGGERS\s*;?\s*$", stmt, re.IGNORECASE):
-            return (
-                [
-                    (t["name"], t["event"], t["table"], t["timing"])
-                    for t in sorted(
-                        trgs.values(), key=lambda t: t["name"]
-                    )
-                ],
+        if p.name in self._triggers and not p.replace:
+            if p.if_not_exists:
+                return None
+            raise ValueError(
+                f"trigger {p.name!r} already exists (use OR REPLACE)"
             )
-        return None
+        if p.timing == "BEFORE" and p.event == "DELETE":
+            # no row image to rewrite — the supported subset is
+            # audit-style bodies over the OLD relation (same
+            # statement-level reading as AFTER DELETE, fired before the
+            # copy-on-write removes the rows). SET NEW.x / NEW
+            # references are meaningless here.
+            from mariadb_columnstore_engine_spark.functions.sqltrans import (
+                _mask,
+            )
+
+            if re.search(r"\bNEW\s*\.", _mask(p.body)[0], re.IGNORECASE):
+                raise ValueError(
+                    "BEFORE DELETE trigger bodies cannot reference "
+                    "NEW.x (no new row image); use OLD.x"
+                )
+        # table must exist (MariaDB ER_NO_SUCH_TABLE)
+        cols = [c for c, _ in self.describe(p.table)]
+        nodes = self._parse_proc_body(p.body)
+
+        def _no_loops(ns):
+            for n in ns:
+                if n[0] in ("while", "repeat", "loop", "leave", "iterate"):
+                    raise ValueError(
+                        "loops in trigger bodies have no set-based "
+                        "reading and are not supported"
+                    )
+                if n[0] in (
+                    "cursor", "open", "fetch", "close", "not_found_handler",
+                ):
+                    raise ValueError(
+                        "cursors in trigger bodies have no "
+                        "set-based reading and are not supported"
+                    )
+                if n[0] == "if":
+                    for _, b in n[1]:
+                        _no_loops(b)
+                    _no_loops(n[2])
+
+        _no_loops(nodes)
+        if p.timing == "BEFORE" and p.event != "DELETE":
+            # compile NOW so malformed bodies fail at CREATE, like
+            # mysqld's parse-time validation (BEFORE DELETE has no row
+            # transform — its audit body runs statement-level, like
+            # AFTER bodies, just before the rewrite)
+            compile_before_transform(nodes, cols, event=p.event)
+        self._triggers[p.name] = {**vars(p), "nodes": nodes, "columns": cols}
+
+    @_handles("drop_trigger", "drop_trigger_if_exists")
+    def _drop_trigger(self, p, dialect):
+        if p.arg not in self._triggers:
+            if p.kind == "drop_trigger_if_exists":
+                return None
+            raise ValueError(f"unknown trigger {p.arg!r}")
+        del self._triggers[p.arg]
+
+    @_handles("show_triggers")
+    def _show_triggers(self, p, dialect):
+        return [
+            (t["name"], t["event"], t["table"], t["timing"])
+            for t in sorted(self._triggers.values(), key=lambda t: t["name"])
+        ]
 
     def _table_triggers(self, table: str, timing: str, event: str):
         """Triggers for (table, timing, event), creation-ordered.
         Empty while a trigger body is already executing — triggers do
         not cascade here (documented guard against self-recursion; the
         reference likewise refuses a trigger mutating its own table)."""
-        if getattr(self, "_in_trigger", False):
+        if self._in_trigger:
             return []
-        trgs = getattr(self, "_triggers", None) or {}
         return [
             t
-            for t in trgs.values()
+            for t in self._triggers.values()
             if t["table"] == table.lower()
             and t["timing"] == timing
             and t["event"] == event
@@ -2153,8 +2055,6 @@ class Engine:
         from mariadb_columnstore_engine_spark.sources.triggers import (
             rewrite_row_refs,
         )
-
-        import re
 
         triggers = self._table_triggers(table, timing, event)
         if not triggers or affected is None:
@@ -2238,76 +2138,6 @@ class Engine:
             self._in_trigger = False
             self.spark.catalog.dropTempView(view)
 
-    def _set_sysvar(self, payload: str):
-        """SET <system variable> (mcs229_data_compression_type and the
-        MTR preamble idioms). Real behavior where the engine has one
-        (compression type → parquet write codec); documented no-ops for
-        charset/engine-tuning knobs mysqld or Spark owns; honest errors
-        for semantics-changing modes we cannot honor."""
-        name, _, val = payload.partition("\x01")
-        val = val.strip().strip("'\"").lower()
-        svars = getattr(self, "_sysvars", None)
-        if svars is None:
-            svars = self._sysvars = {}
-        if name == "columnstore_compression_type":
-            # reference codes (idbcompress.h): 0 none, 1/2 snappy, 3 lz4
-            codec = {
-                "0": "uncompressed", "1": "snappy", "2": "snappy",
-                "3": "lz4", "snappy": "snappy", "lz4": "lz4",
-                "none": "uncompressed",
-            }.get(val)
-            if codec is None:
-                raise ValueError(
-                    f"unknown compression type {val!r} (0=none, "
-                    "1/2=snappy, 3=lz4 — idbcompress.h codes)"
-                )
-            self.spark.conf.set(
-                "spark.sql.parquet.compression.codec", codec
-            )
-            svars[name] = val
-            return None
-        if name == "names":
-            return None  # SET NAMES: every Spark string is UTF-8
-        if name == "sql_mode":
-            if val in ("", "''"):
-                svars[name] = ""
-                return None
-            if str(val).strip().strip("'\"").upper() == "ORACLE":
-                # r11: true Oracle-mode session support — the SELECT
-                # path routes through sqltrans.oracle_mode_prepass
-                # (infix || concat, DECODE NULL-matching, TRIM/REPLACE
-                # empty→NULL), mirroring the reference's *_oracle
-                # funcexp entries (utils/funcexp/func_concat.cpp etc.,
-                # pinned by mysql-test/columnstore/oracle/*.result)
-                svars[name] = "ORACLE"
-                return None
-            raise ValueError(
-                "SET sql_mode with flags is not supported beyond "
-                "ORACLE (other behavior-changing modes would silently "
-                "mistranslate)"
-            )
-        if name.startswith(("columnstore_", "infinidb_")) or name in (
-            "autocommit", "character_set_client", "character_set_results",
-            "character_set_connection", "collation_connection",
-            "max_allowed_packet", "net_write_timeout", "sql_log_bin",
-            "unique_checks", "foreign_key_checks", "timestamp",
-            "default_storage_engine", "storage_engine",
-        ):
-            # engine-tuning / protocol knobs mysqld or Spark owns —
-            # stored for SHOW VARIABLES, note-level warning
-            svars[name] = val
-            self._warnings = [
-                ("Note", 1105,
-                 f"SET {name} accepted and stored; no engine behavior "
-                 "is attached to it here")
-            ]
-            return None
-        raise ValueError(
-            f"unsupported system variable {name!r} (supported: "
-            "columnstore_compression_type, sql_mode='', NAMES, and "
-            "stored-only columnstore_*/protocol knobs)"
-        )
-
     def _render_uservar_literal(self, v) -> str:
         import datetime as _dt
         import decimal as _dec
@@ -2333,1533 +2163,1276 @@ class Engine:
             return f"DATE '{v}'"
         return _string_literal(str(v))
 
+    # --- statement router --------------------------------------------
+
     def execute(self, stmt: str, *, dialect: str = "mariadb"):
         """Run ONE SQL statement of any supported kind.
 
+        ``statements.parse`` classifies it and the handler registered
+        for its ``kind`` runs it (≈ mysqld routing statements to the
+        select handler vs DMLProc/DDLProc packages, SURVEY §3).
         SELECT/WITH/VALUES → DataFrame (via the dialect-translating query
         path). INSERT/REPLACE/UPDATE/DELETE → copy-on-write DML against
         an attached table, returning the table's new row count.
-        CREATE/DROP VIEW, DESCRIBE → facade metadata ops.
-        (≈ mysqld routing statements to the select handler vs
-        DMLProc/DDLProc packages, SURVEY §3.)
+        Metadata statements return rows as lists, a scalar, or None.
         """
-        import pyspark.sql.functions as F
+        parsed = st.parse(stmt)
+        return _HANDLERS[parsed.kind](self, parsed, dialect)
 
-        from mariadb_columnstore_engine_spark import statements as st
-        from mariadb_columnstore_engine_spark.sources import dml, manifest
-
-        def tsql(text: str) -> str:
-            """Dialect-translate an expression fragment (a SET/WHERE/
-            RETURNING fragment may use MariaDB spellings — CAST AS CHAR,
-            DATE_ADD INTERVAL, TIME_TO_SEC — exactly like a SELECT)."""
-            if dialect == "mariadb":
-                from mariadb_columnstore_engine_spark.functions.sqltrans import (  # noqa: E501
-                    translate_statement,
-                )
-
-                return translate_statement(text)
-            return text
-
-        def texpr(text: str):
-            return F.expr(tsql(text))
-
-        def returning_result(source_df, exprs: list[str]):
-            """Materialize a RETURNING projection BEFORE the write swaps
-            or appends files (the lineage must read the pre-write table
-            state exactly once). RETURNING result sets are client-bound
-            by definition (MariaDB streams them to the client), so the
-            collect here is the protocol, not a scale hazard."""
-            ret_df = source_df.selectExpr(*[tsql(e) for e in exprs])
-            rows = ret_df.collect()
-            return self.spark.createDataFrame(rows, ret_df.schema)
-
-        def join_pred_sql(join: "st.JoinSpec", where: str | None) -> str:
-            """Rewrite a multi-table UPDATE/DELETE's join into a
-            single-table predicate on the target (mcs82/mcs83 MTR
-            forms). A target row is affected iff SOME row of the join
-            result contains it and satisfies WHERE — i.e. a semi-join:
-
-              EXISTS (SELECT 1 FROM other WHERE on AND where)
-
-            When the target is on the preserved side of an outer join,
-            NULL-extended rows also reach WHERE with the other table's
-            columns all NULL; that branch is expressed by evaluating
-            WHERE against a literal all-NULL one-row relation aliased
-            to the other table's name — no string surgery on the WHERE
-            text, the resolver does the substitution.
-            """
-            other = join.table
-            p = where or "TRUE"
-            c = join.on
-            inner = f"EXISTS (SELECT 1 FROM {other} WHERE ({c}) AND ({p}))"
-            if not join.outer_target:
-                return inner
-            null_cols = ", ".join(
-                f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
-                for f in self.spark.table(other).schema.fields
-            )
-            unmatched = (
-                f"(NOT EXISTS (SELECT 1 FROM {other} WHERE ({c})) AND "
-                f"EXISTS (SELECT 1 FROM (SELECT {null_cols}) AS {other} "
-                f"WHERE ({p})))"
-            )
-            return f"({inner}) OR {unmatched}"
-
-        import re as _re_cal
-
-        # --- stored procedures (mcs17_procedures_define_call_drop) ------
-        # Handled BEFORE @var substitution: `CALL p(@out)` names an OUT
-        # target that is legitimately unset at call time.
-        proc_result = self._handle_procedure_stmt(stmt, dialect)
-        if proc_result is not None:
-            return proc_result[0]
-
-        # --- triggers (mcs60_trigger.test; set-based semantics) ----------
-        trg_result = self._handle_trigger_stmt(stmt, dialect)
-        if trg_result is not None:
-            return trg_result[0]
-
-        # --- session user variables (@var) -------------------------------
-        # MariaDB SET @x = expr / SELECT ... INTO @x / @x references —
-        # the MTR scripts' state-carrying idiom (devregression uses
-        # `select calflushcache() into @dummy` style throughout). The
-        # row-order-dependent `@x := expr` inline assignment has no
-        # distributed meaning and is NOT supported (use window funcs).
-        def _render_var(v) -> str:
-            return self._render_uservar_literal(v)
-
-        uvars = getattr(self, "_user_vars", None)
-        if uvars is None:
-            uvars = self._user_vars = {}
-        # --- prepared statements ----------------------------------------
-        # PREPARE s FROM '...'/@var; EXECUTE s [USING @a, ...];
-        # DEALLOCATE PREPARE s — the server-side prepared-statement
-        # surface MTR scripts lean on; ? placeholders are substituted
-        # mask-aware at EXECUTE time with typed literal rendering.
-        preps = getattr(self, "_prepared", None)
-        if preps is None:
-            preps = self._prepared = {}
-        pm = _re_cal.match(
-            r"\s*PREPARE\s+(\w+)\s+FROM\s+(.+?)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE | _re_cal.DOTALL,
-        )
-        if pm:
-            src = pm.group(2).strip()
-            if src.startswith("@"):
-                name = src[1:]
-                if name not in uvars:
-                    raise ValueError(f"user variable @{name} is not set")
-                text = str(uvars[name])
-            elif src[:1] in ("'", '"'):
-                text = src[1:-1].replace(src[0] * 2, src[0])
-            else:
-                raise ValueError(
-                    "PREPARE needs a quoted statement or @var"
-                )
-            preps[pm.group(1)] = text
-            return "Statement prepared"
-        em = _re_cal.match(
-            r"\s*EXECUTE\s+(\w+)(?:\s+USING\s+(.+?))?\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE | _re_cal.DOTALL,
-        )
-        if em and em.group(1) in preps:
+    def _tsql(self, text: str, dialect: str) -> str:
+        """Dialect-translate an expression fragment (a SET/WHERE/
+        RETURNING fragment may use MariaDB spellings — CAST AS CHAR,
+        DATE_ADD INTERVAL, TIME_TO_SEC — exactly like a SELECT)."""
+        if dialect == "mariadb":
             from mariadb_columnstore_engine_spark.functions.sqltrans import (
-                _mask as _m2,
-                _unmask as _u2,
+                translate_statement,
             )
 
-            text = preps[em.group(1)]
-            args = []
-            if em.group(2):
-                for tok in em.group(2).split(","):
-                    tok = tok.strip()
-                    if not tok.startswith("@"):
-                        raise ValueError(
-                            "EXECUTE USING takes @var arguments"
-                        )
-                    if tok[1:] not in uvars:
-                        raise ValueError(
-                            f"user variable {tok} is not set"
-                        )
-                    args.append(uvars[tok[1:]])
-            masked2, store2 = _m2(text)
-            n_slots = masked2.count("?")
-            if n_slots != len(args):
-                raise ValueError(
-                    f"prepared statement has {n_slots} placeholder(s), "
-                    f"EXECUTE supplied {len(args)}"
-                )
-            it = iter(args)
+            return translate_statement(text)
+        return text
 
-            def _fill(m):
-                return _render_var(next(it))
+    def _texpr(self, text: str, dialect: str):
+        return F.expr(self._tsql(text, dialect))
 
-            filled = _u2(_re_cal.sub(r"\?", _fill, masked2), store2)
-            return self.execute(filled, dialect=dialect)
-        dm_ = _re_cal.match(
-            r"\s*DEALLOCATE\s+PREPARE\s+(\w+)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
+    def _returning(self, source_df, exprs: list[str], dialect: str):
+        """Materialize a RETURNING projection BEFORE the write swaps
+        or appends files (the lineage must read the pre-write table
+        state exactly once). RETURNING result sets are client-bound
+        by definition (MariaDB streams them to the client), so the
+        collect here is the protocol, not a scale hazard."""
+        ret_df = source_df.selectExpr(*[self._tsql(e, dialect) for e in exprs])
+        return self.spark.createDataFrame(ret_df.collect(), ret_df.schema)
+
+    def _join_pred_sql(self, join: "st.JoinSpec", where: str | None) -> str:
+        """Rewrite a multi-table UPDATE/DELETE's join into a
+        single-table predicate on the target (mcs82/mcs83 MTR
+        forms). A target row is affected iff SOME row of the join
+        result contains it and satisfies WHERE — i.e. a semi-join:
+
+          EXISTS (SELECT 1 FROM other WHERE on AND where)
+
+        When the target is on the preserved side of an outer join,
+        NULL-extended rows also reach WHERE with the other table's
+        columns all NULL; that branch is expressed by evaluating
+        WHERE against a literal all-NULL one-row relation aliased
+        to the other table's name — no string surgery on the WHERE
+        text, the resolver does the substitution.
+        """
+        other = join.table
+        p = where or "TRUE"
+        c = join.on
+        inner = f"EXISTS (SELECT 1 FROM {other} WHERE ({c}) AND ({p}))"
+        if not join.outer_target:
+            return inner
+        null_cols = ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in self.spark.table(other).schema.fields
         )
-        if dm_:
-            preps.pop(dm_.group(1), None)
+        unmatched = (
+            f"(NOT EXISTS (SELECT 1 FROM {other} WHERE ({c})) AND "
+            f"EXISTS (SELECT 1 FROM (SELECT {null_cols}) AS {other} "
+            f"WHERE ({p})))"
+        )
+        return f"({inner}) OR {unmatched}"
+
+    # --- session user variables (@var) and prepared statements -------
+    # MariaDB SET @x = expr / SELECT ... INTO @x / @x references — the
+    # MTR scripts' state-carrying idiom (devregression uses `select
+    # calflushcache() into @dummy` style throughout).
+
+    def _bind_user_vars(self, text: str, *, strict: bool = True) -> str:
+        """Substitute @variables as typed literals, mask-aware (an '@'
+        inside a string literal never rewrites). ``strict`` refuses an
+        unset variable; otherwise it is left in place."""
+        from mariadb_columnstore_engine_spark.functions.sqltrans import (
+            _mask,
+            _unmask,
+        )
+
+        def sub(m):
+            name = m.group(1)
+            if name in self._user_vars:
+                return self._render_uservar_literal(self._user_vars[name])
+            if not strict:
+                return m.group(0)
+            raise ValueError(
+                f"user variable @{name} is not set (note: inline "
+                "@var := assignment is row-order-dependent and "
+                "unsupported — use window functions)"
+            )
+
+        masked, store = _mask(text)
+        return _unmask(re.sub(r"@(\w+)", sub, masked), store)
+
+    @_handles("user_var_refs")
+    def _user_var_refs(self, p, dialect):
+        return self.execute(self._bind_user_vars(p.arg), dialect=dialect)
+
+    @_handles("set_user_var")
+    def _set_user_var(self, p, dialect):
+        # SET @x = @x + 1 style: the RHS reads current values
+        rhs = self._bind_user_vars(p.expr, strict=False)
+        val = self.sql(f"SELECT ({rhs}) AS v", dialect=dialect).collect()[0][0]
+        self._user_vars[p.name] = val
+        return val
+
+    @_handles("select_into_vars")
+    def _select_into_vars(self, p, dialect):
+        rows = self.sql(
+            self._bind_user_vars(p.select_sql), dialect=dialect
+        ).collect()
+        if len(rows) != 1 or len(rows[0]) != len(p.names):
+            raise ValueError(
+                "SELECT INTO @vars needs exactly one row with "
+                f"{len(p.names)} column(s), got {len(rows)} row(s)"
+            )
+        self._user_vars.update(zip(p.names, rows[0]))
+        return list(rows[0])
+
+    @_handles("prepare")
+    def _prepare(self, p, dialect):
+        if p.var is not None and p.var not in self._user_vars:
+            raise ValueError(f"user variable @{p.var} is not set")
+        self._prepared[p.name] = (
+            p.text if p.var is None else str(self._user_vars[p.var])
+        )
+        return "Statement prepared"
+
+    @_handles("execute_prepared")
+    def _execute_prepared(self, p, dialect):
+        """EXECUTE s [USING @a, ...]: ? placeholders are substituted
+        mask-aware with typed literal rendering."""
+        from mariadb_columnstore_engine_spark.functions.sqltrans import (
+            _mask,
+            _unmask,
+        )
+
+        if p.name not in self._prepared:
+            raise ValueError(f"unknown prepared statement {p.name!r}")
+        for name in p.using:
+            if name not in self._user_vars:
+                raise ValueError(f"user variable @{name} is not set")
+        masked, store = _mask(self._prepared[p.name])
+        n_slots = masked.count("?")
+        if n_slots != len(p.using):
+            raise ValueError(
+                f"prepared statement has {n_slots} placeholder(s), "
+                f"EXECUTE supplied {len(p.using)}"
+            )
+        it = iter(p.using)
+        filled = re.sub(
+            r"\?",
+            lambda _m: self._render_uservar_literal(self._user_vars[next(it)]),
+            masked,
+        )
+        return self.execute(_unmask(filled, store), dialect=dialect)
+
+    @_handles("deallocate")
+    def _deallocate(self, p, dialect):
+        self._prepared.pop(p.arg, None)
+
+    # --- session, client UDFs, table maintenance ----------------------
+
+    @_handles("set_sysvar")
+    def _set_sysvar(self, p, dialect):
+        """SET <system variable> (mcs229_data_compression_type and the
+        MTR preamble idioms). Real behavior where the engine has one
+        (compression type → parquet write codec); documented no-ops for
+        charset/engine-tuning knobs mysqld or Spark owns; honest errors
+        for semantics-changing modes we cannot honor."""
+        name = p.name
+        val = p.value.strip().strip("'\"").lower()
+        if name == "columnstore_compression_type":
+            # reference codes (idbcompress.h): 0 none, 1/2 snappy, 3 lz4
+            codec = {
+                "0": "uncompressed", "1": "snappy", "2": "snappy",
+                "3": "lz4", "snappy": "snappy", "lz4": "lz4",
+                "none": "uncompressed",
+            }.get(val)
+            if codec is None:
+                raise ValueError(
+                    f"unknown compression type {val!r} (0=none, "
+                    "1/2=snappy, 3=lz4 — idbcompress.h codes)"
+                )
+            self.spark.conf.set(
+                "spark.sql.parquet.compression.codec", codec
+            )
+            self._sysvars[name] = val
             return None
-
-        if "@" in stmt:
-            from mariadb_columnstore_engine_spark.functions.sqltrans import (
-                _mask,
-                _unmask,
+        if name == "names":
+            return None  # SET NAMES: every Spark string is UTF-8
+        if name == "sql_mode":
+            if val in ("", "''"):
+                self._sysvars[name] = ""
+                return None
+            if str(val).strip().strip("'\"").upper() == "ORACLE":
+                # r11: true Oracle-mode session support — the SELECT
+                # path routes through sqltrans.oracle_mode_prepass
+                # (infix || concat, DECODE NULL-matching, TRIM/REPLACE
+                # empty→NULL), mirroring the reference's *_oracle
+                # funcexp entries (utils/funcexp/func_concat.cpp etc.,
+                # pinned by mysql-test/columnstore/oracle/*.result)
+                self._sysvars[name] = "ORACLE"
+                return None
+            raise ValueError(
+                "SET sql_mode with flags is not supported beyond "
+                "ORACLE (other behavior-changing modes would silently "
+                "mistranslate)"
             )
-
-            sm = _re_cal.match(
-                r"\s*SET\s+@(\w+)\s*:?=\s*(.+?)\s*;?\s*$",
-                stmt,
-                _re_cal.IGNORECASE | _re_cal.DOTALL,
-            )
-            if sm:
-                rhs = sm.group(2)
-                if "@" in rhs:
-                    # SET @x = @x + 1 style: resolve @var references in
-                    # the RHS to literals first (mask-aware — an '@'
-                    # inside a string literal never rewrites)
-                    rm, rstore = _mask(rhs)
-                    rm = _re_cal.sub(
-                        r"@(\w+)",
-                        lambda m: (
-                            _render_var(uvars[m.group(1)])
-                            if m.group(1) in uvars
-                            else m.group(0)
-                        ),
-                        rm,
-                    )
-                    rhs = _unmask(rm, rstore)
-                val = self.sql(
-                    f"SELECT ({rhs}) AS v", dialect=dialect
-                ).collect()[0][0]
-                uvars[sm.group(1)] = val
-                return val
-            masked, store_ = _mask(stmt)
-            # substitute known @vars (mask-aware: never inside literals)
-            def _sub(m):
-                name = m.group(1)
-                if name in uvars:
-                    return _render_var(uvars[name])
-                raise ValueError(
-                    f"user variable @{name} is not set (note: inline "
-                    "@var := assignment is row-order-dependent and "
-                    "unsupported — use window functions)"
-                )
-
-            im = _re_cal.search(
-                r"\sINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s",
-                masked + " ",
-                _re_cal.IGNORECASE,
-            )
-            if im:
-                # SELECT <exprs> INTO @a[, @b ...] [FROM ...]
-                names = [
-                    t.strip()[1:]
-                    for t in im.group(1).split(",")
-                ]
-                sel = (
-                    masked[: im.start()] + " " + (masked + " ")[im.end() :]
-                ).strip()
-                sel = _re_cal.sub(r"@(\w+)", _sub, sel)
-                rows = self.sql(
-                    _unmask(sel, store_), dialect=dialect
-                ).collect()
-                if len(rows) != 1 or len(rows[0]) != len(names):
-                    raise ValueError(
-                        "SELECT INTO @vars needs exactly one row with "
-                        f"{len(names)} column(s), got {len(rows)} row(s)"
-                    )
-                for nm, v in zip(names, rows[0]):
-                    uvars[nm] = v
-                return list(rows[0])
-            if _re_cal.search(r"@\w+", masked):
-                stmt = _unmask(
-                    _re_cal.sub(r"@(\w+)", _sub, masked), store_
-                )
-
-        am_ = _re_cal.match(
-            r"\s*ANALYZE\s+TABLE\s+([\w`]+(?:\s*,\s*[\w`]+)*)"
-            r"(\s+COMPUTE\s+STATISTICS)?\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
-        )
-        if am_:
-            # ANALYZE TABLE t1[, t2 ...] (basic/t/analyze_table.test) —
-            # CBO statistics; attached user tables are temp views Spark
-            # cannot persist stats for, so their row count lands in the
-            # engine's table info instead (still drives broadcast
-            # decisions via AQE's runtime sizes)
-            out = []
-            for tname in [
-                t.strip().strip("`") for t in am_.group(1).split(",")
-            ]:
-                try:
-                    self.analyze(tname)
-                    out.append((tname, "analyze", "status", "OK"))
-                except Exception:
-                    info = getattr(self, "_user_tables", {}).get(tname)
-                    if info is None and tname not in TABLES:
-                        out.append(
-                            (tname, "analyze", "Error",
-                             "Table doesn't exist")
-                        )
-                        continue
-                    n_rows = self.table(tname).count()
-                    if info is not None:
-                        info["row_count"] = n_rows
-                    out.append((tname, "analyze", "status", "OK"))
-            return out
-
-        cm_ = _re_cal.match(
-            r"\s*(CHECK|OPTIMIZE|REPAIR)\s+TABLE\s+"
-            r"([\w`]+(?:\s*,\s*[\w`]+)*)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
-        )
-        if cm_:
-            # CHECK/OPTIMIZE/REPAIR TABLE: MariaDB-shaped status rows.
-            # CHECK actually verifies the table is readable (schema
-            # resolves + parquet footers open — the engine's analogue
-            # of an extent-map consistency walk). OPTIMIZE/REPAIR
-            # return the note mysqld emits for engines that handle
-            # these internally (ColumnStore does not support OPTIMIZE
-            # — ha_mcs returns HA_ADMIN_NOT_IMPLEMENTED and the server
-            # notes it) followed by an OK status row.
-            op = cm_.group(1).lower()
-            out = []
-            for tname in [
-                t.strip().strip("`") for t in cm_.group(2).split(",")
-            ]:
-                known = (
-                    tname in getattr(self, "_user_tables", {})
-                    or tname in TABLES
-                )
-                if not known:
-                    out.append(
-                        (tname, op, "Error", "Table doesn't exist")
-                    )
-                    continue
-                if op == "check":
-                    try:
-                        self.table(tname).limit(1).collect()
-                        out.append((tname, op, "status", "OK"))
-                    except Exception as e:  # noqa: BLE001 — reported
-                        out.append(
-                            (tname, op, "Error", str(e)[:120])
-                        )
-                else:
-                    out.append(
-                        (
-                            tname,
-                            op,
-                            "note",
-                            f"Table does not support {op}, doing "
-                            "recreate + analyze instead"
-                            if op == "optimize"
-                            else "The storage engine for the table "
-                            "doesn't support repair",
-                        )
-                    )
-                    out.append((tname, op, "status", "OK"))
-            return out
-
-        if _re_cal.match(
-            r"\s*FLUSH\s+(LOCAL\s+)?TABLES?\b"
-            r"(\s+WITH\s+READ\s+LOCK)?\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
+        if name.startswith(("columnstore_", "infinidb_")) or name in (
+            "autocommit", "character_set_client", "character_set_results",
+            "character_set_connection", "collation_connection",
+            "max_allowed_packet", "net_write_timeout", "sql_log_bin",
+            "unique_checks", "foreign_key_checks", "timestamp",
+            "default_storage_engine", "storage_engine",
         ):
-            # FLUSH TABLES (MTR preamble idiom): re-read every attached
-            # table's evolution sidecar + refresh its view — the real
-            # cache-invalidation this engine has; read locks are
-            # meaningless on an immutable-files engine
-            for tname in list(getattr(self, "_user_tables", {})):
-                self._refresh(tname)
+            # engine-tuning / protocol knobs mysqld or Spark owns —
+            # stored for SHOW VARIABLES, note-level warning
+            self._sysvars[name] = val
+            self._warnings = [
+                ("Note", 1105,
+                 f"SET {name} accepted and stored; no engine behavior "
+                 "is attached to it here")
+            ]
             return None
-
-        km_ = _re_cal.match(
-            r"\s*CHECKSUM\s+TABLE\s+([\w`]+(?:\s*,\s*[\w`]+)*)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
+        raise ValueError(
+            f"unsupported system variable {name!r} (supported: "
+            "columnstore_compression_type, sql_mode='', NAMES, and "
+            "stored-only columnstore_*/protocol knobs)"
         )
-        if km_:
-            # CHECKSUM TABLE t1[, t2 ...]: deterministic, row-order-
-            # independent content checksum (sum of per-row xxhash64 over
-            # all columns, mod 2^32 like MariaDB's counter width). The
-            # exact MariaDB CRC differs by design — this is an engine-
-            # defined checksum for copy/restore verification.
-            out = []
-            for tname in [
-                t.strip().strip("`") for t in km_.group(1).split(",")
-            ]:
-                df = self.table(tname)
-                # per-row hash folded to 32 bits BEFORE the sum, and the
-                # sum carried in DECIMAL(38,0) — an int64 sum of 2^63-
-                # scale hashes overflows (ANSI ArithmeticException)
-                h = F.pmod(
-                    F.xxhash64(
-                        *[
-                            F.coalesce(
-                                F.col(c).cast("string"),
-                                F.lit("\x00NULL"),
-                            )
-                            for c in df.columns
-                        ]
-                    ),
-                    F.lit(2**32),
-                ).cast("decimal(38,0)")
-                row = df.select(
-                    F.pmod(F.sum(h), F.lit(2**32).cast("decimal(38,0)"))
-                    .alias("ck")
-                ).collect()[0]
-                out.append((tname, int(row.ck) if row.ck is not None else 0))
-            return out
 
-        um = _re_cal.match(
-            r"\s*SELECT\s+(calgetversion|mcssystemready|mcssystemreadonly|"
-            r"calgettrace|calgetstats)\s*\(\s*\)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
+    @_handles("show_variables")
+    def _show_variables(self, p, dialect):
+        svars = dict(self._sysvars)
+        svars.setdefault(
+            "columnstore_compression_type",
+            {"uncompressed": "0", "snappy": "2", "lz4": "3"}.get(
+                self.spark.conf.get(
+                    "spark.sql.parquet.compression.codec", "snappy"
+                ),
+                "2",
+            ),
         )
-        if um:
-            # client introspection UDFs (ha_mcs_client_udfs.cpp:260-960;
-            # basic/t/cal_named_udfs.test)
-            name = um.group(1).lower()
-            if name == "calgetversion":
-                from mariadb_columnstore_engine_spark import __version__
+        if p.arg:
+            import fnmatch
 
-                return (
-                    f"mcs-spark {__version__} "
-                    f"(Spark {self.spark.version})"
-                )
-            if name == "mcssystemreadonly":
-                # mcs207_utility_functions: 0 = writable, 1 = read-only,
-                # 2 = read-only because a PM is down. This engine has no
-                # degraded-PM state; DML availability is per-table
-                # (attached vs fixture), so system-wide it is writable.
+            rx = fnmatch.translate(p.arg.replace("%", "*").replace("_", "?"))
+            svars = {
+                k: v for k, v in svars.items()
+                if re.match(rx, k, re.IGNORECASE)
+            }
+        return sorted(svars.items())
+
+    @_handles("session_fn")
+    def _session_fn(self, p, dialect):
+        """Session information functions (mcs170_session_functions
+        .test) and the client introspection UDFs
+        (ha_mcs_client_udfs.cpp:260-960; basic/t/cal_named_udfs.test).
+        USER == SESSION_USER == SYSTEM_USER == CURRENT_USER here (no
+        proxy users in a single-user engine); CONNECTION_ID is stable
+        for this Engine's lifetime; SCHEMA is the DATABASE alias;
+        LAST_INSERT_ID is the first auto-generated id of the most
+        recent INSERT batch (backed by the sidecar sequence)."""
+        from mariadb_columnstore_engine_spark import __version__
+
+        trace = self._last_trace
+
+        def user():
+            return f"{self.spark.sparkContext.sparkUser()}@localhost"
+
+        def ready():
+            try:
+                self.spark.sql("SELECT 1").collect()
+                return 1
+            except Exception:
                 return 0
-            if name == "mcssystemready":
-                try:
-                    self.spark.sql("SELECT 1").collect()
-                    return 1
-                except Exception:
-                    return 0
-            if name == "calgettrace":
-                return getattr(
-                    self, "_last_trace",
-                    "no trace recorded — calsettrace(1) first",
-                )
-            # calgetstats: summary counters for the last traced query
-            trace = getattr(self, "_last_trace", None)
-            if trace is None:
-                return "no stats — calsettrace(1) first"
-            return (
+
+        return {
+            "calgetversion": lambda: (
+                f"mcs-spark {__version__} (Spark {self.spark.version})"
+            ),
+            # mcs207_utility_functions: 0 = writable, 1 = read-only, 2 =
+            # read-only because a PM is down. This engine has no
+            # degraded-PM state; DML availability is per-table
+            # (attached vs fixture), so system-wide it is writable.
+            "mcssystemreadonly": lambda: 0,
+            "mcssystemready": ready,
+            "calgettrace": lambda: (
+                trace or "no trace recorded — calsettrace(1) first"
+            ),
+            # summary counters for the last traced query
+            "calgetstats": lambda: (
+                "no stats — calsettrace(1) first" if trace is None else
                 f"plan nodes: {trace.count('(')}; "
                 f"exchanges: {trace.count('Exchange')}; "
                 f"scans: {trace.count('Scan parquet')}"
-            )
-        if _re_cal.fullmatch(
-            r"\s*SELECT\s+DATABASE\s*\(\s*\)\s*;?\s*",
-            stmt,
-            _re_cal.IGNORECASE,
-        ):
-            return getattr(self, "_current_db", "default")
-        sm_ = _re_cal.fullmatch(
-            r"\s*SELECT\s+(USER|SESSION_USER|SYSTEM_USER|CURRENT_USER|"
-            r"CONNECTION_ID|VERSION|SCHEMA)\s*(?:\(\s*\))?\s*;?\s*",
-            stmt,
-            _re_cal.IGNORECASE,
+            ),
+            "database": lambda: self._current_db,
+            "schema": lambda: self._current_db,
+            "user": user,
+            "session_user": user,
+            "system_user": user,
+            "current_user": user,
+            "connection_id": os.getpid,
+            "version": lambda: f"11.4.0-mcs-spark-{__version__}",
+            "last_insert_id": lambda: self._last_insert_id,
+        }[p.arg]()
+
+    @_handles("calsettrace")
+    def _calsettrace(self, p, dialect):
+        self._trace = bool(int(p.arg))
+        return int(p.arg)
+
+    @_handles("show_warnings")
+    def _show_warnings(self, p, dialect):
+        # (level, code, message) rows of the last statement that
+        # produced any; every DML statement resets them (_dml_target)
+        return list(self._warnings)
+
+    @_handles("show_table_status")
+    def _show_table_status(self, p, dialect):
+        from mariadb_columnstore_engine_spark.sources.maintenance import (
+            layout_stats,
         )
-        if sm_:
-            # session information functions (mcs170_session_functions
-            # .test): USER == SESSION_USER == SYSTEM_USER ==
-            # CURRENT_USER here (no proxy users in a single-user
-            # engine); CONNECTION_ID is stable for this Engine's
-            # lifetime; SCHEMA is the DATABASE alias
-            name = sm_.group(1).upper()
-            if name in ("USER", "SESSION_USER", "SYSTEM_USER",
-                        "CURRENT_USER"):
-                return (
-                    f"{self.spark.sparkContext.sparkUser()}@localhost"
-                )
-            if name == "CONNECTION_ID":
-                import os
 
-                return os.getpid()
-            if name == "VERSION":
-                from mariadb_columnstore_engine_spark import __version__
+        out = []
+        for tname, info in sorted(self._user_tables.items()):
+            stats = layout_stats(self.spark, info["path"])
+            out.append({
+                "name": tname,
+                "engine": "mcs-spark",
+                "data_length": stats["total_bytes"],
+                "files": stats["n_files"],
+            })
+        return out
 
-                return f"11.4.0-mcs-spark-{__version__}"
-            return getattr(self, "_current_db", "default")  # SCHEMA
-        if _re_cal.fullmatch(
-            r"\s*SELECT\s+LAST_INSERT_ID\s*\(\s*\)\s*;?\s*",
-            stmt,
-            _re_cal.IGNORECASE,
-        ):
-            # first auto-generated id of the most recent INSERT batch
-            # (MariaDB LAST_INSERT_ID; backed by the sidecar sequence)
-            return getattr(self, "_last_insert_id", 0)
-        tm = _re_cal.match(
-            r"\s*SELECT\s+calsettrace\s*\(\s*(\d+)\s*\)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
+    @_handles("cal_partitions")
+    def _cal_partitions(self, p, dialect):
+        """Partition-management UDFs (dbcon/mysql/ha_mcs_partition
+        .cpp:484-738; udf_calshowpartitions.test). Partition unit = data
+        file (the extent analogue); ids are file names as printed by
+        calshowpartitions."""
+        from mariadb_columnstore_engine_spark.sources import (
+            maintenance as maint,
         )
-        if tm:
-            self._trace = bool(int(tm.group(1)))
-            return int(tm.group(1))
-        if _re_cal.fullmatch(
-            r"\s*SHOW\s+WARNINGS\s*;?\s*", stmt, _re_cal.IGNORECASE
-        ):
-            # (level, code, message) rows from the last statement that
-            # produced any (INSERT IGNORE skip counts)
-            return list(getattr(self, "_warnings", []))
-        if _re_cal.fullmatch(
-            r"\s*SHOW\s+TABLE\s+STATUS\s*;?\s*", stmt, _re_cal.IGNORECASE
-        ):
-            from mariadb_columnstore_engine_spark.sources.maintenance import (  # noqa: E501
-                layout_stats,
-            )
 
-            out = []
-            for tname, info in sorted(
-                getattr(self, "_user_tables", {}).items()
-            ):
-                st_ = layout_stats(self.spark, info["path"])
-                out.append(
-                    {
-                        "name": tname,
-                        "engine": "mcs-spark",
-                        "data_length": st_["total_bytes"],
-                        "files": st_["n_files"],
-                    }
-                )
-            return out
-
-        cm = _re_cal.match(
-            r"\s*SELECT\s+cal(show|disable|enable|drop)partitions\s*\(\s*"
-            r"'([^']*)'\s*(?:,\s*'([^']*)'\s*)?\)\s*;?\s*$",
-            stmt,
-            _re_cal.IGNORECASE,
-        )
-        if cm:
-            # partition-management UDFs (dbcon/mysql/ha_mcs_partition
-            # .cpp:484-738; udf_calshowpartitions.test). Partition unit
-            # = data file (the extent analogue); ids are file names as
-            # printed by calshowpartitions.
-            from mariadb_columnstore_engine_spark.sources import (
-                maintenance as maint,
-            )
-
-            verb, tname, arg = cm.group(1).lower(), cm.group(2), cm.group(3)
-            mpath = self._writable(tname)["path"]
-            if verb == "show":
-                if not arg:
-                    raise ValueError(
-                        "calshowpartitions('table','column') needs a "
-                        "column argument"
-                    )
-                rows = maint.show_partitions(self.spark, mpath, arg)
-                lines = ["Part# Min Max Status"] + [
-                    f"{r['partition']} {r['min']} {r['max']} {r['status']}"
-                    for r in rows
-                ]
-                return "\n".join(lines)
-            parts = [p.strip() for p in (arg or "").split(",") if p.strip()]
-            if not parts:
+        mpath = self._writable(p.table)["path"]
+        if p.verb == "show":
+            if not p.arg:
                 raise ValueError(
-                    f"cal{verb}partitions('table','p1,p2,...') needs a "
-                    "partition list"
+                    "calshowpartitions('table','column') needs a "
+                    "column argument"
                 )
-            if verb == "disable":
-                maint.disable_partitions(mpath, parts)
-                msg = "Partitions are disabled successfully"
-            elif verb == "enable":
-                maint.enable_partitions(mpath, parts)
-                msg = "Partitions are enabled successfully"
+            rows = maint.show_partitions(self.spark, mpath, p.arg)
+            return "\n".join(["Part# Min Max Status"] + [
+                f"{r['partition']} {r['min']} {r['max']} {r['status']}"
+                for r in rows
+            ])
+        parts = [x.strip() for x in (p.arg or "").split(",") if x.strip()]
+        if not parts:
+            raise ValueError(
+                f"cal{p.verb}partitions('table','p1,p2,...') needs a "
+                "partition list"
+            )
+        if p.verb == "disable":
+            maint.disable_partitions(mpath, parts)
+            msg = "Partitions are disabled successfully"
+        elif p.verb == "enable":
+            maint.enable_partitions(mpath, parts)
+            msg = "Partitions are enabled successfully"
+        else:
+            maint.drop_partitions(self.spark, mpath, parts)
+            msg = "Partitions are deleted successfully"
+        self._refresh(p.table)
+        return msg
+
+    @_handles("analyze_table")
+    def _analyze_table(self, p, dialect):
+        """ANALYZE TABLE t1[, t2 ...] (basic/t/analyze_table.test) — CBO
+        statistics; attached user tables are temp views Spark cannot
+        persist stats for, so their row count lands in the engine's
+        table info instead (still drives broadcast decisions via AQE's
+        runtime sizes)."""
+        out = []
+        for tname in p.tables:
+            try:
+                self.analyze(tname)
+            except Exception:
+                info = self._user_tables.get(tname)
+                if info is None and tname not in TABLES:
+                    out.append(
+                        (tname, "analyze", "Error", "Table doesn't exist")
+                    )
+                    continue
+                n_rows = self.table(tname).count()
+                if info is not None:
+                    info["row_count"] = n_rows
+            out.append((tname, "analyze", "status", "OK"))
+        return out
+
+    @_handles("check_table", "optimize_table", "repair_table")
+    def _check_table(self, p, dialect):
+        """CHECK/OPTIMIZE/REPAIR TABLE: MariaDB-shaped status rows.
+        CHECK actually verifies the table is readable (schema resolves
+        + parquet footers open — the engine's analogue of an extent-map
+        consistency walk). OPTIMIZE/REPAIR return the note mysqld emits
+        for engines that handle these internally (ColumnStore does not
+        support OPTIMIZE — ha_mcs returns HA_ADMIN_NOT_IMPLEMENTED and
+        the server notes it) followed by an OK status row."""
+        op = p.kind.split("_")[0]
+        out = []
+        for tname in p.tables:
+            if tname not in self._user_tables and tname not in TABLES:
+                out.append((tname, op, "Error", "Table doesn't exist"))
+            elif op == "check":
+                try:
+                    self.table(tname).limit(1).collect()
+                    out.append((tname, op, "status", "OK"))
+                except Exception as e:  # noqa: BLE001 — reported
+                    out.append((tname, op, "Error", str(e)[:120]))
             else:
-                maint.drop_partitions(self.spark, mpath, parts)
-                msg = "Partitions are deleted successfully"
+                out.append((
+                    tname,
+                    op,
+                    "note",
+                    f"Table does not support {op}, doing recreate + "
+                    "analyze instead"
+                    if op == "optimize"
+                    else "The storage engine for the table doesn't "
+                    "support repair",
+                ))
+                out.append((tname, op, "status", "OK"))
+        return out
+
+    @_handles("checksum_table")
+    def _checksum_table(self, p, dialect):
+        """CHECKSUM TABLE t1[, t2 ...]: deterministic, row-order-
+        independent content checksum (sum of per-row xxhash64 over all
+        columns, mod 2^32 like MariaDB's counter width). The exact
+        MariaDB CRC differs by design — this is an engine-defined
+        checksum for copy/restore verification."""
+        out = []
+        for tname in p.tables:
+            df = self.table(tname)
+            # per-row hash folded to 32 bits BEFORE the sum, and the sum
+            # carried in DECIMAL(38,0) — an int64 sum of 2^63-scale
+            # hashes overflows (ANSI ArithmeticException)
+            h = F.pmod(
+                F.xxhash64(*[
+                    F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL"))
+                    for c in df.columns
+                ]),
+                F.lit(2**32),
+            ).cast("decimal(38,0)")
+            row = df.select(
+                F.pmod(F.sum(h), F.lit(2**32).cast("decimal(38,0)"))
+                .alias("ck")
+            ).collect()[0]
+            out.append((tname, int(row.ck) if row.ck is not None else 0))
+        return out
+
+    @_handles("flush_tables")
+    def _flush_tables(self, p, dialect):
+        # FLUSH TABLES (MTR preamble idiom): re-read every attached
+        # table's evolution sidecar + refresh its view — the real
+        # cache-invalidation this engine has; read locks are
+        # meaningless on an immutable-files engine
+        for tname in list(self._user_tables):
             self._refresh(tname)
-            return msg
 
-        parsed = st.parse(stmt)
-        if isinstance(parsed, st.Other):
-            if parsed.kind == "select":
-                q = parsed.arg
-                if dialect == "mariadb":
-                    q = self._handle_found_rows(q, dialect)
-                    pa = self._handle_procedure_analyse(q, dialect)
-                    if pa is not None:
-                        return pa
-                    df = self.sql(q, dialect=dialect)
-                    if not getattr(self, "_found_rows_calc", False):
-                        # plain SELECT also updates FOUND_ROWS() in
-                        # MariaDB (to the count of rows RETURNED, i.e.
-                        # post-LIMIT). Store the DataFrame and count it
-                        # LAZILY only if FOUND_ROWS() is actually read
-                        # — no per-statement count job.
-                        self._found_rows = df
-                    return df
-                return self.sql(q, dialect=dialect)
-            if parsed.kind == "drop_view":
-                return self.drop_view(parsed.arg)
-            if parsed.kind in ("create_db", "create_db_if_not_exists"):
-                import os as _os
+    @_handles("auth_noop")
+    def _auth_noop(self, p, dialect):
+        # parsed and accepted; no auth layer in a library engine (mysqld
+        # owns accounts upstream of the reference too). Recorded as a
+        # note-level warning.
+        self._warnings = [
+            ("Note", 1105,
+             f"{p.arg} is a no-op: single-user engine, "
+             "account management delegated to the host")
+        ]
 
-                if self.warehouse is None:
-                    raise ValueError(
-                        "CREATE DATABASE needs Engine(warehouse=...)"
-                    )
-                dbs = self._databases = getattr(
-                    self, "_databases", {"default"}
-                )
-                if parsed.arg in dbs:
-                    if parsed.kind == "create_db_if_not_exists":
-                        return None
-                    raise ValueError(
-                        f"database {parsed.arg!r} already exists"
-                    )
-                _os.makedirs(
-                    _os.path.join(self.warehouse, parsed.arg),
-                    exist_ok=True,
-                )
-                dbs.add(parsed.arg)
-                return None
-            if parsed.kind in ("drop_db", "drop_db_if_exists"):
-                import os as _os
-                import shutil as _shutil
+    @_handles("begin", "commit", "rollback")
+    def _transaction(self, p, dialect):
+        return getattr(self, p.kind)()
 
-                dbs = self._databases = getattr(
-                    self, "_databases", {"default"}
-                )
-                if parsed.arg not in dbs or parsed.arg == "default":
-                    if parsed.kind == "drop_db_if_exists":
-                        return None
-                    raise ValueError(
-                        f"database {parsed.arg!r} does not exist"
-                    )
-                if getattr(self, "_txn", None) is not None:
-                    raise ValueError(
-                        "DROP DATABASE inside a transaction is not "
-                        "supported"
-                    )
-                # drop every table registered under this database
-                for tn, info in list(
-                    getattr(self, "_user_tables", {}).items()
-                ):
-                    if info.get("db") == parsed.arg:
-                        _shutil.rmtree(info["path"], ignore_errors=True)
-                        manifest.forget(info["path"])
-                        self.spark.catalog.dropTempView(tn)
-                        del self._user_tables[tn]
-                _shutil.rmtree(
-                    _os.path.join(self.warehouse, parsed.arg),
-                    ignore_errors=True,
-                )
-                dbs.discard(parsed.arg)
-                if getattr(self, "_current_db", "default") == parsed.arg:
-                    self._current_db = "default"
-                return None
-            if parsed.kind == "show_databases":
-                return sorted(getattr(self, "_databases", {"default"}))
-            if parsed.kind == "use_db":
-                dbs = getattr(self, "_databases", {"default"})
-                if parsed.arg not in dbs:
-                    raise ValueError(
-                        f"unknown database {parsed.arg!r}"
-                    )
-                self._current_db = parsed.arg
-                return None
-            if parsed.kind == "do_expr":
-                self.sql(
-                    f"SELECT ({parsed.arg}) AS v", dialect=dialect
-                ).collect()
-                return None
-            if parsed.kind == "explain":
-                mode, _, sql_text = parsed.arg.partition("\x00")
-                return self.explain(sql_text, mode=mode or "formatted")
-            if parsed.kind == "create_function":
-                name, params, rettype, body, mode = parsed.arg.split(
-                    "\x01"
-                )
-                funcs = _session_sql_functions(self.spark)
-                if name.lower() in funcs:
-                    # MariaDB: ER_SP_ALREADY_EXISTS unless OR REPLACE /
-                    # IF NOT EXISTS was given
-                    if mode == "ifnotexists":
-                        return None
-                    if mode != "replace":
-                        raise ValueError(
-                            f"function {name!r} already exists "
-                            "(use OR REPLACE or IF NOT EXISTS)"
-                        )
-                # the body runs through the same dialect pass as any
-                # statement (MariaDB functions inside stored functions)
-                import re as _re_fn
+    # --- queries and metadata -----------------------------------------
 
-                body_sql = _re_fn.sub(
-                    r"^SELECT\s+", "", tsql(f"SELECT {body}"), count=1,
-                    flags=_re_fn.IGNORECASE,
-                )
-                self.spark.sql(
-                    f"CREATE OR REPLACE TEMPORARY FUNCTION {name} "
-                    f"({params}) RETURNS {rettype} RETURN {body_sql}"
-                )
-                funcs.add(name.lower())
-                return None
-            if parsed.kind in (
-                "drop_function", "drop_function_if_exists"
-            ):
-                # bookkeeping lives on the shared SparkSession (the
-                # temporary function does too), so a second Engine on
-                # the same session can DROP what the first created
-                funcs = _session_sql_functions(self.spark)
-                if parsed.arg.lower() not in funcs:
-                    if parsed.kind == "drop_function":
-                        raise ValueError(
-                            f"unknown function {parsed.arg!r}"
-                        )
-                    return None
-                self.spark.sql(
-                    f"DROP TEMPORARY FUNCTION {parsed.arg}"
-                )
-                funcs.discard(parsed.arg.lower())
-                return None
-            if parsed.kind == "set_sysvar":
-                return self._set_sysvar(parsed.arg)
-            if parsed.kind == "show_variables":
-                svars = dict(getattr(self, "_sysvars", {}))
-                svars.setdefault(
-                    "columnstore_compression_type",
-                    {"uncompressed": "0", "snappy": "2", "lz4": "3"}.get(
-                        self.spark.conf.get(
-                            "spark.sql.parquet.compression.codec", "snappy"
-                        ),
-                        "2",
-                    ),
-                )
-                pat = parsed.arg
-                if pat:
-                    import fnmatch
+    @_handles("select")
+    def _select(self, p, dialect):
+        if dialect != "mariadb":
+            return self.sql(p.arg, dialect=dialect)
+        q = self._handle_found_rows(p.arg, dialect)
+        pa = self._handle_procedure_analyse(q, dialect)
+        if pa is not None:
+            return pa
+        df = self.sql(q, dialect=dialect)
+        if not self._found_rows_calc:
+            # plain SELECT also updates FOUND_ROWS() in MariaDB (to the
+            # count of rows RETURNED, i.e. post-LIMIT). Store the
+            # DataFrame and count it LAZILY only if FOUND_ROWS() is
+            # actually read — no per-statement count job.
+            self._found_rows = df
+        return df
 
-                    rx = fnmatch.translate(
-                        pat.replace("%", "*").replace("_", "?")
-                    )
-                    svars = {
-                        k: v
-                        for k, v in svars.items()
-                        if _re_cal.match(rx, k, _re_cal.IGNORECASE)
-                    }
-                return sorted(svars.items())
-            if parsed.kind == "auth_noop":
-                # parsed and accepted; no auth layer in a library
-                # engine (mysqld owns accounts upstream of the
-                # reference too). Recorded as a note-level warning.
-                self._warnings = [
-                    ("Note", 1105,
-                     f"{parsed.arg} is a no-op: single-user engine, "
-                     "account management delegated to the host")
-                ]
-                return None
-            if parsed.kind == "index_noop":
-                # index DDL accepted, nothing stored (mcs73: parquet
-                # row-group min/max is the extent-map index analogue)
-                self._writable(parsed.arg)
-                return None
-            if parsed.kind == "add_primary_key":
-                tname, _, cols = parsed.arg.partition("\x01")
-                info = self._writable(tname)
-                info["keys"] = [c for c in cols.split("\x00") if c]
-                return None
-            if parsed.kind == "explain_analyze":
-                return self.explain_analyze(parsed.arg)
-            if parsed.kind == "show_tables":
-                return sorted(
-                    set(TABLES)
-                    | set(getattr(self, "_user_tables", {}))
-                )
-            if parsed.kind == "show_create":
-                cols = ",\n".join(
-                    f"  `{c}` {t}" for c, t in self.describe(parsed.arg)
-                )
-                return (
-                    f"CREATE TABLE `{parsed.arg}` (\n{cols}\n) "
-                    "USING parquet"
-                )
-            if parsed.kind == "show_index":
-                # MariaDB SHOW INDEX row shape (subset): (table,
-                # non_unique, key_name, seq, column). ColumnStore has
-                # no secondary indexes — the declared/attach keys are
-                # the only entries (extent min/max is the real index)
-                self.describe(parsed.arg)  # existence check
-                info = getattr(self, "_user_tables", {}).get(parsed.arg)
-                keys = (info or {}).get("keys") or []
-                return [
-                    (parsed.arg, 0, "PRIMARY", i + 1, c)
-                    for i, c in enumerate(keys)
-                ]
-            if parsed.kind in ("drop_table", "drop_table_if_exists"):
-                import shutil
+    @_handles("do_expr")
+    def _do_expr(self, p, dialect):
+        self.sql(f"SELECT ({p.arg}) AS v", dialect=dialect).collect()
 
-                info = getattr(self, "_user_tables", {}).get(parsed.arg)
-                if info is None:
-                    if parsed.kind == "drop_table_if_exists":
-                        return None
-                    raise ValueError(
-                        f"{parsed.arg!r} is not an attached user table "
-                        "(catalog fixture tables cannot be dropped)"
-                    )
-                if getattr(self, "_txn", None) is not None:
-                    raise ValueError(
-                        "DROP TABLE inside a transaction is not "
-                        "supported (snapshots reference the directory)"
-                    )
+    @_handles("explain")
+    def _explain(self, p, dialect):
+        return self.explain(p.sql, mode=p.mode)
+
+    @_handles("explain_analyze")
+    def _explain_analyze(self, p, dialect):
+        return self.explain_analyze(p.arg)
+
+    @_handles("describe")
+    def _describe(self, p, dialect):
+        return self.describe(p.arg)
+
+    @_handles("show_tables")
+    def _show_tables(self, p, dialect):
+        return sorted(set(TABLES) | set(self._user_tables))
+
+    @_handles("show_create")
+    def _show_create(self, p, dialect):
+        cols = ",\n".join(f"  `{c}` {t}" for c, t in self.describe(p.arg))
+        return f"CREATE TABLE `{p.arg}` (\n{cols}\n) USING parquet"
+
+    @_handles("show_index")
+    def _show_index(self, p, dialect):
+        # MariaDB SHOW INDEX row shape (subset): (table, non_unique,
+        # key_name, seq, column). ColumnStore has no secondary indexes —
+        # the declared/attach keys are the only entries (extent min/max
+        # is the real index)
+        self.describe(p.arg)  # existence check
+        keys = self._user_tables.get(p.arg, {}).get("keys") or []
+        return [(p.arg, 0, "PRIMARY", i + 1, c) for i, c in enumerate(keys)]
+
+    @_handles("create_view")
+    def _create_view(self, p, dialect):
+        return self.create_view(p.name, p.select_sql)
+
+    @_handles("drop_view")
+    def _drop_view(self, p, dialect):
+        return self.drop_view(p.arg)
+
+    @_handles("create_function")
+    def _create_function(self, p, dialect):
+        funcs = _session_sql_functions(self.spark)
+        if p.name.lower() in funcs:
+            # MariaDB: ER_SP_ALREADY_EXISTS unless OR REPLACE / IF NOT
+            # EXISTS was given
+            if p.mode == "ifnotexists":
+                return None
+            if p.mode != "replace":
+                raise ValueError(
+                    f"function {p.name!r} already exists "
+                    "(use OR REPLACE or IF NOT EXISTS)"
+                )
+        # the body runs through the same dialect pass as any statement
+        # (MariaDB functions inside stored functions)
+        body_sql = re.sub(
+            r"^SELECT\s+", "", self._tsql(f"SELECT {p.body}", dialect),
+            count=1, flags=re.IGNORECASE,
+        )
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {p.name} "
+            f"({p.params}) RETURNS {p.returns} RETURN {body_sql}"
+        )
+        funcs.add(p.name.lower())
+
+    @_handles("drop_function", "drop_function_if_exists")
+    def _drop_function(self, p, dialect):
+        # bookkeeping lives on the shared SparkSession (the temporary
+        # function does too), so a second Engine on the same session
+        # can DROP what the first created
+        funcs = _session_sql_functions(self.spark)
+        if p.arg.lower() not in funcs:
+            if p.kind == "drop_function":
+                raise ValueError(f"unknown function {p.arg!r}")
+            return None
+        self.spark.sql(f"DROP TEMPORARY FUNCTION {p.arg}")
+        funcs.discard(p.arg.lower())
+
+    # --- databases ------------------------------------------------------
+
+    @_handles("create_db", "create_db_if_not_exists")
+    def _create_db(self, p, dialect):
+        if self.warehouse is None:
+            raise ValueError("CREATE DATABASE needs Engine(warehouse=...)")
+        if p.arg in self._databases:
+            if p.kind == "create_db_if_not_exists":
+                return None
+            raise ValueError(f"database {p.arg!r} already exists")
+        os.makedirs(os.path.join(self.warehouse, p.arg), exist_ok=True)
+        self._databases.add(p.arg)
+
+    @_handles("drop_db", "drop_db_if_exists")
+    def _drop_db(self, p, dialect):
+        import shutil
+
+        if p.arg not in self._databases or p.arg == "default":
+            if p.kind == "drop_db_if_exists":
+                return None
+            raise ValueError(f"database {p.arg!r} does not exist")
+        if self._txn is not None:
+            raise ValueError(
+                "DROP DATABASE inside a transaction is not supported"
+            )
+        # drop every table registered under this database
+        for tn, info in list(self._user_tables.items()):
+            if info.get("db") == p.arg:
                 shutil.rmtree(info["path"], ignore_errors=True)
                 manifest.forget(info["path"])
-                del self._user_tables[parsed.arg]
-                self.spark.catalog.dropTempView(parsed.arg)
-                return None
-            if parsed.kind == "rename_table":
-                old, new = parsed.arg.split("\x00")
-                info = self._writable(old)
-                if getattr(self, "_txn", None) is not None:
-                    raise ValueError(
-                        "RENAME TABLE inside a transaction is not "
-                        "supported (snapshots are keyed by table name)"
-                    )
-                if new in getattr(self, "_user_tables", {}) or new in TABLES:
-                    raise ValueError(f"table {new!r} already exists")
-                # metadata-only rename: the directory stays put (the
-                # reference's RENAME is likewise a catalog update)
-                self._user_tables[new] = self._user_tables.pop(old)
-                self.spark.catalog.dropTempView(old)
-                self._refresh(new)
-                return None
-            if parsed.kind == "begin":
-                return self.begin()
-            if parsed.kind == "commit":
-                return self.commit()
-            if parsed.kind == "rollback":
-                return self.rollback()
-            if parsed.kind == "truncate":
-                path = self._writable(parsed.arg)["path"]
-                n = dml.delete_where(self.spark, path, F.lit(True))
-                self._refresh(parsed.arg)
-                return n
-            return self.describe(parsed.arg)
-        if isinstance(parsed, st.CreateView):
-            return self.create_view(parsed.name, parsed.select_sql)
-        if isinstance(parsed, st.CreateTable):
-            import os
+                self.spark.catalog.dropTempView(tn)
+                del self._user_tables[tn]
+        shutil.rmtree(
+            os.path.join(self.warehouse, p.arg), ignore_errors=True
+        )
+        self._databases.discard(p.arg)
+        if self._current_db == p.arg:
+            self._current_db = "default"
 
-            if self.warehouse is None:
-                raise ValueError(
-                    "CREATE TABLE AS SELECT needs Engine(warehouse=...) "
-                    "to know where to materialize"
-                )
-            if parsed.or_replace and parsed.name in getattr(
-                self, "_user_tables", {}
-            ):
-                # CREATE OR REPLACE TABLE (MTR create_or_replace):
-                # atomic-enough drop+create of a USER table; fixtures
-                # stay protected by the checks below
-                self.execute(f"DROP TABLE {parsed.name}")
-            if parsed.name in TABLES or parsed.name in getattr(
-                self, "_user_tables", {}
-            ):
-                raise ValueError(f"table {parsed.name!r} already exists")
-            _db = getattr(self, "_current_db", "default")
-            path = (
-                os.path.join(self.warehouse, _db, parsed.name)
-                if _db != "default"
-                else os.path.join(self.warehouse, parsed.name)
-            )
-            df = self.sql(parsed.select_sql, dialect=dialect)
-            df.write.mode("errorifexists").parquet(path)
-            self.attach_table(parsed.name, path)
-            return self.spark.table(parsed.name).count()
-        if isinstance(parsed, st.CreateTableDef):
-            # the reference's primary DDL entry (ddl.y → createtable.cpp):
-            # declared schema, defaults, NOT NULL and CHECKs become an
-            # empty parquet table + sidecar metadata the DML layer
-            # enforces; PRIMARY KEY wires the upsert/REPLACE key
-            import os
+    @_handles("show_databases")
+    def _show_databases(self, p, dialect):
+        return sorted(self._databases)
 
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                _evolution,
-                _write_evolution,
-                add_check_constraint,
-            )
+    @_handles("use_db")
+    def _use_db(self, p, dialect):
+        if p.arg not in self._databases:
+            raise ValueError(f"unknown database {p.arg!r}")
+        self._current_db = p.arg
 
-            if self.warehouse is None:
-                raise ValueError(
-                    "CREATE TABLE needs Engine(warehouse=...) to know "
-                    "where to materialize"
-                )
-            if parsed.or_replace and parsed.name in getattr(
-                self, "_user_tables", {}
-            ):
-                self.execute(f"DROP TABLE {parsed.name}")
-            if parsed.name in TABLES or parsed.name in getattr(
-                self, "_user_tables", {}
-            ):
-                raise ValueError(f"table {parsed.name!r} already exists")
-            ddl = ", ".join(
-                f"{c.name} {c.dtype}" for c in parsed.columns
+    # --- table DDL ------------------------------------------------------
+
+    def _new_table_path(self, name: str, or_replace: bool) -> str:
+        """Where CREATE TABLE [AS SELECT] materializes ``name``: under
+        the warehouse, in the current database. CREATE OR REPLACE
+        (MTR create_or_replace) first drops a USER table of that name —
+        atomic-enough drop+create; fixtures stay protected."""
+        if self.warehouse is None:
+            raise ValueError(
+                "CREATE TABLE needs Engine(warehouse=...) to know "
+                "where to materialize"
             )
-            schema = self.spark.createDataFrame([], ddl).schema
-            _db = getattr(self, "_current_db", "default")
-            path = (
-                os.path.join(self.warehouse, _db, parsed.name)
-                if _db != "default"
-                else os.path.join(self.warehouse, parsed.name)
-            )
-            if os.path.exists(path):
-                raise ValueError(f"table path already exists: {path}")
-            self.spark.createDataFrame([], schema).repartition(1)\
-                .write.parquet(path)
-            evo = _evolution(path)
-            defaults = {
-                c.name: c.default
-                for c in parsed.columns
-                if c.default is not None
-            }
-            if defaults:
-                evo["defaults"] = defaults
-                _write_evolution(path, evo)
-            collations = {
-                c.name: c.collation
-                for c in parsed.columns
+        if or_replace and name in self._user_tables:
+            self.execute(f"DROP TABLE {name}")
+        if name in TABLES or name in self._user_tables:
+            raise ValueError(f"table {name!r} already exists")
+        db = [] if self._current_db == "default" else [self._current_db]
+        path = os.path.join(self.warehouse, *db, name)
+        if os.path.exists(path):
+            raise ValueError(f"table path already exists: {path}")
+        return path
+
+    @_handles("create_table_as")
+    def _create_table_as(self, p, dialect):
+        path = self._new_table_path(p.name, p.or_replace)
+        df = self.sql(p.select_sql, dialect=dialect)
+        df.write.mode("errorifexists").parquet(path)
+        self.attach_table(p.name, path)
+        return self.spark.table(p.name).count()
+
+    @_handles("create_table")
+    def _create_table(self, p, dialect):
+        """The reference's primary DDL entry (ddl.y → createtable.cpp):
+        declared schema, defaults, NOT NULL and CHECKs become an empty
+        parquet table + sidecar metadata the DML layer enforces; PRIMARY
+        KEY wires the upsert/REPLACE key."""
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            _evolution,
+            _write_evolution,
+            add_check_constraint,
+        )
+
+        path = self._new_table_path(p.name, p.or_replace)
+        ddl = ", ".join(f"{c.name} {c.dtype}" for c in p.columns)
+        schema = self.spark.createDataFrame([], ddl).schema
+        self.spark.createDataFrame([], schema).repartition(1)\
+            .write.parquet(path)
+        meta = {
+            "defaults": {
+                c.name: c.default for c in p.columns if c.default is not None
+            },
+            # declared per-column collations (collation.h analogue):
+            # recorded in the sidecar and applied on every read, so =,
+            # GROUP BY, ORDER BY, JOIN honor them without per-query
+            # wrappers (ctype_cmp_* MTR matrices)
+            "collations": {
+                c.name: c.collation for c in p.columns
                 if c.collation is not None
-            }
-            if collations:
-                # declared per-column collations (collation.h analogue):
-                # recorded in the sidecar and applied on every read, so
-                # =, GROUP BY, ORDER BY, JOIN honor them without
-                # per-query wrappers (ctype_cmp_* MTR matrices)
-                evo = _evolution(path)
-                evo["collations"] = collations
-                _write_evolution(path, evo)
-            if parsed.auto_increment:
-                # ≈ BRM's autoincrement manager: a per-table sequence
-                # counter in catalog metadata (the sidecar); INSERT
-                # assigns from it and bumps it past the table max
-                evo = _evolution(path)
-                evo["autoinc"] = {
-                    "column": parsed.auto_increment, "next": 1
-                }
-                _write_evolution(path, evo)
-            for c in parsed.columns:
-                if not c.nullable:
-                    add_check_constraint(
-                        path, f"{c.name}_not_null", f"{c.name} IS NOT NULL"
-                    )
-            for cname, cexpr in parsed.checks:
-                add_check_constraint(path, cname, tsql(cexpr))
-            self.attach_table(
-                parsed.name, path, keys=parsed.primary_key or None
-            )
-            self._user_tables[parsed.name]["db"] = getattr(
-                self, "_current_db", "default"
-            )
-            return 0
-        if isinstance(parsed, st.Alter):
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                alter_add_column,
-                alter_add_generated_column,
-                alter_drop_column,
-                add_check_constraint,
-            )
+            },
+            # ≈ BRM's autoincrement manager: a per-table sequence counter
+            # in catalog metadata (the sidecar); INSERT assigns from it
+            # and bumps it past the table max
+            "autoinc": p.auto_increment and {
+                "column": p.auto_increment, "next": 1
+            },
+        }
+        meta = {k: v for k, v in meta.items() if v}
+        if meta:
+            _write_evolution(path, {**_evolution(path), **meta})
+        for c in p.columns:
+            if not c.nullable:
+                add_check_constraint(
+                    path, f"{c.name}_not_null", f"{c.name} IS NOT NULL"
+                )
+        for cname, cexpr in p.checks:
+            add_check_constraint(path, cname, self._tsql(cexpr, dialect))
+        self.attach_table(p.name, path, keys=p.primary_key or None)
+        self._user_tables[p.name]["db"] = self._current_db
+        return 0
 
-            path = self._writable(parsed.table)["path"]
-            if parsed.action == "drop_partition":
-                # hive-directory partition drop ≈ droppartition.cpp's
-                # extent-marking: O(1) metadata/directory removal, no
-                # scan or rewrite of surviving partitions
-                import os as _os
-                import shutil as _shutil
+    @_handles("drop_table", "drop_table_if_exists")
+    def _drop_table(self, p, dialect):
+        import shutil
 
-                # segments pre-parsed (mask-aware) by statements.parse
-                segs = parsed.expr.split("\x00")
-                pdir = _os.path.join(path, *segs)
-                if not _os.path.isdir(pdir):
-                    raise ValueError(
-                        f"partition {'/'.join(segs)} does not exist"
-                    )
-                _shutil.rmtree(pdir)
-                self._refresh(parsed.table)
+        info = self._user_tables.get(p.arg)
+        if info is None:
+            if p.kind == "drop_table_if_exists":
                 return None
-            if parsed.action == "add":
-                alter_add_column(
-                    path, parsed.column, parsed.dtype, parsed.default,
-                    after=parsed.after,
-                )
-            elif parsed.action == "add_generated":
-                # sidecar expressions are re-parsed by plain F.expr on
-                # every read — store them in Spark dialect (tsql runs
-                # the translation once here)
-                alter_add_generated_column(
-                    path, parsed.column, tsql(parsed.expr)
-                )
-            elif parsed.action == "add_check":
-                add_check_constraint(path, parsed.column, tsql(parsed.expr))
-            elif parsed.action == "rename_col":
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    alter_rename_column,
-                )
+            raise ValueError(
+                f"{p.arg!r} is not an attached user table "
+                "(catalog fixture tables cannot be dropped)"
+            )
+        if self._txn is not None:
+            raise ValueError(
+                "DROP TABLE inside a transaction is not "
+                "supported (snapshots reference the directory)"
+            )
+        shutil.rmtree(info["path"], ignore_errors=True)
+        manifest.forget(info["path"])
+        del self._user_tables[p.arg]
+        self.spark.catalog.dropTempView(p.arg)
 
-                alter_rename_column(path, parsed.column, parsed.expr)
-            elif parsed.action == "modify_col":
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    alter_modify_column,
-                )
+    @_handles("rename_table")
+    def _rename_table(self, p, dialect):
+        self._writable(p.old)
+        if self._txn is not None:
+            raise ValueError(
+                "RENAME TABLE inside a transaction is not "
+                "supported (snapshots are keyed by table name)"
+            )
+        if p.new in self._user_tables or p.new in TABLES:
+            raise ValueError(f"table {p.new!r} already exists")
+        # metadata-only rename: the directory stays put (the reference's
+        # RENAME is likewise a catalog update)
+        self._user_tables[p.new] = self._user_tables.pop(p.old)
+        self.spark.catalog.dropTempView(p.old)
+        self._refresh(p.new)
 
-                alter_modify_column(path, parsed.column, parsed.dtype)
-            elif parsed.action == "change_col":
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    alter_modify_column,
-                    alter_rename_column,
-                )
+    @_handles("index_noop")
+    def _index_noop(self, p, dialect):
+        # index DDL accepted, nothing stored (mcs73: parquet row-group
+        # min/max is the extent-map index analogue)
+        self._writable(p.arg)
 
-                # rename first, then retype the NEW name — read-side
-                # applies renames before retypes, so the retype entry
-                # must reference the post-rename spelling
-                if parsed.expr != parsed.column:
-                    alter_rename_column(path, parsed.column, parsed.expr)
-                alter_modify_column(path, parsed.expr, parsed.dtype)
-            elif parsed.action == "drop":
-                alter_drop_column(path, parsed.column)
-            else:
-                raise AssertionError(
-                    f"unroutable ALTER action: {parsed.action!r}"
-                )
-            self._refresh(parsed.table)
-            return None
+    @_handles("add_primary_key")
+    def _add_primary_key(self, p, dialect):
+        self._writable(p.table)["keys"] = list(p.columns)
 
-        if isinstance(parsed, st.SelectIntoOutfile):
-            # server-side bulk export: ONE delimited file, exactly the
-            # INTO OUTFILE contract (single-file output is inherently a
-            # coalesce(1) — export parallelism belongs to df.write.csv
-            # on a directory, which sources.ingest covers)
-            import glob
-            import os
+    @_handles("alter")
+    def _alter(self, p, dialect):
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            add_check_constraint,
+            alter_add_column,
+            alter_add_generated_column,
+            alter_drop_column,
+            alter_modify_column,
+            alter_rename_column,
+        )
+
+        path = self._writable(p.table)["path"]
+        if p.action == "drop_partition":
+            # hive-directory partition drop ≈ droppartition.cpp's
+            # extent-marking: O(1) metadata/directory removal, no scan
+            # or rewrite of surviving partitions
             import shutil
-            import tempfile
 
-            if os.path.exists(parsed.path):
+            pdir = os.path.join(path, *p.segments)
+            if not os.path.isdir(pdir):
                 raise ValueError(
-                    f"OUTFILE already exists: {parsed.path}"
-                )  # MariaDB refuses to overwrite
-            df = self.sql(parsed.select_sql, dialect=dialect)
-            tmp = tempfile.mkdtemp(prefix="mcs_outfile_")
-            try:
-                d = os.path.join(tmp, "d")
-                w = (
-                    df.coalesce(1)
-                    .write.option("delimiter", parsed.delimiter)
-                    .option("quote", parsed.quote)
-                    .option("header", "false")
+                    f"partition {'/'.join(p.segments)} does not exist"
                 )
-                if parsed.line_sep:
-                    w = w.option("lineSep", parsed.line_sep)
-                w.csv(d)
-                part = glob.glob(os.path.join(d, "part-*"))[0]
-                shutil.move(part, parsed.path)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            return self.spark.read.text(parsed.path).count()
-        if isinstance(parsed, st.LoadData):
-            # cpimport/LDI SQL spelling: file columns map positionally to
-            # the table's non-generated columns; generated columns are
-            # computed, CHECKs enforced — same contract as INSERT
-            import os
-            import shutil
-            import tempfile
-
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                _evolution,
-                bulk_load_csv,
-                read_table_evolved,
-                strip_collations,
-                table_checks,
-                validate_checks,
+            shutil.rmtree(pdir)
+        elif p.action == "add":
+            alter_add_column(
+                path, p.column, p.dtype, p.default, after=p.after
             )
-
-            info = self._writable(parsed.table)
-            path = info["path"]
-            target = read_table_evolved(self.spark, path)
-            gen = {
-                c["name"]: c["expr"]
-                for c in _evolution(path).get("generated", [])
-            }
-            file_fields = [
-                f for f in target.schema.fields if f.name not in gen
-            ]
-            schema_ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in file_fields
+        elif p.action == "add_generated":
+            # sidecar expressions are re-parsed by plain F.expr on every
+            # read — store them in Spark dialect (translated once here)
+            alter_add_generated_column(
+                path, p.column, self._tsql(p.expr, dialect)
             )
-            tmp = tempfile.mkdtemp(prefix="mcs_ldi_")
-            try:
-                if parsed.path.endswith(".parquet"):
-                    # mcol-5505 cpimport-parquet: LDI of a parquet file —
-                    # columns map POSITIONALLY like the delimited path
-                    # (cpimport contract), types re-cast below
-                    pq_src = self.spark.read.parquet(parsed.path)
-                    if len(pq_src.columns) != len(file_fields):
-                        raise ValueError(
-                            f"parquet file has {len(pq_src.columns)} "
-                            f"columns for {len(file_fields)} loadable "
-                            "table columns"
-                        )
-                    src = pq_src.toDF(*[f.name for f in file_fields])
-                else:
-                    dest = os.path.join(tmp, "staged")
-                    bulk_load_csv(
-                        self.spark,
-                        parsed.path,
-                        schema_ddl,
-                        dest,
-                        header=False,
-                        delimiter=parsed.delimiter,
-                        quote=parsed.quote,
-                        escape=parsed.escape,
-                        line_sep=parsed.line_sep,
-                        skip_rows=parsed.skip_rows,
+        elif p.action == "add_check":
+            add_check_constraint(path, p.column, self._tsql(p.expr, dialect))
+        elif p.action == "rename_col":
+            alter_rename_column(path, p.column, p.expr)
+        elif p.action == "modify_col":
+            alter_modify_column(path, p.column, p.dtype)
+        elif p.action == "change_col":
+            # rename first, then retype the NEW name — read-side applies
+            # renames before retypes, so the retype entry must reference
+            # the post-rename spelling
+            if p.expr != p.column:
+                alter_rename_column(path, p.column, p.expr)
+            alter_modify_column(path, p.expr, p.dtype)
+        elif p.action == "drop":
+            alter_drop_column(path, p.column)
+        else:
+            raise AssertionError(f"unroutable ALTER action: {p.action!r}")
+        self._refresh(p.table)
+
+    # --- data in and out --------------------------------------------------
+
+    @_handles("select_into_outfile")
+    def _select_into_outfile(self, p, dialect):
+        """Server-side bulk export: ONE delimited file, exactly the INTO
+        OUTFILE contract (single-file output is inherently a coalesce(1)
+        — export parallelism belongs to df.write.csv on a directory,
+        which sources.ingest covers)."""
+        import glob
+        import shutil
+        import tempfile
+
+        if os.path.exists(p.path):
+            # MariaDB refuses to overwrite
+            raise ValueError(f"OUTFILE already exists: {p.path}")
+        df = self.sql(p.select_sql, dialect=dialect)
+        tmp = tempfile.mkdtemp(prefix="mcs_outfile_")
+        try:
+            d = os.path.join(tmp, "d")
+            w = (
+                df.coalesce(1)
+                .write.option("delimiter", p.delimiter)
+                .option("quote", p.quote)
+                .option("header", "false")
+            )
+            if p.line_sep:
+                w = w.option("lineSep", p.line_sep)
+            w.csv(d)
+            part = glob.glob(os.path.join(d, "part-*"))[0]
+            shutil.move(part, p.path)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return self.spark.read.text(p.path).count()
+
+    # --- DML: the steps INSERT, LOAD DATA, UPDATE and DELETE share -----
+
+    def _dml_target(self, table: str) -> dict:
+        """Open a statement that writes ``table``; its attach info.
+        MariaDB resets the warning list at every statement that uses a
+        table, so the previous statement's warnings go here."""
+        self._warnings = []
+        return self._writable(table)
+
+    def _append(self, path: str, df) -> int:
+        """Append ``df`` as new files; the table's row count after."""
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            strip_collations,
+        )
+
+        before = manifest.state(self.spark, path)
+        strip_collations(df).write.mode("append").parquet(path)
+        return manifest.record(self.spark, path, before).rows
+
+    def _dml_pred(self, p, info: dict, dialect: str):
+        """The rows an UPDATE/DELETE touches, as a predicate Column:
+        ORDER BY .. LIMIT becomes a key predicate, a JOIN a semi-join."""
+        if p.limit is not None:
+            p.where = self._ordered_limit_where(p, info)
+        if p.join is not None:
+            return self._texpr(self._join_pred_sql(p.join, p.where), dialect)
+        return self._texpr(p.where, dialect) if p.where else F.lit(True)
+
+    def _pre_image(self, table: str, path: str, pred=None):
+        """The table before the write, through the evolution sidecar and
+        addressable by its name (correlated predicates spell t.col);
+        with ``pred``, only the rows it makes strictly TRUE."""
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            read_table_evolved,
+        )
+
+        df = read_table_evolved(self.spark, path).alias(table)
+        return df if pred is None else df.where(F.coalesce(pred, F.lit(False)))
+
+    def _dml_done(self, table: str, event: str, affected, dialect: str,
+                  result):
+        """Close a DML statement: refresh the table's view, then run its
+        AFTER ``event`` triggers over ``affected`` (None: none fire)."""
+        self._refresh(table)
+        self._fire_after_triggers(table, event, affected, dialect)
+        return result
+
+    @_handles("truncate")
+    def _truncate(self, p, dialect):
+        path = self._dml_target(p.arg)["path"]
+        n = dml.delete_where(self.spark, path, F.lit(True))
+        # TRUNCATE fires no DELETE triggers (MariaDB)
+        return self._dml_done(p.arg, "DELETE", None, dialect, n)
+
+    @_handles("load_data")
+    def _load_data(self, p, dialect):
+        """cpimport/LDI SQL spelling: file columns map positionally to
+        the table's non-generated columns; generated columns are
+        computed, CHECKs enforced — same contract as INSERT."""
+        import shutil
+        import tempfile
+
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            _evolution,
+            bulk_load_csv,
+            validate_checks,
+        )
+
+        path = self._dml_target(p.table)["path"]
+        target = self._pre_image(p.table, path)
+        evo = _evolution(path)
+        gen = {c["name"]: c["expr"] for c in evo.get("generated", [])}
+        file_fields = [f for f in target.schema.fields if f.name not in gen]
+        schema_ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in file_fields
+        )
+        tmp = tempfile.mkdtemp(prefix="mcs_ldi_")
+        try:
+            if p.path.endswith(".parquet"):
+                # mcol-5505 cpimport-parquet: LDI of a parquet file —
+                # columns map POSITIONALLY like the delimited path
+                # (cpimport contract), types re-cast below
+                pq_src = self.spark.read.parquet(p.path)
+                if len(pq_src.columns) != len(file_fields):
+                    raise ValueError(
+                        f"parquet file has {len(pq_src.columns)} "
+                        f"columns for {len(file_fields)} loadable "
+                        "table columns"
                     )
-                    src = self.spark.read.parquet(dest)
-                out = src.select(
-                    *[
-                        (
-                            F.expr(gen[f.name])
-                            if f.name in gen
-                            else F.col(f.name)
-                        ).cast(f.dataType).alias(f.name)
-                        for f in target.schema.fields
-                    ]
+                src = pq_src.toDF(*[f.name for f in file_fields])
+            else:
+                dest = os.path.join(tmp, "staged")
+                bulk_load_csv(
+                    self.spark, p.path, schema_ddl, dest, header=False,
+                    delimiter=p.delimiter, quote=p.quote, escape=p.escape,
+                    line_sep=p.line_sep, skip_rows=p.skip_rows,
                 )
-                validate_checks(out, table_checks(path))
-                before = manifest.state(self.spark, path)
-                strip_collations(out).write.mode("append").parquet(path)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            n = manifest.record(self.spark, path, before).rows
-            self._refresh(parsed.table)
-            return n
+                src = self.spark.read.parquet(dest)
+            out = src.select(*[
+                (F.expr(gen[f.name]) if f.name in gen else F.col(f.name))
+                .cast(f.dataType).alias(f.name)
+                for f in target.schema.fields
+            ])
+            validate_checks(out, evo.get("checks", []))
+            n = self._append(path, out)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        # LOAD DATA fires no triggers
+        return self._dml_done(p.table, "INSERT", None, dialect, n)
 
-        info = self._writable(parsed.table)
+    @_handles("insert")
+    def _insert(self, p, dialect):
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            _evolution,
+            _write_evolution,
+            validate_checks,
+        )
+
+        info = self._dml_target(p.table)
         path = info["path"]
-        if isinstance(parsed, st.Insert):
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                read_table_evolved,
+        src = self.sql(p.source_sql, dialect=dialect)
+        local_src = (
+            src._jdf.queryExecution().analyzed().getClass()
+            .getSimpleName() == "LocalRelation"
+        )
+        # logical schema (through the evolution sidecar), not the
+        # physical file schema — else an instant-ALTER-added column
+        # named in the INSERT would be silently dropped
+        target = self._pre_image(p.table, path)
+        cols = p.columns or [f.name for f in target.schema.fields]
+        if len(src.columns) != len(cols):
+            raise ValueError(
+                f"INSERT provides {len(src.columns)} columns for "
+                f"{len(cols)} target columns"
+            )
+        evo = _evolution(path)
+        gen = {c["name"]: c["expr"] for c in evo.get("generated", [])}
+        if set(cols) & set(gen):
+            raise ValueError(
+                f"cannot INSERT into generated column(s) "
+                f"{sorted(set(cols) & set(gen))}"
+            )
+        # missing columns → declared DEFAULT if any (CREATE TABLE
+        # column defs), generated ones → their expression, else NULL;
+        # everything cast to the target type
+        dflt = evo.get("defaults", {})
+        out = src.toDF(*cols).select(*[
+            (
+                F.col(f.name) if f.name in cols
+                else F.expr(gen[f.name]) if f.name in gen
+                else F.lit(dflt.get(f.name))
+            ).cast(f.dataType).alias(f.name)
+            for f in target.schema.fields
+        ])
+        # BEFORE INSERT triggers (mcs60): bodies compile to ONE
+        # per-column projection applied to the whole incoming
+        # relation — set-based, codegen'd, no per-row procedure.
+        # Fires before AUTO_INCREMENT assignment (the trigger sees
+        # NULL in the autoinc column, as mysqld's sees 0) and
+        # before CHECK validation (MariaDB applies constraints to
+        # the trigger-rewritten row).
+        for trg in self._table_triggers(p.table, "BEFORE", "INSERT"):
+            from mariadb_columnstore_engine_spark.sources.triggers import (
+                compile_before_transform,
             )
 
-            src = self.sql(parsed.source_sql, dialect=dialect)
-            local_src = (
-                src._jdf.queryExecution().analyzed().getClass()
-                .getSimpleName() == "LocalRelation"
+            tf = compile_before_transform(
+                trg["nodes"], out.columns, event="INSERT"
             )
-            # logical schema (through the evolution sidecar), not the
-            # physical file schema — else an instant-ALTER-added column
-            # named in the INSERT would be silently dropped
-            target = read_table_evolved(self.spark, path)
-            cols = parsed.columns or [f.name for f in target.schema.fields]
-            if len(src.columns) != len(cols):
+            out = out.select(*[
+                self._texpr(tf[f.name], dialect).cast(f.dataType)
+                .alias(f.name)
+                if f.name in tf else F.col(f.name)
+                for f in target.schema.fields
+            ])
+        ai = evo.get("autoinc")
+        if ai:
+            # AUTO_INCREMENT assignment (BRM autoincrement-manager
+            # analogue): omitted or NULL values draw from the stored
+            # counter; explicit values pass through and push the
+            # counter past them (MariaDB semantics, gaps allowed).
+            # The row_number window makes the batch single-partition
+            # for numbering — a sequential sequence is inherently a
+            # serialization point; at bulk-load scale use explicit
+            # keys instead (the reference's cpimport does the same:
+            # one counter reservation per import).
+            from pyspark.sql import Window
+
+            acol = ai["column"]
+            if out.where(F.col(acol).isNull()).count() > 0:
+                # LAST_INSERT_ID(): first auto-generated value of
+                # the batch (MariaDB contract)
+                self._last_insert_id = int(ai["next"])
+            out = out.withColumn(
+                acol,
+                F.when(
+                    F.col(acol).isNull(),
+                    (
+                        F.lit(int(ai["next"]) - 1)
+                        + F.row_number().over(
+                            Window.orderBy(F.monotonically_increasing_id())
+                        )
+                    ).cast(target.schema[acol].dataType),
+                ).otherwise(F.col(acol)),
+            )
+        checks = evo.get("checks", [])
+        if not p.ignore:
+            validate_checks(out, checks)
+        elif checks:
+            # INSERT IGNORE (mcol641-insert semantics): rows violating
+            # any CHECK are skipped instead of failing the statement.
+            # Documented deviation: MariaDB fills an implicit default
+            # for NOT NULL violations; here NOT NULL is modelled as a
+            # CHECK, so such rows are skipped too (deterministic, no
+            # silent zero-fill).
+            n_before = out.count()
+            for c in checks:
+                out = out.where(F.coalesce(F.expr(c["expr"]), F.lit(True)))
+            n_skipped = n_before - out.count()
+            if n_skipped:
+                self._warnings = [(
+                    "Warning",
+                    4025,  # MariaDB CONSTRAINT_FAILED code
+                    f"{n_skipped} row(s) skipped: CHECK constraint "
+                    "violated (INSERT IGNORE)",
+                )]
+        ret = (
+            self._returning(out, p.returning, dialect)
+            if p.returning else None
+        )
+        if self._table_triggers(p.table, "AFTER", "INSERT"):
+            # materialize the inserted relation BEFORE the append: an
+            # INSERT .. SELECT reading the target table itself would
+            # otherwise re-scan post-write files when the AFTER body
+            # re-executes the lineage
+            out = out.localCheckpoint(eager=True)
+        if p.replace or p.on_dup_update:
+            if not info["keys"]:
                 raise ValueError(
-                    f"INSERT provides {len(src.columns)} columns for "
-                    f"{len(cols)} target columns"
+                    "REPLACE INTO / ON DUPLICATE KEY UPDATE need "
+                    "attach_table(keys=[...])"
                 )
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                _evolution,
-                table_checks,
-                validate_checks,
+            if p.replace:
+                n = dml.replace_into(self.spark, path, out, info["keys"])
+            else:
+                # general-expression entries run through the dialect
+                # translator (IF()/IFNULL/... inside update
+                # expressions); take-new entries pass through as plain
+                # column names
+                n = dml.upsert_into(
+                    self.spark, path, out, info["keys"],
+                    update_cols=[
+                        (e[0], self._tsql(e[1], dialect))
+                        if isinstance(e, tuple) else e
+                        for e in p.on_dup_update
+                    ],
+                )
+            # the copy-on-write swap rewrote the sidecar
+            evo = _evolution(path)
+        else:
+            # a VALUES list is a LocalRelation split across up to
+            # nproc slices: one file, not one per row
+            n = self._append(path, out.coalesce(1) if local_src else out)
+        if ai:
+            # counter = table max + 1 (covers both assigned and explicit
+            # values; parquet footer stats make the max a metadata-only
+            # scan)
+            mx = (
+                self.spark.read.schema(manifest.state(self.spark, path).schema)
+                .parquet(path)
+                .agg(F.max(ai["column"]))
+                .first()[0]
             )
-
-            gen = {
-                c["name"]: c["expr"]
-                for c in _evolution(path).get("generated", [])
+            evo["autoinc"] = {
+                "column": ai["column"],
+                "next": int(mx) + 1 if mx is not None else int(ai["next"]),
             }
-            if set(cols) & set(gen):
-                raise ValueError(
-                    f"cannot INSERT into generated column(s) "
-                    f"{sorted(set(cols) & set(gen))}"
+            _write_evolution(path, evo)
+        # AFTER INSERT triggers run once per STATEMENT over the
+        # inserted-rows relation (audit-table pattern as a single
+        # INSERT..SELECT; IF blocks quantify existentially)
+        return self._dml_done(
+            p.table, "INSERT", out, dialect, ret if ret is not None else n
+        )
+
+    @_handles("update")
+    def _update(self, p, dialect):
+        from mariadb_columnstore_engine_spark.sources.ingest import (
+            _evolution,
+            validate_checks,
+        )
+
+        info = self._dml_target(p.table)
+        path = info["path"]
+        if p.join is not None:
+            for c, e in p.assignments.items():
+                if re.search(rf"\b{re.escape(p.join.table)}\s*\.", e):
+                    raise ValueError(
+                        "UPDATE JOIN assignments may reference only the "
+                        f"target table's columns; {c!r} uses "
+                        f"{p.join.table!r} (multi-match value choice is "
+                        "nondeterministic on a distributed engine)"
+                    )
+        pred = self._dml_pred(p, info, dialect)
+        evo = _evolution(path)
+        gen_cols = {c["name"] for c in evo.get("generated", [])}
+        if set(p.assignments) & gen_cols:
+            raise ValueError(
+                "cannot UPDATE generated column(s) "
+                f"{sorted(set(p.assignments) & gen_cols)}"
+            )
+        # BEFORE UPDATE triggers compose into the assignment map: NEW.x
+        # starts as the user's assigned expression (or the old value),
+        # OLD.x is the bare column — everything evaluates against the
+        # PRE-update row in one projection (mcs60 trg2 shape, set-based)
+        btrgs = self._table_triggers(p.table, "BEFORE", "UPDATE")
+        tbl_cols = self._pre_image(p.table, path).columns
+        assign_sql = dict(p.assignments)
+        if btrgs:
+            from mariadb_columnstore_engine_spark.sources.triggers import (
+                compile_before_transform,
+            )
+
+            env = {c.lower(): f"`{c}`" for c in tbl_cols}
+            for c, e in p.assignments.items():
+                env[c.lower()] = f"({e})"
+            for trg in btrgs:
+                tf = compile_before_transform(
+                    trg["nodes"], tbl_cols, event="UPDATE", base_env=env,
                 )
-            aligned = src.toDF(*cols)
-            # missing columns → declared DEFAULT if any (CREATE TABLE
-            # column defs), generated ones → their expression, else NULL;
-            # everything cast to the target type
-            dflt = _evolution(path).get("defaults", {})
-            out = aligned.select(
+                for c2, e2 in tf.items():
+                    env[c2.lower()] = f"({e2})"
+            case_map = {c.lower(): c for c in tbl_cols}
+            assign_sql = {
+                case_map[cl]: e
+                for cl, e in env.items()
+                if e != f"`{case_map[cl]}`"
+            }
+        affected = None
+        if self._table_triggers(p.table, "AFTER", "UPDATE"):
+            # pre-image + post-image relation, materialized BEFORE the
+            # copy-on-write rewrite invalidates the file scan
+            affected = self._pre_image(p.table, path, pred).select(
                 *[
                     (
-                        F.col(f.name)
-                        if f.name in cols
-                        else (
-                            F.expr(gen[f.name])
-                            if f.name in gen
-                            else F.lit(dflt.get(f.name))
-                        )
-                    ).cast(f.dataType).alias(f.name)
-                    for f in target.schema.fields
-                ]
-            )
-            # BEFORE INSERT triggers (mcs60): bodies compile to ONE
-            # per-column projection applied to the whole incoming
-            # relation — set-based, codegen'd, no per-row procedure.
-            # Fires before AUTO_INCREMENT assignment (the trigger sees
-            # NULL in the autoinc column, as mysqld's sees 0) and
-            # before CHECK validation (MariaDB applies constraints to
-            # the trigger-rewritten row).
-            for trg in self._table_triggers(
-                parsed.table, "BEFORE", "INSERT"
-            ):
-                from mariadb_columnstore_engine_spark.sources.triggers import (  # noqa: E501
-                    compile_before_transform,
-                )
-
-                tf = compile_before_transform(
-                    trg["nodes"], out.columns, event="INSERT"
-                )
-                out = out.select(
-                    *[
-                        (
-                            texpr(tf[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            if f.name in tf
-                            else F.col(f.name)
-                        )
-                        for f in target.schema.fields
-                    ]
-                )
-            ai = _evolution(path).get("autoinc")
-            if ai:
-                # AUTO_INCREMENT assignment (BRM autoincrement-manager
-                # analogue): omitted or NULL values draw from the stored
-                # counter; explicit values pass through and push the
-                # counter past them (MariaDB semantics, gaps allowed).
-                # The row_number window makes the batch single-partition
-                # for numbering — a sequential sequence is inherently a
-                # serialization point; at bulk-load scale use explicit
-                # keys instead (the reference's cpimport does the same:
-                # one counter reservation per import).
-                from pyspark.sql import Window as _W
-
-                acol = ai["column"]
-                atype = target.schema[acol].dataType
-                if out.where(F.col(acol).isNull()).count() > 0:
-                    # LAST_INSERT_ID(): first auto-generated value of
-                    # the batch (MariaDB contract)
-                    self._last_insert_id = int(ai["next"])
-                w_ai = _W.orderBy(F.monotonically_increasing_id())
-                out = out.withColumn(
-                    acol,
+                        self._texpr(assign_sql[c], dialect)
+                        if c in assign_sql else F.col(c)
+                    ).alias(c)
+                    for c in tbl_cols
+                ],
+                *[F.col(c).alias(f"__old_{c}") for c in tbl_cols],
+            ).localCheckpoint(eager=True)
+        checks = evo.get("checks", [])
+        if checks:
+            # reject BEFORE rewriting (MariaDB refuses the statement;
+            # there is no rollback here to lean on): preview the
+            # post-update rows with the same CASE WHEN the DML layer
+            # applies, through the LOGICAL schema so checks/assignments
+            # referencing sidecar-added or generated columns resolve
+            preview = self._pre_image(p.table, path)
+            for c, e in assign_sql.items():
+                preview = preview.withColumn(
+                    c,
                     F.when(
-                        F.col(acol).isNull(),
-                        (
-                            F.lit(int(ai["next"]) - 1)
-                            + F.row_number().over(w_ai)
-                        ).cast(atype),
-                    ).otherwise(F.col(acol)),
+                        F.coalesce(pred, F.lit(False)),
+                        self._texpr(e, dialect),
+                    ).otherwise(F.col(c)),
                 )
-            if parsed.ignore:
-                # INSERT IGNORE (mcol641-insert semantics): rows
-                # violating any CHECK are skipped instead of failing the
-                # statement. Documented deviation: MariaDB fills an
-                # implicit default for NOT NULL violations; here NOT
-                # NULL is modelled as a CHECK, so such rows are skipped
-                # too (deterministic, no silent zero-fill).
-                checks = table_checks(path)
-                if checks:
-                    n_before = out.count()
-                    for c in checks:
-                        out = out.where(
-                            F.coalesce(F.expr(c["expr"]), F.lit(True))
-                        )
-                    n_skipped = n_before - out.count()
-                    self._warnings = (
-                        [
-                            (
-                                "Warning",
-                                4025,  # MariaDB CONSTRAINT_FAILED code
-                                f"{n_skipped} row(s) skipped: CHECK "
-                                "constraint violated (INSERT IGNORE)",
-                            )
-                        ]
-                        if n_skipped
-                        else []
-                    )
-            else:
-                validate_checks(out, table_checks(path))
-                self._warnings = []
-            ret = (
-                returning_result(out, parsed.returning)
-                if parsed.returning
-                else None
-            )
-            if self._table_triggers(parsed.table, "AFTER", "INSERT"):
-                # materialize the inserted relation BEFORE the append:
-                # an INSERT .. SELECT reading the target table itself
-                # would otherwise re-scan post-write files when the
-                # AFTER body re-executes the lineage
-                out = out.localCheckpoint(eager=True)
-            if parsed.replace or parsed.on_dup_update:
-                if not info["keys"]:
-                    raise ValueError(
-                        "REPLACE INTO / ON DUPLICATE KEY UPDATE need "
-                        "attach_table(keys=[...])"
-                    )
-                if parsed.replace:
-                    n = dml.replace_into(
-                        self.spark, path, out, info["keys"]
-                    )
-                else:
-                    # general-expression entries run through the
-                    # dialect translator (IF()/IFNULL/... inside
-                    # update expressions); take-new entries pass
-                    # through as plain column names
-                    n = dml.upsert_into(
-                        self.spark, path, out, info["keys"],
-                        update_cols=[
-                            (e[0], tsql(e[1]))
-                            if isinstance(e, tuple)
-                            else e
-                            for e in parsed.on_dup_update
-                        ],
-                    )
-            else:
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    strip_collations,
-                )
+            for g in evo.get("generated", []):
+                preview = preview.withColumn(g["name"], F.expr(g["expr"]))
+            validate_checks(preview, checks)
+        n = dml.update_where(
+            self.spark,
+            path,
+            pred,
+            {c: self._texpr(e, dialect) for c, e in assign_sql.items()},
+            alias=p.table,
+        )
+        return self._dml_done(p.table, "UPDATE", affected, dialect, n)
 
-                written = strip_collations(out)
-                if local_src:
-                    # a VALUES list is a LocalRelation split across up
-                    # to nproc slices: one file, not one per row
-                    written = written.coalesce(1)
-                before = manifest.state(self.spark, path)
-                written.write.mode("append").parquet(path)
-                n = manifest.record(self.spark, path, before).rows
-            if ai:
-                # counter = table max + 1 (covers both assigned and
-                # explicit values; parquet footer stats make the max a
-                # metadata-only scan)
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    _write_evolution,
-                )
-
-                mx = (
-                    self.spark.read.schema(
-                        manifest.state(self.spark, path).schema
-                    )
-                    .parquet(path)
-                    .agg(F.max(ai["column"]))
-                    .first()[0]
-                )
-                evo_ai = _evolution(path)
-                evo_ai["autoinc"] = {
-                    "column": ai["column"],
-                    "next": (int(mx) + 1) if mx is not None
-                    else int(ai["next"]),
-                }
-                _write_evolution(path, evo_ai)
-            self._refresh(parsed.table)
-            # AFTER INSERT triggers run once per STATEMENT over the
-            # inserted-rows relation (audit-table pattern as a single
-            # INSERT..SELECT; IF blocks quantify existentially)
-            self._fire_after_triggers(
-                parsed.table, "INSERT", out, dialect
-            )
-            return ret if ret is not None else n
-        if isinstance(parsed, st.Update):
-            from mariadb_columnstore_engine_spark.sources.ingest import (
-                _evolution,
-                read_table_evolved,
-                table_checks,
-                validate_checks,
-            )
-
-            if parsed.limit is not None:
-                parsed.where = self._ordered_limit_where(parsed, info)
-            if parsed.join is not None:
-                import re as _re
-
-                for c, e in parsed.assignments.items():
-                    if _re.search(
-                        rf"\b{_re.escape(parsed.join.table)}\s*\.", e
-                    ):
-                        raise ValueError(
-                            "UPDATE JOIN assignments may reference only "
-                            f"the target table's columns; {c!r} uses "
-                            f"{parsed.join.table!r} (multi-match value "
-                            "choice is nondeterministic on a "
-                            "distributed engine)"
-                        )
-                pred = texpr(join_pred_sql(parsed.join, parsed.where))
-            else:
-                pred = texpr(parsed.where) if parsed.where else F.lit(True)
-            gen_cols = {
-                c["name"] for c in _evolution(path).get("generated", [])
-            }
-            if set(parsed.assignments) & gen_cols:
-                raise ValueError(
-                    "cannot UPDATE generated column(s) "
-                    f"{sorted(set(parsed.assignments) & gen_cols)}"
-                )
-            # BEFORE UPDATE triggers compose into the assignment map:
-            # NEW.x starts as the user's assigned expression (or the
-            # old value), OLD.x is the bare column — everything
-            # evaluates against the PRE-update row in one projection
-            # (mcs60 trg2 shape, set-based)
-            btrgs = self._table_triggers(parsed.table, "BEFORE", "UPDATE")
-            atrgs = self._table_triggers(parsed.table, "AFTER", "UPDATE")
-            tbl_cols = [
-                f.name
-                for f in read_table_evolved(self.spark, path).schema.fields
-            ]
-            if btrgs:
-                from mariadb_columnstore_engine_spark.sources.triggers import (  # noqa: E501
-                    compile_before_transform,
-                )
-
-                env = {c.lower(): f"`{c}`" for c in tbl_cols}
-                for c, e in parsed.assignments.items():
-                    env[c.lower()] = f"({e})"
-                for trg in btrgs:
-                    tf = compile_before_transform(
-                        trg["nodes"],
-                        tbl_cols,
-                        event="UPDATE",
-                        base_env=env,
-                    )
-                    for c2, e2 in tf.items():
-                        env[c2.lower()] = f"({e2})"
-                case_map = {c.lower(): c for c in tbl_cols}
-                assign_sql = {
-                    case_map[cl]: e
-                    for cl, e in env.items()
-                    if e != f"`{case_map[cl]}`"
-                }
-            else:
-                assign_sql = dict(parsed.assignments)
-            affected = None
-            if atrgs:
-                # pre-image + post-image relation, materialized BEFORE
-                # the copy-on-write rewrite invalidates the file scan
-                base_rel = read_table_evolved(self.spark, path).alias(
-                    parsed.table
-                ).where(F.coalesce(pred, F.lit(False)))
-                affected = base_rel.select(
-                    *[
-                        (
-                            texpr(assign_sql[c])
-                            if c in assign_sql
-                            else F.col(c)
-                        ).alias(c)
-                        for c in tbl_cols
-                    ],
-                    *[
-                        F.col(c).alias(f"__old_{c}")
-                        for c in tbl_cols
-                    ],
-                ).localCheckpoint(eager=True)
-            checks = table_checks(path)
-            if checks:
-                # reject BEFORE rewriting (MariaDB refuses the statement;
-                # there is no rollback here to lean on): preview the
-                # post-update rows with the same CASE WHEN the DML layer
-                # applies. Preview through the LOGICAL schema
-                # (read_table_evolved) so checks/assignments referencing
-                # sidecar-added or generated columns resolve — the same
-                # schema the DML rewrite itself now reads.
-                preview = read_table_evolved(self.spark, path).alias(
-                    parsed.table
-                )
-                for c, e in assign_sql.items():
-                    preview = preview.withColumn(
-                        c,
-                        F.when(F.coalesce(pred, F.lit(False)), texpr(e))
-                        .otherwise(F.col(c)),
-                    )
-                for g in _evolution(path).get("generated", []):
-                    preview = preview.withColumn(
-                        g["name"], F.expr(g["expr"])
-                    )
-                validate_checks(preview, checks)
-            n = dml.update_where(
-                self.spark,
-                path,
-                pred,
-                {c: texpr(e) for c, e in assign_sql.items()},
-                alias=parsed.table,
-            )
-            self._refresh(parsed.table)
-            self._fire_after_triggers(
-                parsed.table, "UPDATE", affected, dialect
-            )
-            return n
-        if isinstance(parsed, st.Delete):
-            if parsed.limit is not None:
-                parsed.where = self._ordered_limit_where(parsed, info)
-            if parsed.join is not None:
-                pred = texpr(join_pred_sql(parsed.join, parsed.where))
-            else:
-                pred = texpr(parsed.where) if parsed.where else F.lit(True)
-            ret = None
-            if parsed.returning:
-                from mariadb_columnstore_engine_spark.sources.ingest import (
-                    read_table_evolved,
-                )
-
-                # the rows DELETE will remove = predicate strictly TRUE
-                doomed = (
-                    read_table_evolved(self.spark, path)
-                    .alias(parsed.table)
-                    .where(F.coalesce(pred, F.lit(False)))
-                )
-                ret = returning_result(doomed, parsed.returning)
-            affected_del = None
-            if self._table_triggers(
-                parsed.table, "AFTER", "DELETE"
-            ) or self._table_triggers(parsed.table, "BEFORE", "DELETE"):
-                from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
-                    read_table_evolved as _rte,
-                )
-
-                # pre-image relation (OLD.x → __old_x), materialized
-                # BEFORE the rewrite removes the scanned files
-                doomed_rel = (
-                    _rte(self.spark, path)
-                    .alias(parsed.table)
-                    .where(F.coalesce(pred, F.lit(False)))
-                )
-                affected_del = doomed_rel.select(
-                    *[
-                        F.col(c).alias(f"__old_{c}")
-                        for c in doomed_rel.columns
-                    ]
-                ).localCheckpoint(eager=True)
-            # BEFORE DELETE bodies fire while the doomed rows are
-            # still in the table (audit reads see pre-delete state)
-            self._fire_after_triggers(
-                parsed.table, "DELETE", affected_del, dialect,
-                timing="BEFORE",
-            )
-            n = dml.delete_where(
-                self.spark, path, pred, alias=parsed.table
-            )
-            self._refresh(parsed.table)
-            self._fire_after_triggers(
-                parsed.table, "DELETE", affected_del, dialect
-            )
-            return ret if ret is not None else n
-        raise AssertionError(f"unroutable statement: {parsed!r}")
+    @_handles("delete")
+    def _delete(self, p, dialect):
+        info = self._dml_target(p.table)
+        path = info["path"]
+        pred = self._dml_pred(p, info, dialect)
+        triggered = self._table_triggers(
+            p.table, "AFTER", "DELETE"
+        ) or self._table_triggers(p.table, "BEFORE", "DELETE")
+        # the rows DELETE will remove = predicate strictly TRUE
+        doomed = (
+            self._pre_image(p.table, path, pred)
+            if p.returning or triggered else None
+        )
+        ret = (
+            self._returning(doomed, p.returning, dialect)
+            if p.returning else None
+        )
+        affected = None
+        if triggered:
+            # pre-image relation (OLD.x → __old_x), materialized
+            # BEFORE the rewrite removes the scanned files
+            affected = doomed.select(
+                *[F.col(c).alias(f"__old_{c}") for c in doomed.columns]
+            ).localCheckpoint(eager=True)
+        # BEFORE DELETE bodies fire while the doomed rows are still in
+        # the table (audit reads see pre-delete state)
+        self._fire_after_triggers(
+            p.table, "DELETE", affected, dialect, timing="BEFORE"
+        )
+        n = dml.delete_where(self.spark, path, pred, alias=p.table)
+        return self._dml_done(
+            p.table, "DELETE", affected, dialect,
+            ret if ret is not None else n,
+        )
 
     def _handle_found_rows(self, q: str, dialect: str) -> str:
         """MariaDB pagination idiom (sql_class FOUND_ROWS): a SELECT
@@ -3875,8 +3448,6 @@ class Engine:
         — to the post-LIMIT count of rows returned; the execute() path
         stores that statement's DataFrame and the count job runs
         LAZILY here, only when FOUND_ROWS() is actually read."""
-        import re
-
         from mariadb_columnstore_engine_spark.functions.sqltrans import (
             _mask,
             _top_level_search,
@@ -3886,7 +3457,7 @@ class Engine:
         masked, store = _mask(q)
         # FOUND_ROWS() reads the PREVIOUS statement's recorded count
         if re.search(r"\bFOUND_ROWS\s*\(\s*\)", masked, re.IGNORECASE):
-            fr = getattr(self, "_found_rows", 0)
+            fr = self._found_rows
             if not isinstance(fr, int):  # lazy plain-SELECT DataFrame
                 fr = fr.count()
                 self._found_rows = fr
@@ -3928,10 +3499,6 @@ class Engine:
         The optional arguments (optimal-fieldtype report tuning) are
         accepted and ignored — the stats columns are the useful,
         deterministic part."""
-        import re
-
-        import pyspark.sql.functions as F
-
         from mariadb_columnstore_engine_spark.functions.sqltrans import (
             _find_balanced,
             _mask,
@@ -4062,8 +3629,6 @@ class Engine:
         Scale note: the subquery is a top-n over the key columns only
         (column-pruned scan + TakeOrderedAndProject), broadcast back
         into the rewrite predicate by Spark's subquery machinery."""
-        import re as _re
-
         keys = info.get("keys") or []
         refusal = (
             "UPDATE/DELETE with ORDER BY ... LIMIT is row-order-"
@@ -4075,9 +3640,9 @@ class Engine:
         if not keys:
             raise ValueError(refusal)
         ob_cols = {
-            _re.sub(
+            re.sub(
                 r"\s+(ASC|DESC)\s*$", "", part.strip(),
-                flags=_re.IGNORECASE,
+                flags=re.IGNORECASE,
             ).strip().strip("`").rsplit(".", 1)[-1].lower()
             for part in parsed.order_by.split(",")
         }
@@ -4167,7 +3732,6 @@ class Engine:
         self.sql(sql).createOrReplaceTempView(name)
         if persist:
             import json
-            import os
 
             p = os.path.join(self.catalog._sf_dir, "_views.json")
             views = {}
@@ -4181,7 +3745,6 @@ class Engine:
     def drop_view(self, name: str) -> None:
         self.spark.catalog.dropTempView(name)
         import json
-        import os
 
         p = os.path.join(self.catalog._sf_dir, "_views.json")
         if os.path.exists(p):
@@ -4194,7 +3757,6 @@ class Engine:
 
     def _register_persisted_views(self) -> None:
         import json
-        import os
 
         p = os.path.join(self.catalog._sf_dir, "_views.json")
         if os.path.exists(p):

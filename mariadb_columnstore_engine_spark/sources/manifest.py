@@ -38,10 +38,14 @@ from dataclasses import dataclass
 from types import MappingProxyType
 from typing import Mapping
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     DataType,
+    IntegerType,
+    LongType,
     MapType,
     StructField,
     StructType,
@@ -155,22 +159,57 @@ def _footer(file: str) -> tuple[int, StructType | None]:
     return md.num_rows, schema
 
 
+def _widened(a: DataType, b: DataType) -> DataType | None:
+    """The type Spark's Parquet reader reads files of types ``a`` and
+    ``b`` as, when it widens one into the other on read (INT files next
+    to BIGINT ones, as ALTER TABLE MODIFY a BIGINT leaves them); None
+    for any other pair. ``mergeSchema`` itself refuses these pairs."""
+    if {type(a), type(b)} == {IntegerType, LongType}:
+        return LongType()
+    return None
+
+
 def _merge(left: StructType, right: StructType) -> StructType | None:
     """Spark's ``StructType.merge`` for an append: ``left``'s fields
-    first (keeping their metadata), ``right``'s new fields after. None
-    wherever Spark would do more — a type difference it might merge
+    first (keeping their metadata), ``right``'s new fields after, and a
+    type pair the reader widens (``_widened``) merged to the wider type.
+    None wherever Spark would do more — a type difference it might merge
     recursively or reject, or names that differ only in case — so the
     caller falls back to Spark's own read, which merges or raises."""
-    seen = {f.name.lower(): f for f in left.fields}
+    seen = {f.name.lower(): i for i, f in enumerate(left.fields)}
     fields = list(left.fields)
     for f in right.fields:
-        old = seen.get(f.name.lower())
-        if old is None:
+        i = seen.get(f.name.lower())
+        if i is None:
+            seen[f.name.lower()] = len(fields)
             fields.append(f)
-            seen[f.name.lower()] = f
-        elif old.name != f.name or old.dataType != f.dataType:
+            continue
+        old = fields[i]
+        if old.name != f.name:
             return None
+        if old.dataType != f.dataType:
+            wide = _widened(old.dataType, f.dataType)
+            if wide is None:
+                return None
+            fields[i] = StructField(old.name, wide, True, old.metadata)
     return StructType(fields)
+
+
+def _footers_merged(path: str, rels: list[str]) -> StructType | None:
+    """``_merge`` over the footer schemas of the files ``rels``; None
+    when a file is not Spark-written or sits in a partition directory
+    (Spark infers partition columns), or the schemas do not merge."""
+    schema = None
+    for rel in rels:
+        file_schema = _footer(os.path.join(path, rel))[1]
+        if os.path.dirname(rel) or file_schema is None:
+            return None
+        schema = file_schema if schema is None else _merge(
+            schema, file_schema
+        )
+        if schema is None:
+            return None
+    return schema
 
 
 def _matches(st: TableState, listing: dict, disabled: frozenset) -> bool:
@@ -201,13 +240,21 @@ def _scan(reader: DataFrameReader, path: str, live: list[str],
 def _rebuild(spark: SparkSession, path: str, listing: dict,
              disabled: frozenset) -> TableState:
     """The one ``mergeSchema`` read, plus local footer reads for the
-    row counts."""
-    live = [
-        os.path.join(path, rel) for rel in listing
-        if os.path.basename(rel) not in disabled
+    row counts. Where Spark refuses to merge types its reader widens on
+    read, the footers' widened merge stands in."""
+    live_rels = [
+        rel for rel in listing if os.path.basename(rel) not in disabled
     ]
+    live = [os.path.join(path, rel) for rel in live_rels]
     reader = spark.read.option("mergeSchema", "true")
-    schema = _scan(reader, path, live, disabled).schema
+    try:
+        schema = _scan(reader, path, live, disabled).schema
+    except (Py4JJavaError, PySparkException) as e:
+        schema = "CANNOT_MERGE_SCHEMAS" in str(e) and _footers_merged(
+            path, live_rels
+        )
+        if not schema:
+            raise
     files = {
         rel: DataFile(size, mtime, _footer(os.path.join(path, rel))[0])
         for rel, (size, mtime) in listing.items()

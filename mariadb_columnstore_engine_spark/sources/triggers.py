@@ -37,53 +37,9 @@ from __future__ import annotations
 import re
 
 __all__ = [
-    "parse_create_trigger",
     "compile_before_transform",
     "rewrite_row_refs",
 ]
-
-_TRG_RE = re.compile(
-    r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?TRIGGER\s+"
-    r"(?:IF\s+NOT\s+EXISTS\s+)?([\w`]+)\s+"
-    r"(BEFORE|AFTER)\s+(INSERT|UPDATE|DELETE)\s+ON\s+([\w`]+)\s+"
-    r"FOR\s+EACH\s+ROW\s+(.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def parse_create_trigger(stmt: str):
-    """Parse CREATE TRIGGER into (name, timing, event, table, body_text)
-    or return None when the statement is not a CREATE TRIGGER."""
-    m = _TRG_RE.match(stmt)
-    if not m:
-        return None
-    name = m.group(1).strip("`").lower()
-    timing = m.group(2).upper()
-    event = m.group(3).upper()
-    table = m.group(4).strip("`").lower()
-    body = m.group(5).strip()
-    bm = re.match(r"BEGIN\b(.*)\bEND\s*$", body, re.IGNORECASE | re.DOTALL)
-    if bm:
-        body = bm.group(1).strip()
-    elif not body.endswith(";"):
-        body += ";"
-    replace = bool(
-        re.match(r"\s*CREATE\s+OR\s+REPLACE\b", stmt, re.IGNORECASE)
-    )
-    if_not_exists = bool(
-        re.search(
-            r"\bTRIGGER\s+IF\s+NOT\s+EXISTS\b", stmt, re.IGNORECASE
-        )
-    )
-    return {
-        "name": name,
-        "timing": timing,
-        "event": event,
-        "table": table,
-        "body": body,
-        "replace": replace,
-        "if_not_exists": if_not_exists,
-    }
 
 
 def _subst_refs(expr: str, env: dict[str, str], allow_old: bool) -> str:

@@ -1,13 +1,14 @@
-"""SQL statement parsing for the engine's DML/DDL router (Engine.execute).
+"""Statement router: ``parse`` classifies every statement the engine runs.
 
 Reference analogue: the reference accepts DML/DDL as SQL — mysqld parses
 it (dbcon/dmlpackage/dml.y, dbcon/ddlpackage/ddl.y) and hands packages to
 DMLProc/DDLProc. Here a deliberately small parser recognizes the
 statement *shape* (which table, which assignments, which predicate) and
-the engine routes the pieces to the copy-on-write DML layer
-(sources/dml.py) and the view/describe facade; the expressions themselves
-are never interpreted — they pass to Spark as ``F.expr`` text, so the
-full function library is available inside SET/WHERE/VALUES.
+returns one typed result per statement; ``Engine.execute`` looks the
+result's ``kind`` up in its dispatch table and runs that one handler.
+The expressions themselves are never interpreted — they pass to Spark as
+``F.expr`` text, so the full function library is available inside
+SET/WHERE/VALUES.
 
 Parsing runs on the MASKED statement (literals/comments → placeholders,
 functions/sqltrans.py), so keywords in string literals can never confuse
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from mariadb_columnstore_engine_spark.functions.sqltrans import (
     _find_balanced,
@@ -31,6 +33,7 @@ from mariadb_columnstore_engine_spark.functions.sqltrans import (
 
 @dataclass
 class Insert:
+    kind: ClassVar[str] = "insert"
     table: str
     columns: list[str]  # empty = table order
     source_sql: str  # "VALUES ..." or "SELECT ..." (unmasked)
@@ -49,6 +52,7 @@ class Insert:
 
 @dataclass
 class CreateTable:
+    kind: ClassVar[str] = "create_table_as"
     name: str
     select_sql: str
     or_replace: bool = False
@@ -71,6 +75,7 @@ class CreateTableDef:
     """CREATE TABLE t (col TYPE ..., ...) — the reference's primary DDL
     entry (dbcon/ddlpackage/ddl.y grammar → createtable.cpp)."""
 
+    kind: ClassVar[str] = "create_table"
     name: str
     columns: list[ColumnDef]
     primary_key: list[str] = field(default_factory=list)
@@ -81,15 +86,22 @@ class CreateTableDef:
 
 @dataclass
 class Alter:
+    kind: ClassVar[str] = "alter"
     table: str
-    action: str  # "add" | "drop" | "add_generated" | "add_check"
-    column: str
+    #: "add" | "add_generated" | "add_check" | "drop" | "drop_partition"
+    #: | "rename_col" | "change_col" | "modify_col"
+    action: str
+    column: str  # the column, or the CHECK constraint's name
     dtype: str | None = None
     default: object = None
-    expr: str | None = None  # generated-column / CHECK expression
+    #: generated-column / CHECK expression; the new name for
+    #: rename_col / change_col
+    expr: str | None = None
     #: ADD COLUMN placement (mcs87): target column name for AFTER,
     #: "__first__" for FIRST, None = append
     after: str | None = None
+    #: DROP PARTITION: the ``col=value`` hive directory levels
+    segments: list[str] = field(default_factory=list)
 
 
 @dataclass
@@ -107,6 +119,7 @@ class JoinSpec:
 
 @dataclass
 class Update:
+    kind: ClassVar[str] = "update"
     table: str
     assignments: dict[str, str] = field(default_factory=dict)
     where: str | None = None
@@ -120,6 +133,7 @@ class Update:
 
 @dataclass
 class Delete:
+    kind: ClassVar[str] = "delete"
     table: str
     where: str | None = None
     #: RETURNING select-list (MariaDB 10.0 DELETE..RETURNING): the
@@ -132,6 +146,7 @@ class Delete:
 
 @dataclass
 class CreateView:
+    kind: ClassVar[str] = "create_view"
     name: str
     select_sql: str
     or_replace: bool = False
@@ -143,6 +158,7 @@ class LoadData:
     bulk path (writeengine/bulk/cpimport.cpp; mysql-test ldi_* suites).
     Options mirror sources.ingest.bulk_load_csv's dialect knobs."""
 
+    kind: ClassVar[str] = "load_data"
     table: str
     path: str
     delimiter: str = "\t"  # MariaDB LDI default
@@ -157,6 +173,7 @@ class SelectIntoOutfile:
     """SELECT ... INTO OUTFILE — server-side bulk export (one file,
     delimited; the reverse of LOAD DATA INFILE)."""
 
+    kind: ClassVar[str] = "select_into_outfile"
     select_sql: str
     path: str
     delimiter: str = "\t"
@@ -164,10 +181,165 @@ class SelectIntoOutfile:
     line_sep: str | None = None
 
 
+#: kinds of ``Other``: statements whose only argument is one name or text
+OTHER_KINDS = frozenset({
+    "select", "describe", "show_tables", "show_index", "show_create",
+    "show_databases", "show_variables", "show_warnings",
+    "show_table_status", "show_procedure_status", "show_triggers",
+    "drop_view", "drop_table", "drop_table_if_exists", "truncate",
+    "create_db", "create_db_if_not_exists", "drop_db",
+    "drop_db_if_exists", "use_db", "drop_function",
+    "drop_function_if_exists", "drop_procedure",
+    "drop_procedure_if_exists", "drop_trigger", "drop_trigger_if_exists",
+    "begin", "commit", "rollback", "auth_noop", "index_noop", "do_expr",
+    "explain_analyze", "deallocate", "flush_tables", "session_fn",
+    "calsettrace", "user_var_refs",
+})
+
+
 @dataclass
 class Other:
-    kind: str  # "select" | "drop_view" | "describe"
-    arg: str
+    kind: str  # one of OTHER_KINDS
+    arg: str = ""
+
+    def __post_init__(self):
+        if self.kind not in OTHER_KINDS:
+            raise ValueError(f"unknown statement kind {self.kind!r}")
+
+
+@dataclass
+class Explain:
+    kind: ClassVar[str] = "explain"
+    mode: str  # Spark explain mode: "formatted" | "extended"
+    sql: str
+
+
+@dataclass
+class SetSysvar:
+    kind: ClassVar[str] = "set_sysvar"
+    name: str  # lowercased; "names" for SET NAMES
+    value: str = ""
+
+
+@dataclass
+class RenameTable:
+    kind: ClassVar[str] = "rename_table"
+    old: str
+    new: str
+
+
+@dataclass
+class CreateFunction:
+    """CREATE FUNCTION with one RETURN expression (a Spark SQL UDF)."""
+
+    kind: ClassVar[str] = "create_function"
+    name: str
+    params: str  # "name type, ..." in Spark types
+    returns: str  # Spark type
+    body: str  # the RETURN expression, dialect SQL
+    mode: str = ""  # "replace" | "ifnotexists" | ""
+
+
+@dataclass
+class AddPrimaryKey:
+    kind: ClassVar[str] = "add_primary_key"
+    table: str
+    columns: list[str]
+
+
+@dataclass
+class CreateProcedure:
+    """CREATE PROCEDURE head; the body is interpreted by the engine."""
+
+    kind: ClassVar[str] = "create_procedure"
+    name: str
+    params: list[tuple[str, str, str]]  # (IN|OUT|INOUT, name, Spark type)
+    body: str  # the text between BEGIN and END
+    comment: str | None = None
+    or_replace: bool = False
+    if_not_exists: bool = False
+
+
+@dataclass
+class Call:
+    kind: ClassVar[str] = "call"
+    name: str
+    args: list[str]  # argument SQL, unbound (@out targets stay names)
+
+
+@dataclass
+class CreateTrigger:
+    """CREATE TRIGGER ... FOR EACH ROW head (mcs60_trigger.test)."""
+
+    kind: ClassVar[str] = "create_trigger"
+    name: str
+    timing: str  # "BEFORE" | "AFTER"
+    event: str  # "INSERT" | "UPDATE" | "DELETE"
+    table: str
+    body: str  # statement list, BEGIN .. END unwrapped
+    replace: bool = False
+    if_not_exists: bool = False
+
+
+@dataclass
+class Prepare:
+    kind: ClassVar[str] = "prepare"
+    name: str
+    text: str | None = None  # the quoted statement ...
+    var: str | None = None  # ... or the @variable holding it
+
+
+@dataclass
+class ExecutePrepared:
+    kind: ClassVar[str] = "execute_prepared"
+    name: str
+    using: list[str] = field(default_factory=list)  # @variable names
+
+
+@dataclass
+class SetUserVar:
+    kind: ClassVar[str] = "set_user_var"
+    name: str
+    expr: str  # may reference other @variables
+
+
+@dataclass
+class SelectIntoVars:
+    kind: ClassVar[str] = "select_into_vars"
+    select_sql: str  # the SELECT without its INTO clause
+    names: list[str]
+
+
+@dataclass
+class TableAdmin:
+    """ANALYZE / CHECK / OPTIMIZE / REPAIR / CHECKSUM TABLE t1[, ...]."""
+
+    kind: str  # "<op>_table", op lowercased
+    tables: list[str]
+
+
+@dataclass
+class CalPartitions:
+    """cal{show,disable,enable,drop}partitions('table', 'arg')
+    (dbcon/mysql/ha_mcs_partition.cpp:484-738)."""
+
+    kind: ClassVar[str] = "cal_partitions"
+    verb: str  # "show" | "disable" | "enable" | "drop"
+    table: str
+    arg: str | None  # the column (show) or the partition list
+
+
+#: every ``kind`` ``parse`` can return
+KINDS = OTHER_KINDS | {"analyze_table", "check_table", "optimize_table",
+                       "repair_table", "checksum_table"} | {
+    c.kind for c in (
+        Insert, CreateTable, CreateTableDef, Alter, Update, Delete,
+        CreateView, LoadData, SelectIntoOutfile, Explain, SetSysvar,
+        RenameTable, CreateFunction, AddPrimaryKey, CreateProcedure, Call,
+        CreateTrigger, Prepare, ExecutePrepared, SetUserVar,
+        SelectIntoVars, CalPartitions,
+    )
+}
 
 
 def _parse_ldi_options(tail: str, store: list[str]) -> dict:
@@ -398,17 +570,232 @@ def _parse_column_defs(name: str, body: str, store: list[str]):
     )
 
 
+def _parse_unbound(masked: str, store: list[str]):
+    """Forms whose @names are targets or run-time references, not values
+    to bind now: stored-program heads (their bodies run later), prepared
+    statements and user-variable assignments. None for anything else."""
+    m = re.match(
+        r"CREATE\s+(OR\s+REPLACE\s+)?PROCEDURE\s+(IF\s+NOT\s+EXISTS\s+)?"
+        r"(\S+?)\s*\(",
+        masked,
+        re.IGNORECASE,
+    )
+    if m:
+        open_at = masked.index("(", m.end() - 1)
+        end = _find_balanced(masked, open_at)
+        params = []
+        for p in _split_top_level_commas(masked[open_at + 1 : end - 1]):
+            if not p.strip():
+                continue
+            pm = re.match(
+                r"\s*(IN|OUT|INOUT)?\s*(\w+)\s+(.+?)\s*$",
+                p,
+                re.IGNORECASE | re.DOTALL,
+            )
+            if not pm:
+                raise ValueError(f"bad procedure parameter: {p!r}")
+            params.append((
+                (pm.group(1) or "IN").upper(),
+                pm.group(2).lower(),
+                _map_column_type(pm.group(3)),
+            ))
+        tm = re.match(
+            r"\s*(?:COMMENT\s+(\x00\d+\x00)\s*)?"
+            r"(?:(?:NOT\s+)?DETERMINISTIC\s*|CONTAINS\s+SQL\s*"
+            r"|NO\s+SQL\s*|READS\s+SQL\s+DATA\s*"
+            r"|MODIFIES\s+SQL\s+DATA\s*|LANGUAGE\s+SQL\s*)*"
+            r"BEGIN\b(.*)\bEND\s*$",
+            masked[end:],
+            re.IGNORECASE | re.DOTALL,
+        )
+        if not tm:
+            raise ValueError("CREATE PROCEDURE expects a BEGIN .. END body")
+        return CreateProcedure(
+            name=_ident(m.group(3), store).lower(),
+            params=params,
+            body=_unmask(tm.group(2), store).strip(),
+            comment=_unmask(tm.group(1), store)[1:-1] if tm.group(1) else None,
+            or_replace=bool(m.group(1)),
+            if_not_exists=bool(m.group(2)),
+        )
+
+    m = re.match(r"CALL\s+(\S+?)\s*(\(|$)", masked, re.IGNORECASE)
+    if m:
+        args = []
+        if m.group(2):
+            open_at = m.end() - 1
+            end = _find_balanced(masked, open_at)
+            args = [
+                _unmask(a, store).strip()
+                for a in _split_top_level_commas(masked[open_at + 1 : end - 1])
+                if a.strip()
+            ]
+        return Call(name=_ident(m.group(1), store).lower(), args=args)
+
+    m = re.match(
+        r"CREATE\s+(OR\s+REPLACE\s+)?TRIGGER\s+(IF\s+NOT\s+EXISTS\s+)?(\S+)\s+"
+        r"(BEFORE|AFTER)\s+(INSERT|UPDATE|DELETE)\s+ON\s+(\S+)\s+"
+        r"FOR\s+EACH\s+ROW\s+(.*)$",
+        masked,
+        re.IGNORECASE | re.DOTALL,
+    )
+    if m:
+        body = m.group(7).strip()
+        bm = re.match(r"BEGIN\b(.*)\bEND\s*$", body, re.IGNORECASE | re.DOTALL)
+        if bm:
+            body = bm.group(1).strip()
+        elif not body.endswith(";"):
+            body += ";"
+        return CreateTrigger(
+            name=_ident(m.group(3), store).lower(),
+            timing=m.group(4).upper(),
+            event=m.group(5).upper(),
+            table=_ident(m.group(6), store).lower(),
+            body=_unmask(body, store),
+            replace=bool(m.group(1)),
+            if_not_exists=bool(m.group(2)),
+        )
+
+    m = re.fullmatch(
+        r"DROP\s+(PROCEDURE|TRIGGER)\s+(IF\s+EXISTS\s+)?(\S+)\s*",
+        masked,
+        re.IGNORECASE,
+    )
+    if m:
+        kind = "drop_" + m.group(1).lower()
+        return Other(
+            kind + "_if_exists" if m.group(2) else kind,
+            _ident(m.group(3), store).lower(),
+        )
+    if re.fullmatch(r"SHOW\s+PROCEDURE\s+STATUS\s*", masked, re.IGNORECASE):
+        return Other("show_procedure_status")
+    if re.fullmatch(r"SHOW\s+TRIGGERS\s*", masked, re.IGNORECASE):
+        return Other("show_triggers")
+
+    # server-side prepared statements: ? slots fill at EXECUTE time
+    m = re.fullmatch(
+        r"PREPARE\s+(\w+)\s+FROM\s+(.+?)\s*", masked, re.I | re.DOTALL
+    )
+    if m:
+        src = _unmask(m.group(2), store)
+        if re.fullmatch(r"@\w+", src):
+            return Prepare(name=m.group(1), var=src[1:])
+        if src[:1] in ("'", '"') and re.fullmatch(r"\x00\d+\x00", m.group(2)):
+            return Prepare(
+                name=m.group(1), text=src[1:-1].replace(src[0] * 2, src[0])
+            )
+        raise ValueError("PREPARE needs a quoted statement or @var")
+    m = re.fullmatch(
+        r"EXECUTE\s+(\w+)(?:\s+USING\s+(.+?))?\s*", masked, re.I | re.DOTALL
+    )
+    if m:
+        using = [t.strip() for t in m.group(2).split(",")] if m.group(2) else []
+        if not all(re.fullmatch(r"@\w+", t) for t in using):
+            raise ValueError("EXECUTE USING takes @var arguments")
+        return ExecutePrepared(name=m.group(1), using=[t[1:] for t in using])
+    m = re.fullmatch(r"DEALLOCATE\s+PREPARE\s+(\w+)\s*", masked, re.I)
+    if m:
+        return Other("deallocate", m.group(1))
+
+    # session user variables: SET @x = expr and SELECT ... INTO @a[, @b].
+    # The row-order-dependent inline `@x := expr` has no distributed
+    # meaning and is not supported (use window functions).
+    m = re.fullmatch(
+        r"SET\s+@(\w+)\s*:?=\s*(.+?)\s*", masked, re.I | re.DOTALL
+    )
+    if m:
+        return SetUserVar(name=m.group(1), expr=_unmask(m.group(2), store))
+    m = re.search(
+        r"\sINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s", masked + " ", re.IGNORECASE
+    )
+    if m:
+        sel = masked[: m.start()] + " " + (masked + " ")[m.end() :]
+        return SelectIntoVars(
+            select_sql=_unmask(sel.strip(), store),
+            names=[t.strip()[1:] for t in m.group(1).split(",")],
+        )
+    return None
+
+
+def _parse_admin(masked: str, store: list[str]):
+    """Table maintenance, FLUSH, SHOW WARNINGS / TABLE STATUS, and the
+    ColumnStore client UDFs and session functions that answer from
+    engine state (ha_mcs_client_udfs.cpp:260-960,
+    mcs170_session_functions.test). None for anything else."""
+    m = re.fullmatch(
+        r"(ANALYZE|CHECK|OPTIMIZE|REPAIR|CHECKSUM)\s+TABLE\s+"
+        r"([\w\x00]+(?:\s*,\s*[\w\x00]+)*)(\s+COMPUTE\s+STATISTICS)?\s*",
+        masked,
+        re.IGNORECASE,
+    )
+    if m and (m.group(1).upper() == "ANALYZE" or not m.group(3)):
+        return TableAdmin(
+            kind=m.group(1).lower() + "_table",
+            tables=[_ident(t, store) for t in m.group(2).split(",")],
+        )
+    if re.fullmatch(
+        r"FLUSH\s+(LOCAL\s+)?TABLES?(\s+WITH\s+READ\s+LOCK)?\s*",
+        masked,
+        re.IGNORECASE,
+    ):
+        return Other("flush_tables")
+    if re.fullmatch(r"SHOW\s+WARNINGS\s*", masked, re.IGNORECASE):
+        return Other("show_warnings")
+    if re.fullmatch(r"SHOW\s+TABLE\s+STATUS\s*", masked, re.IGNORECASE):
+        return Other("show_table_status")
+    m = re.fullmatch(
+        r"SELECT\s+(?:(DATABASE|LAST_INSERT_ID|calgetversion|mcssystemready"
+        r"|mcssystemreadonly|calgettrace|calgetstats)\s*\(\s*\)"
+        r"|(USER|SESSION_USER|SYSTEM_USER|CURRENT_USER|CONNECTION_ID"
+        r"|VERSION|SCHEMA)\s*(?:\(\s*\))?)\s*",
+        masked,
+        re.IGNORECASE,
+    )
+    if m:
+        return Other("session_fn", (m.group(1) or m.group(2)).lower())
+    m = re.fullmatch(
+        r"SELECT\s+calsettrace\s*\(\s*(\d+)\s*\)\s*", masked, re.IGNORECASE
+    )
+    if m:
+        return Other("calsettrace", m.group(1))
+    m = re.fullmatch(
+        r"SELECT\s+cal(show|disable|enable|drop)partitions\s*\(\s*"
+        r"(\x00\d+\x00)\s*(?:,\s*(\x00\d+\x00)\s*)?\)\s*",
+        masked,
+        re.IGNORECASE,
+    )
+    if m:
+        table = _literal_text(m.group(2), store)
+        arg = _literal_text(m.group(3), store) if m.group(3) else None
+        if table is not None and (arg is not None or not m.group(3)):
+            return CalPartitions(m.group(1).lower(), table, arg)
+    return None
+
+
 def parse(sql: str):
-    """Classify one statement; returns a dataclass above.
+    """Classify one statement; returns a dataclass above, whose ``kind``
+    names the engine handler that runs it.
 
     SELECT/WITH/VALUES statements come back as ``Other("select", sql)``
-    untouched — the router sends those to the query path.
+    untouched — the router sends those to the query path. A statement
+    that references @variables (outside the forms ``_parse_unbound``
+    takes) comes back as ``Other("user_var_refs", sql)``: the engine
+    binds the variables to literals and parses the bound text.
     """
     masked, store = _mask(sql)
     masked = re.sub(r";\s*$", "", masked.strip())
 
     def rest_of(m: re.Match) -> str:
         return masked[m.end() :].strip()
+
+    found = _parse_unbound(masked, store)
+    if found is not None:
+        return found
+    if re.search(r"@\w+", masked):
+        return Other("user_var_refs", sql)
+    found = _parse_admin(masked, store)
+    if found is not None:
+        return found
 
     m = re.match(r"(SELECT|WITH|VALUES)\b", masked, re.IGNORECASE)
     if m:
@@ -467,9 +854,7 @@ def parse(sql: str):
         mode = "formatted"
         if m.group(1) and m.group(1).upper() == "EXTENDED":
             mode = "extended"
-        return Other(
-            "explain", mode + "\x00" + _unmask(rest_of(m), store)
-        )
+        return Explain(mode, _unmask(rest_of(m), store))
 
     m = re.match(r"EXPLAIN\s+([\w`]+)\s*;?\s*$", masked, re.IGNORECASE)
     if m:
@@ -477,14 +862,13 @@ def parse(sql: str):
         return Other("describe", _ident(m.group(1), store))
 
     # MariaDB ANALYZE <select>: execute + return the plan with actual
-    # runtime row counts (r_rows). Bare ANALYZE TABLE goes to the stats
-    # path (Engine.analyze), handled by the caller's API, not here.
+    # runtime row counts (r_rows); ANALYZE TABLE is a TableAdmin above
     m = re.match(r"ANALYZE\s+(?=SELECT|WITH)\b", masked, re.IGNORECASE)
     if m:
         return Other("explain_analyze", _unmask(rest_of(m), store))
 
     if re.fullmatch(r"SHOW\s+TABLES\s*", masked, re.IGNORECASE):
-        return Other("show_tables", "")
+        return Other("show_tables")
 
     m = re.match(
         r"SHOW\s+(?:COLUMNS|FIELDS)\s+FROM\s+(\S+)\s*$",
@@ -516,11 +900,11 @@ def parse(sql: str):
     if re.fullmatch(
         r"(BEGIN(\s+WORK)?|START\s+TRANSACTION)\s*", masked, re.IGNORECASE
     ):
-        return Other("begin", "")
+        return Other("begin")
     if re.fullmatch(r"COMMIT(\s+WORK)?\s*", masked, re.IGNORECASE):
-        return Other("commit", "")
+        return Other("commit")
     if re.fullmatch(r"ROLLBACK(\s+WORK)?\s*", masked, re.IGNORECASE):
-        return Other("rollback", "")
+        return Other("rollback")
 
     # single-user engine: account management parses and no-ops (mcs18/
     # mcs19 run these around every suite; the reference delegates auth
@@ -535,23 +919,20 @@ def parse(sql: str):
     if m:
         return Other("auth_noop", m.group(1).upper().split()[0])
 
-    # session system variables (SET @user_vars are intercepted by the
-    # engine before parse; SET PASSWORD by the auth_noop rule above)
+    # session system variables (SET @user_vars are _parse_unbound
+    # forms; SET PASSWORD is the auth_noop rule above)
     m = re.match(
         r"SET\s+NAMES\s+\S+(\s+COLLATE\s+\S+)?\s*$", masked, re.IGNORECASE
     )
     if m:
-        return Other("set_sysvar", "names\x01")
+        return SetSysvar("names")
     m = re.match(
         r"SET\s+(?:SESSION\s+|GLOBAL\s+)?([A-Za-z_][\w.]*)\s*=\s*(.+?)\s*$",
         masked,
         re.IGNORECASE,
     )
     if m and not m.group(1).startswith("@"):
-        return Other(
-            "set_sysvar",
-            f"{m.group(1).lower()}\x01{_unmask(m.group(2), store)}",
-        )
+        return SetSysvar(m.group(1).lower(), _unmask(m.group(2), store))
     m = re.match(
         r"SHOW\s+(?:SESSION\s+|GLOBAL\s+)?VARIABLES"
         r"(?:\s+LIKE\s+(\x00\d+\x00))?\s*$",
@@ -919,10 +1300,7 @@ def parse(sql: str):
         r"RENAME\s+TABLE\s+(\S+)\s+TO\s+(\S+)\s*$", masked, re.I
     )
     if m:
-        return Other(
-            "rename_table",
-            f"{_ident(m.group(1), store)}\x00{_ident(m.group(2), store)}",
-        )
+        return RenameTable(_ident(m.group(1), store), _ident(m.group(2), store))
 
     m = re.match(
         r"ALTER\s+TABLE\s+(\S+)\s+ADD\s+(?:COLUMN\s+)?(\S+)\s+(\S+)\s+"
@@ -950,8 +1328,7 @@ def parse(sql: str):
         # the reference's partition DDL (dbcon/ddlpackage/
         # droppartition.cpp) targets casual-partitioning extents; here a
         # partition is a hive directory level. Split on the MASKED text
-        # (a quoted value may contain ',' or '='), segments joined with
-        # \x00 for the router.
+        # (a quoted value may contain ',' or '=').
         segs = []
         for part in m.group(2).split(","):
             pm = re.fullmatch(
@@ -965,7 +1342,7 @@ def parse(sql: str):
             table=_ident(m.group(1), store),
             action="drop_partition",
             column="",
-            expr="\x00".join(segs),
+            segments=segs,
         )
 
     m = re.match(
@@ -1002,7 +1379,7 @@ def parse(sql: str):
         return Other(kind, _ident(m.group(3), store))
 
     if re.fullmatch(r"SHOW\s+DATABASES\s*", masked, re.IGNORECASE):
-        return Other("show_databases", "")
+        return Other("show_databases")
 
     m = re.match(r"USE\s+(\S+)\s*;?\s*$", masked, re.IGNORECASE)
     if m:
@@ -1079,17 +1456,12 @@ def parse(sql: str):
             "replace" if m.group(1) else
             "ifnotexists" if m.group(2) else ""
         )
-        return Other(
-            "create_function",
-            "\x01".join(
-                [
-                    _ident(m.group(3), store),
-                    ", ".join(params),
-                    _map_column_type(tm.group(1)),
-                    body,
-                    mode,
-                ]
-            ),
+        return CreateFunction(
+            name=_ident(m.group(3), store),
+            params=", ".join(params),
+            returns=_map_column_type(tm.group(1)),
+            body=body,
+            mode=mode,
         )
 
     m = re.match(
@@ -1120,11 +1492,9 @@ def parse(sql: str):
         re.IGNORECASE,
     )
     if m:
-        cols = "\x00".join(
-            _ident(c, store) for c in m.group(2).split(",") if c.strip()
-        )
-        return Other(
-            "add_primary_key", _ident(m.group(1), store) + "\x01" + cols
+        return AddPrimaryKey(
+            _ident(m.group(1), store),
+            [_ident(c, store) for c in m.group(2).split(",") if c.strip()],
         )
 
     m = re.match(

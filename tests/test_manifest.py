@@ -128,6 +128,21 @@ def test_modify_then_rewrite_then_insert(spark, eng):
     }
 
 
+def test_modify_then_insert_wider_value(spark, eng):
+    """MODIFY leaves INT files next to the INSERT's BIGINT file, a pair
+    Spark's mergeSchema refuses but its Parquet reader widens. The
+    manifest widens it too, right after the INSERT and on a rebuild."""
+    eng.execute("ALTER TABLE mt MODIFY amount BIGINT")
+    assert eng.execute(
+        "INSERT INTO mt (id, amount, tag) VALUES (3, 5000000000, 'c')"
+    ) == 3
+    df = _assert_warm_matches_fresh(spark, _path(eng))
+    assert df.schema["amount"].dataType.simpleString() == "bigint"
+    want = {1: 10, 2: 20, 3: 5000000000}
+    assert {r.id: r.amount for r in df.collect()} == want
+    got = eng.execute("SELECT id, amount FROM mt").collect()
+    assert {r.id: r.amount for r in got} == want
+
 def test_disabled_partitions(spark, eng):
     eng.execute("INSERT INTO mt (id, amount, tag) VALUES (20, 200, 'z')")
     path = _path(eng)
