@@ -599,17 +599,12 @@ class Engine:
         popped from the transaction one by one, so a failure mid-way
         leaves only the OUTSTANDING tables in the open transaction — a
         repeat ROLLBACK retries exactly those, never a consumed backup."""
-        import shutil
-
         txn = self._txn
         if txn is None:
             raise ValueError("no open transaction")
         try:
             for name in list(txn):
-                backup = txn[name]
-                path = self._user_tables[name]["path"]
-                shutil.rmtree(path)
-                os.rename(backup, path)
+                dml.swap(txn[name], self._user_tables[name]["path"])
                 txn.pop(name)
                 self._refresh(name)
         finally:

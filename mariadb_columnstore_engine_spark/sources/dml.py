@@ -8,7 +8,10 @@ mutation, so DML is copy-on-write: read → transform → write-new → swap —
 the same model Delta/Iceberg implement with manifest atomicity. Here the
 swap is a directory rename (atomic on a single POSIX filesystem; on
 object stores you would layer a table format for the commit protocol —
-the transform logic is unchanged).
+the transform logic is unchanged). ``_rewrite`` is the only code that
+rewrites a table directory: compaction (``sources.maintenance``) hands
+it a repartitioning transform, and ``swap`` is the only code that
+renames one, which ROLLBACK uses too.
 
 Table state comes from the manifest (``sources.manifest``), the extent
 map analogue: the rewrite reads through ``read_table_evolved`` with the
@@ -18,7 +21,7 @@ counts give the statement's return value and their Spark schema the
 table's next read schema, so a DELETE or UPDATE runs one Spark job, the
 write. Every manifest use checks the recorded file set against a
 listing of the directory; anything else that changes the directory
-(another process, compaction, ROLLBACK) makes the next use rebuild the
+(another process, ROLLBACK) makes the next use rebuild the
 state with one ``mergeSchema`` read, so correctness never depends on a
 writer remembering to record.
 
@@ -52,19 +55,60 @@ def _as_bool(predicate: Column) -> Column:
     return F.coalesce(predicate, F.lit(False))
 
 
-def _rewrite(spark: SparkSession, path: str,
-             transform, partition_filter: Column | None,
+#: sidecar keys holding instant-ALTER debt that a rewrite materializes
+_DEBT = ("added", "dropped", "renamed", "retyped")
+
+
+def swap(new: str, path: str) -> None:
+    """Commit directory ``new`` as ``path``: the live directory is
+    renamed aside, ``new`` renamed in, then the old one removed, so no
+    step deletes the live table before its replacement is in place.
+    The only place a table directory is renamed — copy-on-write DML,
+    compaction and ROLLBACK all commit through it."""
+    old = f"{new.rstrip('/')}__old"
+    os.rename(path, old)
+    os.rename(new, path)
+    shutil.rmtree(old)
+
+
+def _settled(evo: dict) -> dict:
+    """The sidecar once a rewrite has materialized its instant-ALTER
+    debt: the consumed keys go, every other key (CHECKs, generated
+    columns, collations, AUTO_INCREMENT, disabled partitions) stays."""
+    # an ALTER-ADD default keeps applying to FUTURE inserts after the
+    # column itself is materialized (MariaDB: the default is column
+    # metadata, not backfill) — migrate it into the 'defaults' map
+    defaults = {
+        c["name"]: c["default"]
+        for c in evo.get("added", [])
+        if c.get("default") is not None
+    }
+    defaults.update(evo.get("defaults", {}))
+    # renames are materialized by this rewrite (files now carry the new
+    # names) — re-key any default that referenced the old spelling
+    for r in evo.get("renamed", []):
+        if r["from"] in defaults:
+            defaults[r["to"]] = defaults.pop(r["from"])
+    kept = {k: v for k, v in evo.items() if k not in _DEBT}
+    return {**kept, "added": [], "dropped": [], "defaults": defaults}
+
+
+def _rewrite(spark: SparkSession, path: str, transform,
+             partition_filter: Column | None = None,
              alias: str | None = None) -> int:
-    """Common copy-on-write machinery; returns the new visible row count
-    (the written files' footer row counts, disabled partitions aside).
+    """The one copy-on-write step behind every rewrite of a table
+    directory (the DML below and ``maintenance.compact_table``); returns
+    the new visible row count (the written files' footer row counts,
+    disabled partitions aside).
 
     Reads through the schema-evolution sidecar (read_table_evolved), so
     transforms see the LOGICAL schema — instant-ALTER-added and generated
     columns included — and the rewrite materializes that debt into the
-    new files (same settlement compact_table performs). The sidecar's
-    non-materializable state — CHECK constraints and generated-column
-    expressions (MariaDB PERSISTENT still computes on every insert) —
-    survives the swap; only 'added'/'dropped' entries are consumed.
+    new files. The new directory keeps the table's hive partition
+    directories, uses the session's Parquet codec, stores plain strings
+    (collations are a read-side contract), carries disabled partitions
+    byte-wise and holds the settled sidecar before the swap, so one
+    rename commits data and metadata together.
     """
     import pyspark.sql.functions as F
 
@@ -72,21 +116,20 @@ def _rewrite(spark: SparkSession, path: str,
         _evolution,
         _write_evolution,
         read_table_evolved,
+        strip_collations,
     )
 
     evo = _evolution(path)
-    if evo.get("disabled_partitions") and (
-        evo.get("added") or evo.get("dropped")
-        or evo.get("renamed") or evo.get("retyped")
-    ):
+    if evo.get("disabled_partitions") and any(evo.get(k) for k in _DEBT):
         # the rewrite would materialize instant-ALTER debt for enabled
         # files only, leaving disabled files with a schema the consumed
         # sidecar can no longer describe — same reason the reference
         # blocks DDL/DML interplay with disabled partitions
         raise ValueError(
             "table has disabled partitions AND pending instant-ALTER "
-            "debt; calenablepartitions first, then rerun the DML"
+            "debt; calenablepartitions first, then rerun the statement"
         )
+    listing = manifest._listing(path)
     df = read_table_evolved(spark, path)
     if alias:
         # correlated subqueries in predicates (WHERE EXISTS (... WHERE
@@ -107,65 +150,37 @@ def _rewrite(spark: SparkSession, path: str,
     # UPDATE of its inputs
     for g in evo.get("generated", []):
         out = out.withColumn(g["name"], F.expr(g["expr"]))
-    tmp = f"{path.rstrip('/')}__cow_{uuid.uuid4().hex[:8]}"
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        strip_collations,
-    )
-
     out = strip_collations(out)
-    out.write.parquet(tmp)
+    # the table's own k=v directories name its hive partition columns;
+    # writing without them would flatten the layout and lose pruning
+    parts = [
+        d.split("=", 1)[0]
+        for d in os.path.dirname(next(iter(listing), "")).split(os.sep)
+        if "=" in d
+    ]
+    tmp = f"{path.rstrip('/')}__cow_{uuid.uuid4().hex[:8]}"
+    (out.write.partitionBy(*parts) if parts else out.write).parquet(tmp)
     # disabled partitions are invisible to queries AND to DML (the
     # reference blocks DML/import on them) — read_table_evolved excluded
     # their files above, so carry them through the swap byte-wise or the
     # copy-on-write would silently destroy them
     disabled = set(evo.get("disabled_partitions", []))
-    if disabled:
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            _live_data_files,
-        )
-
-        for f in _live_data_files(path, set()):
-            name = os.path.basename(f)
-            if name in disabled:
-                rel = os.path.relpath(f, path)
-                dst = os.path.join(tmp, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.copy2(f, dst)
-    old = f"{tmp}__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    # an ALTER-ADD default keeps applying to FUTURE inserts after the
-    # column itself is materialized (MariaDB: the default is column
-    # metadata, not backfill) — migrate it into the 'defaults' map
-    surviving_defaults = {
-        c["name"]: c["default"]
-        for c in evo.get("added", [])
-        if c.get("default") is not None
-    }
-    surviving_defaults.update(evo.get("defaults", {}))
-    # renames are materialized by this rewrite (files now carry the new
-    # names) — re-key any default that referenced the old spelling
-    for r in evo.get("renamed", []):
-        if r["from"] in surviving_defaults:
-            surviving_defaults[r["to"]] = surviving_defaults.pop(r["from"])
-    surviving = {
-        "added": [],
-        "dropped": [],
-        "generated": evo.get("generated", []),
-        "checks": evo.get("checks", []),
-        "defaults": surviving_defaults,
-    }
-    # the AUTO_INCREMENT counter (BRM autoincrement-manager analogue) is
-    # pure metadata — a rewrite must not reset the sequence
-    if evo.get("autoinc"):
-        surviving["autoinc"] = evo["autoinc"]
-    if disabled:
-        surviving["disabled_partitions"] = sorted(disabled)
-    if any((surviving["generated"], surviving["checks"],
-            surviving["defaults"], surviving.get("autoinc"),
-            surviving.get("disabled_partitions"))):
-        _write_evolution(path, surviving)
+    for rel in listing:
+        if os.path.basename(rel) in disabled:
+            dst = os.path.join(tmp, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copy2(os.path.join(path, rel), dst)
+    if parts and not manifest._listing(tmp):
+        # a partitioned write of no rows leaves no file to hold the
+        # schema (and no disabled file was carried); write one empty
+        # flat file
+        spark.createDataFrame([], out.schema).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+    settled = _settled(evo)
+    if any(settled.values()):
+        _write_evolution(tmp, settled)
+    swap(tmp, path)
     # the swapped directory invalidates any cached file listing
     spark.catalog.clearCache()
     return manifest.record(spark, path).live_rows
@@ -311,9 +326,9 @@ def snapshot_tree(src: str, dst: str) -> None:
     never modifies them in place (copy-on-write DML unlinks and replaces
     whole directories), so a link is a zero-copy pre-image, the same
     trick the version buffer plays with block references. Small metadata
-    files (the evolution sidecar, _SUCCESS markers) ARE copied byte-wise:
-    the sidecar is rewritten in place via open('w'), which would corrupt
-    a shared inode. On an object store, swap this for the table-format
+    files (the evolution sidecar, _SUCCESS markers) ARE copied byte-wise,
+    so the pre-image never shares an inode with a file a later statement
+    may replace. On an object store, swap this for the table-format
     snapshot (VersionedTable is the manifest-shaped sibling).
     """
     import shutil

@@ -307,11 +307,21 @@ def _evolution(path: str) -> dict:
 
 
 def _write_evolution(path: str, evo: dict) -> None:
+    """Replace the sidecar whole: the text goes to a ``_``-prefixed temp
+    file beside it (invisible to Spark's file index) that ``os.replace``
+    swaps in, so a write that dies half-way leaves the old one readable."""
     import json
     import os
+    import uuid
 
-    with open(os.path.join(path, _SIDECAR), "w") as f:
-        json.dump(evo, f, indent=1)
+    tmp = os.path.join(path, f"{_SIDECAR}.{uuid.uuid4().hex[:8]}")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(evo, f, indent=1)
+        os.replace(tmp, os.path.join(path, _SIDECAR))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def alter_add_column(path: str, name: str, dtype: str,

@@ -12,50 +12,36 @@ maintenance pass that restores the "few large, clustered extents" layout
 the reference gets from its allocator.
 
 Scale shape: one ``repartitionByRange`` (when re-clustering) or a
-coalescing repartition — a single shuffle sized by target file count; the
-swap is pure filesystem metadata. On object stores a table format
-(Delta/Iceberg) would make the swap atomic via manifest commit; this
-module's delete-then-rename is the plain-filesystem analogue and is
-documented as such (the reference's redistribution likewise locks the
-affected extents, writeengine/redistribute/we_redistributecontrol.cpp).
+coalescing repartition — a single shuffle sized by target file count.
+Compaction is only that transform: it runs through the copy-on-write
+step DML uses (``sources.dml._rewrite``), which keeps hive partition
+directories, settles the schema-evolution sidecar and commits by
+renaming the live directory aside and the new one in (the reference's
+redistribution likewise writes through WriteEngine,
+writeengine/redistribute/we_redistributecontrol.cpp). On object stores
+a table format (Delta/Iceberg) would make that swap atomic via a
+manifest commit.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
-def data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) for every data file under ``path`` (any FS scheme)."""
-    fs, jpath, _ = _hadoop_fs(spark, path)
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith((".parquet", ".orc")) and not name.startswith("_"):
-            out.append((st.getPath().toString(), st.getLen()))
-    return out
+from mariadb_columnstore_engine_spark.sources import dml, manifest
 
 
 def layout_stats(spark: SparkSession, path: str) -> dict:
     """Small-file audit: the numbers a maintenance scheduler alerts on."""
-    files = data_files(spark, path)
-    sizes = [b for _, b in files]
+    sizes = [size for size, _ in manifest._listing(path).values()]
     total = sum(sizes)
     return {
-        "n_files": len(files),
+        "n_files": len(sizes),
         "total_bytes": total,
-        "avg_bytes": total // len(files) if files else 0,
+        "avg_bytes": total // len(sizes) if sizes else 0,
         "min_bytes": min(sizes) if sizes else 0,
         "max_bytes": max(sizes) if sizes else 0,
     }
@@ -67,126 +53,32 @@ def compact_table(
     *,
     target_file_mb: int = 128,
     cluster_by: list[str] | None = None,
-    partition_by: list[str] | None = None,
-    codec: str = "snappy",
-    format: str = "parquet",
 ) -> dict:
     """Rewrite ``path`` into ~``target_file_mb``-sized files, optionally
     re-clustering (restores row-group min/max selectivity the way the
     reference's extent allocation keeps casual-partitioning stats tight).
 
-    Returns ``{files_before, files_after, bytes_before}``. The rewrite
-    lands in a sibling temp dir and replaces the original via
-    delete+rename — crash between the two leaves the temp dir intact for
-    manual recovery; use a table format for transactional swaps.
+    The rewrite is the DML copy-on-write step with a repartitioning
+    transform: it materializes pending instant ALTERs, keeps the table's
+    partition directories and disabled partitions, writes with the
+    session's Parquet codec, and lands in a sibling directory that
+    replaces the original by rename. Returns ``{files_before,
+    files_after, bytes_before}``.
     """
     before = layout_stats(spark, path)
-    if format == "parquet":
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            _evolution as _evo_peek,
-        )
-
-        _e = _evo_peek(path)
-        if _e.get("disabled_partitions") and (
-            _e.get("added") or _e.get("dropped")
-            or _e.get("renamed") or _e.get("retyped")
-        ):
-            raise ValueError(
-                "table has disabled partitions AND pending instant-"
-                "ALTER debt; calenablepartitions first, then compact"
-            )
-    if format == "parquet":
-        # read through the schema-evolution sidecar: the rewrite
-        # MATERIALIZES pending instant ALTERs (added columns become
-        # physical with their defaults, dropped ones disappear) and the
-        # sidecar is consumed by the swap — the reference's lazy-ALTER
-        # debt is likewise settled by the next extent rewrite
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            read_table_evolved,
-        )
-
-        df = read_table_evolved(spark, path)
-    else:
-        df = spark.read.format(format).load(path)
     n_out = max(1, math.ceil(before["total_bytes"] / (target_file_mb << 20)))
-    if cluster_by:
-        writer_df = df.repartitionByRange(
-            n_out, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
-    else:
-        writer_df = df.repartition(n_out)
-    tmp = path.rstrip("/") + "_compact_tmp"
-    writer = writer_df.write.option("compression", codec).mode("overwrite")
-    if partition_by:
-        # preserve (or establish) hive-style directory partitioning —
-        # compacting a partitioned table without this flattens its layout
-        # and silently loses planning-time partition pruning
-        writer = writer.partitionBy(*partition_by)
-    writer.format(format).save(tmp)
-    fs, jpath, jvm = _hadoop_fs(spark, path)
-    if format == "parquet":
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            _evolution,
-            _write_evolution,
-        )
 
-        evo = _evolution(path)
-    else:
-        evo = {}
-    # disabled partitions were excluded from the compaction read
-    # (read_table_evolved skips their files) — carry them byte-wise or
-    # the delete+rename would destroy them
-    disabled = set(evo.get("disabled_partitions", []))
-    if disabled:
-        import os as _os
-        import shutil as _shutil
+    def transform(df: DataFrame) -> DataFrame:
+        if cluster_by:
+            return df.repartitionByRange(
+                n_out, *cluster_by
+            ).sortWithinPartitions(*cluster_by)
+        return df.repartition(n_out)
 
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            _live_data_files,
-        )
-
-        for f in _live_data_files(path, set()):
-            if _os.path.basename(f) in disabled:
-                rel = _os.path.relpath(f, path)
-                dst = _os.path.join(tmp, rel)
-                _os.makedirs(_os.path.dirname(dst), exist_ok=True)
-                _shutil.copy2(f, dst)
-    fs.delete(jpath, True)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jpath):
-        raise IOError(f"compact_table: rename {tmp} -> {path} failed")
-    # Materialization settles only the 'added'/'dropped' debt. CHECK
-    # constraints are not materializable state, and generated columns
-    # must keep computing on future INSERTs (MariaDB PERSISTENT computes
-    # on insert; a plain physical column would be NULL-filled) — both
-    # survive compaction in a fresh sidecar.
-    surviving_defaults = {
-        c["name"]: c["default"]
-        for c in evo.get("added", [])
-        if c.get("default") is not None
-    }
-    surviving_defaults.update(evo.get("defaults", {}))
-    for r in evo.get("renamed", []):  # renames materialized by compaction
-        if r["from"] in surviving_defaults:
-            surviving_defaults[r["to"]] = surviving_defaults.pop(r["from"])
-    if (evo.get("generated") or evo.get("checks") or surviving_defaults
-            or evo.get("autoinc") or disabled):
-        fresh = {
-            "added": [],
-            "dropped": [],
-            "generated": evo.get("generated", []),
-            "checks": evo.get("checks", []),
-            "defaults": surviving_defaults,
-        }
-        # AUTO_INCREMENT counter is sequence state, not layout debt
-        if evo.get("autoinc"):
-            fresh["autoinc"] = evo["autoinc"]
-        if disabled:
-            fresh["disabled_partitions"] = sorted(disabled)
-        _write_evolution(path, fresh)
-    after = layout_stats(spark, path)
+    dml._rewrite(spark, path, transform)
     return {
         "files_before": before["n_files"],
-        "files_after": after["n_files"],
+        "files_after": layout_stats(spark, path)["n_files"],
         "bytes_before": before["total_bytes"],
     }
 
@@ -198,14 +90,17 @@ def extent_map(
     observable (reference: information_schema.columnstore_extents backed
     by versioning/BRM/extentmap.h min/max entries). One dict per
     (file, row_group, column): min, max, null_count, num_rows — read
-    from parquet footers via pyarrow, no data scan. This is the tool to
-    audit whether ``cluster_by`` actually produced prunable extents."""
+    from parquet footers via pyarrow, no data scan. ``path`` is a table
+    directory or a single Parquet file. This is the tool to audit
+    whether ``cluster_by`` actually produced prunable extents."""
     import pyarrow.parquet as pq
 
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(path, rel) for rel in manifest._listing(path)
+    ]
     out: list[dict] = []
-    for fpath, _ in data_files(spark, path):
-        local = fpath[len("file:") :] if fpath.startswith("file:") else fpath
-        meta = pq.ParquetFile(local).metadata
+    for fpath in files:
+        meta = pq.ParquetFile(fpath).metadata
         names = [meta.schema.column(i).name for i in range(meta.num_columns)]
         for rg in range(meta.num_row_groups):
             g = meta.row_group(rg)
@@ -215,7 +110,7 @@ def extent_map(
                 st = g.column(ci).statistics
                 out.append(
                     {
-                        "file": local.rsplit("/", 1)[-1],
+                        "file": os.path.basename(fpath),
                         "row_group": rg,
                         "column": name,
                         "num_rows": g.num_rows,
@@ -225,6 +120,22 @@ def extent_map(
                     }
                 )
     return out
+
+
+def _file_ranges(stats: list[dict], column: str) -> dict[str, tuple]:
+    """File name → (min, max) of ``column``: the union of the file's
+    row-group ranges in ``stats`` (``extent_map`` rows); (None, None)
+    when any row group has no min/max, i.e. the range is unknown."""
+    ranges: dict[str, tuple] = {}
+    for e in stats:
+        if e["column"] != column:
+            continue
+        mn, mx = ranges.get(e["file"], (e["min"], e["max"]))
+        if e["min"] is None or e["max"] is None or mn is None or mx is None:
+            ranges[e["file"]] = (None, None)
+        else:
+            ranges[e["file"]] = (min(mn, e["min"]), max(mx, e["max"]))
+    return ranges
 
 
 # ---------------------------------------------------------------------------
@@ -241,10 +152,6 @@ def show_partitions(
     """calshowpartitions('t','col'): one row per data file with the
     column's min/max (from parquet footers, no scan) and its
     Enabled/Disabled status."""
-    import os
-
-    import pyarrow.parquet as pq
-
     from mariadb_columnstore_engine_spark.sources.ingest import (
         _evolution,
         _live_data_files,
@@ -253,21 +160,11 @@ def show_partitions(
     disabled = set(
         _evolution(path).get("disabled_partitions", [])
     )
+    ranges = _file_ranges(extent_map(spark, path, [column]), column)
     out = []
     for f in _live_data_files(path, set()):
-        meta = pq.ParquetFile(f).metadata
-        names = [
-            meta.schema.column(i).name for i in range(meta.num_columns)
-        ]
-        mn = mx = None
-        if column in names:
-            ci = names.index(column)
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(ci).statistics
-                if st and st.has_min_max:
-                    mn = st.min if mn is None else min(mn, st.min)
-                    mx = st.max if mx is None else max(mx, st.max)
         name = os.path.basename(f)
+        mn, mx = ranges.get(name, (None, None))
         out.append(
             {
                 "partition": name,
@@ -282,7 +179,6 @@ def show_partitions(
 def _set_partition_status(
     path: str, partitions: list[str], *, disabled: bool
 ) -> int:
-    import os
 
     from mariadb_columnstore_engine_spark.sources.ingest import (
         _evolution,
@@ -323,7 +219,6 @@ def drop_partitions(spark: SparkSession, path: str,
     """caldroppartitions: physically remove the files (O(1) per file, no
     rewrite of survivors — the reference's extent drop). Refuses to drop
     every file: an empty directory loses the table's schema."""
-    import os
 
     from mariadb_columnstore_engine_spark.sources.ingest import (
         _evolution,
@@ -384,7 +279,6 @@ def extent_eliminate(
     footer min/max only. A file with no stats for the column is always
     kept (cannot prove it irrelevant — same conservative rule as the
     reference's invalid casual-partitioning ranges)."""
-    import os
 
     from mariadb_columnstore_engine_spark.sources.ingest import (
         _evolution,
@@ -395,16 +289,7 @@ def extent_eliminate(
     live = _live_data_files(path, disabled)
     if stats is None:
         stats = extent_map(spark, path, [column])
-    # file-level range = union of its row-group ranges; any None → unknown
-    ranges: dict[str, tuple] = {}
-    for e in stats:
-        if e["column"] != column:
-            continue
-        mn, mx = ranges.get(e["file"], (e["min"], e["max"]))
-        if e["min"] is None or e["max"] is None or mn is None or mx is None:
-            ranges[e["file"]] = (None, None)
-        else:
-            ranges[e["file"]] = (min(mn, e["min"]), max(mx, e["max"]))
+    ranges = _file_ranges(stats, column)
     kept, skipped = [], []
     for f in live:
         mn, mx = ranges.get(os.path.basename(f), (None, None))

@@ -14,11 +14,11 @@ Here the state of a Parquet table directory is:
 
 Invariant: every use lists the directory (``os.walk`` + ``stat``) and
 compares. A mismatch — another process wrote the directory, a
-compaction or ROLLBACK swapped it, or the table was just attached —
+ROLLBACK swapped it, or the table was just attached —
 rebuilds the state with one ``mergeSchema`` read plus local footer
 reads, so no writer has to know about the manifest for reads to stay
 correct. Writers that do (INSERT / LOAD DATA appends, copy-on-write
-rewrites) ``record`` the files they just wrote from those files'
+rewrites and compactions) ``record`` the files they just wrote from those files'
 footers, which keeps the next statement from launching a schema-merge
 job or a ``count()``. ``read`` turns the state into the table's
 physical relation (``spark.read.schema(...)`` over the enabled files).

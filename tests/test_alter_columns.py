@@ -25,6 +25,35 @@ def eng_ac(spark, sf_dir, tmp_path):
     return eng
 
 
+def test_sidecar_write_is_atomic(eng_ac, monkeypatch):
+    """A sidecar write that dies half-way leaves the previous sidecar
+    readable: the new text goes to a temp file that replaces the live
+    one only once complete."""
+    import json
+
+    from mariadb_columnstore_engine_spark.sources import ingest
+
+    path = eng_ac._user_tables["ac"]["path"]
+    ingest.add_check_constraint(path, "amount_pos", "amount > 0")
+    before = ingest._evolution(path)
+
+    def torn_dump(obj, fp, **kw):
+        text = json.dumps(obj, **kw)
+        fp.write(text[: len(text) // 2])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        ingest.add_check_constraint(path, "id_pos", "id > 0")
+    monkeypatch.undo()
+    assert ingest._evolution(path) == before
+    assert [f for f in os.listdir(path) if f.startswith("_schema")] == [
+        "_schema_evolution.json"
+    ]
+    rows = eng_ac.execute("SELECT id FROM ac").collect()
+    assert sorted(r.id for r in rows) == [1, 2]
+
+
 def test_rename_column_instant(eng_ac):
     eng_ac.execute("ALTER TABLE ac RENAME COLUMN amount TO amt")
     rows = {

@@ -67,6 +67,26 @@ def _seed_with_nulls(spark, tmp_path) -> str:
     return path
 
 
+def test_rewrite_keeps_hive_partition_directories(spark, tmp_path):
+    """A rewrite writes back into the table's k=v directories; one that
+    leaves no row still leaves a file holding the schema."""
+    import os
+
+    path = str(tmp_path / "parted")
+    spark.range(20).select(
+        F.col("id"), (F.col("id") % 4).alias("shard")
+    ).write.partitionBy("shard").parquet(path)
+    dml.update_where(spark, path, F.col("id") == 1, {"shard": F.lit(9)})
+    assert sorted(d for d in os.listdir(path) if "=" in d) == [
+        "shard=0", "shard=1", "shard=2", "shard=3", "shard=9",
+    ]
+    assert spark.read.parquet(path).where("shard = 9").count() == 1
+    assert dml.delete_where(spark, path, F.lit(True)) == 0
+    df = spark.read.parquet(path)
+    assert df.count() == 0 and set(df.columns) == {"id", "shard"}
+    assert os.listdir(tmp_path) == ["parted"]
+
+
 def test_delete_null_predicate_rows_are_kept(spark, tmp_path):
     # SQL DELETE removes predicate=TRUE rows only; `maybe = 3` is NULL
     # (not TRUE) for the five NULL rows, so they must survive.

@@ -9,9 +9,11 @@ layout — never row count, schema, or values.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
-from mariadb_columnstore_engine_spark.sources import maintenance
+from mariadb_columnstore_engine_spark.sources import maintenance, manifest
 
 
 def _fingerprint(df):
@@ -45,8 +47,8 @@ def test_compact_reduces_files_preserves_content(spark, tmp_path):
     compacted = spark.read.parquet(dest)
     assert compacted.count() == 20_000
     assert _fingerprint(compacted) == fp_before
-    # temp dir consumed by the swap
-    assert not (tmp_path / "frag_compact_tmp").exists()
+    # the swap leaves no temp or pre-image sibling behind
+    assert os.listdir(tmp_path) == ["frag"]
 
 
 def test_compact_cluster_by_restores_pruning_stats(spark, tmp_path):
@@ -59,14 +61,15 @@ def test_compact_cluster_by_restores_pruning_stats(spark, tmp_path):
     maintenance.compact_table(
         spark, dest, target_file_mb=1, cluster_by=["k"]
     )
-    files = maintenance.data_files(spark, dest)
+    files = manifest._listing(dest)
     assert len(files) >= 2  # 1 MB target splits the rewrite
     # range-clustered files must have disjoint [min,max] key ranges —
     # that is exactly what makes row-group/file skipping selective
     ranges = []
-    for path, _ in files:
+    for rel in files:
         mn, mx = (
-            spark.read.parquet(path).agg(F.min("k"), F.max("k")).collect()[0]
+            spark.read.parquet(os.path.join(dest, rel))
+            .agg(F.min("k"), F.max("k")).collect()[0]
         )
         ranges.append((mn, mx))
     ranges.sort()
@@ -102,15 +105,38 @@ def test_compact_preserves_partitioning(spark, tmp_path):
     spark.range(0, 5_000).selectExpr(
         "id", "id % 4 AS shard"
     ).repartition(10).write.partitionBy("shard").parquet(dest)
-    maintenance.compact_table(
-        spark, dest, target_file_mb=128, partition_by=["shard"]
-    )
+    maintenance.compact_table(spark, dest, target_file_mb=128)
     df = spark.read.parquet(dest)
     assert df.count() == 5_000
     # directory layout survived -> partition pruning still plans
     pruned = df.where(F.col("shard") == 2)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(shard" in plan
+
+
+def test_compact_then_insert_on_collated_table(spark, sf_dir, tmp_path):
+    """Compaction writes plain strings like every other writer: the
+    declared collation stays a read-side contract, so a later INSERT
+    merges with the compacted files and a fresh read still works."""
+    from mariadb_columnstore_engine_spark.engine import Engine
+    from mariadb_columnstore_engine_spark.sources.ingest import (
+        read_table_evolved,
+    )
+
+    os.makedirs(str(tmp_path / "wh"), exist_ok=True)
+    eng = Engine(spark, sf_dir, warehouse=str(tmp_path / "wh"))
+    eng.execute(
+        "CREATE TABLE cc (id INT, seg VARCHAR(20) COLLATE utf8mb4_unicode_ci)"
+    )
+    eng.execute("INSERT INTO cc VALUES (1, 'Auto'), (2, 'AUTO')")
+    path = eng._user_tables["cc"]["path"]
+    maintenance.compact_table(spark, path)
+    eng.execute("INSERT INTO cc VALUES (3, 'auto'), (4, 'Bike')")
+    assert eng.execute(
+        "SELECT count(*) AS n FROM cc WHERE seg = 'AUTO'"
+    ).collect()[0].n == 3
+    manifest.forget(path)
+    assert read_table_evolved(spark, path).count() == 4
 
 
 def test_extent_map_shows_clustered_minmax(spark, tmp_path):

@@ -561,7 +561,12 @@ def test_delete_returning(engine_with_table):
     assert eng.execute("SELECT count(*) AS n FROM t1").collect()[0].n == 8
 
 
-def test_alter_drop_partition(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("before, rows_left", [
+    ([], 75),
+    # a copy-on-write rewrite keeps the shard=*/ directories
+    (["DELETE FROM parted WHERE id = 5"], 74),
+], ids=["attached", "after_delete"])
+def test_alter_drop_partition(spark, sf_dir, tmp_path, before, rows_left):
     """ALTER TABLE .. DROP PARTITION (col = v): O(1) hive-directory
     removal (droppartition.cpp analogue) — surviving partitions are
     untouched, the dropped one is gone from reads."""
@@ -575,12 +580,20 @@ def test_alter_drop_partition(spark, sf_dir, tmp_path):
         F.col("id"), (F.col("id") % 4).alias("shard")
     ).write.partitionBy("shard").parquet(path)
     eng.attach_table("parted", path)
+    for sql in before:
+        eng.execute(sql)
+    plan = eng.execute(
+        "SELECT id FROM parted WHERE shard = 2"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(shard" in plan
     eng.execute("ALTER TABLE parted DROP PARTITION (shard = 2)")
     shards = {
         r.shard for r in eng.execute("SELECT DISTINCT shard FROM parted").collect()
     }
     assert shards == {0, 1, 3}
-    assert eng.execute("SELECT count(*) AS n FROM parted").collect()[0].n == 75
+    assert eng.execute(
+        "SELECT count(*) AS n FROM parted"
+    ).collect()[0].n == rows_left
     with pytest.raises(ValueError, match="does not exist"):
         eng.execute("ALTER TABLE parted DROP PARTITION (shard = 9)")
 
@@ -1399,6 +1412,32 @@ def test_create_table_column_collation(engine_wh):
         " ON a.seg = b.seg"
     ).collect()[0].n == 10
     eng.execute("DROP TABLE coll_t")
+
+
+@pytest.mark.parametrize("statements", [
+    ["UPDATE c SET id = id + 10 WHERE id = 4"],
+    ["DELETE FROM c WHERE id = 4"],
+    ["REPLACE INTO c (id, seg) VALUES (2, 'auto')"],
+    ["TRUNCATE TABLE c",
+     "INSERT INTO c VALUES (1, 'Auto'), (2, 'AUTO'), (3, 'auto')"],
+], ids=["update", "delete", "replace", "truncate_insert"])
+def test_column_collation_survives_rewrite(engine_wh, statements):
+    """A declared COLLATE is table metadata: every copy-on-write
+    rewrite keeps it, so CI equality still matches all case variants."""
+    eng = engine_wh
+    eng.execute(
+        "CREATE TABLE c (id INT PRIMARY KEY,"
+        " seg VARCHAR(20) COLLATE utf8mb4_unicode_ci)"
+    )
+    eng.execute(
+        "INSERT INTO c VALUES (1, 'Auto'), (2, 'AUTO'), (3, 'auto'),"
+        " (4, 'Bike')"
+    )
+    for sql in statements:
+        eng.execute(sql)
+    assert eng.execute(
+        "SELECT count(*) AS n FROM c WHERE seg = 'AUTO'"
+    ).collect()[0].n == 3
 
 
 def test_create_table_table_level_collate_default(engine_wh):
