@@ -21,7 +21,14 @@ import os
 import re
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    UserDefinedType,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -62,6 +69,16 @@ def _handles(*kinds: str):
         return fn
 
     return register
+
+
+def _cast(c: Column, dt: DataType) -> Column:
+    """``c.cast(dt)``. A non-nested type goes by its simple string, which
+    Spark's parser reads back as the same type, in one py4j call: a cast
+    to a ``DataType`` object first looks up the active session and
+    parses the type's JSON (about six round trips per column)."""
+    if isinstance(dt, (ArrayType, MapType, StructType, UserDefinedType)):
+        return c.cast(dt)
+    return c.cast(dt.simpleString())
 
 
 class SqlSignal(ValueError):
@@ -139,6 +156,8 @@ class Engine:
         self._trace = False
         self._last_trace: str | None = None
         self._string_cols_cache: frozenset[str] | None = None
+        #: log4j handles for _quiet_analyzer_errors (None: unresolved)
+        self._log4j: tuple | bool | None = None
         self.catalog = Catalog(spark, sf_dir)
         #: directory CREATE TABLE AS SELECT materializes into
         self.warehouse = warehouse
@@ -551,11 +570,10 @@ class Engine:
             read_table_evolved,
         )
 
-        info = self._writable(table)
-        self.spark.catalog.clearCache()
-        read_table_evolved(self.spark, info["path"]).createOrReplaceTempView(
-            table
-        )
+        path = self._writable(table)["path"]
+        # cached relations over the rewritten files, and only those
+        self.spark.catalog.refreshByPath(path)
+        read_table_evolved(self.spark, path).createOrReplaceTempView(table)
 
     # --- transactions (version-buffer rollback analogue) -----------
 
@@ -3023,14 +3041,25 @@ class Engine:
         self._warnings = []
         return self._writable(table)
 
-    def _append(self, path: str, df) -> int:
-        """Append ``df`` as new files; the table's row count after."""
+    def _append(self, path: str, df, rows: bool = False) -> int:
+        """Append ``df`` as new files; the table's row count after.
+        ``rows``: ``df`` is a literal row set (INSERT … VALUES), which
+        ``append_rows`` writes without a Spark job where its plan,
+        the table layout and the column types allow, else Spark writes
+        it as one file."""
         from mariadb_columnstore_engine_spark.sources.ingest import (
+            append_rows,
             strip_collations,
         )
 
         before = manifest.state(self.spark, path)
-        strip_collations(df).write.mode("append").parquet(path)
+        df = strip_collations(df)
+        if not (rows and append_rows(self.spark, path, df, before)):
+            # a VALUES list is a LocalRelation split across up to
+            # nproc slices: one file, not one per row
+            (df.coalesce(1) if rows else df).write.mode("append").parquet(
+                path
+            )
         return manifest.record(self.spark, path, before).rows
 
     def _dml_pred(self, p, info: dict, dialect: str):
@@ -3113,8 +3142,10 @@ class Engine:
                 )
                 src = self.spark.read.parquet(dest)
             out = src.select(*[
-                (F.expr(gen[f.name]) if f.name in gen else F.col(f.name))
-                .cast(f.dataType).alias(f.name)
+                _cast(
+                    F.expr(gen[f.name]) if f.name in gen else F.col(f.name),
+                    f.dataType,
+                ).alias(f.name)
                 for f in target.schema.fields
             ])
             validate_checks(out, evo.get("checks", []))
@@ -3160,12 +3191,14 @@ class Engine:
         # column defs), generated ones → their expression, else NULL;
         # everything cast to the target type
         dflt = evo.get("defaults", {})
-        out = src.toDF(*cols).select(*[
-            (
-                F.col(f.name) if f.name in cols
+        named = src.toDF(*cols)
+        out = named.select(*[
+            _cast(
+                named[f.name] if f.name in cols
                 else F.expr(gen[f.name]) if f.name in gen
-                else F.lit(dflt.get(f.name))
-            ).cast(f.dataType).alias(f.name)
+                else F.lit(dflt.get(f.name)),
+                f.dataType,
+            ).alias(f.name)
             for f in target.schema.fields
         ])
         # BEFORE INSERT triggers (mcs60): bodies compile to ONE
@@ -3184,7 +3217,7 @@ class Engine:
                 trg["nodes"], out.columns, event="INSERT"
             )
             out = out.select(*[
-                self._texpr(tf[f.name], dialect).cast(f.dataType)
+                _cast(self._texpr(tf[f.name], dialect), f.dataType)
                 .alias(f.name)
                 if f.name in tf else F.col(f.name)
                 for f in target.schema.fields
@@ -3274,9 +3307,7 @@ class Engine:
             # the copy-on-write swap rewrote the sidecar
             evo = _evolution(path)
         else:
-            # a VALUES list is a LocalRelation split across up to
-            # nproc slices: one file, not one per row
-            n = self._append(path, out.coalesce(1) if local_src else out)
+            n = self._append(path, out, rows=local_src)
         if ai:
             # counter = table max + 1 (covers both assigned and explicit
             # values; parquet footer stats make the max a metadata-only
@@ -3578,37 +3609,49 @@ class Engine:
         triggers AnalysisExceptions it then fixes; their ERROR log
         lines are pure noise — the exception object still propagates
         for genuine failures). Best-effort: logging config varies, a
-        failure to adjust levels must never affect execution."""
+        failure to adjust levels must never affect execution.
+
+        The log4j handles are resolved once per Engine: py4j resolves
+        ``jvm.org.apache.logging…`` one package segment per round trip,
+        so each statement pays only the level read, set and restore."""
         import contextlib
 
         @contextlib.contextmanager
         def _cm():
-            prev = None
-            jvm = None
+            prev = handles = None
             try:
-                jvm = self.spark._jvm
-                mgr = jvm.org.apache.logging.log4j.LogManager
-                prev = mgr.getLogger(
-                    "SQLQueryContextLogger"
-                ).getLevel()
-                jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(  # noqa: E501
-                    "SQLQueryContextLogger",
-                    jvm.org.apache.logging.log4j.Level.OFF,
-                )
+                handles = self._log4j_handles()
+                if handles:
+                    logger, set_level, off = handles
+                    prev = logger.getLevel()
+                    set_level("SQLQueryContextLogger", off)
             except Exception:  # noqa: BLE001 — logging is optional
-                jvm = None
+                prev = None
             try:
                 yield
             finally:
-                if jvm is not None and prev is not None:
+                if prev is not None:
                     try:
-                        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(  # noqa: E501
-                            "SQLQueryContextLogger", prev
-                        )
+                        handles[1]("SQLQueryContextLogger", prev)
                     except Exception:  # noqa: BLE001
                         pass
 
         return _cm()
+
+    def _log4j_handles(self):
+        """(SQLQueryContextLogger, Configurator.setLevel, Level.OFF),
+        resolved on first use; False where log4j is not reachable."""
+        if self._log4j is None:
+            try:
+                log4j = self.spark._jvm.org.apache.logging.log4j
+                self._log4j = (
+                    log4j.LogManager.getLogger("SQLQueryContextLogger"),
+                    log4j.core.config.Configurator.setLevel,
+                    log4j.Level.OFF,
+                )
+            except Exception:  # noqa: BLE001 — logging is optional
+                self._log4j = False
+        return self._log4j
 
     def _ordered_limit_where(self, parsed, info: dict) -> str:
         """Rewrite MariaDB's row-path ``UPDATE/DELETE … ORDER BY …

@@ -160,6 +160,14 @@ def _rewrite(spark: SparkSession, path: str, transform,
     ]
     tmp = f"{path.rstrip('/')}__cow_{uuid.uuid4().hex[:8]}"
     (out.write.partitionBy(*parts) if parts else out.write).parquet(tmp)
+    # Spark's writer always leaves task 0's file, also when its scan
+    # split held no row group; drop empty files, keeping one when no row
+    # is left so the schema survives
+    written = list(manifest._listing(tmp))
+    empty = [rel for rel in written
+             if manifest._footer(os.path.join(tmp, rel))[0] == 0]
+    for rel in empty[:len(empty) - (len(empty) == len(written))]:
+        os.remove(os.path.join(tmp, rel))
     # disabled partitions are invisible to queries AND to DML (the
     # reference blocks DML/import on them) — read_table_evolved excluded
     # their files above, so carry them through the swap byte-wise or the
@@ -181,8 +189,8 @@ def _rewrite(spark: SparkSession, path: str, transform,
     if any(settled.values()):
         _write_evolution(tmp, settled)
     swap(tmp, path)
-    # the swapped directory invalidates any cached file listing
-    spark.catalog.clearCache()
+    # the swapped directory invalidates cached relations over its files
+    spark.catalog.refreshByPath(path)
     return manifest.record(spark, path).live_rows
 
 

@@ -147,6 +147,120 @@ def insert_into_select(df: DataFrame, dest: str, *, mode: str = "append") -> Non
     df.write.mode(mode).parquet(dest)
 
 
+#: Parquet codec names of ``spark.sql.parquet.compression.codec`` that
+#: pyarrow writes
+_ARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "zstd": "zstd", "brotli": "brotli", "lz4": "lz4",
+    "lz4_raw": "lz4",
+}
+
+
+def _arrow_type(dt):
+    """The Arrow type whose Parquet column Spark's reader reads back as
+    Spark type ``dt``; None for types the row path does not write."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.DecimalType):
+        return pa.decimal128(dt.precision, dt.scale)
+    if isinstance(dt, T.StringType):
+        # collated strings are stored plain (strip_collations)
+        return pa.string() if dt.simpleString() == "string" else None
+    return {
+        T.BooleanType: pa.bool_(), T.ByteType: pa.int8(),
+        T.ShortType: pa.int16(), T.IntegerType: pa.int32(),
+        T.LongType: pa.int64(), T.FloatType: pa.float32(),
+        T.DoubleType: pa.float64(), T.BinaryType: pa.binary(),
+        # days / microseconds since the epoch, collected as integers
+        T.DateType: pa.date32(),
+        T.TimestampType: pa.timestamp("us", tz="UTC"),
+        T.TimestampNTZType: pa.timestamp("us"),
+    }.get(type(dt))
+
+
+def append_rows(spark: SparkSession, path: str, df: DataFrame,
+                before) -> bool:
+    """Append a literal row set as one Parquet file written by pyarrow,
+    with no Spark job: the row path of an ``INSERT … VALUES``, as
+    DMLProc hands row DML to WriteEngine (dbcon/dmlpackageproc/
+    insertpackageprocessor.cpp) beside cpimport's bulk path. Returns
+    False, writing nothing, unless ``df`` optimizes to a LocalRelation,
+    the table (manifest state ``before``) has no ``k=v`` directories
+    and every column type has an Arrow mapping; the caller then writes
+    through Spark.
+
+    The file carries Spark's schema JSON in its footer, as Spark's
+    writer does, so the manifest records it without a schema-merge
+    read. It is written under a ``_``-prefixed name (invisible to Spark
+    and the manifest) and moved in with ``os.replace``."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark
+    from pyspark.sql import types as T
+
+    from mariadb_columnstore_engine_spark.sources.manifest import (
+        _SPARK_SCHEMA_KEY,
+    )
+
+    types = [_arrow_type(f.dataType) for f in df.schema.fields]
+    codec = _ARROW_CODECS.get(
+        spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+        .lower()
+    )
+    if None in types or codec is None or any(
+        os.path.dirname(rel) for rel in before.files
+    ):
+        return False
+    # dates and timestamps come back as epoch integers, which Arrow
+    # takes as they are (no local-time-zone conversion on the way)
+    to_int = {
+        T.DateType: "unix_date({})",
+        T.TimestampType: "unix_micros({})",
+        T.TimestampNTZType:
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01', {})",
+    }
+    exprs = []
+    for f in df.schema.fields:
+        c = "`" + f.name.replace("`", "``") + "`"
+        fmt = to_int.get(type(f.dataType))
+        exprs.append(f"{fmt.format(c)} AS {c}" if fmt else c)
+    ints = df.selectExpr(*exprs)
+    plan = ints._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return False
+    rows = ints.collect()
+    if not rows:
+        return True
+    schema = pa.schema(
+        [pa.field(f.name, t) for f, t in zip(df.schema.fields, types)],
+        metadata={
+            _SPARK_SCHEMA_KEY: df.schema.json(),
+            # a Spark 3+ writer's files need no calendar rebase
+            b"org.apache.spark.version": pyspark.__version__,
+        },
+    )
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=t)
+         for i, t in enumerate(types)],
+        schema=schema,
+    )
+    uid = uuid.uuid4()
+    tmp = os.path.join(path, f"_rows-{uid}.parquet")
+    try:
+        # store_schema keeps the key-value metadata (pyarrow drops it
+        # without the Arrow schema)
+        pq.write_table(table, tmp, compression=codec, store_schema=True)
+        os.replace(tmp, os.path.join(path, f"part-00000-{uid}-c000.parquet"))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return True
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -423,8 +537,9 @@ def alter_rename_column(path: str, old: str, new: str) -> None:
             g["name"] = new
     if evo.get("autoinc", {}).get("column") == old:
         evo["autoinc"]["column"] = new
-    if old in evo.get("defaults", {}):
-        evo["defaults"][new] = evo["defaults"].pop(old)
+    for key in ("defaults", "collations"):
+        if old in evo.get(key, {}):
+            evo[key][new] = evo[key].pop(old)
     _write_evolution(path, evo)
 
 
@@ -482,13 +597,21 @@ def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
     the directory checked against the recorded file set, then
     ``spark.read.schema(...)`` — no schema-merge job. When the listing
     does not match (another writer, a swapped directory, a first read)
-    the manifest rebuilds with one ``mergeSchema`` read first."""
-    import pyspark.sql.functions as F
-
+    the manifest rebuilds with one ``mergeSchema`` read first. While
+    neither the files nor the sidecar change, every call returns the
+    same DataFrame (``manifest.evolved``)."""
     from mariadb_columnstore_engine_spark.sources import manifest
 
     evo = _evolution(path)
-    df = manifest.read(spark, path)
+    return manifest.evolved(
+        spark, path, evo, lambda df: _apply_evolution(df, evo)
+    )
+
+
+def _apply_evolution(df: DataFrame, evo: dict) -> DataFrame:
+    """The sidecar ``evo`` applied to the physical relation ``df``."""
+    import pyspark.sql.functions as F
+
     for c in evo["added"]:
         if c["name"] not in df.columns:
             df = df.withColumn(
@@ -543,7 +666,7 @@ def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
             keep.insert(keep.index(after) + 1, c["name"])
         else:
             keep.append(c["name"])
-    return df.select(*keep)
+    return df if keep == df.columns else df.select(*keep)
 
 
 def strip_collations(df: DataFrame) -> DataFrame:
@@ -557,17 +680,17 @@ def strip_collations(df: DataFrame) -> DataFrame:
 
     import pyspark.sql.functions as F
 
-    cols, changed = [], False
-    for f in df.schema.fields:
-        if (
-            isinstance(f.dataType, StringType)
-            and f.dataType.simpleString() != "string"
-        ):
-            cols.append(F.col(f.name).cast("string").alias(f.name))
-            changed = True
-        else:
-            cols.append(F.col(f.name))
-    return df.select(*cols) if changed else df
+    collated = {
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, StringType)
+        and f.dataType.simpleString() != "string"
+    }
+    if not collated:
+        return df
+    return df.select(*[
+        F.col(c).cast("string").alias(c) if c in collated else F.col(c)
+        for c in df.columns
+    ])
 
 
 def write_jdbc(

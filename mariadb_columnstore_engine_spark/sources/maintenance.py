@@ -245,7 +245,7 @@ def drop_partitions(spark: SparkSession, path: str,
     else:
         evo.pop("disabled_partitions", None)
     _write_evolution(path, evo)
-    spark.catalog.clearCache()
+    spark.catalog.refreshByPath(path)
     return len(partitions)
 
 

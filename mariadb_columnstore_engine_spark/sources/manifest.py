@@ -24,9 +24,13 @@ job or a ``count()``. ``read`` turns the state into the table's
 physical relation (``spark.read.schema(...)`` over the enabled files).
 
 Only the current files of each path are held (a rewrite replaces the
-entry; nothing is cached per file across versions). The state lives in
-this process and is not persisted. Paths that list no local files
-(``s3a://`` URIs) are never cached: every use pays the Spark read.
+entry; nothing is cached per file across versions). Beside each state
+sits the table's logical relation (``evolved``): one DataFrame per
+(session, path), reused while neither the state nor the evolution
+sidecar has changed, so a statement builds its table's relation once,
+after its own write. The state lives in this process and is not
+persisted. Paths that list no local files (``s3a://`` URIs) are never
+cached: every use pays the Spark read.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ import os
 import threading
 from dataclasses import dataclass
 from types import MappingProxyType
-from typing import Mapping
+from typing import Callable, Mapping
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
@@ -94,6 +98,8 @@ class TableState:
 
 _LOCK = threading.Lock()
 _TABLES: dict[str, TableState] = {}
+#: (id(session), path) → (session, state, sidecar, logical relation)
+_RELATIONS: dict[tuple[int, str], tuple] = {}
 
 
 def _key(path: str) -> str:
@@ -281,12 +287,38 @@ def state(spark: SparkSession, path: str) -> TableState:
     return st
 
 
-def read(spark: SparkSession, path: str) -> DataFrame:
+def read(spark: SparkSession, path: str,
+         st: TableState | None = None) -> DataFrame:
     """The table's physical relation (enabled files, recorded schema):
     a directory listing and no Spark job while the state is current."""
-    st = state(spark, path)
+    st = state(spark, path) if st is None else st
     return _scan(spark.read.schema(st.schema), path, st.live_files(path),
                  st.disabled)
+
+
+def evolved(spark: SparkSession, path: str, evo: dict,
+            build: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """The table's logical relation, ``build`` applied to ``read``'s
+    physical one for the sidecar ``evo``. The same DataFrame comes back
+    while the recorded state object and the sidecar are unchanged: the
+    file index inside it lists exactly the state's files, and every
+    write records a new state."""
+    st = state(spark, path)
+    key = (id(spark), _key(path))
+    with _LOCK:
+        hit = _RELATIONS.get(key)
+    if hit is not None and hit[0] is spark and hit[1] is st \
+            and hit[2] == evo:
+        return hit[3]
+    df = build(read(spark, path, st))
+    with _LOCK:
+        # a stopped session's relations are dead, and would pin it
+        for k in [k for k, e in _RELATIONS.items()
+                  if e[0].sparkContext._jsc is None]:
+            del _RELATIONS[k]
+        if _TABLES.get(key[1]) is st:
+            _RELATIONS[key] = (spark, st, evo, df)
+    return df
 
 
 def _after_write(path: str, before: TableState | None) -> TableState | None:
@@ -345,6 +377,10 @@ def record(spark: SparkSession, path: str,
 
 
 def forget(path: str) -> None:
-    """Drop the recorded state of ``path`` (the next use rebuilds it)."""
+    """Drop the recorded state and relations of ``path`` (the next use
+    rebuilds them)."""
+    key = _key(path)
     with _LOCK:
-        _TABLES.pop(_key(path), None)
+        _TABLES.pop(key, None)
+        for k in [k for k in _RELATIONS if k[1] == key]:
+            del _RELATIONS[k]

@@ -7,8 +7,10 @@ small shuffle-partition count so the whole suite stays quick on local[N].
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
 
@@ -47,3 +49,32 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def py4j_calls(spark):
+    """``with py4j_calls() as calls: ...`` — ``calls.n`` counts the
+    py4j round trips this thread made inside the block (the gateway
+    client's ``send_command``; the py4j garbage-collection thread's
+    commands are not counted)."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    class Calls:
+        n = 0
+
+    @contextlib.contextmanager
+    def counting():
+        calls, me, send = Calls(), threading.get_ident(), client.send_command
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                calls.n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            yield calls
+        finally:
+            del client.send_command
+
+    return counting

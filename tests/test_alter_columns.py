@@ -64,6 +64,25 @@ def test_rename_column_instant(eng_ac):
         eng_ac.execute("SELECT amount FROM ac").collect()
 
 
+def test_rename_keeps_collation(eng_ac):
+    """A declared COLLATE follows the column through RENAME COLUMN."""
+    eng_ac.execute(
+        "CREATE TABLE rc (id INT, seg VARCHAR(20) COLLATE utf8mb4_unicode_ci)"
+    )
+    eng_ac.execute(
+        "INSERT INTO rc VALUES (1, 'Auto'), (2, 'AUTO'), (3, 'auto')"
+    )
+
+    def count(col):
+        return eng_ac.execute(
+            f"SELECT COUNT(*) FROM rc WHERE {col} = 'AUTO'"
+        ).collect()[0][0]
+
+    assert count("seg") == 3
+    eng_ac.execute("ALTER TABLE rc RENAME COLUMN seg TO seg2")
+    assert count("seg2") == 3
+
+
 def test_rename_then_dml_materializes(eng_ac):
     eng_ac.execute("ALTER TABLE ac RENAME COLUMN amount TO amt")
     eng_ac.execute("UPDATE ac SET amt = 99 WHERE id = 1")
