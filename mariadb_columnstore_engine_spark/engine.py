@@ -680,10 +680,7 @@ class Engine:
         ).createOrReplaceTempView("information_schema_extents")
         # columnstore_files analogue: per-data-file size + partition
         # status (disabled files = excluded extents)
-        from mariadb_columnstore_engine_spark.sources.ingest import (
-            _evolution,
-            _live_data_files,
-        )
+        from mariadb_columnstore_engine_spark.sources import manifest
 
         files = []
         for tn in names:
@@ -693,14 +690,11 @@ class Engine:
                 path = f"{self.catalog._sf_dir}/{tn}.parquet"
             try:
                 if os.path.isdir(path):
-                    disabled = set(
-                        _evolution(path).get("disabled_partitions", [])
-                    )
-                    for f in _live_data_files(path, set()):
-                        nm = os.path.basename(f)
+                    off = manifest.disabled(path)
+                    for key, f in manifest.partitions(path).items():
                         files.append(
-                            (tn, nm, os.path.getsize(f),
-                             "Disabled" if nm in disabled else "Enabled")
+                            (tn, key, os.path.getsize(f),
+                             "Disabled" if key in off else "Enabled")
                         )
                 else:
                     files.append(
@@ -3693,9 +3687,6 @@ class Engine:
         sub += f" ORDER BY {parsed.order_by} LIMIT {parsed.limit}"
         lhs = keys[0] if len(keys) == 1 else f"({key_list})"
         return f"{lhs} IN ({sub})"
-
-    def tables(self) -> tuple[str, ...]:
-        return TABLES
 
     def analyze(self, name: str, columns: list[str] | None = None) -> None:
         """Compute CBO statistics for a (catalog) table — see

@@ -1,9 +1,8 @@
 from mariadb_columnstore_engine_spark.functions.dialect import (
     group_concat,
     json_arrayagg,
-    div,
     ifnull,
     if_,
 )
 
-__all__ = ["group_concat", "json_arrayagg", "div", "ifnull", "if_"]
+__all__ = ["group_concat", "json_arrayagg", "ifnull", "if_"]

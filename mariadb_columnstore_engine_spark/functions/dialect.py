@@ -53,65 +53,12 @@ def json_arrayagg(col: Column | str) -> Column:
     return F.to_json(F.sort_array(F.collect_list(col)))
 
 
-def div(a: Column, b: Column) -> Column:
-    """MariaDB integer division ``a DIV b`` (funcexp func_intdiv): exact
-    truncated-toward-zero integer quotient, NULL on divide-by-zero.
-
-    Exactness: ``a - a % b`` is exactly divisible by ``b`` and ``%`` takes
-    the dividend's sign in both engines, so the quotient is the truncated
-    one. The division runs in decimal(38,0), not double, so BIGINT operands
-    beyond 2^53 don't round (the round-1 bug this replaces).
-    """
-    da = a.cast("decimal(38,0)")
-    db = b.cast("decimal(38,0)")
-    return F.when(b != 0, ((da - da % db) / db).cast("long"))
-
-
 def cast_signed(col: Column) -> Column:
     """MariaDB CAST(x AS SIGNED) for fractional inputs (func_cast.cpp):
     rounds half away from zero, unlike Spark's truncating cast. Implemented
     as round-to-0-places (Spark round = HALF_UP, away from zero) then an
     exact integral cast."""
     return F.round(col, 0).cast("long")
-
-
-def cast_signed_str(col: Column) -> Column:
-    """MariaDB CAST(<string> AS SIGNED) truncation semantics
-    (func_cast.cpp): a leading numeric prefix parses, trailing garbage is
-    ignored ('12abc' → 12, 'abc' → 0). Spark's cast returns NULL for any
-    malformed string; this extracts the prefix explicitly."""
-    prefix = F.regexp_extract(F.trim(col), r"^[+-]?\d+", 0)
-    return F.coalesce(
-        F.when(prefix != "", prefix.cast("long")), F.lit(0)
-    )
-
-
-def zero_date_to_null(col: Column) -> Column:
-    """MariaDB zero-date ('0000-00-00') handling: Spark/Parquet cannot
-    represent year 0, so ingest maps zero dates to NULL — the documented
-    engine difference (SURVEY §7 hard parts). Also catches '0000-00-00
-    00:00:00' timestamps."""
-    return F.when(~col.cast("string").startswith("0000-00-00"), col)
-
-
-def least_mariadb(*cols: Column) -> Column:
-    """MariaDB LEAST returns NULL if ANY argument is NULL; Spark/DuckDB
-    skip NULLs (same contract as greatest_mariadb)."""
-    any_null = None
-    for c in cols:
-        n = c.isNull()
-        any_null = n if any_null is None else (any_null | n)
-    return F.when(~any_null, F.least(*cols))
-
-
-def greatest_mariadb(*cols: Column) -> Column:
-    """MariaDB GREATEST returns NULL if ANY argument is NULL (func_case.cpp
-    least/greatest family); Spark/DuckDB ``greatest`` skip NULLs."""
-    any_null = None
-    for c in cols:
-        n = c.isNull()
-        any_null = n if any_null is None else (any_null | n)
-    return F.when(~any_null, F.greatest(*cols))
 
 
 def ifnull(a: Column, b: Column) -> Column:
@@ -188,35 +135,6 @@ def concat_oracle(*cols: Column) -> Column:
 def nvl(a: Column, b: Column) -> Column:
     """Oracle-mode NVL ≡ IFNULL/COALESCE."""
     return F.coalesce(a, b)
-
-
-def _empty_to_null(c: Column) -> Column:
-    """Oracle semantics: the empty string IS NULL, so any Oracle-mode
-    string function whose result is '' returns NULL instead."""
-    return F.when(F.length(c) > 0, c)
-
-
-def trim_oracle(col: Column) -> Column:
-    """Oracle-mode TRIM (func_trim.cpp trim_oracle): like TRIM but an
-    empty result collapses to NULL ('' IS NULL under sql_mode=ORACLE)."""
-    return _empty_to_null(F.trim(col))
-
-
-def ltrim_oracle(col: Column) -> Column:
-    """Oracle-mode LTRIM (func_ltrim.cpp ltrim_oracle)."""
-    return _empty_to_null(F.ltrim(col))
-
-
-def rtrim_oracle(col: Column) -> Column:
-    """Oracle-mode RTRIM (func_rtrim.cpp rtrim_oracle)."""
-    return _empty_to_null(F.rtrim(col))
-
-
-def replace_oracle(s: Column, frm: Column, to: Column) -> Column:
-    """Oracle-mode REPLACE (func_replace.cpp replace_oracle): a NULL
-    replacement removes occurrences (Oracle NULL≡''), and an empty
-    result collapses to NULL."""
-    return _empty_to_null(F.replace(s, frm, F.coalesce(to, F.lit(""))))
 
 
 def decode_oracle(expr: Column, *pairs: Column) -> Column:
@@ -311,91 +229,6 @@ def maketime(h: Column, m: Column, s: Column) -> Column:
     total = F.abs(h) * 3600 + m * 60 + s
     signed = F.when(h < 0, -total).otherwise(total)
     return F.when(ok, sec_to_time(signed))
-
-
-def truncate_number(col: Column, d: int) -> Column:
-    """MariaDB TRUNCATE(X, D) (func_truncate.cpp): truncate toward zero
-    to D decimal places (negative D truncates left of the point).
-
-    Arithmetic runs in DECIMAL, not double: ``col * 10^d`` in doubles
-    turns 0.29*100 into 28.999999999999996 and floors to 28 — the exact
-    inputs MariaDB's decimal path truncates losslessly. The double→
-    decimal cast uses the shortest decimal representation (Spark/Java
-    ``BigDecimal.valueOf``), so 0.29 arrives as 0.29, and every scale
-    shift against an integer power of ten is exact."""
-    dec = col.cast("decimal(38,15)")
-    if d >= 0:
-        f = F.lit(10 ** d).cast("decimal(20,0)")
-        scaled = dec * f
-        t = F.when(col >= 0, F.floor(scaled)).otherwise(F.ceil(scaled))
-        return (t.cast("decimal(38,15)") / f).cast("double")
-    f = F.lit(10 ** (-d)).cast("decimal(20,0)")
-    scaled = dec / f
-    t = F.when(col >= 0, F.floor(scaled)).otherwise(F.ceil(scaled))
-    return (t * f).cast("double")
-
-
-def insert_str(s: Column, pos: Column, length: Column, new: Column) -> Column:
-    """MariaDB INSERT(str, pos, len, newstr) (func_insert.cpp) with the
-    documented edge semantics: pos outside 1..char_length(str) returns
-    str unchanged; len negative or running past the end replaces the
-    whole rest of the string; any NULL argument yields NULL."""
-    slen = F.char_length(s)
-    head = s.substr(F.lit(1), pos - 1)
-    tail = s.substr(pos + length, slen)
-    return (
-        F.when(
-            s.isNull() | pos.isNull() | length.isNull() | new.isNull(),
-            F.lit(None).cast("string"),
-        )
-        .when((pos < 1) | (pos > slen), s)
-        .when((length < 0) | (pos + length > slen), F.concat(head, new))
-        .otherwise(F.concat(head, new, tail))
-    )
-
-
-#: GET_FORMAT lookup (func_get_format.cpp; the MySQL/MariaDB table).
-_GET_FORMATS = {
-    ("DATE", "USA"): "%m.%d.%Y",
-    ("DATE", "JIS"): "%Y-%m-%d",
-    ("DATE", "ISO"): "%Y-%m-%d",
-    ("DATE", "EUR"): "%d.%m.%Y",
-    ("DATE", "INTERNAL"): "%Y%m%d",
-    ("DATETIME", "USA"): "%Y-%m-%d %H.%i.%s",
-    ("DATETIME", "JIS"): "%Y-%m-%d %H:%i:%s",
-    ("DATETIME", "ISO"): "%Y-%m-%d %H:%i:%s",
-    ("DATETIME", "EUR"): "%Y-%m-%d %H.%i.%s",
-    ("DATETIME", "INTERNAL"): "%Y%m%d%H%i%s",
-    ("TIME", "USA"): "%h:%i:%s %p",
-    ("TIME", "JIS"): "%H:%i:%s",
-    ("TIME", "ISO"): "%H:%i:%s",
-    ("TIME", "EUR"): "%H.%i.%s",
-    ("TIME", "INTERNAL"): "%H%i%s",
-}
-
-
-def get_format(kind: Column, region: Column) -> Column:
-    """MariaDB GET_FORMAT({DATE|TIME|DATETIME}, region): the format
-    string table, as a when-chain over both arguments (TIMESTAMP is an
-    alias of DATETIME); unknown combinations yield NULL, as in the
-    reference."""
-    k = F.when(F.upper(kind) == "TIMESTAMP", "DATETIME").otherwise(
-        F.upper(kind)
-    )
-    r = F.upper(region)
-    out = F.lit(None).cast("string")
-    for (kk, rr), fmt in _GET_FORMATS.items():
-        out = F.when((k == kk) & (r == rr), fmt).otherwise(out)
-    return out
-
-
-def sysdate() -> Column:
-    """MariaDB SYSDATE(): wall-clock at function evaluation. Spark's
-    ``current_timestamp`` is fixed per QUERY (MariaDB NOW() semantics,
-    i.e. sql_mode sysdate_is_now) — true per-call time would be
-    nondeterministic across retries, which Spark forbids for a reason;
-    the NOW()-equivalence is the documented contract here."""
-    return F.current_timestamp()
 
 
 # --- WEEK(date, mode) — all 8 MariaDB modes (func_week.cpp) ---

@@ -656,6 +656,48 @@ def _rewrite_fn_templates(masked: str, store: list[str]) -> str:
     return masked
 
 
+_NULL_FNS_RE = re.compile(
+    r"\b(?:(GREATEST|LEAST)|SYSDATE)\s*\(", re.IGNORECASE
+)
+
+
+def _rewrite_null_fns(masked: str) -> str:
+    """GREATEST/LEAST return NULL when any argument is NULL
+    (func_case.cpp least/greatest family), where Spark's skip NULLs;
+    SYSDATE([p]) is the statement's timestamp at precision ``p``
+    (default 0) — Spark fixes ``current_timestamp`` per query, which
+    rules out true per-call wall-clock time. A statement without these
+    names costs one regex scan."""
+    out, i = [], 0
+    while m := _NULL_FNS_RE.search(masked, i):
+        open_at = m.end() - 1
+        end = _find_balanced(masked, open_at)
+        inner = masked[open_at + 1 : end - 1].strip()
+        out.append(masked[i : m.start()])
+        if m.group(1):
+            args = [
+                _rewrite_null_fns(a.strip())
+                for a in _split_top_level_commas(inner)
+            ]
+            nulls = " OR ".join(f"({a}) IS NULL" for a in args)
+            out.append(
+                f"(CASE WHEN {nulls} THEN NULL "
+                f"ELSE {m.group(1).lower()}({', '.join(args)}) END)"
+            )
+        else:
+            digits = 6 - int(inner or 0)
+            if digits <= 0:
+                out.append("current_timestamp()")
+            else:
+                out.append(
+                    "timestamp_micros(unix_micros(current_timestamp()) "
+                    f"div {10 ** digits} * {10 ** digits})"
+                )
+        i = end
+    out.append(masked[i:])
+    return "".join(out)
+
+
 def _rewrite_interval_arith(masked: str, store: list[str]) -> str:
     """DATE_ADD/DATE_SUB/ADDDATE/SUBDATE with an INTERVAL second argument
     → plain interval arithmetic (Spark's date_add only takes day counts;
@@ -2083,6 +2125,9 @@ def translate_statement(
     # aliases are already identifiers.
     masked = _rewrite_case_coercions(masked, store, string_columns)
     masked = _rewrite_loose_string_args(masked, store, string_columns)
+    # user-written GREATEST/LEAST/SYSDATE only: runs before any pass
+    # emits its own least(greatest(...)) clamps
+    masked = _rewrite_null_fns(masked)
     masked = _rewrite_with_rollup(masked, store)
     masked = _rewrite_cast_targets(masked, store, numeric_columns)
     # inline collation forms run AFTER cast targets so CAST(x AS
@@ -2725,16 +2770,30 @@ def _rewrite_suffix_frames(masked: str, store: list[str]) -> str:
     return "".join(out)
 
 
+#: GET_FORMAT lookup (func_get_format.cpp; the MySQL/MariaDB table).
+_GET_FORMATS = {
+    ("DATE", "USA"): "%m.%d.%Y",
+    ("DATE", "JIS"): "%Y-%m-%d",
+    ("DATE", "ISO"): "%Y-%m-%d",
+    ("DATE", "EUR"): "%d.%m.%Y",
+    ("DATE", "INTERNAL"): "%Y%m%d",
+    ("DATETIME", "USA"): "%Y-%m-%d %H.%i.%s",
+    ("DATETIME", "JIS"): "%Y-%m-%d %H:%i:%s",
+    ("DATETIME", "ISO"): "%Y-%m-%d %H:%i:%s",
+    ("DATETIME", "EUR"): "%Y-%m-%d %H.%i.%s",
+    ("DATETIME", "INTERNAL"): "%Y%m%d%H%i%s",
+    ("TIME", "USA"): "%h:%i:%s %p",
+    ("TIME", "JIS"): "%H:%i:%s",
+    ("TIME", "ISO"): "%H:%i:%s",
+    ("TIME", "EUR"): "%H.%i.%s",
+    ("TIME", "INTERNAL"): "%H%i%s",
+}
+
+
 def _rewrite_get_format(masked: str, store: list[str]) -> str:
     """GET_FORMAT(DATE|TIME|DATETIME|TIMESTAMP, <region>) → a CASE
     over the region string with the documented literal formats
-    (NULL for unknown regions, matching MariaDB). The format table
-    lives in ``dialect._GET_FORMATS`` (func_get_format.cpp) — one
-    source of truth with the Column-API builder."""
-    from mariadb_columnstore_engine_spark.functions.dialect import (
-        _GET_FORMATS,
-    )
-
+    (NULL for unknown regions, matching MariaDB)."""
     pat = re.compile(r"\bGET_FORMAT\s*\(", re.IGNORECASE)
     out, i = [], 0
     while True:
@@ -3207,6 +3266,7 @@ def analysis_repair(sql: str, error_msg: str) -> str | None:
 
 
 _DIV_TOKEN = re.compile(r"[\w`$\x00.]")
+_INT_DIV_RE = re.compile(r"\bDIV\b", re.IGNORECASE)
 
 #: words that may directly precede a parenthesized expression without
 #: being a callable name (operand extraction must not absorb them)
@@ -4096,12 +4156,12 @@ def _rewrite_logical_xor(masked: str, store: list[str]) -> str:
 
 
 def _rewrite_null_safe_division(masked: str, store: list[str]) -> str:
-    """MariaDB division/modulo semantics: ``x / 0`` and ``x % 0`` are
-    NULL (+ warning), not an error (devregression mcs7005/7080/7218
-    all divide by a sometimes-zero aggregate). Spark ANSI raises at
-    RUNTIME, which an analysis-time retry can never repair — so the
-    dialect pass rewrites the operators themselves to
-    try_divide/try_mod. Results are identical whenever the divisor is
+    """MariaDB division/modulo semantics: ``x / 0``, ``x % 0`` and
+    ``x DIV 0`` are NULL (+ warning), not an error (devregression
+    mcs7005/7080/7218 all divide by a sometimes-zero aggregate). Spark
+    ANSI raises at RUNTIME, which an analysis-time retry can never
+    repair — so the dialect pass rewrites the operators themselves to
+    try_divide/try_mod (and a DIV's divisor to ``nullif(d, 0)``). Results are identical whenever the divisor is
     non-zero, so this is behavior-neutral for every statement ANSI
     already accepted. Runs BEFORE the function-template pass so
     engine-generated internal divisions (SEC_TO_TIME etc.) keep plain
@@ -4127,6 +4187,13 @@ def _rewrite_null_safe_division(masked: str, store: list[str]) -> str:
             )
             changed = True
             break
+    # x DIV 0 is NULL as well: wrap each divisor, last DIV first so a
+    # DIV inside a later divisor is already wrapped
+    for m in reversed(list(_INT_DIV_RE.finditer(masked))):
+        re_ = _operand_right(masked, m.end())
+        right = masked[m.end() : re_].strip()
+        if right:
+            masked = f"{masked[:m.end()]} nullif({right}, 0){masked[re_:]}"
     return masked
 
 

@@ -71,12 +71,6 @@ def _moda():
     return _CACHE["moda"]
 
 
-def moda_udaf(col: Column | str) -> Column:
-    """GROUPED_AGG pandas UDAF spelling of MODA (SQL: ``SELECT
-    moda(x) ... GROUP BY g`` after register_all)."""
-    return _moda()(col)
-
-
 def median_udaf(col: Column | str) -> Column:
     """GROUPED_AGG pandas UDAF: exact interpolated median (the SDK
     example utils/udfsdk/median.cpp; equals percentile_cont(0.5))."""
@@ -171,25 +165,6 @@ def _uncompressed_length():
 
         _CACHE["uncompressed_length"] = uncompressed_length_impl
     return _CACHE["uncompressed_length"]
-
-
-def compress_udf(col: Column | str) -> Column:
-    """COMPRESS(s) -> binary (mcs268; 4-byte LE length + zlib). A pandas
-    UDF because Spark SQL has no zlib expression; Arrow-batched, and the
-    payload column stays binary end to end."""
-    return _compress()(col)
-
-
-def uncompress_udf(col: Column | str) -> Column:
-    """UNCOMPRESS(b) -> string; NULL for values COMPRESS didn't produce
-    (mcs269 semantics)."""
-    return _uncompress()(col)
-
-
-def uncompressed_length_udf(col: Column | str) -> Column:
-    """UNCOMPRESSED_LENGTH(b) -> bigint from the 4-byte header, no
-    decompression (mcs270)."""
-    return _uncompressed_length()(col)
 
 
 def register_all(spark: SparkSession) -> None:

@@ -20,7 +20,7 @@ cardinality.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.types import NumericType
 
 
@@ -87,22 +87,4 @@ def moda(
         with_avg.groupBy(*g).agg(agg)
         if g
         else with_avg.agg(agg)
-    )
-
-
-def moda_window_expr(value_col: str) -> Column:
-    """MODA as an analytic function over a window partition (the
-    reference registers moda as UDAnF too — moda.h:25-26). Pure
-    JVM-side: collect the partition's values once per row is what a
-    naive UDAF-window would do; instead express count/avg via nested
-    aggregates is impossible in a window, so this helper is intended
-    for ``partitionBy``-only (unbounded) frames where the per-partition
-    answer is a constant: compose it as a grouped ``moda()`` joined
-    back to the rows instead. Kept as an explicit error to document the
-    scale-correct pattern.
-    """
-    raise NotImplementedError(
-        "Use moda(df, value_col, group_cols) and join the 1-row-per-group "
-        "result back (broadcast if groups are few) — an unbounded-frame "
-        "window UDAF would ship every partition's rows to Python per row."
     )

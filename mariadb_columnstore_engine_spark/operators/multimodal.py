@@ -7,7 +7,7 @@ encoded to bytes to exercise the REAL parts — schema, Arrow batch
 transfer, ``mapInPandas`` signature, partition shape — while the decode
 step itself is stubbed:
 
-- if a decoder library (PIL) is importable, ``decode_image_meta`` would
+- if a decoder library (PIL) is importable, ``_pil_decode`` would
   use it (not in this container);
 - otherwise a clearly-marked deterministic fake derives features from the
   raw bytes (length + md5-prefix checksum), keeping outputs
@@ -155,19 +155,6 @@ def _header_decode(buf: bytes) -> tuple[int, int]:
     )
 
 
-def decode_image_meta(buf: bytes) -> tuple[int, int]:
-    """Decode ONE media payload with the real decoder. Raises when no
-    decoder library is importable (this container) — batch pipelines
-    use extract_media_features, whose default resolves to whatever is
-    available."""
-    if not _HAVE_DECODER:
-        raise NotImplementedError(
-            "real decode needs Pillow; use extract_media_features"
-            " (decoder='fake') for the deterministic CI path"
-        )
-    return _pil_decode(buf)
-
-
 def extract_media_features(df: DataFrame, media_col: str = "media",
                            id_col: str = "doc_id",
                            decoder: str = "fake") -> DataFrame:
@@ -265,24 +252,3 @@ def sample_frames(df: DataFrame, n_frames: int = 3,
     return df.select(id_col, media_col).mapInPandas(
         batches, schema=FRAME_SAMPLE_SCHEMA
     )
-
-
-def resize_media(df: DataFrame, stride: int = 4,
-                 media_col: str = "media") -> DataFrame:
-    """Resize/downsample plumbing: binary in → smaller binary out
-    (every ``stride``-th byte as the deterministic fake for an image
-    resize; a real deployment decodes, resizes, re-encodes). Exercises
-    the binary→binary Arrow round trip and keeps the payload column
-    type opaque to the rest of the plan."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf[media_col] = [
-                None if b is None else bytes(b)[::stride]
-                for b in pdf[media_col]
-            ]
-            yield pdf
-
-    # schema unchanged: same columns, payload just smaller
-    return df.mapInPandas(batches, schema=df.schema)

@@ -185,42 +185,52 @@ def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def oracle_rows(con, sql: str) -> tuple[pa.Table, list[tuple]]:
+    """ONE oracle execution: the Arrow table supplies rows, column names
+    and the wire-type schema (``fetchall`` would flatten HUGEINT/DECIMAL,
+    and a second ``.execute()`` would double the cost of every heavy
+    oracle — recursive closures, kmeans, LSH)."""
+    otable = con.execute(sql).arrow()
+    cols = [c.to_pylist() for c in otable.columns]
+    return otable, list(zip(*cols)) if cols else []
+
+
+def problems(name: str, sdf, srows: list, otable: pa.Table,
+             orows: list) -> list[str]:
+    """Problem strings (empty = parity) for query ``name``: Spark's
+    DataFrame ``sdf`` with collected ``srows`` against the oracle's
+    ``oracle_rows``."""
+    from mariadb_columnstore_engine_spark.plans.registry import (
+        PRIORITY_WINDOW,
+    )
+
+    scols, ocols = sdf.columns, otable.column_names
+    out = type_problems(sdf.schema, otable.schema)
+    # Driver-window queries additionally face the driver's pandas
+    # canonicalizer — enforce its type limits locally so a red driver row
+    # reproduces before shipping (round-3 lesson: 3 queries were value-
+    # correct but driver-unhashable).
+    if name in PRIORITY_WINDOW:
+        out += driver_canon_problems(sdf.schema, otable.schema)
+        out += pandas_sortable_problems(otable)
+    if len(srows) != len(orows):
+        out.append(f"rowcount spark={len(srows)} duck={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        out.append(f"schema spark={sorted(scols)} duck={sorted(ocols)}")
+    if not out:
+        a = normalize(srows, scols)
+        b = normalize(orows, ocols)
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            out.append(f"values differ, first diffs: {diffs}")
+    return out
+
+
 def compare(spark, con, spec, sf_dir: str) -> list[str]:
     """Run spec through Spark and its oracle through DuckDB; return a list
     of problem strings (empty = parity)."""
     sdf = spec.fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
     if spec.oracle is None:
         return []  # rows-only contract: executing without error is the check
-    # ONE oracle execution: the Arrow table supplies rows, column names,
-    # and the wire-type schema (a second .execute() would double the cost
-    # of every heavy oracle — recursive closures, kmeans, LSH).
-    otable = con.execute(spec.oracle).arrow()
-    ocols = otable.column_names
-    ocols_py = [c.to_pylist() for c in otable.columns]
-    orows = list(zip(*ocols_py)) if ocols_py else []
-
-    problems: list[str] = type_problems(sdf.schema, otable.schema)
-    # Driver-window queries additionally face the driver's pandas
-    # canonicalizer — enforce its type limits locally so a red driver row
-    # reproduces before shipping (round-3 lesson: 3 queries were value-
-    # correct but driver-unhashable).
-    from mariadb_columnstore_engine_spark.plans.registry import (
-        PRIORITY_WINDOW,
-    )
-
-    if spec.name in PRIORITY_WINDOW:
-        problems += driver_canon_problems(sdf.schema, otable.schema)
-        problems += pandas_sortable_problems(otable)
-    if len(srows) != len(orows):
-        problems.append(f"rowcount spark={len(srows)} duck={len(orows)}")
-    if sorted(scols) != sorted(ocols):
-        problems.append(f"schema spark={sorted(scols)} duck={sorted(ocols)}")
-    if not problems:
-        a = normalize(srows, scols)
-        b = normalize(orows, ocols)
-        if a != b:
-            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            problems.append(f"values differ, first diffs: {diffs}")
-    return problems
+    return problems(spec.name, sdf, srows, *oracle_rows(con, spec.oracle))

@@ -86,10 +86,6 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b))
-
-
 _SQL_DOT = (
     "list_sum(list_transform(range(1, {n} + 1), "
     "i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"

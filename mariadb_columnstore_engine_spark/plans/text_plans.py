@@ -52,39 +52,18 @@ def _tokens(col: Column) -> Column:
     return F.split(col, " ")
 
 
-def _shingles(tokens: Column) -> Column:
-    """Distinct word trigrams (the dedup shingle unit).
-
-    Guarded for short documents: Spark's ``sequence(1, 0)`` yields a
-    DESCENDING ``[1, 0]`` (not an empty array), so an ungated build would
-    hit index 0 in ``element_at`` and crash on any doc with < 3 tokens.
-    DuckDB's ``range(1, len-1)`` is empty for the same input, so the gate
-    also keeps both engines aligned.
-    """
-    idx = F.sequence(F.lit(1), F.size(tokens) - 2)
-    tri = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(tokens, i),
-            F.element_at(tokens, i + 1),
-            F.element_at(tokens, i + 2),
-        ),
-    )
-    return F.when(F.size(tokens) >= 3, F.array_distinct(tri)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _hash24(col: Column) -> Column:
     """Portable 24-bit shingle hash (see module docstring)."""
     return F.conv(F.substring(F.md5(col), 1, 6), 16, 10).cast("long")
 
 
-#: SQL spelling of _shingles(F.col("__w")) — parses to the identical
-#: analyzed plan (same transform/element_at/array_distinct operators,
-#: pinned by tests/test_text_edges.py equality assert) in ONE py4j
-#: round trip instead of the ~30 the Column-API lambda issues.
+#: Distinct word trigrams (the dedup shingle unit) of the token array
+#: ``__w``, as SQL: one py4j round trip instead of the ~30 a Column-API
+#: lambda issues. Guarded for short documents: Spark's ``sequence(1, 0)``
+#: yields a DESCENDING ``[1, 0]`` (not an empty array), so an ungated
+#: build would hit index 0 in ``element_at`` and crash on any doc with
+#: < 3 tokens; DuckDB's ``range(1, len-1)`` is empty for the same input,
+#: so the gate also keeps both engines aligned (tests/test_text_edges.py).
 _SHINGLE_EXPR = (
     "CASE WHEN size(__w) >= 3 THEN array_distinct(transform("
     "sequence(1, size(__w) - 2), i -> concat_ws(' ', "
@@ -97,8 +76,8 @@ def _shingled_docs(df: DataFrame, *keep: str, pin: bool = False) -> DataFrame:
     """Projection of ``keep`` columns plus ``sh`` = distinct trigram
     shingles, with the token array materialized in its OWN projection.
 
-    Inlining ``_tokens`` straight into ``_shingles`` puts the split
-    inside the trigram transform's lambda, and codegen subexpression
+    Inlining ``_tokens`` straight into the trigram expression puts the
+    split inside the transform's lambda, and codegen subexpression
     elimination does not reach inside higher-order-function lambdas:
     every ``element_at(tokens, i)`` re-evaluates ``split(text)`` — 3
     evaluations per shingle position, ~150 splits of the full text per

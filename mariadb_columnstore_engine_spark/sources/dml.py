@@ -174,7 +174,7 @@ def _rewrite(spark: SparkSession, path: str, transform,
     # copy-on-write would silently destroy them
     disabled = set(evo.get("disabled_partitions", []))
     for rel in listing:
-        if os.path.basename(rel) in disabled:
+        if rel in disabled:
             dst = os.path.join(tmp, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             shutil.copy2(os.path.join(path, rel), dst)
@@ -336,8 +336,9 @@ def snapshot_tree(src: str, dst: str) -> None:
     trick the version buffer plays with block references. Small metadata
     files (the evolution sidecar, _SUCCESS markers) ARE copied byte-wise,
     so the pre-image never shares an inode with a file a later statement
-    may replace. On an object store, swap this for the table-format
-    snapshot (VersionedTable is the manifest-shaped sibling).
+    may replace. ``Engine.begin`` takes one per table and
+    ``Engine.rollback`` swaps it back in with ``swap``. On an object
+    store, swap this for the table-format snapshot.
     """
     import shutil
 

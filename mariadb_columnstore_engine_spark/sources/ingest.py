@@ -1,4 +1,4 @@
-"""Ingest / DDL / DML / foreign-source surface.
+"""Ingest / DDL / DML surface.
 
 Reference analogues:
 - ``bulk_load_csv``  ≈ cpimport parallel bulk load
@@ -8,15 +8,9 @@ Reference analogues:
   Clustering on filter columns is what makes Parquet row-group min/max
   stats selective — the exact job of the reference's extent-map casual
   partitioning (versioning/BRM/extentmap.h:127-183, lbidlist.cpp:698).
-- ``create_table`` / ``insert_into_select`` ≈ DDL CREATE TABLE
-  (dbcon/ddlpackage/createtable.cpp) and INSERT INTO ... SELECT through
-  DMLProc (dbcon/dmlpackageproc/insertpackageprocessor.cpp). Spark needs
-  no MVCC version buffer for batch appends; snapshot semantics would come
-  from a table format (Delta/Iceberg) if row-level DML were added.
-- ``read_jdbc`` ≈ CrossEngineStep scanning a foreign-engine table over
-  the MySQL client protocol inside a ColumnStore query
-  (dbcon/joblist/crossenginestep.h:53). The returned DataFrame joins
-  natively with Parquet-backed tables.
+- ``append_rows`` ≈ DMLProc's row path for ``INSERT … VALUES``
+  (dbcon/dmlpackageproc/insertpackageprocessor.cpp); the instant-ALTER
+  sidecar ≈ DDL without a data rewrite.
 
 S3/cloud paths (storage-manager/src/CloudStorage.cpp) need no code:
 every function here accepts ``s3a://`` URIs wherever it accepts a path.
@@ -128,23 +122,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.format(format).save(dest)
-
-
-def create_table(
-    spark: SparkSession, name: str, location: str, *, replace: bool = True,
-    format: str = "parquet",
-) -> None:
-    """CREATE TABLE ... USING parquet|orc LOCATION (DDL surface)."""
-    if replace:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} USING {format} LOCATION '{location}'"
-    )
-
-
-def insert_into_select(df: DataFrame, dest: str, *, mode: str = "append") -> None:
-    """INSERT INTO <parquet dir> SELECT ... (batch DML surface)."""
-    df.write.mode(mode).parquet(dest)
 
 
 #: Parquet codec names of ``spark.sql.parquet.compression.codec`` that
@@ -308,96 +285,6 @@ def analyze_table(spark: SparkSession, name: str,
         )
 
 
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table_or_query: str,
-    *,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Foreign-source scan (CrossEngineStep analogue).
-
-    With ``partition_column`` + bounds the scan parallelizes across
-    ``num_partitions`` executors — the JDBC equivalent of the reference
-    fanning extent scans across PMs. Tested against embedded Derby
-    (in-JVM foreign engine, tests/test_cross_engine.py): plain scans,
-    partitioned parallel scans, full-query pushdown, and the
-    CrossEngineStep join shape (foreign dim × native fact).
-    """
-    reader = spark.read.format("jdbc").option("url", url)
-    if table_or_query.strip().lower().startswith("select"):
-        reader = reader.option("query", table_or_query)
-    else:
-        reader = reader.option("dbtable", table_or_query)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def with_auto_increment(
-    df: DataFrame,
-    id_col: str = "id",
-    *,
-    start: int = 1,
-) -> DataFrame:
-    """Assign contiguous, gap-free ids ``start, start+1, ...`` — the
-    AUTO_INCREMENT column of the reference's DDL (dbcon/ddlpackage/
-    ddlpkg.h:409 fTableWithAutoi; versioning/BRM/autoincrementmanager.h
-    reserves id ranges per PM the same way this reserves one offset
-    range per partition).
-
-    Scale shape: a global ``row_number()`` would sort the whole table
-    through ONE task. Instead: count rows per partition (tiny agg),
-    prefix-sum those counts into per-partition offsets (driver-side,
-    O(#partitions)), then add the broadcast offset to each row's local
-    rank. No global sort, no single-task bottleneck.
-
-    The count job and the id-assignment job MUST see the same
-    row→partition placement, or offsets computed in job 1 mis-apply in
-    job 2 (duplicate/gapped/NULL ids). ``localCheckpoint`` pins the
-    layout by materializing the input once before either job — the same
-    discipline the fixpoint operators use; the materialization cost is
-    the price of the gap-free contract (RDD ``zipWithIndex`` has the
-    identical two-job structure and caveat).
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    pid = F.spark_partition_id()
-    with_pid = df.withColumn("_pid", pid).localCheckpoint()
-    counts = (
-        with_pid.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = {}, start
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    offset_col = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
-    return (
-        with_pid.withColumn(
-            id_col,
-            (offset_col[F.col("_pid")] + F.row_number().over(w) - 1).cast(
-                "long"
-            ),
-        )
-        .drop("_pid")
-    )
-
-
 # --- Instant ALTER TABLE (schema evolution without data rewrite) ---
 #
 # ColumnStore's ADD COLUMN allocates new extents and backfills nothing
@@ -475,7 +362,9 @@ def _logical_columns(path: str) -> list[str]:
     columns + sidecar adds − drops, renames applied)."""
     import pyarrow.parquet as pq
 
-    files = _live_data_files(path, set())
+    from mariadb_columnstore_engine_spark.sources import manifest
+
+    files = list(manifest.partitions(path).values())
     cols: list[str] = []
     if files:
         cols = list(pq.ParquetFile(files[0]).schema_arrow.names)
@@ -568,20 +457,6 @@ def alter_modify_column(path: str, name: str, dtype: str) -> None:
     else:
         retyped.append({"name": name, "dtype": dtype})
     _write_evolution(path, evo)
-
-
-def _live_data_files(path: str, disabled: set[str]) -> list[str]:
-    """Absolute paths of the table's data files minus disabled ones
-    (disabled partitions are keyed by bare file name — the extent
-    analogue of ha_mcs_partition.cpp's partition ids)."""
-    import os
-
-    from mariadb_columnstore_engine_spark.sources.manifest import _listing
-
-    return [
-        os.path.join(path, rel) for rel in _listing(path)
-        if os.path.basename(rel) not in disabled
-    ]
 
 
 def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
@@ -693,28 +568,6 @@ def strip_collations(df: DataFrame) -> DataFrame:
     ])
 
 
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    *,
-    mode: str = "append",
-    properties: dict[str, str] | None = None,
-) -> None:
-    """Foreign-sink write (the reverse CrossEngineStep direction —
-    INSERT INTO a foreign-engine table from engine results; the
-    reference routes such writes back through mysqld). Each partition
-    opens one JDBC connection and batches inserts, so write parallelism
-    = partition count; repartition before calling to match the foreign
-    server's connection budget. Tested against embedded Derby."""
-    writer = df.write.format("jdbc").option("url", url).option(
-        "dbtable", table
-    ).mode(mode)
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.save()
-
-
 def alter_add_generated_column(path: str, name: str, expr_sql: str) -> None:
     """Generated (virtual) column: recorded in the evolution sidecar and
     computed on read from ``expr_sql`` (mysql-test generated_columns
@@ -742,10 +595,6 @@ def add_check_constraint(path: str, name: str, expr_sql: str) -> None:
         raise ValueError(f"constraint {name!r} already exists")
     checks.append({"name": name, "expr": expr_sql})
     _write_evolution(path, evo)
-
-
-def table_checks(path: str) -> list[dict]:
-    return _evolution(path).get("checks", [])
 
 
 def validate_checks(df: DataFrame, checks: list[dict]) -> None:

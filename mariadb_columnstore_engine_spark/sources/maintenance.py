@@ -28,7 +28,6 @@ from __future__ import annotations
 import math
 import os
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from mariadb_columnstore_engine_spark.sources import dml, manifest
@@ -95,11 +94,12 @@ def extent_map(
     whether ``cluster_by`` actually produced prunable extents."""
     import pyarrow.parquet as pq
 
-    files = [path] if os.path.isfile(path) else [
-        os.path.join(path, rel) for rel in manifest._listing(path)
-    ]
+    files = (
+        {os.path.basename(path): path} if os.path.isfile(path)
+        else manifest.partitions(path)
+    )
     out: list[dict] = []
-    for fpath in files:
+    for key, fpath in files.items():
         meta = pq.ParquetFile(fpath).metadata
         names = [meta.schema.column(i).name for i in range(meta.num_columns)]
         for rg in range(meta.num_row_groups):
@@ -110,7 +110,7 @@ def extent_map(
                 st = g.column(ci).statistics
                 out.append(
                     {
-                        "file": os.path.basename(fpath),
+                        "file": key,
                         "row_group": rg,
                         "column": name,
                         "num_rows": g.num_rows,
@@ -123,7 +123,7 @@ def extent_map(
 
 
 def _file_ranges(stats: list[dict], column: str) -> dict[str, tuple]:
-    """File name → (min, max) of ``column``: the union of the file's
+    """Partition key → (min, max) of ``column``: the union of the file's
     row-group ranges in ``stats`` (``extent_map`` rows); (None, None)
     when any row group has no min/max, i.e. the range is unknown."""
     ranges: dict[str, tuple] = {}
@@ -144,6 +144,7 @@ def _file_ranges(stats: list[dict], column: str) -> dict[str, tuple]:
 # udf_calshowpartitions.test). The partition unit here is a data FILE —
 # the extent analogue: it has footer min/max (casual partitioning), can
 # be excluded from scans without being opened, and can be dropped O(1).
+# Partitions are named by ``manifest.partitions``'s key.
 
 
 def show_partitions(
@@ -152,54 +153,46 @@ def show_partitions(
     """calshowpartitions('t','col'): one row per data file with the
     column's min/max (from parquet footers, no scan) and its
     Enabled/Disabled status."""
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        _evolution,
-        _live_data_files,
-    )
-
-    disabled = set(
-        _evolution(path).get("disabled_partitions", [])
-    )
+    off = manifest.disabled(path)
     ranges = _file_ranges(extent_map(spark, path, [column]), column)
     out = []
-    for f in _live_data_files(path, set()):
-        name = os.path.basename(f)
-        mn, mx = ranges.get(name, (None, None))
+    for key in manifest.partitions(path):
+        mn, mx = ranges.get(key, (None, None))
         out.append(
             {
-                "partition": name,
+                "partition": key,
                 "min": mn,
                 "max": mx,
-                "status": "Disabled" if name in disabled else "Enabled",
+                "status": "Disabled" if key in off else "Enabled",
             }
         )
     return out
 
 
-def _set_partition_status(
-    path: str, partitions: list[str], *, disabled: bool
-) -> int:
-
+def _set_disabled(path: str, keys: set) -> None:
     from mariadb_columnstore_engine_spark.sources.ingest import (
         _evolution,
-        _live_data_files,
         _write_evolution,
     )
 
-    known = {
-        os.path.basename(f) for f in _live_data_files(path, set())
-    }
-    missing = [p for p in partitions if p not in known]
-    if missing:
-        raise ValueError(f"no such partition(s): {missing}")
     evo = _evolution(path)
-    cur = set(evo.get("disabled_partitions", []))
-    cur = cur | set(partitions) if disabled else cur - set(partitions)
-    if cur:
-        evo["disabled_partitions"] = sorted(cur)
+    if keys:
+        evo["disabled_partitions"] = sorted(keys)
     else:
         evo.pop("disabled_partitions", None)
     _write_evolution(path, evo)
+
+
+def _set_partition_status(
+    path: str, partitions: list[str], *, disabled: bool
+) -> int:
+    missing = [p for p in partitions if p not in manifest.partitions(path)]
+    if missing:
+        raise ValueError(f"no such partition(s): {missing}")
+    cur = manifest.disabled(path)
+    _set_disabled(
+        path, cur | set(partitions) if disabled else cur - set(partitions)
+    )
     return len(partitions)
 
 
@@ -219,116 +212,17 @@ def drop_partitions(spark: SparkSession, path: str,
     """caldroppartitions: physically remove the files (O(1) per file, no
     rewrite of survivors — the reference's extent drop). Refuses to drop
     every file: an empty directory loses the table's schema."""
-
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        _evolution,
-        _live_data_files,
-        _write_evolution,
-    )
-
-    all_files = _live_data_files(path, set())
-    by_name = {os.path.basename(f): f for f in all_files}
-    missing = [p for p in partitions if p not in by_name]
+    files = manifest.partitions(path)
+    missing = [p for p in partitions if p not in files]
     if missing:
         raise ValueError(f"no such partition(s): {missing}")
-    if len(partitions) >= len(all_files):
+    if len(partitions) >= len(files):
         raise ValueError(
             "cannot drop every partition (schema would be lost); "
             "use TRUNCATE"
         )
     for p in partitions:
-        os.remove(by_name[p])
-    evo = _evolution(path)
-    cur = set(evo.get("disabled_partitions", [])) - set(partitions)
-    if cur:
-        evo["disabled_partitions"] = sorted(cur)
-    else:
-        evo.pop("disabled_partitions", None)
-    _write_evolution(path, evo)
+        os.remove(files[p])
+    _set_disabled(path, manifest.disabled(path) - set(partitions))
     spark.catalog.refreshByPath(path)
     return len(partitions)
-
-
-# ---------------------------------------------------------------------------
-# Extent elimination (TupleBPS casual partitioning: tuple-bps.cpp:507-508
-# consults the BRM extent map's per-extent min/max to skip extents whose
-# range cannot satisfy the pushed predicate, before any block is read).
-# The file analogue: select data files by footer stats, then build the
-# scan over the survivors only. Spark's parquet reader already does the
-# in-scan complement (row-group skipping from the same footer stats via
-# pushed filters); this explicit pass removes files from the plan
-# entirely — fewer scan tasks, fewer footer opens on the executors.
-#
-# Scale note: the footer pass is a DRIVER-side metadata read, O(files).
-# That mirrors BRM (the extent map is centralized metadata, not data),
-# but at 100 TB the map should be computed once and persisted —
-# extent_map()'s output is exactly that relation; pass it in via
-# `stats` to skip re-reading footers.
-
-
-def extent_eliminate(
-    spark: SparkSession,
-    path: str,
-    column: str,
-    lo=None,
-    hi=None,
-    stats: list[dict] | None = None,
-) -> tuple[list[str], list[str]]:
-    """Partition the table's live data files into (kept, skipped) for the
-    predicate ``lo <= column <= hi`` (either bound may be None) using
-    footer min/max only. A file with no stats for the column is always
-    kept (cannot prove it irrelevant — same conservative rule as the
-    reference's invalid casual-partitioning ranges)."""
-
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        _evolution,
-        _live_data_files,
-    )
-
-    disabled = set(_evolution(path).get("disabled_partitions", []))
-    live = _live_data_files(path, disabled)
-    if stats is None:
-        stats = extent_map(spark, path, [column])
-    ranges = _file_ranges(stats, column)
-    kept, skipped = [], []
-    for f in live:
-        mn, mx = ranges.get(os.path.basename(f), (None, None))
-        dead = (
-            mn is not None
-            and mx is not None
-            and ((lo is not None and mx < lo) or (hi is not None and mn > hi))
-        )
-        (skipped if dead else kept).append(f)
-    return kept, skipped
-
-
-def scan_extent_eliminated(
-    spark: SparkSession,
-    path: str,
-    column: str,
-    lo=None,
-    hi=None,
-    stats: list[dict] | None = None,
-) -> DataFrame:
-    """Scan with explicit extent elimination: read only the files whose
-    footer range can overlap ``[lo, hi]``, then apply the residual
-    predicate (footer ranges are necessary, not sufficient). Equivalent
-    to ``read + filter`` by construction; cheaper by len(skipped) scan
-    tasks."""
-    kept, skipped = extent_eliminate(spark, path, column, lo, hi, stats)
-    if not kept:
-        # Every live file was pruned (predicate fully out of range).
-        # spark.read.parquet() with zero paths raises "unable to infer
-        # schema"; the correct result is an empty relation with the table
-        # schema, so borrow it from a pruned file's footer (skipped files
-        # still carry the schema — only their value ranges were dead).
-        if not skipped:
-            raise ValueError(f"no live data files under {path}")
-        return spark.read.parquet(*skipped).limit(0)
-    df = spark.read.parquet(*kept)
-    c = F.col(column)
-    if lo is not None:
-        df = df.where(c >= F.lit(lo))
-    if hi is not None:
-        df = df.where(c <= F.lit(hi))
-    return df

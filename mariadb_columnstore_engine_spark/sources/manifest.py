@@ -7,7 +7,8 @@ state when data is written and never scans the data to rediscover it.
 Here the state of a Parquet table directory is:
 
 - the live data files, keyed by (relative path, size, mtime_ns), each
-  with its footer row count;
+  with its footer row count. The relative path is also the file's
+  partition key (``partitions``): disabled partitions are stored by it;
 - the merged physical Spark schema of the enabled files (every field
   nullable, as Spark reads Parquet back) — a pure function of that file
   set and the disabled-partition set.
@@ -70,7 +71,7 @@ class DataFile:
 class TableState:
     #: relative path → file entry, in listing order
     files: Mapping[str, DataFile]
-    #: bare file names excluded from reads (disabled partitions)
+    #: partition keys excluded from reads (disabled partitions)
     disabled: frozenset
     #: merged physical schema of the enabled files
     schema: StructType
@@ -85,14 +86,14 @@ class TableState:
         """Rows a read of the table sees."""
         return sum(
             f.rows for rel, f in self.files.items()
-            if os.path.basename(rel) not in self.disabled
+            if rel not in self.disabled
         )
 
     def live_files(self, path: str) -> list[str]:
         """Absolute paths of the enabled data files."""
         return [
             os.path.join(path, rel) for rel in self.files
-            if os.path.basename(rel) not in self.disabled
+            if rel not in self.disabled
         ]
 
 
@@ -127,7 +128,18 @@ def _listing(path: str) -> dict[str, tuple[int, int]]:
     return out
 
 
-def _disabled(path: str) -> frozenset:
+def partitions(path: str) -> dict[str, str]:
+    """Partition key → absolute path of every data file of the table.
+    The partition unit is a data file (the extent analogue of
+    ha_mcs_partition.cpp's partition ids), keyed by its path relative to
+    the table root: the bare file name in a flat table, ``k=v/<name>``
+    under a hive partition directory — Spark gives every such directory
+    the same ``part-*`` names."""
+    return {rel: os.path.join(path, rel) for rel in _listing(path)}
+
+
+def disabled(path: str) -> frozenset:
+    """Partition keys of the table's disabled partitions."""
     from mariadb_columnstore_engine_spark.sources.ingest import _evolution
 
     return frozenset(_evolution(path).get("disabled_partitions", []))
@@ -248,9 +260,7 @@ def _rebuild(spark: SparkSession, path: str, listing: dict,
     """The one ``mergeSchema`` read, plus local footer reads for the
     row counts. Where Spark refuses to merge types its reader widens on
     read, the footers' widened merge stands in."""
-    live_rels = [
-        rel for rel in listing if os.path.basename(rel) not in disabled
-    ]
+    live_rels = [rel for rel in listing if rel not in disabled]
     live = [os.path.join(path, rel) for rel in live_rels]
     reader = spark.read.option("mergeSchema", "true")
     try:
@@ -273,12 +283,12 @@ def state(spark: SparkSession, path: str) -> TableState:
     listing still matches it, else rebuilt from the files."""
     key = _key(path)
     listing = _listing(path)
-    disabled = _disabled(path)
+    off = disabled(path)
     with _LOCK:
         st = _TABLES.get(key)
-    if st is not None and _matches(st, listing, disabled):
+    if st is not None and _matches(st, listing, off):
         return st
-    st = _rebuild(spark, path, listing, disabled)
+    st = _rebuild(spark, path, listing, off)
     with _LOCK:
         if listing:
             _TABLES[key] = st
@@ -329,14 +339,14 @@ def _after_write(path: str, before: TableState | None) -> TableState | None:
     or sits in a partition directory (Spark infers partition columns),
     the schemas conflict, or no enabled file is left."""
     listing = _listing(path)
-    disabled = _disabled(path)
+    off = disabled(path)
     known = before.files if before is not None else {}
-    if before is not None and before.disabled != disabled:
+    if before is not None and before.disabled != off:
         return None
     if any(listing.get(rel) != (f.size, f.mtime_ns)
            for rel, f in known.items()):
         return None
-    live = [rel for rel in listing if os.path.basename(rel) not in disabled]
+    live = [rel for rel in listing if rel not in off]
     if not live or any(os.path.dirname(rel) for rel in live):
         return None
     files = dict(known)
@@ -350,7 +360,7 @@ def _after_write(path: str, before: TableState | None) -> TableState | None:
             continue
         rows, file_schema = _footer(os.path.join(path, rel))
         files[rel] = DataFile(size, mtime, rows)
-        if os.path.basename(rel) in disabled:
+        if rel in off:
             continue
         if file_schema is None:
             return None
@@ -359,7 +369,7 @@ def _after_write(path: str, before: TableState | None) -> TableState | None:
         )
         if schema is None:
             return None
-    return TableState(MappingProxyType(files), disabled, schema)
+    return TableState(MappingProxyType(files), off, schema)
 
 
 def record(spark: SparkSession, path: str,

@@ -3,9 +3,11 @@
 The reference has NO streaming operators (SURVEY §2.10 — pure batch OLAP),
 so this module is Spark-native surface: the same event-time expressions
 used by plans/events_plans.py (window / session_window), run incrementally
-with watermarks. Batch and streaming share the aggregation expressions,
-so the pytest suite can assert stream(availableNow) == batch on the same
-input — Spark's unified-API guarantee.
+with watermarks. The registry's ``stream_*`` queries
+(plans/streaming_plans.py) read events through ``read_event_stream`` and
+drain them with ``run_available_now``/``run_available_now_to_dir``, so
+the parity gate checks stream(availableNow) == the batch oracle on the
+same input — Spark's unified-API guarantee.
 
 Scale notes: watermark + windowed agg keeps state bounded by (watermark
 horizon × key cardinality); sessionization state is per-user and merges
@@ -14,7 +16,6 @@ windows, the canonical applyInPandasWithState-free path since Spark 3.2.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 #: Schema for streamed event batches (ts already normalized to TIMESTAMP;
@@ -32,80 +33,6 @@ def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(source_dir)
-    )
-
-
-def windowed_counts(events: DataFrame, *, watermark: str = "1 hour") -> DataFrame:
-    """Tumbling 1-hour window counts per event_type with late-data bound —
-    the streaming twin of plans/events_plans.tumbling_window."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def sessionized(events: DataFrame, *, gap: str = "30 minutes",
-                watermark: str = "1 hour") -> DataFrame:
-    """Streaming gap-sessionization (session_window merges state)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (event count, value total) maintained in state across
-    micro-batches — the applyInPandasWithState path the brief prescribes
-    for operators Spark's built-ins can't express. Each update emits the
-    user's current running totals.
-
-    Scale notes: state is per-user (bounded per key); the state store
-    shuffles once on user_id. Production would add a timeout
-    (GroupStateTimeout.ProcessingTimeTimeout) to expire idle users.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        (user_id,) = key
-        cnt, total = state.get() if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            cnt += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((cnt, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [cnt],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id BIGINT, n_events BIGINT, "
-        "total_value DOUBLE",
-        stateStructType="cnt BIGINT, total DOUBLE",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -178,161 +105,3 @@ def run_available_now_to_dir(
             spark.conf.unset(_STATE_PROVIDER_CONF)
         else:
             spark.conf.set(_STATE_PROVIDER_CONF, prev)
-
-
-def dedup_stream(events: DataFrame, *, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup on ingest: drop re-delivered events by key
-    within the watermark horizon (``dropDuplicates`` keeps per-key state;
-    the watermark bounds it — the streaming twin of the batch
-    fingerprint-dedup pillar, and the standard at-least-once → effectively-
-    once ingest pattern for a training-data feed).
-
-    Scale notes: state is one entry per distinct key inside the horizon;
-    keys older than the watermark are evicted, so state is bounded by
-    (arrival rate × horizon), not by stream length.
-
-    ``dropDuplicatesWithinWatermark`` dedups on the KEY alone —
-    ``dropDuplicates(["event_id", "ts"])`` would pass a redelivery
-    through whenever the source re-stamps ``ts`` at read time (the
-    common at-least-once failure), because the (id, ts) pair looks new.
-    """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def enrich_with_dimension(events: DataFrame, dim: DataFrame,
-                          key: str = "user_id") -> DataFrame:
-    """Stream-static join: enrich each event with a (batch) dimension
-    row — the streaming analogue of the reference's dimension joins, and
-    the standard Spark pattern for attaching slowly-changing metadata to
-    a live feed. The static side is re-planned per micro-batch (so a
-    dimension refresh is picked up without restarting), and with the
-    session's broadcast threshold a small dimension never shuffles the
-    stream: each micro-batch does a map-side hash join. Stateless — no
-    watermark needed for an inner stream-static equi-join."""
-    return events.join(F.broadcast(dim), key, "inner")
-
-
-def hourly_rollup_stream(events: DataFrame, *, watermark: str = "1 hour"
-                         ) -> DataFrame:
-    """Streaming hourly tier of the hierarchical rollup — the
-    continuous-aggregate maintenance loop: incrementally maintain the
-    hour×type partials (exact integer cents, same expressions as
-    plans/events_plans.hierarchical_rollup); daily/weekly tiers derive
-    from this tier in batch via ``daily_from_hourly`` without ever
-    re-reading raw events. State is bounded by watermark horizon ×
-    (hours × event types)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
-                "cents"
-            ),
-        )
-        .select(
-            F.col("w.start").alias("bucket_h"), "event_type", "n", "cents"
-        )
-    )
-
-
-def daily_from_hourly(hourly: DataFrame) -> DataFrame:
-    """Batch daily tier over the (streamed or batch) hourly partials —
-    identical to the day tier of plans/events_plans.hierarchical_rollup,
-    shared so stream-maintained and batch-computed rollups are
-    comparable row-for-row."""
-    return (
-        hourly.groupBy(
-            F.date_trunc("day", F.col("bucket_h")).cast("date").alias("day"),
-            "event_type",
-        )
-        .agg(
-            F.sum("n").cast("long").alias("n_events"),
-            F.sum("cents").cast("long").alias("total_cents"),
-            F.count(F.lit(1)).cast("long").alias("active_hours"),
-            F.max("n").cast("long").alias("peak_hour_events"),
-        )
-        .orderBy("day", "event_type")
-    )
-
-
-def document_quality_stream(docs: DataFrame) -> DataFrame:
-    """Streaming twin of the text-pillar intake: per-document quality
-    features + content fingerprint on a live document feed (the shape a
-    continuous training-data ingest runs before anything touches the
-    corpus store). Stateless projection — every expression is JVM-side
-    and identical to plans/text_plans.quality_scores, so stream output
-    equals the batch run row-for-row; the fingerprint column feeds
-    ``fingerprint_dedup_stream`` or a downstream merge-dedup."""
-    import pyspark.sql.functions as F
-
-    w = F.split(F.col("text"), " ")
-    stop_raw = F.size(
-        F.filter(w, lambda x: x.isin("a", "the"))
-    ) / F.size(w)
-    ttr_raw = F.size(F.array_distinct(w)) / F.size(w)
-    n_tok = F.size(w)
-    return docs.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("fingerprint"),
-        n_tok.alias("n_tok"),
-        F.round(stop_raw, 6).alias("stop_ratio"),
-        F.round(ttr_raw, 6).alias("ttr"),
-        F.round(
-            0.4 * F.least(n_tok / 50.0, F.lit(1.0))
-            + 0.3 * (1.0 - stop_raw)
-            + 0.3 * ttr_raw,
-            6,
-        ).alias("quality"),
-    )
-
-
-def fingerprint_dedup_stream(scored: DataFrame) -> DataFrame:
-    """Drop exact-duplicate documents by content fingerprint as they
-    stream in. Documents carry no event time, so state is one entry per
-    distinct fingerprint for the stream's lifetime — right for bounded
-    backfills (availableNow) and compaction-window runs; an unbounded
-    7×24 feed should attach an ingest timestamp and use
-    ``dropDuplicatesWithinWatermark`` (events dedup_stream pattern) to
-    bound state."""
-    return scored.dropDuplicates(["fingerprint"])
-
-
-def embedding_intake_stream(embs: DataFrame) -> DataFrame:
-    """Streaming twin of the similarity-pillar intake: per-vector int8
-    quantization scale (symmetric max-abs/127, the
-    sim_embedding_quantize contract) + random-hyperplane LSH bucket
-    assignment (bit-for-bit the signature stage of
-    plans/similarity_plans.lsh_ann_topk) on a live embedding feed.
-    Stateless projection — every expression is JVM-side higher-order
-    array math, so stream output equals the batch bucketing
-    row-for-row; downstream the bucket id routes each vector to its ANN
-    shard and the scale column rides along for the quantized store."""
-    import pyspark.sql.functions as F
-
-    from mariadb_columnstore_engine_spark.plans.similarity_plans import (
-        N_PLANES,
-        PLANES,
-        _as_double,
-        _dot,
-    )
-
-    e = _as_double(F.col("embedding"))
-    bucket = None
-    for p in range(N_PLANES):
-        plane = F.array(*[F.lit(float(s)) for s in PLANES[p]])
-        term = F.when(_dot(e, plane) > 0, F.lit(1 << p)).otherwise(0)
-        bucket = term if bucket is None else bucket + term
-    mx = F.array_max(F.transform(e, lambda x: F.abs(x)))
-    scale = F.when(mx == 0, F.lit(1.0)).otherwise(mx) / 127.0
-    return embs.select(
-        "vec_id",
-        "label",
-        bucket.cast("int").alias("bucket"),
-        F.round(scale, 9).alias("q_scale"),
-    )

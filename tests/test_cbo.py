@@ -47,7 +47,8 @@ def analyzed_tables(spark, tmp_path_factory):
     names = ["cbo_big", "cbo_mid", "cbo_tiny"]
     for name, df in zip(names, (big, mid, tiny)):
         df.write.mode("overwrite").parquet(str(base / name))
-        ingest.create_table(spark, name, str(base / name))
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{base / name}'")
     yield dict(zip(names, names))
     for name in names:
         spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -7,8 +7,18 @@ JSON_ARRAYAGG determinism, and exact integer DIV beyond 2^53.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from mariadb_columnstore_engine_spark.functions import dialect
+
+
+@pytest.fixture(scope="module")
+def engine(spark, sf_dir):
+    """The SQL surface: MariaDB spellings with no Column helper here are
+    checked through ``Engine.execute``."""
+    from mariadb_columnstore_engine_spark.engine import Engine
+
+    return Engine(spark, sf_dir)
 
 
 def test_group_concat_default_sorts_for_determinism(spark):
@@ -49,25 +59,22 @@ def test_json_arrayagg_sorted(spark):
     assert out == "[1,2]"
 
 
-def test_div_exact_beyond_double_precision(spark):
+def test_div_exact_beyond_double_precision(engine):
     # 2^60 + 1 is not representable in double; double-division DIV would
-    # round. Decimal path must return the exact truncated quotient.
+    # round. The integral path must return the exact truncated quotient.
     big = (1 << 60) + 1
-    df = spark.createDataFrame([(big, 2)], ["a", "b"])
-    out = df.select(dialect.div(F.col("a"), F.col("b")).alias("q")).collect()[0].q
-    assert out == big // 2
+    q = engine.execute(f"SELECT {big} DIV 2 AS q").collect()[0].q
+    assert q == big // 2
 
 
-def test_div_truncates_toward_zero_and_null_on_zero(spark):
-    df = spark.createDataFrame([(-7, 2), (7, -2), (5, 0)], ["a", "b"])
-    out = [
-        r.q
-        for r in df.select(dialect.div(F.col("a"), F.col("b")).alias("q"))
-        .orderBy("a")
-        .collect()
-    ]
-    # MariaDB DIV truncates toward zero: -7 DIV 2 = -3 (not floor's -4).
-    assert out == [-3, None, -3]
+def test_div_truncates_toward_zero_and_null_on_zero(engine):
+    row = engine.execute(
+        "SELECT -7 DIV 2 AS a, 7 DIV -2 AS b, 5 DIV 0 AS c,"
+        " 5 DIV (2 - 2) AS d"
+    ).collect()[0]
+    # MariaDB DIV truncates toward zero: -7 DIV 2 = -3 (not floor's -4),
+    # and a zero divisor gives NULL, not an error
+    assert tuple(row) == (-3, -3, None, None)
 
 
 def test_if_and_ifnull(spark):
@@ -116,17 +123,14 @@ def test_inet_aton_ntoa_roundtrip(spark):
     assert row.rt == "192.168.1.10"
 
 
-def test_greatest_mariadb_null_propagates(spark):
-    df = spark.createDataFrame([(1, None), (3, 2)], "a int, b int")
-    out = [
-        r.g
-        for r in df.select(
-            dialect.greatest_mariadb(F.col("a"), F.col("b")).alias("g")
-        )
-        .orderBy("a")
-        .collect()
-    ]
-    assert out == [None, 3]  # Spark's greatest would give [1, 3]
+def test_greatest_mariadb_null_propagates(engine):
+    # Spark's greatest skips NULLs: it would give 1, 'a' and 1
+    row = engine.execute(
+        "SELECT GREATEST(1, NULL) AS n1, GREATEST('a', NULL) AS n2,"
+        " GREATEST(a, b) AS n3, GREATEST(3, 2, 1) AS g"
+        " FROM (SELECT 1 AS a, CAST(NULL AS INT) AS b) AS t"
+    ).collect()[0]
+    assert (row.n1, row.n2, row.n3, row.g) == (None, None, None, 3)
 
 
 def test_cast_signed_rounds_half_away(spark):
@@ -158,67 +162,45 @@ def test_sec_to_time_and_back(spark):
     assert all(back == s for s, (_, back) in rows.items())
 
 
-def test_cast_signed_str_truncation(spark):
-    df = spark.createDataFrame(
-        [("12abc",), ("abc",), ("-7x",), (" 42 ",), ("",)], "s string"
-    )
-    out = {r.s: r.c for r in df.select(
-        "s", dialect.cast_signed_str(F.col("s")).alias("c")
-    ).collect()}
-    assert out == {"12abc": 12, "abc": 0, "-7x": -7, " 42 ": 42, "": 0}
-
-
-def test_zero_date_to_null(spark):
-    df = spark.createDataFrame(
-        [("0000-00-00",), ("1996-01-05",)], "d string"
-    )
-    out = [r.v for r in df.select(
-        dialect.zero_date_to_null(F.col("d")).alias("v")
-    ).orderBy("d").collect()]
-    assert out == [None, "1996-01-05"]
-
-
-def test_least_mariadb_null_propagates(spark):
-    df = spark.createDataFrame([(1, None), (3, 2)], "a int, b int")
-    out = [r.l for r in df.select(
-        dialect.least_mariadb(F.col("a"), F.col("b")).alias("l")
-    ).orderBy("a").collect()]
-    assert out == [None, 2]
-
-
-def test_insert_str_edge_semantics(spark):
-    from mariadb_columnstore_engine_spark.functions.dialect import insert_str
-
-    cases = [
-        (("Quadratic", 3, 4, "What"), "QuWhattic"),
-        (("Quadratic", -1, 4, "What"), "Quadratic"),   # pos < 1 → unchanged
-        (("Quadratic", 11, 4, "What"), "Quadratic"),   # pos > len → unchanged
-        (("Quadratic", 3, 100, "What"), "QuWhat"),     # len past end
-        (("Quadratic", 3, -1, "What"), "QuWhat"),      # negative len
-        (("Quadratic", 9, 2, "X"), "QuadratiX"),       # pos == len ok
-    ]
-    rows = spark.range(1).select(
-        *[
-            insert_str(F.lit(s), F.lit(p), F.lit(ln), F.lit(n)).alias(f"c{i}")
-            for i, ((s, p, ln, n), _) in enumerate(cases)
-        ],
-        insert_str(
-            F.lit(None).cast("string"), F.lit(1), F.lit(1), F.lit("x")
-        ).alias("cnull"),
+def test_cast_signed_str_truncation(engine):
+    row = engine.execute(
+        "SELECT CAST('12abc' AS SIGNED) AS a, CAST('abc' AS SIGNED) AS b,"
+        " CAST('-7x' AS SIGNED) AS c, CAST(' 42 ' AS SIGNED) AS d,"
+        " CAST('' AS SIGNED) AS e"
     ).collect()[0]
-    for i, (_, expected) in enumerate(cases):
-        assert rows[f"c{i}"] == expected, (i, rows[f"c{i}"])
-    assert rows["cnull"] is None
+    assert tuple(row) == (12, 0, -7, 42, 0)
 
 
-def test_get_format_table(spark):
-    from mariadb_columnstore_engine_spark.functions.dialect import get_format
+def test_least_mariadb_null_propagates(engine):
+    row = engine.execute(
+        "SELECT LEAST(1, NULL) AS n1, LEAST('a', NULL) AS n2,"
+        " LEAST(3, 2) AS l, LEAST(GREATEST(5, 1), 4) AS nested"
+    ).collect()[0]
+    assert (row.n1, row.n2, row.l, row.nested) == (None, None, 2, 4)
 
-    v = spark.range(1).select(
-        get_format(F.lit("DATE"), F.lit("USA")).alias("a"),
-        get_format(F.lit("TIME"), F.lit("usa")).alias("b"),
-        get_format(F.lit("TIMESTAMP"), F.lit("ISO")).alias("c"),
-        get_format(F.lit("DATE"), F.lit("NOPE")).alias("d"),
+
+def test_insert_str_edge_semantics(engine):
+    cases = [
+        ("'Quadratic', 3, 4, 'What'", "QuWhattic"),
+        ("'Quadratic', -1, 4, 'What'", "Quadratic"),   # pos < 1 → unchanged
+        ("'Quadratic', 11, 4, 'What'", "Quadratic"),   # pos > len → unchanged
+        ("'Quadratic', 3, 100, 'What'", "QuWhat"),     # len past end
+        ("'Quadratic', 3, -1, 'What'", "QuWhat"),      # negative len
+        ("'Quadratic', 9, 2, 'X'", "QuadratiX"),       # pos == len ok
+        ("NULL, 1, 1, 'x'", None),
+    ]
+    row = engine.execute(
+        "SELECT " + ", ".join(
+            f"INSERT({args}) AS c{i}" for i, (args, _) in enumerate(cases)
+        )
+    ).collect()[0]
+    assert list(row) == [expected for _, expected in cases]
+
+
+def test_get_format_table(engine):
+    v = engine.execute(
+        "SELECT GET_FORMAT(DATE, 'USA') AS a, GET_FORMAT(TIME, 'usa') AS b,"
+        " GET_FORMAT(TIMESTAMP, 'ISO') AS c, GET_FORMAT(DATE, 'NOPE') AS d"
     ).collect()[0]
     assert v.a == "%m.%d.%Y"
     assert v.b == "%h:%i:%s %p"
@@ -226,13 +208,18 @@ def test_get_format_table(spark):
     assert v.d is None
 
 
-def test_sysdate_is_query_time(spark):
+def test_sysdate_is_query_time(engine):
+    """SYSDATE([p]) is the statement's timestamp at precision p (default
+    0); Spark fixes current_timestamp per query."""
     import datetime as dt
 
-    from mariadb_columnstore_engine_spark.functions.dialect import sysdate
-
-    got = spark.range(1).select(sysdate().alias("t")).collect()[0].t
-    assert abs((dt.datetime.now() - got).total_seconds()) < 300
+    row = engine.execute(
+        "SELECT SYSDATE() AS t0, SYSDATE(6) AS t6, SYSDATE(3) AS t3"
+    ).collect()[0]
+    assert abs((dt.datetime.now() - row.t6).total_seconds()) < 300
+    assert row.t0 == row.t6.replace(microsecond=0)
+    ms = row.t6.microsecond // 1000 * 1000
+    assert row.t3 == row.t6.replace(microsecond=ms)
 
 
 def test_date_format_mariadb_patterns(spark):
@@ -341,33 +328,17 @@ def test_maketime_makedate_subtime(spark):
     assert row.sub_neg == "2024-03-15 13:00:00"
 
 
-def test_oracle_trim_replace_empty_is_null(spark):
-    from mariadb_columnstore_engine_spark.functions import dialect as d
+def test_oracle_trim_replace_empty_is_null(spark, sf_dir):
+    from mariadb_columnstore_engine_spark.engine import Engine
 
-    row = (
-        spark.range(1)
-        .select(
-            d.trim_oracle(F.lit("  x  ")).alias("t1"),
-            d.trim_oracle(F.lit("   ")).alias("t2"),
-            d.ltrim_oracle(F.lit("  ab")).alias("l1"),
-            d.ltrim_oracle(F.lit("  ")).alias("l2"),
-            d.rtrim_oracle(F.lit("ab  ")).alias("r1"),
-            d.rtrim_oracle(F.lit("  ")).alias("r2"),
-            d.replace_oracle(
-                F.lit("aba"), F.lit("a"), F.lit(None).cast("string")
-            ).alias("p1"),
-            d.replace_oracle(
-                F.lit("aa"), F.lit("a"), F.lit(None).cast("string")
-            ).alias("p2"),
-            d.replace_oracle(F.lit("aba"), F.lit("b"), F.lit("c")).alias(
-                "p3"
-            ),
-        )
-        .collect()[0]
-    )
+    eng = Engine(spark, sf_dir)
+    eng.execute("SET sql_mode=ORACLE")
+    row = eng.execute(
+        "SELECT TRIM('  x  ') AS t1, TRIM('   ') AS t2,"
+        " REPLACE('aba', 'a', NULL) AS p1, REPLACE('aa', 'a', NULL) AS p2,"
+        " REPLACE('aba', 'b', 'c') AS p3 FROM dual"
+    ).collect()[0]
     assert row.t1 == "x" and row.t2 is None
-    assert row.l1 == "ab" and row.l2 is None
-    assert row.r1 == "ab" and row.r2 is None
     # NULL replacement removes occurrences (Oracle NULL ≡ '')
     assert row.p1 == "b"
     # ...and a fully-removed string collapses to NULL

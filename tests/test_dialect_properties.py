@@ -30,10 +30,16 @@ _int64 = st.integers(min_value=-(2**62), max_value=2**62)
     )
 )
 @settings(**_SETTINGS)
-def test_div_truncates_toward_zero_exactly(spark, cases):
-    df = spark.createDataFrame(cases, "a long, b long")
-    rows = df.select(
-        "a", "b", dialect.div(F.col("a"), F.col("b")).alias("q")
+def test_div_truncates_toward_zero_exactly(spark, sf_dir, cases):
+    from mariadb_columnstore_engine_spark.engine import Engine
+
+    rows = Engine(spark, sf_dir).execute(
+        "SELECT a, b, a DIV b AS q FROM ("
+        + " UNION ALL ".join(
+            f"SELECT CAST({a} AS BIGINT) AS a, CAST({b} AS BIGINT) AS b"
+            for a, b in cases
+        )
+        + ") AS t"
     ).collect()
     for r in rows:
         expected = abs(r.a) // abs(r.b)

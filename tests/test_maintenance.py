@@ -175,138 +175,11 @@ def test_compact_retains_checks_and_generated(spark, tmp_path):
     df = spark.read.parquet(dest)
     assert df.where(F.col("flag") == 7).count() == 100
     # ...but checks still enforceable and generated still declarative
-    assert [c["name"] for c in ingest.table_checks(dest)] == ["v_nonneg"]
     evo = ingest._evolution(dest)
+    assert [c["name"] for c in evo.get("checks", [])] == ["v_nonneg"]
     assert [g["name"] for g in evo.get("generated", [])] == ["v_sq"]
     # reads still produce the generated column (whether from stored
     # values or the expression) and it tracks v
     got = ingest.read_table_evolved(spark, dest)
     row = got.where(F.col("id") == 3).collect()[0]
     assert row.v_sq == row.v * row.v
-
-
-def test_extent_eliminate_skips_disjoint_files(spark, tmp_path):
-    """TupleBPS extent elimination (tuple-bps.cpp:507-508): files whose
-    footer [min,max] cannot overlap the predicate are removed from the
-    scan before it is built; survivors + residual filter reproduce the
-    full-scan answer exactly."""
-    dest = str(tmp_path / "extents")
-    df = spark.range(0, 100_000).select(
-        F.col("id").alias("k"), (F.col("id") % 100).alias("v")
-    )
-    # clustered layout -> disjoint per-file ranges (the prunable shape)
-    df.repartitionByRange(10, "k").write.parquet(dest)
-
-    kept, skipped = maintenance.extent_eliminate(
-        spark, dest, "k", lo=25_000, hi=34_999
-    )
-    assert skipped, "clustered ranges must make some files skippable"
-    assert len(kept) <= 2  # 10k rows/file -> at most 2 overlapping files
-
-    pruned = maintenance.scan_extent_eliminated(
-        spark, dest, "k", lo=25_000, hi=34_999
-    )
-    full = (
-        spark.read.parquet(dest)
-        .where((F.col("k") >= 25_000) & (F.col("k") <= 34_999))
-    )
-    assert pruned.count() == full.count() == 10_000
-    assert _fingerprint(pruned) == _fingerprint(full)
-    # scan relation really contains only the kept files
-    assert sorted(pruned.inputFiles()) == sorted(
-        f if f.startswith("file:") else "file://" + f for f in kept
-    ) or len(pruned.inputFiles()) == len(kept)
-
-
-def test_extent_eliminate_open_bounds_and_reused_stats(spark, tmp_path):
-    dest = str(tmp_path / "extents2")
-    spark.range(0, 10_000).select(F.col("id").alias("k")).repartitionByRange(
-        5, "k"
-    ).write.parquet(dest)
-    stats = maintenance.extent_map(spark, dest, ["k"])
-    # one-sided predicate, precomputed (persisted-extent-map) stats path
-    kept, skipped = maintenance.extent_eliminate(
-        spark, dest, "k", lo=8_000, stats=stats
-    )
-    # range-partition boundaries are sample-based, so the exact split
-    # can shift by one file; the invariant is that most files die and
-    # at least one survives
-    assert len(skipped) >= 3 and 1 <= len(kept) <= 2
-    assert (
-        maintenance.scan_extent_eliminated(
-            spark, dest, "k", lo=8_000, stats=stats
-        ).count()
-        == 2_000
-    )
-    # unknown-range files are conservatively kept: strip stats
-    nostats = [dict(e, min=None, max=None) for e in stats]
-    kept2, skipped2 = maintenance.extent_eliminate(
-        spark, dest, "k", lo=8_000, stats=nostats
-    )
-    assert skipped2 == [] and len(kept2) == 5
-
-
-def test_extent_eliminate_all_files_pruned_returns_empty(spark, tmp_path):
-    """A fully-out-of-range but valid predicate (lo greater than the
-    table max) must return an EMPTY result with the table schema, not
-    crash with 'unable to infer schema' from a zero-path parquet read."""
-    dest = str(tmp_path / "extents_empty")
-    spark.range(0, 1_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    ).repartitionByRange(4, "k").write.parquet(dest)
-
-    kept, skipped = maintenance.extent_eliminate(
-        spark, dest, "k", lo=10_000_000
-    )
-    assert kept == [] and len(skipped) == 4
-    out = maintenance.scan_extent_eliminated(spark, dest, "k", lo=10_000_000)
-    assert out.count() == 0
-    assert set(out.columns) == {"k", "v"}  # schema preserved
-
-
-def test_extent_eliminate_respects_disabled_partitions(spark, tmp_path):
-    import os
-
-    dest = str(tmp_path / "extents3")
-    spark.range(0, 1_000).select(F.col("id").alias("k")).repartitionByRange(
-        2, "k"
-    ).write.parquet(dest)
-    files = sorted(
-        f for f in os.listdir(dest) if f.endswith(".parquet")
-    )
-    maintenance.disable_partitions(dest, [files[0]])
-    try:
-        kept, skipped = maintenance.extent_eliminate(spark, dest, "k")
-        assert files[0] not in {os.path.basename(f) for f in kept + skipped}
-    finally:
-        maintenance.enable_partitions(dest, [files[0]])
-
-
-def test_extent_eliminate_string_keys(spark, tmp_path):
-    """ctype_extent_*.test / mcol4580-dictionary-extent-elimination:
-    extent elimination on a STRING column — footer min/max are byte
-    strings, comparable with the same BINARY ordering Spark uses for
-    utf8mb4_bin predicates."""
-    dest = str(tmp_path / "strext")
-    df = spark.range(0, 26_000).select(
-        F.concat(
-            F.chr(F.lit(65) + (F.col("id") / 1000).cast("int")),
-            F.lpad(F.col("id").cast("string"), 6, "0"),
-        ).alias("name"),
-        F.col("id").alias("v"),
-    )
-    df.repartitionByRange(13, "name").write.parquet(dest)
-    kept, skipped = maintenance.extent_eliminate(
-        spark, dest, "name", lo="M", hi="N￿"
-    )
-    # range-partition boundaries are sample-based: the 2-letter window
-    # usually lands in <=2 files but a sampling shift can add one more;
-    # the invariant is that MOST files die
-    assert skipped and len(kept) <= 3
-    got = maintenance.scan_extent_eliminated(
-        spark, dest, "name", lo="M", hi="N￿"
-    )
-    full = spark.read.parquet(dest).where(
-        (F.col("name") >= "M") & (F.col("name") <= "N￿")
-    )
-    assert got.count() == full.count() == 2_000

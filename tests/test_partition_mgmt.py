@@ -98,3 +98,35 @@ def test_cannot_drop_all_partitions(eng_parts):
     names = ",".join(r[0] for r in _parts(eng_parts))
     with pytest.raises(ValueError, match="every partition"):
         eng_parts.execute(f"SELECT caldroppartitions('pt','{names}')")
+
+
+def test_partition_key_is_path_within_table(spark, tmp_path):
+    """A hive-partitioned write gives every ``shard=N`` directory the
+    same ``part-*`` names: a partition is one file, named by its path
+    within the table, and its min/max is that file's own."""
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from mariadb_columnstore_engine_spark.sources import ingest, maintenance
+
+    path = str(tmp_path / "sharded")
+    # two tasks, each writing one 5-row file into each of 4 shard dirs
+    spark.range(0, 40, 1, 2).select(
+        "id", (F.col("id") % 4).alias("shard")
+    ).write.partitionBy("shard").parquet(path)
+    parts = maintenance.show_partitions(spark, path, "id")
+    assert len(parts) == 8
+    target = parts[0]["partition"]
+    maintenance.disable_partitions(path, [target])
+    ids = {r.id for r in ingest.read_table_evolved(spark, path).collect()}
+    assert len(ids) == 35  # only the one file's rows are hidden
+    file_ids = pq.read_table(os.path.join(path, target))["id"].to_pylist()
+    assert ids == set(range(40)) - set(file_ids)
+    parts = maintenance.show_partitions(spark, path, "id")
+    assert [p["partition"] for p in parts if p["status"] == "Disabled"] \
+        == [target]
+    for p in parts:
+        ids = pq.read_table(
+            os.path.join(path, p["partition"])
+        )["id"].to_pylist()
+        assert (p["min"], p["max"]) == (min(ids), max(ids))

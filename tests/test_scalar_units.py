@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from mariadb_columnstore_engine_spark.functions import dialect
-
 
 def _one(spark, col):
     return spark.range(1).select(col.alias("v")).collect()[0].v
@@ -46,7 +44,9 @@ def test_conv_radix_matrix(spark):
         assert _one(spark, F.conv(F.lit(s), f_, t_)) == expected
 
 
-def test_truncate_number_toward_zero(spark):
+def test_truncate_number_toward_zero(spark, sf_dir):
+    from mariadb_columnstore_engine_spark.engine import Engine
+
     cases = [
         ((3.14159, 2), 3.14),
         ((-3.14159, 2), -3.14),  # toward zero, NOT floor
@@ -60,8 +60,11 @@ def test_truncate_number_toward_zero(spark):
         ((12345.6789, 3), 12345.678),
         ((0.07, 2), 0.07),
     ]
-    for (x, d), expected in cases:
-        got = _one(spark, dialect.truncate_number(F.lit(x), d))
+    row = Engine(spark, sf_dir).execute("SELECT " + ", ".join(
+        f"TRUNCATE(CAST({x!r} AS DOUBLE), {d}) AS c{i}"
+        for i, ((x, d), _) in enumerate(cases)
+    )).collect()[0]
+    for ((x, d), expected), got in zip(cases, row):
         assert abs(got - expected) < 1e-9, (x, d, got)
 
 

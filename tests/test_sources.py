@@ -49,26 +49,6 @@ def test_bulk_load_partition_by(spark, tmp_path, csv_dir):
     assert one.count() == sum(1 for i in range(100) if i % 3 == 1)
 
 
-def test_create_table_and_insert_select(spark, tmp_path, csv_dir):
-    dest = str(tmp_path / "tbl")
-    ingest.bulk_load_csv(
-        spark, csv_dir, "id BIGINT, grp INT, val DOUBLE", dest
-    )
-    ingest.create_table(spark, "ingest_test_tbl", dest)
-    try:
-        n = spark.sql("SELECT count(*) AS n FROM ingest_test_tbl").collect()[0].n
-        assert n == 100
-        # INSERT INTO ... SELECT (append) doubles the rows
-        ingest.insert_into_select(
-            spark.sql("SELECT * FROM ingest_test_tbl WHERE grp = 0"), dest
-        )
-        spark.sql("REFRESH TABLE ingest_test_tbl")
-        n2 = spark.sql("SELECT count(*) AS n FROM ingest_test_tbl").collect()[0].n
-        assert n2 == 100 + sum(1 for i in range(100) if i % 3 == 0)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ingest_test_tbl")
-
-
 def test_clustering_produces_sorted_rowgroups(spark, tmp_path, csv_dir):
     dest = str(tmp_path / "clustered")
     ingest.bulk_load_csv(
@@ -97,7 +77,7 @@ def test_analyze_table_populates_cbo_stats(spark, tmp_path, csv_dir):
     ingest.bulk_load_csv(
         spark, csv_dir, "id BIGINT, grp INT, val DOUBLE", dest
     )
-    ingest.create_table(spark, "stats_test_tbl", dest)
+    spark.sql(f"CREATE TABLE stats_test_tbl USING parquet LOCATION '{dest}'")
     try:
         ingest.analyze_table(spark, "stats_test_tbl", columns=["id", "grp"])
         detail = {
@@ -112,43 +92,13 @@ def test_analyze_table_populates_cbo_stats(spark, tmp_path, csv_dir):
         spark.sql("DROP TABLE IF EXISTS stats_test_tbl")
 
 
-def test_resize_media_shrinks_payload_keeps_schema(spark, sf_dir):
-    from mariadb_columnstore_engine_spark.operators.multimodal import (
-        attach_binary,
-        resize_media,
-    )
-    import pyspark.sql.functions as F
-
-    docs = attach_binary(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
-    )
-    resized = resize_media(docs, stride=4)
-    assert resized.schema == docs.schema
-    rows = (
-        docs.select("doc_id", F.length("media").alias("n"))
-        .join(
-            resized.select(
-                "doc_id", F.length("media").alias("n_resized")
-            ),
-            "doc_id",
-        )
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        assert r.n_resized == (r.n + 3) // 4
-
-
 def test_orc_sink_roundtrip_with_pushdown(spark, tmp_path):
     # ORC is the second first-class columnar sink (BASELINE.json:
     # "Spark SQL + Parquet/ORC storage engine"); stripe stats give the
     # same data skipping as parquet row groups.
     import pyspark.sql.functions as F
 
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        create_table,
-        write_parquet,
-    )
+    from mariadb_columnstore_engine_spark.sources.ingest import write_parquet
 
     df = spark.range(1000).select(
         F.col("id"), (F.col("id") % 7).alias("k")
@@ -163,36 +113,18 @@ def test_orc_sink_roundtrip_with_pushdown(spark, tmp_path):
     ]
     plan = back.where(F.col("id") == 500)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(id), EqualTo(id,500)" in plan
-    create_table(spark, "orc_cat_tbl", dest, format="orc")
+    spark.sql(f"CREATE TABLE orc_cat_tbl USING orc LOCATION '{dest}'")
     try:
         assert spark.table("orc_cat_tbl").count() == 1000
     finally:
         spark.sql("DROP TABLE IF EXISTS orc_cat_tbl")
 
 
-def test_auto_increment_contiguous_ids(spark):
-    import pyspark.sql.functions as F
-
-    from mariadb_columnstore_engine_spark.sources.ingest import (
-        with_auto_increment,
-    )
-
-    df = spark.range(0, 10_000).repartition(7).select(
-        (F.col("id") * 3).alias("payload")
-    )
-    out = with_auto_increment(df, "rid", start=100)
-    ids = [r.rid for r in out.select("rid").collect()]
-    assert sorted(ids) == list(range(100, 10_100))
-    # payloads survive untouched
-    assert out.where(F.col("payload") % 3 != 0).count() == 0
-
-
 def test_multimodal_null_payloads_survive(spark):
     """NULL media payloads must not kill the Arrow task: features yield
-    NULL rows, frame sampling skips, resize passes NULL through."""
+    NULL rows, frame sampling skips."""
     from mariadb_columnstore_engine_spark.operators.multimodal import (
         extract_media_features,
-        resize_media,
         sample_frames,
     )
 
@@ -204,8 +136,6 @@ def test_multimodal_null_payloads_survive(spark):
     assert feats[1] == 19 and feats[2] is None
     frames = sample_frames(df, n_frames=2).collect()
     assert {r.doc_id for r in frames} == {1}
-    resized = {r.doc_id: r.media for r in resize_media(df, stride=2).collect()}
-    assert resized[2] is None and len(resized[1]) == 10
 
 
 def test_multimodal_real_decoder_capability_gate(spark):
@@ -225,8 +155,6 @@ def test_multimodal_real_decoder_capability_gate(spark):
             [(1, bytearray(b"xx"))], "doc_id bigint, media binary")
         with pytest.raises(NotImplementedError):
             extract_media_features(df, decoder="pil")
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image_meta(b"xx")
         # 'auto' resolves to the deterministic fake
         r = extract_media_features(df, decoder="auto").collect()[0]
         assert r.decoder == "fake-deterministic" and r.n_bytes == 2

@@ -655,58 +655,44 @@ def test_to_seconds_and_sql_tsi_units(spark):
     assert t.lower().count("now()") + t.lower().count("current_timestamp") == 1
 
 
-def test_compress_family_round_trip(spark):
+def test_compress_family_round_trip(engine):
     """mcs268-270: COMPRESS 4-byte LE header + zlib; UNCOMPRESS inverts
     it and returns NULL on non-COMPRESS input; UNCOMPRESSED_LENGTH reads
     the header without decompressing."""
-    import pyspark.sql.functions as F
+    import zlib as _zlib
 
-    from mariadb_columnstore_engine_spark.functions import udf as U
-
-    df = spark.createDataFrame(
-        [("a" * 1000,), ("short",), ("",), (None,)], "s string"
-    )
-    got = df.select(
-        U.compress_udf("s").alias("c"),
-        F.length("s").alias("n"),
-    ).select(
-        U.uncompress_udf("c").alias("back"),
-        U.uncompressed_length_udf("c").alias("ulen"),
-        F.length("c").alias("clen"),
-        "n",
+    got = engine.execute(
+        "SELECT n, UNCOMPRESS(c) AS back, UNCOMPRESSED_LENGTH(c) AS ulen,"
+        " LENGTH(c) AS clen FROM (SELECT COMPRESS(s) AS c,"
+        " LENGTH(s) AS n FROM (SELECT REPEAT('a', 1000) AS s"
+        " UNION ALL SELECT 'short' UNION ALL SELECT ''"
+        " UNION ALL SELECT NULL) AS src) AS packed"
     ).collect()
     by_n = {r.n: r for r in got}
     assert by_n[1000].back == "a" * 1000 and by_n[1000].ulen == 1000
     assert by_n[1000].clen < 1000  # actually compressed
     assert by_n[5].back == "short" and by_n[5].ulen == 5
     assert by_n[0].back == "" and by_n[0].ulen == 0 and by_n[0].clen == 0
-    none_row = [r for r in got if r.n is None][0]
+    none_row = by_n[None]
     assert none_row.back is None and none_row.ulen is None
-    # garbage input -> NULL, not an error (MariaDB returns NULL)
-    bad = spark.createDataFrame([(b"\x05\x00\x00\x00junk",)], "b binary")
-    assert bad.select(U.uncompress_udf("b").alias("u")).collect()[0].u is None
     # valid zlib payload of NON-UTF8 bytes: this string-typed surface
     # maps it to NULL (documented limitation) instead of killing the
     # task with UnicodeDecodeError
-    import zlib as _zlib
-
     raw = b"\xff\xfe\x00\x80binary"
     payload = len(raw).to_bytes(4, "little") + _zlib.compress(raw)
-    nonutf8 = spark.createDataFrame([(payload,)], "b binary")
-    assert (
-        nonutf8.select(U.uncompress_udf("b").alias("u")).collect()[0].u
-        is None
-    )
-    # 1-4 byte garbage: partial header -> NULL from UNCOMPRESSED_LENGTH
-    # (MariaDB returns NULL, not a bogus int from a truncated header)
-    short = spark.createDataFrame(
-        [(b"\x01",), (b"\x01\x02\x03",), (b"\x01\x02\x03\x04",)],
-        "b binary",
-    )
-    ulens = short.select(
-        U.uncompressed_length_udf("b").alias("u")
-    ).collect()
-    assert all(r.u is None for r in ulens)
+    row = engine.execute(
+        # garbage input -> NULL, not an error (MariaDB returns NULL)
+        "SELECT UNCOMPRESS(X'050000006A756E6B') AS bad,"
+        f" UNCOMPRESS(X'{payload.hex()}') AS nonutf8,"
+        # 1-4 byte garbage: partial header -> NULL from
+        # UNCOMPRESSED_LENGTH (MariaDB returns NULL, not a bogus int
+        # from a truncated header)
+        " UNCOMPRESSED_LENGTH(X'01') AS u1,"
+        " UNCOMPRESSED_LENGTH(X'010203') AS u3,"
+        " UNCOMPRESSED_LENGTH(X'01020304') AS u4"
+    ).collect()[0]
+    assert row.bad is None and row.nonutf8 is None
+    assert row.u1 is None and row.u3 is None and row.u4 is None
 
 
 def test_session_functions_routed(engine_with_table):

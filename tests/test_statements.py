@@ -422,7 +422,7 @@ def test_delete_preserves_sidecar_after_instant_alter(engine_with_table):
     ALTER ADD COLUMN + ADD CONSTRAINT, a DELETE keeps the added column
     (with its values/default) in the logical schema and CHECKs stay
     enforced (copy-on-write swap used to drop _schema_evolution.json)."""
-    from mariadb_columnstore_engine_spark.sources.ingest import table_checks
+    from mariadb_columnstore_engine_spark.sources.ingest import _evolution
 
     eng = engine_with_table
     eng.execute("ALTER TABLE t1 ADD COLUMN flag INT DEFAULT 7")
@@ -439,7 +439,8 @@ def test_delete_preserves_sidecar_after_instant_alter(engine_with_table):
     }
     assert rows == {0: 7, 50: 99}
     path = eng._writable("t1")["path"]
-    assert table_checks(path), "CHECK constraints vanished after DELETE"
+    assert _evolution(path).get("checks"), \
+        "CHECK constraints vanished after DELETE"
     with pytest.raises(ValueError, match="val_nonneg"):
         eng.execute("INSERT INTO t1 (id, val) VALUES (51, -5.0)")
 

@@ -1,5 +1,6 @@
-"""Structured-Streaming parity: stream(availableNow) == batch on the same
-input, for windowed counts and sessionization."""
+"""Structured-Streaming drain helpers: stream(availableNow) == batch on
+the same input, for windowed counts and sessionization, through the
+in-memory sink and landed on disk."""
 
 from __future__ import annotations
 
@@ -16,9 +17,38 @@ def _stage_events(spark, sf_dir, tmp_path) -> str:
     return src
 
 
+def _sessions(stream):
+    """Gap-based (30 min) sessions per user over a watermarked stream."""
+    return (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("s"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("s.start").alias("session_start"),
+            F.col("s.end").alias("session_end"),
+            "n_events",
+        )
+    )
+
+
 def test_stream_windowed_counts_match_batch(spark, sf_dir, tmp_path):
     src = _stage_events(spark, sf_dir, tmp_path)
-    stream = pipeline.windowed_counts(pipeline.read_event_stream(spark, src))
+    stream = (
+        pipeline.read_event_stream(spark, src)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
     pipeline.run_available_now(
         stream,
         checkpoint=str(tmp_path / "ckpt_win"),
@@ -51,7 +81,7 @@ def test_stream_windowed_counts_match_batch(spark, sf_dir, tmp_path):
 
 def test_stream_sessionization_runs(spark, sf_dir, tmp_path):
     src = _stage_events(spark, sf_dir, tmp_path)
-    stream = pipeline.sessionized(pipeline.read_event_stream(spark, src))
+    stream = _sessions(pipeline.read_event_stream(spark, src))
     pipeline.run_available_now(
         stream,
         checkpoint=str(tmp_path / "ckpt_sess"),
@@ -63,212 +93,6 @@ def test_stream_sessionization_runs(spark, sf_dir, tmp_path):
     n_events = spark.read.parquet(src).count()
     assert rows.tot == n_events, "every event must land in exactly 1 session"
     assert rows.n > 0
-
-
-def test_stateful_user_totals_match_batch(spark, sf_dir, tmp_path):
-    src = _stage_events(spark, sf_dir, tmp_path)
-    stream = pipeline.stateful_user_totals(
-        pipeline.read_event_stream(spark, src)
-    )
-    final = {}
-
-    def upsert(batch_df, _batch_id):
-        for r in batch_df.collect():
-            final[r.user_id] = (r.n_events, r.total_value)
-
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    expected = {
-        r.user_id: (r.n, r.t)
-        for r in spark.read.parquet(src)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("t"),
-        )
-        .collect()
-    }
-    assert set(final) == set(expected)
-    # counts must match exactly; totals accumulate in the same order only
-    # within state, so compare to 2dp tolerance
-    for uid, (n, t) in expected.items():
-        assert final[uid][0] == n
-        assert abs(final[uid][1] - t) < 0.05
-
-
-def test_stream_dedup_drops_redelivered_events(spark, sf_dir, tmp_path):
-    """At-least-once redelivery (every file written twice) must collapse
-    to the exact distinct set after streaming dedup."""
-    src = str(tmp_path / "events_dup_src")
-    ev = Catalog(spark, sf_dir).events
-    ev.repartition(2).write.parquet(src)
-    ev.repartition(3).write.mode("append").parquet(src)  # redelivery
-
-    deduped = pipeline.dedup_stream(pipeline.read_event_stream(spark, src))
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS nd "
-        "FROM dedup_stream_out"
-    ).collect()[0]
-    expected = ev.select("event_id").distinct().count()
-    assert got.n == got.nd == expected
-
-
-def test_stream_static_join_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-static dimension enrichment (availableNow) equals the same
-    join run in batch: per-user event counts joined to a derived user
-    dimension."""
-    src = str(tmp_path / "events_join_src")
-    ev = Catalog(spark, sf_dir).events
-    ev.repartition(3).write.parquet(src)
-    dim = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("user_events"))
-        .where(F.col("user_id") % 2 == 0)  # partial dim: inner join drops odds
-    )
-    enriched = pipeline.enrich_with_dimension(
-        pipeline.read_event_stream(spark, src), dim
-    ).groupBy("user_id", "user_events").agg(F.count(F.lit(1)).alias("n"))
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("stream_static_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.user_events): r.n
-        for r in spark.sql("SELECT * FROM stream_static_out").collect()
-    }
-    expected = {
-        (r.user_id, r.user_events): r.n
-        for r in ev.join(dim, "user_id")
-        .groupBy("user_id", "user_events")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == expected and got
-
-
-def test_stream_hierarchical_rollup_matches_batch(spark, sf_dir, tmp_path):
-    """Continuous-aggregate loop: stream-maintained hourly partials +
-    batch daily derivation == the all-batch hierarchical rollup."""
-    from mariadb_columnstore_engine_spark.plans import load_all
-
-    src = _stage_events(spark, sf_dir, tmp_path)
-    hourly = pipeline.hourly_rollup_stream(
-        pipeline.read_event_stream(spark, src)
-    )
-    pipeline.run_available_now(
-        hourly,
-        checkpoint=str(tmp_path / "ckpt_rollup"),
-        query_name="hourly_tier",
-    )
-    streamed_daily = pipeline.daily_from_hourly(
-        spark.sql("SELECT * FROM hourly_tier")
-    ).collect()
-    batch_daily = load_all()["events_hierarchical_rollup"].fn(
-        spark, sf_dir
-    ).collect()
-    assert streamed_daily == batch_daily
-
-
-def test_stream_document_quality_matches_batch(spark, sf_dir, tmp_path):
-    """Text-pillar streaming twin: quality features scored on a doc
-    stream equal the batch computation row-for-row; fingerprint dedup
-    keeps one copy per distinct content."""
-    src = str(tmp_path / "docs_stream_src")
-    Catalog(spark, sf_dir).documents.repartition(4).write.parquet(src)
-    stream_src = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(src)
-    )
-    scored = pipeline.fingerprint_dedup_stream(
-        pipeline.document_quality_stream(stream_src)
-    )
-    q = (
-        scored.writeStream.format("memory")
-        .queryName("doc_quality")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_docq"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.doc_id: (r.n_tok, r.stop_ratio, r.ttr, r.quality)
-        for r in spark.sql("SELECT * FROM doc_quality").collect()
-    }
-    batch = pipeline.document_quality_stream(spark.read.parquet(src))
-    batch_deduped = batch.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("n_copies")  # just count distinct prints
-    )
-    expected_all = {
-        r.doc_id: (r.n_tok, r.stop_ratio, r.ttr, r.quality)
-        for r in batch.collect()
-    }
-    # every streamed row matches its batch twin exactly
-    assert got and all(expected_all[k] == v for k, v in got.items())
-    # dedup kept exactly one row per distinct fingerprint
-    assert len(got) == batch_deduped.count()
-
-
-def test_stream_embedding_intake_matches_batch_bucketing(
-    spark, sf_dir, tmp_path
-):
-    """Similarity-pillar streaming twin: LSH bucket assignment +
-    quantization scale on an embedding stream equal the batch signature
-    stage of sim_lsh_ann_topk row-for-row (stream==batch parity)."""
-    src = str(tmp_path / "emb_stream_src")
-    Catalog(spark, sf_dir).embeddings.repartition(4).write.parquet(src)
-    stream_src = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .parquet(src)
-    )
-    q = (
-        pipeline.embedding_intake_stream(stream_src)
-        .writeStream.format("memory")
-        .queryName("emb_intake")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_embq"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.vec_id: (r.label, r.bucket, r.q_scale)
-        for r in spark.sql("SELECT * FROM emb_intake").collect()
-    }
-    batch = {
-        r.vec_id: (r.label, r.bucket, r.q_scale)
-        for r in pipeline.embedding_intake_stream(
-            spark.read.parquet(src)
-        ).collect()
-    }
-    assert got == batch and len(got) > 0
-    # bucket ids live in the lsh_ann_topk domain [0, 2^N_PLANES)
-    from mariadb_columnstore_engine_spark.plans.similarity_plans import (
-        N_PLANES,
-    )
-
-    assert all(0 <= v[1] < (1 << N_PLANES) for v in got.values())
 
 
 def test_run_available_now_to_dir_disk_sink_and_conf_restore(
@@ -284,8 +108,7 @@ def test_run_available_now_to_dir_disk_sink_and_conf_restore(
     spark.conf.set(conf_key, sentinel)
     try:
         src = _stage_events(spark, sf_dir, tmp_path)
-        stream = pipeline.sessionized(
-            pipeline.read_event_stream(spark, src))
+        stream = _sessions(pipeline.read_event_stream(spark, src))
         out = str(tmp_path / "sess_out")
         pipeline.run_available_now_to_dir(
             stream,
@@ -308,7 +131,6 @@ def test_run_available_now_to_dir_disk_sink_and_conf_restore(
                 "n_events",
             )
         )
-        key = lambda r: (r.user_id, r.session_start)  # noqa: E731
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, expected.collect()))
     finally:

@@ -13,40 +13,60 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from mariadb_columnstore_engine_spark.plans.text_plans import (
-    _shingles,
+    _shingled_docs,
     _tokens,
 )
 
 
-def test_shingles_short_docs_empty_not_crash(spark):
+def _shingles(spark, texts):
     df = spark.createDataFrame(
-        [("",), ("one",), ("one two",), ("one two three",),
-         ("one two three four",)],
-        "text string",
+        list(enumerate(texts)), "doc_id long, text string"
     )
-    out = df.select(
-        _shingles(_tokens(F.col("text"))).alias("sh")
-    ).collect()
-    got = [r.sh for r in out]
+    return [
+        r.sh for r in _shingled_docs(df, "doc_id").orderBy("doc_id").collect()
+    ]
+
+
+def test_shingles_short_docs_empty_not_crash(spark):
+    got = _shingles(spark, [
+        "", "one", "one two", "one two three", "one two three four",
+        "a a a a a", "x  y", "a b c a b c",
+    ])
     assert got[0] == []            # empty text
     assert got[1] == []            # 1 token
     assert got[2] == []            # 2 tokens
     assert got[3] == ["one two three"]
     assert got[4] == ["one two three", "two three four"]
+    assert got[5] == ["a a a"]     # distinct
+    assert got[6] == ["x  y"]      # the empty token between spaces
+    assert got[7] == ["a b c", "b c a", "c a b"]
+
+
+def _column_api_shingles(tokens):
+    """The same gated trigram build spelled with the Column API: an
+    independent reference for the SQL spelling the plans use."""
+    tri = F.transform(
+        F.sequence(F.lit(1), F.size(tokens) - 2),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(tokens, i),
+            F.element_at(tokens, i + 1),
+            F.element_at(tokens, i + 2),
+        ),
+    )
+    return F.when(F.size(tokens) >= 3, F.array_distinct(tri)).otherwise(
+        F.array().cast("array<string>")
+    )
 
 
 def test_shingled_docs_sql_spelling_equals_column_api(spark):
     """_SHINGLE_EXPR (the one-round-trip SQL spelling the plans use)
-    must stay the same computation as _shingles(_tokens(...)) — same
-    short-doc gating, same trigram strings, same distinct order."""
-    from mariadb_columnstore_engine_spark.plans.text_plans import (
-        _shingled_docs,
-    )
-
+    must stay the same computation as the Column-API trigram build —
+    same short-doc gating, same trigram strings, same distinct order."""
     df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
+        list(enumerate(
             ["", "one", "one two", "one two three",
-             "one two three four", "a a a a a", "x  y", "a b c a b c"])],
+             "one two three four", "a a a a a", "x  y", "a b c a b c"])),
         "doc_id long, text string",
     )
     via_sql = [
@@ -55,7 +75,7 @@ def test_shingled_docs_sql_spelling_equals_column_api(spark):
     via_api = [
         r.sh
         for r in df.select(
-            "doc_id", _shingles(_tokens(F.col("text"))).alias("sh")
+            "doc_id", _column_api_shingles(_tokens(F.col("text"))).alias("sh")
         ).orderBy("doc_id").collect()
     ]
     assert via_sql == via_api
@@ -69,16 +89,7 @@ def test_shingles_match_duckdb_on_short_docs(spark, duck):
         "  ('one two'), ('one two three')) v(t))"
     ).fetchall()
     duck_sh = [r[0] for r in rows]
-    df = spark.createDataFrame(
-        [("one",), ("one two",), ("one two three",)], "text string"
-    )
-    spark_sh = [
-        r.sh
-        for r in df.select(
-            _shingles(_tokens(F.col("text"))).alias("sh")
-        ).collect()
-    ]
-    assert spark_sh == duck_sh
+    assert _shingles(spark, ["one", "one two", "one two three"]) == duck_sh
 
 
 def test_mixture_upsample_explode_matches_audit(spark, sf_dir):

@@ -1,76 +1,61 @@
-"""Versioned-table (snapshot / rollback / time-travel) tests —
-the BRM version-buffer analogue (sources/versioned.py)."""
+"""Versioned reads through the engine — the BRM version-buffer analogue:
+copy-on-write DML never touches a committed file, BEGIN pins a
+hardlinked pre-image (``dml.snapshot_tree``) and ROLLBACK swaps it back
+in (``Engine.begin``/``rollback``)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
-
-from mariadb_columnstore_engine_spark.sources.versioned import VersionedTable
 
 
 @pytest.fixture()
-def table(spark, tmp_path):
-    t = VersionedTable(str(tmp_path / "vt"))
-    df = spark.createDataFrame(
+def eng(spark, sf_dir, tmp_path):
+    from mariadb_columnstore_engine_spark.engine import Engine
+
+    eng = Engine(spark, sf_dir)
+    path = str(tmp_path / "vt")
+    spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, None, 30.0)],
-        ["id", "tag", "val"],
-    )
-    assert t.write(df) == 1
-    return t
+        "id bigint, tag string, val double",
+    ).write.parquet(path)
+    eng.attach_table("vt", path)
+    return eng
 
 
 def _rows(df):
     return sorted((r.id, r.tag, r.val) for r in df.collect())
 
 
-def test_snapshot_isolation_across_update(spark, table):
-    v1 = table.read(spark, version=1)
-    table.update_where(
-        spark, F.col("id") == 2, {"val": F.lit(99.0)}
-    )
-    # the old snapshot still reads the pre-image
-    assert _rows(v1) == [(1, "a", 10.0), (2, "b", 20.0), (3, None, 30.0)]
-    assert (2, "b", 99.0) in _rows(table.read(spark))
-    assert table.current_version() == 2
+ORIGINAL = [(1, "a", 10.0), (2, "b", 20.0), (3, None, 30.0)]
 
 
-def test_update_null_predicate_rows_untouched(spark, table):
+def test_snapshot_isolation_across_update(spark, eng):
+    eng.execute("BEGIN")
+    [pre_image] = eng._txn.values()
+    eng.execute("UPDATE vt SET val = 99.0 WHERE id = 2")
+    # the pinned pre-image still reads the committed rows
+    assert _rows(spark.read.parquet(pre_image)) == ORIGINAL
+    assert (2, "b", 99.0) in _rows(eng.execute("SELECT * FROM vt"))
+    eng.execute("COMMIT")
+
+
+def test_update_null_predicate_rows_untouched(eng):
     # tag = 'zz' is NULL for id=3 → must not be treated as a match
-    table.update_where(
-        spark, F.col("tag") == "zz", {"val": F.lit(0.0)}
-    )
-    assert _rows(table.read(spark)) == [
-        (1, "a", 10.0), (2, "b", 20.0), (3, None, 30.0)
-    ]
+    eng.execute("UPDATE vt SET val = 0.0 WHERE tag = 'zz'")
+    assert _rows(eng.execute("SELECT * FROM vt")) == ORIGINAL
 
 
-def test_delete_null_predicate_keeps_row(spark, table):
-    table.delete_where(spark, F.col("tag") == "a")
-    assert _rows(table.read(spark)) == [(2, "b", 20.0), (3, None, 30.0)]
+def test_delete_null_predicate_keeps_row(eng):
+    eng.execute("DELETE FROM vt WHERE tag = 'a'")
+    assert _rows(eng.execute("SELECT * FROM vt")) == ORIGINAL[1:]
 
 
-def test_rollback_restores_pre_image(spark, table):
-    table.delete_where(spark, F.lit(True))
-    assert table.read(spark).count() == 0
-    table.rollback(1)
-    assert table.read(spark).count() == 3
-    # rollback of a never-written version refuses
+def test_rollback_restores_pre_image(eng):
+    eng.execute("BEGIN")
+    eng.execute("DELETE FROM vt WHERE id > 0")
+    assert eng.execute("SELECT * FROM vt").count() == 0
+    eng.execute("ROLLBACK")
+    assert _rows(eng.execute("SELECT * FROM vt")) == ORIGINAL
+    # no open transaction → nothing to roll back to
     with pytest.raises(ValueError):
-        table.rollback(17)
-
-
-def test_vacuum_keeps_committed_version(spark, table):
-    table.delete_where(spark, F.col("id") == 1)  # v2
-    table.update_where(spark, F.col("id") == 2, {"val": F.lit(0.0)})  # v3
-    table.rollback(1)
-    removed = table.vacuum(keep_last=1)
-    # v1 is committed → survives even though only v3 is "newest"
-    assert 1 not in removed
-    assert table.read(spark).count() == 3
-    assert set(table.versions()) >= {1}
-
-
-def test_time_travel_missing_version_raises(spark, table):
-    with pytest.raises(ValueError):
-        table.read(spark, version=5)
+        eng.execute("ROLLBACK")

@@ -17,49 +17,19 @@ Usage:  python tools/check_parity.py [--tuned] [sf_dir] [name_filter ...]
 
 from __future__ import annotations
 
-import math
 import sys
 import time
 import traceback
 
-import duckdb
-
 sys.path.insert(0, ".")
 
-from mariadb_columnstore_engine_spark.catalog import TABLES
 from mariadb_columnstore_engine_spark.oracle import (
-    driver_canon_problems,
-    pandas_sortable_problems,
-    type_problems,
+    duckdb_connect,
+    oracle_rows,
+    problems,
 )
 from mariadb_columnstore_engine_spark.plans import load_all
-from mariadb_columnstore_engine_spark.plans.registry import PRIORITY_WINDOW
 from mariadb_columnstore_engine_spark.session import get_session
-
-
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0.0:
-            return 0.0  # -0.0 == 0.0
-        return v
-    if isinstance(v, bytes):
-        return v.hex()
-    if hasattr(v, "isoformat"):  # date/datetime
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_cell(x) for x in v)
-    if isinstance(v, dict):  # Row/struct collected as dict
-        return tuple((k, _norm_cell(v[k])) for k in sorted(v))
-    return v
-
-
-def _normalize(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return out
 
 
 def main() -> int:
@@ -72,21 +42,15 @@ def main() -> int:
     if filters and all(f in specs for f in filters):
         # every filter is an exact registry name → exact selection (so
         # a name that prefixes another, e.g. setop_intersect vs
-        # setop_intersect_all, can't pull in strays — sweep_chunked
-        # relies on this for per-chunk accounting)
+        # setop_intersect_all, can't pull in strays when a sweep is run
+        # in chunks of exact names)
         names = [n for n in specs if n in set(filters)]
     else:
         names = [
             n for n in specs if not filters or any(f in n for f in filters)
         ]
 
-    from mariadb_columnstore_engine_spark.oracle import table_glob
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{table_glob(sf_dir, t)}'"
-        )
+    con = duckdb_connect(sf_dir)
 
     if tuned:
         spark = get_session("parity-check")
@@ -155,7 +119,6 @@ def main() -> int:
                 time.sleep(2)
                 sdf = spec.fn(spark, sf_dir)
                 srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
         except Exception:
             print(f"FAIL  {name}: spark raised")
             traceback.print_exc()
@@ -167,39 +130,15 @@ def main() -> int:
             n_rowsonly += 1
             continue
         try:
-            # ONE oracle execution: Arrow supplies rows + names + wire
-            # types (fetchall would flatten HUGEINT/DECIMAL, and a second
-            # .execute() doubles the cost of every heavy oracle)
-            otable = con.execute(spec.oracle).arrow()
-            ocols = otable.column_names
-            ocols_py = [c.to_pylist() for c in otable.columns]
-            orows = list(zip(*ocols_py)) if ocols_py else []
+            otable, orows = oracle_rows(con, spec.oracle)
         except Exception:
             print(f"FAIL  {name}: duckdb raised")
             traceback.print_exc()
             n_fail += 1
             continue
-
-        # Wire-type check (driver's value hash is type-sensitive).
-        problems = type_problems(sdf.schema, otable.schema)
-        # Driver-window queries also face the driver's pandas
-        # canonicalizer (DECIMAL→float64 flattening, list-cell sort
-        # crashes) — reproduce those limits locally.
-        if name in PRIORITY_WINDOW:
-            problems += driver_canon_problems(sdf.schema, otable.schema)
-            problems += pandas_sortable_problems(otable)
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"schema spark={sorted(scols)} duck={sorted(ocols)}")
-        if not problems:
-            a = _normalize(srows, scols)
-            b = _normalize(orows, ocols)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, first diffs: {diffs}")
-        if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+        probs = problems(name, sdf, srows, otable, orows)
+        if probs:
+            print(f"FAIL  {name}: {'; '.join(probs)}")
             n_fail += 1
         else:
             print(f"ok    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")

@@ -8,23 +8,27 @@ dbcon/dmlpackageproc while the BRM version buffer keeps readers on a
 consistent snapshot (versioning/BRM/dbrm.h). Spark's analogue is many
 threads sharing one SparkSession — each query gets its own job group,
 the scheduler interleaves stages — plus a writer thread committing
-copy-on-write versions (sources/versioned.py, the MVCC analogue).
+copy-on-write rewrites through the engine's DML step (sources/dml.py,
+with ``dml.snapshot_tree`` pre-images as the MVCC analogue).
 
 Method (r12, VERDICT r11 #3): N worker threads pull ALL registry
 queries from a shared deque and run them to completion against the
 SAME SparkSession while a DuckDB connection per thread checks values
 (DuckDB connections are cheap; cursors are not thread-safe across
 threads, so one per worker). Concurrently, ONE writer thread runs a
-DML loop against its own VersionedTable — INSERT/UPDATE/DELETE/
-ROLLBACK commits interleaved with the query stages — and after every
-commit asserts two invariants:
+DML loop on its own plain table directory — ``dml.update_where`` /
+``delete_where``, appends, and a rewrite rolled back by swapping its
+``dml.snapshot_tree`` pre-image in, as ``Engine.rollback`` does —
+interleaved with the query stages, and after every commit asserts two
+invariants:
 
   1. read-your-writes: the committed read matches the Python-side
      expected (count, sum) model for that operation;
-  2. snapshot isolation: the pinned version-1 snapshot still returns
-     its original checksum — later commits (and the interleaved query
-     load) never bleed into a committed pre-image, the guarantee the
-     reference's VSS/VBBM structures exist to provide.
+  2. snapshot isolation: the pre-image pinned after the first write
+     still returns its original checksum — later commits (and the
+     interleaved query load) never bleed into a committed pre-image,
+     the guarantee the reference's VSS/VBBM structures exist to
+     provide.
 
 Any wrong answer — reader or writer — fails the probe, not just a
 crash.
@@ -51,47 +55,52 @@ sys.path.insert(0, ".")
 def _writer_loop(
     spark, stop: threading.Event, report: dict
 ) -> None:
-    """DML/snapshot loop against a private VersionedTable while the
-    reader threads drain the registry. Commits copy-on-write versions
-    and validates read-your-writes + pinned-snapshot checksums after
-    every commit."""
+    """DML loop on a private table directory while the reader threads
+    drain the registry. Commits copy-on-write rewrites and appends and
+    validates read-your-writes + pinned-pre-image checksums after every
+    commit."""
     import pyspark.sql.functions as F
 
-    from mariadb_columnstore_engine_spark.sources.versioned import (
-        VersionedTable,
+    from mariadb_columnstore_engine_spark.sources import dml
+    from mariadb_columnstore_engine_spark.sources.ingest import (
+        read_table_evolved,
     )
 
     root = tempfile.mkdtemp(prefix="mcs_conc_writer_")
-    vt = VersionedTable(root + "/t")
+    path, pinned = root + "/t", root + "/pinned"
     commits = 0
     try:
         spark.sparkContext.setLocalProperty(
             "spark.jobGroup.id", "writer")
         n0 = 10_000
-        base = spark.range(1, n0 + 1).select(
-            F.col("id"), (F.col("id") % 97).cast("long").alias("val"))
-        vt.write(base)
+        spark.range(1, n0 + 1).select(
+            F.col("id"), (F.col("id") % 97).cast("long").alias("val")
+        ).write.parquet(path)
         commits += 1
+        dml.snapshot_tree(path, pinned)
         # Python-side model of the table state: ids 1..n0, val=id%97
         ids = {i: i % 97 for i in range(1, n0 + 1)}
-        v1_checksum = (len(ids), sum(ids.values()))
+        pinned_checksum = (len(ids), sum(ids.values()))
+
+        def checksum(p: str) -> tuple:
+            got = read_table_evolved(spark, p).agg(
+                F.count(F.lit(1)), F.sum("val")).collect()[0]
+            return got[0], got[1]
 
         def check_current() -> None:
-            got = vt.read(spark).agg(
-                F.count(F.lit(1)), F.sum("val")).collect()[0]
+            got = checksum(path)
             want = (len(ids), sum(ids.values()) if ids else None)
-            if (got[0], got[1]) != want:
+            if got != want:
                 raise AssertionError(
-                    f"read-your-writes violated: got {tuple(got)}, "
+                    f"read-your-writes violated: got {got}, "
                     f"expected {want}")
 
         def check_pinned() -> None:
-            got = vt.read(spark, version=1).agg(
-                F.count(F.lit(1)), F.sum("val")).collect()[0]
-            if (got[0], got[1]) != v1_checksum:
+            got = checksum(pinned)
+            if got != pinned_checksum:
                 raise AssertionError(
-                    f"snapshot isolation violated: pinned v1 read "
-                    f"{tuple(got)}, expected {v1_checksum}")
+                    f"snapshot isolation violated: pinned pre-image read "
+                    f"{got}, expected {pinned_checksum}")
 
         check_current()
         op = 0
@@ -99,42 +108,38 @@ def _writer_loop(
             op += 1
             if op % 4 == 1:  # UPDATE: bump val where id % 10 == op%10
                 tgt = op % 10
-                vt.update_where(
-                    spark, F.col("id") % 10 == tgt,
+                dml.update_where(
+                    spark, path, F.col("id") % 10 == tgt,
                     {"val": F.col("val") + 1})
                 for i in list(ids):
                     if i % 10 == tgt:
                         ids[i] += 1
             elif op % 4 == 2:  # DELETE a thin slice
                 lo = (op * 37) % n0
-                vt.delete_where(
-                    spark,
+                dml.delete_where(
+                    spark, path,
                     (F.col("id") > lo) & (F.col("id") <= lo + 20))
                 for i in [i for i in ids if lo < i <= lo + 20]:
                     del ids[i]
             elif op % 4 == 3:  # INSERT: append a fresh id range
                 start = n0 + op * 100
-                extra = spark.range(start, start + 50).select(
+                spark.range(start, start + 50).select(
                     F.col("id"),
-                    (F.col("id") % 97).cast("long").alias("val"))
-                vt.write(vt.read(spark).unionByName(extra))
+                    (F.col("id") % 97).cast("long").alias("val"),
+                ).write.mode("append").parquet(path)
                 for i in range(start, start + 50):
                     ids[i] = i % 97
-            else:  # ROLLBACK one version, then re-apply nothing —
-                # the model simply reverts to the pre-image too
-                vs = vt.versions()
-                if len(vs) >= 2:
-                    prev = vs[-2]
-                    snap = vt.read(spark, version=prev).select(
-                        "id", "val").collect()
-                    vt.rollback(prev)
-                    ids = {r.id: r.val for r in snap}
+            else:  # ROLLBACK: rewrite every row, then swap the
+                # pre-image back in — the model does not change
+                pre = f"{root}/txn{op}"
+                dml.snapshot_tree(path, pre)
+                dml.update_where(
+                    spark, path, F.lit(True), {"val": F.col("val") + 1000})
+                dml.swap(pre, path)
+                spark.catalog.refreshByPath(path)
             commits += 1
             check_current()
             check_pinned()
-        # retention: vacuum must never touch the committed version
-        vt.vacuum(keep_last=2)
-        check_current()
         report["writer"] = "ok"
     except Exception as e:  # noqa: BLE001 — recorded, fails probe
         report["writer"] = f"ERR: {type(e).__name__}: {e}"
