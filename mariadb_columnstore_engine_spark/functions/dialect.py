@@ -5,6 +5,10 @@ Reference analogue: the funcexp dispatch table (utils/funcexp/funcexp.cpp:67-263
 Most map one-to-one onto pyspark.sql.functions; this module holds the ones
 whose MariaDB semantics need composition or a thin wrapper. Everything here
 stays JVM-side (no Python UDFs) so plans keep whole-stage codegen.
+
+A helper here is the one definition of its function: the SQL front end
+(sqltrans's function table) renders the same Column to SQL text, so the
+registry plans and ``Engine.sql`` give the same answer.
 """
 
 from __future__ import annotations
@@ -84,37 +88,55 @@ def sec_to_time(col: Column) -> Column:
 
 
 def time_to_sec(col: Column) -> Column:
-    """MariaDB TIME_TO_SEC: 'HH:MM:SS' string → seconds (sign-aware)."""
-    neg = col.startswith("-")
-    p = F.split(F.regexp_replace(col, "^-", ""), ":")
+    """MariaDB TIME_TO_SEC: a TIME string ('HH:MM:SS', signed, hours
+    past 24) or the time part of a DATETIME → whole seconds. The string
+    form of a DATETIME is 'YYYY-MM-DD HH:MM:SS[.f]', so the time part
+    is what follows the last space."""
+    t = F.substring_index(col.cast("string"), " ", -1)
+    p = F.split(F.regexp_replace(t, "^-", ""), ":")
     secs = (
         F.element_at(p, 1).cast("long") * 3600
         + F.element_at(p, 2).cast("long") * 60
-        + F.element_at(p, 3).cast("long")
+        + F.element_at(p, 3).cast("double").cast("long")
     )
-    return F.when(neg, -secs).otherwise(secs)
+    return F.when(t.startswith("-"), -secs).otherwise(secs)
 
 
 def inet_aton(col: Column) -> Column:
-    """MariaDB INET_ATON (func_inet_aton.cpp): dotted-quad IPv4 → number.
-    Pure JVM arithmetic on split parts; NULL for malformed input falls out
-    of the casts."""
-    p = F.split(col, r"\.")
-    part = lambda i: F.element_at(p, i).cast("long")  # noqa: E731
-    return (
-        part(1) * 16777216 + part(2) * 65536 + part(3) * 256 + part(4)
-    )
+    """MariaDB INET_ATON (Item_func_inet_aton): dotted IPv4 → number.
+    Short forms put the last group in the low bytes ('127.1' is
+    127.0.0.1, '10.0.1' is 10.0.0.1); NULL for a group over 255, a
+    trailing '.', more than three dots, or any non-digit."""
+    s = col.cast("string")
+    dots = F.length(s) - F.length(F.regexp_replace(s, r"\.", ""))
+
+    def digits(part: Column) -> Column:  # '' (absent or empty) reads 0
+        return F.concat(F.lit("0"), part).try_cast("long")
+
+    groups = [
+        digits(F.split_part(s, F.lit("."), F.lit(i))) for i in range(1, 5)
+    ]
+    num = digits(F.substring_index(s, ".", -1))
+    for i in (1, 2, 3):
+        shifted = groups[i - 1] * 256 ** (4 - i)
+        num = num + F.when(dots >= i, shifted).otherwise(0)
+    ok = s.rlike(r"^([0-9]*\.){0,3}[0-9]+$") & (F.greatest(*groups) <= 255)
+    return F.when(ok, num)
 
 
 def inet_ntoa(col: Column) -> Column:
-    """MariaDB INET_NTOA: number → dotted-quad IPv4."""
+    """MariaDB INET_NTOA: number → dotted-quad IPv4; NULL outside
+    [0, 2^32)."""
     n = col.cast("long")
-    return F.concat_ws(
-        ".",
-        (F.shiftright(n, 24).bitwiseAND(255)).cast("string"),
-        (F.shiftright(n, 16).bitwiseAND(255)).cast("string"),
-        (F.shiftright(n, 8).bitwiseAND(255)).cast("string"),
-        (n.bitwiseAND(255)).cast("string"),
+    return F.when(
+        (n >= 0) & (n <= 4294967295),
+        F.concat_ws(
+            ".",
+            (F.shiftright(n, 24).bitwiseAND(255)).cast("string"),
+            (F.shiftright(n, 16).bitwiseAND(255)).cast("string"),
+            (F.shiftright(n, 8).bitwiseAND(255)).cast("string"),
+            (n.bitwiseAND(255)).cast("string"),
+        ),
     )
 
 
@@ -160,15 +182,17 @@ def _period_months(p: Column) -> Column:
     year gets the 70-cutoff century rule (<70 → 2000s, 70-99 → 1900s);
     period 0 maps to month 0."""
     pl = p.cast("long")
-    yy = (pl / 100).cast("long")
-    year = (
-        F.when(yy < 70, yy + 2000)
-        .when(yy < 100, yy + 1900)
-        .otherwise(yy)
-    )
     return F.when(pl == 0, F.lit(0).cast("long")).otherwise(
-        year * 12 + pl % 100 - 1
+        _century(pl / 100) * 12 + pl % 100 - 1
     )
+
+
+def _century(y: Column) -> Column:
+    """Two-digit year → four digits with the 70 cutoff (<70 → 2000s,
+    70-99 → 1900s). The additive form names ``y`` three times, not
+    five, which keeps nested period calls rendered to SQL small."""
+    y = y.cast("long")
+    return y + F.when(y < 70, 2000).when(y < 100, 1900).otherwise(0)
 
 
 def period_add(p: Column, n: Column) -> Column:
@@ -176,10 +200,8 @@ def period_add(p: Column, n: Column) -> Column:
     YYMM; the result is always rendered YYYYMM, as in
     convert_month_to_period)."""
     m = _period_months(p) + n.cast("long")
-    y = (m / 12).cast("long")
-    y = F.when(y < 70, y + 2000).when(y < 100, y + 1900).otherwise(y)
     return F.when(m == 0, F.lit(0).cast("long")).otherwise(
-        (y * 100 + m % 12 + 1).cast("long")
+        (_century(m / 12) * 100 + m % 12 + 1).cast("long")
     )
 
 

@@ -14,19 +14,37 @@ and this pass rewrites the MariaDB-isms Spark spells differently:
 * ``LIMIT offset, count`` → ``LIMIT count OFFSET offset``
 * ``GROUP_CONCAT([DISTINCT] expr [ORDER BY …] [SEPARATOR 'sep'])`` →
   ``listagg([DISTINCT] expr, 'sep') [WITHIN GROUP (ORDER BY …)]``
-* ``DATE_FORMAT(e, '%…')`` / ``STR_TO_DATE(e, '%…')`` → Java-pattern
-  ``date_format`` / ``to_timestamp`` via dialect.translate_date_format
-  (STR_TO_DATE yields TIMESTAMP; cast to DATE where MariaDB would)
+* MariaDB functions Spark lacks or spells differently → the function
+  table ``_FUNCTIONS`` (below)
 * trailing ``;`` is dropped
 
 Everything runs over a MASKED statement — string literals, quoted
 identifiers, and comments are replaced by ``\\x00<n>\\x00`` placeholders
-first — so no rewrite can ever fire inside a literal. WEEK/YEARWEEK and
-week-based DATE_FORMAT specifiers translate through the Catalyst bridge
-(the dialect layer's tested Column expressions rendered to SQL text);
-the remaining construct with no faithful Spark spelling (GROUP_CONCAT's
-inner LIMIT) raises ValueError instead of silently mistranslating —
-dialect.group_concat(limit=) covers it on the DataFrame side.
+first — so no rewrite can ever fire inside a literal.
+
+Function calls are found by one call scanner, ``_scan_calls``: it finds
+``NAME(``, balances the parentheses, splits the arguments, lowers each
+argument first (so nested calls, same name included, lower
+innermost-first) and then the call, or leaves the call as written. The
+quoted literals of every lowering are masked into the statement's store
+before it is spliced in, so no later pass ever scans a raw quote.
+
+The function table gives each MariaDB name exactly one lowering, as the
+reference's funcexp dispatch table gives each one implementation
+(utils/funcexp/funcexp.cpp:67-263):
+
+* a SQL template, for functions only SQL has (TO_DAYS, STRCMP, …);
+* or the ``dialect`` Column helper the registry plans call too
+  (SEC_TO_TIME, PERIOD_ADD, WEEK, DATE_FORMAT, STR_TO_DATE, …), rendered
+  to SQL text through Catalyst's analyzed plan, so both surfaces give
+  the same answer. Rendering needs an active SparkSession the first time
+  a (name, arity, literal parameters) key is seen; the template is then
+  cached. STR_TO_DATE yields DATE for a date-only format and TIMESTAMP
+  when the format has a time part, as in MariaDB.
+
+Constructs with no faithful Spark spelling (JSON_DETAILED, a non-literal
+format string, an unsupported format specifier) raise ValueError instead
+of silently mistranslating.
 
 Already-identical spellings need no rewrite and are left alone:
 backtick identifiers, ``DIV``, ``%``, ``REGEXP``, ``IF()``, ``IFNULL``,
@@ -37,9 +55,10 @@ from __future__ import annotations
 
 import re
 
-from mariadb_columnstore_engine_spark.functions.dialect import (
-    translate_date_format,
-)
+import pyspark.sql.functions as F
+from pyspark.sql import SparkSession
+
+from mariadb_columnstore_engine_spark.functions import dialect, json_ext
 
 _PH = "\x00{}\x00"
 _PH_RE = re.compile("\x00(\\d+)\x00")
@@ -50,14 +69,18 @@ _SELECT_OPTIONS = (
 )
 
 
-def _mask(sql: str) -> tuple[str, list[str]]:
+def _mask(
+    sql: str, store: list[str] | None = None
+) -> tuple[str, list[str]]:
     """Replace literals/quoted identifiers/comments with placeholders.
 
     ``#`` comments are converted to ``--`` form as they are stored.
     MariaDB escapes handled inside quotes: doubling ('') and backslash.
+    Given a ``store``, the new placeholders append to it (placeholders
+    already in ``sql`` stay as they are).
     """
     out: list[str] = []
-    store: list[str] = []
+    store = [] if store is None else store
     i, n = 0, len(sql)
 
     def stash(text: str) -> None:
@@ -167,176 +190,287 @@ def _literal_text(ph: str, store: list[str]) -> str | None:
     return body
 
 
-def _rewrite_group_concat(masked: str, store: list[str]) -> str:
+# ---- the call scanner -----------------------------------------------------
+
+
+def _scan_calls(masked: str, store: list[str], pattern, table) -> str:
+    """The one call scanner. For each ``NAME(`` that ``pattern`` finds
+    (group 1 is the name, the match ends at the ``(``): balance the
+    parentheses, split the arguments at top-level commas and lower each
+    argument first — so nested calls, same name included, lower
+    innermost-first — then ``table[NAME](NAME, args, store)`` gives the
+    replacement, or None to leave the call as written. The quoted
+    literals of a replacement are masked into ``store`` before it is
+    spliced in. A statement without a match costs one regex scan."""
     out, i = [], 0
-    pat = re.compile(r"\bGROUP_CONCAT\s*\(", re.IGNORECASE)
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        open_at = masked.index("(", m.start())
+    while m := pattern.search(masked, i):
+        open_at = m.end() - 1
         end = _find_balanced(masked, open_at)
-        inner = masked[open_at + 1 : end - 1].strip()
-
-        distinct = ""
-        dm = re.match(r"DISTINCT\b", inner, re.IGNORECASE)
-        if dm:
-            distinct = "DISTINCT "
-            inner = inner[dm.end() :].strip()
-
-        limit = None
-        lm = _top_level_search(r"\bLIMIT\s+(\d+)\s*$", inner)
-        if lm:
-            limit = int(lm.group(1))
-            inner = inner[: lm.start()].strip()
-        elif _top_level_search(r"\bLIMIT\b", inner):
-            raise ValueError(
-                "GROUP_CONCAT LIMIT must be a trailing integer literal"
-            )
-
-        sep = "','"
-        sm = _top_level_search(r"\bSEPARATOR\b", inner)
-        if sm:
-            sep = inner[sm.end() :].strip()
-            inner = inner[: sm.start()].strip()
-
-        order = ""
-        order_key, order_asc = None, True
-        om = _top_level_search(r"\bORDER\s+BY\b", inner)
-        if om:
-            spec = inner[om.end() :].strip()
-            order = f" WITHIN GROUP (ORDER BY {spec})"
-            inner = inner[: om.start()].strip()
-            am = re.fullmatch(
-                r"(.+?)\s+(ASC|DESC)", spec, re.IGNORECASE | re.DOTALL
-            )
-            order_key = am.group(1) if am else spec
-            order_asc = not (am and am.group(2).upper() == "DESC")
-
-        if _top_level_search(r",", inner):
-            # GROUP_CONCAT(e1, e2, ...) concatenates the expressions
-            # per row (MariaDB expr-list form) — left as-is, e2 would
-            # silently become listagg's separator
-            inner = (
-                "concat("
-                + ", ".join(
-                    p.strip() for p in _split_top_level_commas(inner)
-                )
-                + ")"
-            )
+        pieces = [
+            _scan_calls(p, store, pattern, table)
+            for p in _split_top_level_commas(masked[open_at + 1 : end - 1])
+        ]
+        args = [p.strip() for p in pieces]
+        name = m.group(1).upper()
+        repl = table[name](name, [] if args == [""] else args, store)
+        if repl is None:
+            repl = masked[m.start() : open_at + 1] + ",".join(pieces) + ")"
+        elif "'" in repl:
+            repl = _mask(repl, store)[0]
         out.append(masked[i : m.start()])
-        if limit is None and not (distinct and order_key is not None):
-            out.append(f"listagg({distinct}{inner}, {sep}){order}")
-        else:
-            # GROUP_CONCAT(... LIMIT n) — MariaDB 10.6 extension
-            # (dbcon/joblist/groupconcat.cpp's limit): first n of the
-            # ordered (deduped) list — and DISTINCT with ORDER BY,
-            # which listagg rejects for non-string input (it casts its
-            # input to string, which then no longer matches the order
-            # key: MISMATCH_WITH_DISTINCT_INPUT). Both are spelled as
-            # the collect → sort → [distinct] → [slice] pipeline
-            # dialect.group_concat builds.
-            if order_key is None:
-                coll = (
-                    f"collect_set({inner})" if distinct
-                    else f"collect_list({inner})"
-                )
-                vals = f"sort_array({coll})"
-            else:
-                if _top_level_search(r",", order_key):
-                    raise ValueError(
-                        "GROUP_CONCAT with LIMIT or DISTINCT supports"
-                        " one ORDER BY key"
-                    )
-                asc = "true" if order_asc else "false"
-                vals = (
-                    f"transform(sort_array(collect_list(struct("
-                    f"({order_key}) AS k, ({inner}) AS v)), {asc}),"
-                    " s -> s.v)"
-                )
-                if distinct:
-                    vals = f"array_distinct({vals})"
-            if limit is not None:
-                out.append(
-                    f"array_join(slice({vals}, 1, {limit}), {sep})"
-                )
-            else:
-                # fold the non-NULL values from a NULL start, so a
-                # group of only NULLs stays NULL, as in listagg
-                out.append(
-                    f"aggregate(array_compact({vals}),"
-                    " CAST(NULL AS STRING),"
-                    f" (acc, s) -> concat_ws({sep}, acc,"
-                    " CAST(s AS STRING)))"
-                )
+        out.append(repl)
         i = end
+    out.append(masked[i:])
     return "".join(out)
 
 
-def _rewrite_format_calls(masked: str, store: list[str]) -> str:
-    for name, template, what in (
-        ("DATE_FORMAT", "date_format({0}, {1})", "format"),
-        # TIME_FORMAT is DATE_FORMAT restricted to time specifiers
-        # (func_time_format via funcexp.cpp dispatch)
-        ("TIME_FORMAT", "date_format({0}, {1})", "format"),
-        ("STR_TO_DATE", "to_timestamp({0}, {1})", "parse"),
-    ):
-        pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-        out, i = [], 0
-        while True:
-            m = pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-            if len(args) != 2:
-                raise ValueError(f"{name} expects 2 arguments")
-            fmt = _literal_text(args[1], store)
-            if fmt is None:
-                raise ValueError(
-                    f"{name} needs a literal {what} string to translate "
-                    "(dynamic format columns: use the DataFrame dialect layer)"
-                )
-            try:
-                java = translate_date_format(fmt)
-            except ValueError:
-                if name != "DATE_FORMAT":
-                    raise
-                # week-based / ordinal specifiers: render the dialect
-                # layer's composed Column (date_format_mariadb) to SQL
-                from mariadb_columnstore_engine_spark.functions import (
-                    dialect,
-                )
-
-                key = ("DATE_FORMAT", fmt)
-                if key not in _TPL_CACHE:
-                    _TPL_CACHE[key] = _render_column_sql(
-                        lambda c, _f=fmt: dialect.date_format_mariadb(
-                            c, _f
-                        )
-                    )
-                out.append(masked[i : m.start()])
-                out.append(_TPL_CACHE[key].format(args[0].strip()))
-                i = end
-                continue
-            ph = _PH.format(len(store))
-            store.append(_string_literal(java))
-            out.append(masked[i : m.start()])
-            out.append(template.format(args[0].strip(), ph))
-            i = end
-        masked = "".join(out)
-    return masked
+def _call_pass(table: dict):
+    """A rewrite pass ``(masked, store) -> masked`` lowering the calls
+    of ``table``'s names through the call scanner."""
+    pattern = re.compile(r"\b(" + "|".join(table) + r")\s*\(", re.IGNORECASE)
+    return lambda masked, store: _scan_calls(masked, store, pattern, table)
 
 
-#: MariaDB functions Spark SQL lacks, rewritten as inline expressions
-#: (formulas shared with functions/dialect.py and the sf_datetime
-#: batteries; TO_DAYS epoch per func_to_days.cpp — Gregorian dates only;
-#: SEC_TO_TIME covers the non-negative seconds range — negative input
-#: needs dialect.sec_to_time, which carries the sign MariaDB-style).
-_FN_TEMPLATES: tuple[tuple[str, int, str], ...] = (
+def _arity(name: str, args: list[str], n: int) -> None:
+    if len(args) != n:
+        raise ValueError(f"{name} expects {n} argument(s)")
+
+
+#: operands that need no parentheses: a name, a number, a masked
+#: literal or a template slot
+_OPERAND_RE = re.compile(r"[A-Za-z_][\w.]*|\x00\d+\x00|\d+(?:\.\d*)?|\{\d+\}")
+#: start of a call, or of a parenthesized group (keyword-led forms such
+#: as NOT (x) or EXISTS (q) are operators, not calls)
+_CALL_HEAD_RE = re.compile(
+    r"(?!(?:NOT|EXISTS|INTERVAL|CASE)\()[A-Za-z_]\w*(?=\()|(?=\()",
+    re.IGNORECASE,
+)
+
+
+def _operand(x: str) -> str:
+    """Masked ``x`` as one operand: unchanged when it already is one (a
+    name, number, masked literal, call or parenthesized group),
+    parenthesized otherwise."""
+    if _OPERAND_RE.fullmatch(x):
+        return x
+    m = _CALL_HEAD_RE.match(x)
+    if m and _find_balanced(x, m.end()) == len(x):
+        return x
+    return f"({x})"
+
+
+_SLOT_RE = re.compile(r"\{(\d+)\}")
+
+
+class _Template:
+    """SQL text with ``{k}`` argument slots, its quoted literals masked
+    out at construction, so a fill never scans raw quotes."""
+
+    def __init__(self, sql: str) -> None:
+        text, self.literals = _mask(sql)
+        self.text = _operand(text)
+
+    def fill(self, args: list[str], store: list[str]) -> str:
+        base = len(store)
+        store.extend(self.literals)
+        text = _PH_RE.sub(
+            lambda m: _PH.format(base + int(m.group(1))), self.text
+        )
+        args = [_operand(a) for a in args]
+        return _SLOT_RE.sub(lambda m: args[int(m.group(1))], text)
+
+
+# ---- the Catalyst renderer ------------------------------------------------
+#
+# A function the registry plans also call has its one definition in the
+# dialect layer as a (unit-tested) Column expression. The renderer turns
+# that Column into SQL text through Catalyst's analyzed plan, so the SQL
+# front end runs exactly the same semantics instead of a parallel
+# formula. Each probe column is typed so analysis adds no implicit cast
+# the real argument would not need ("void" = the NULL type, for
+# arguments of any type).
+
+_ARG_RE = re.compile(r"__mcs_arg(\d+)__")
+_TPL_CACHE: dict = {}
+
+
+def _render(
+    name: str, build, arg_types: tuple, params: tuple = ()
+) -> _Template:
+    """Template of ``build(arg0, …)`` over one probe column per entry
+    of ``arg_types``, cached by name, arity and the literal ``params``
+    that ``build`` closes over."""
+    key = (name, len(arg_types), *params)
+    tpl = _TPL_CACHE.get(key)
+    if tpl is not None:
+        return tpl
+    # getActiveSession() resolves through a JVM-thread-local, and py4j
+    # maps each *Python* thread to its own JVM thread — so a worker
+    # thread that never built the session sees None even while the
+    # process has one running. Fall back to the process-global
+    # instantiated session (set on creation, cleared on stop).
+    spark = (
+        SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    )
+    if spark is None:
+        raise ValueError(
+            f"{name} translation needs an active SparkSession"
+            " (use Engine.sql, or start a session first)"
+        )
+    names = [f"__mcs_arg{k}__" for k in range(len(arg_types))]
+    probes = [
+        (F.lit(None) if t == "void" else F.lit(None).cast(t)).alias(n)
+        for n, t in zip(names, arg_types)
+    ]
+    df = spark.range(1).select(*probes).select(
+        build(*map(F.col, names)).alias("__out__")
+    )
+    expr = df._jdf.queryExecution().analyzed().expressions().apply(0)
+    tpl = _Template(_ARG_RE.sub(r"{\1}", expr.child().sql()))
+    _TPL_CACHE[key] = tpl
+    return tpl
+
+
+# ---- the function table ---------------------------------------------------
+
+
+def _sql(n_args: int, template: str):
+    """Lowering by a SQL template with ``n_args`` slots."""
+    tpl = _Template(template)
+
+    def lower(name: str, args: list[str], store: list[str]) -> str:
+        _arity(name, args, n_args)
+        return tpl.fill(args, store)
+
+    return lower
+
+
+def _helper(build, *arg_types: str):
+    """Lowering by the dialect helper ``build`` over ``arg_types``."""
+
+    def lower(name: str, args: list[str], store: list[str]) -> str:
+        _arity(name, args, len(arg_types))
+        return _render(name, build, arg_types).fill(args, store)
+
+    return lower
+
+
+def _format_helper(build, arg_type: str):
+    """DATE_FORMAT / TIME_FORMAT / STR_TO_DATE: the %-format is a
+    literal parameter of the helper."""
+
+    def lower(name: str, args: list[str], store: list[str]) -> str:
+        _arity(name, args, 2)
+        fmt = _literal_text(args[1], store)
+        if fmt is None:
+            raise ValueError(
+                f"{name} needs a literal format string to translate "
+                "(dynamic format columns: use the DataFrame dialect layer)"
+            )
+        tpl = _render(name, lambda c: build(c, fmt), (arg_type,), (fmt,))
+        return tpl.fill(args[:1], store)
+
+    return lower
+
+
+def _week_helper(build):
+    """WEEK / YEARWEEK (date[, mode]): the mode is a literal 0-7."""
+
+    def lower(name: str, args: list[str], store: list[str]) -> str:
+        if len(args) not in (1, 2):
+            raise ValueError(f"{name} expects 1 or 2 arguments")
+        if len(args) == 2 and not re.fullmatch(r"[0-7]", args[1]):
+            raise ValueError(f"{name} mode must be a literal 0-7")
+        mode = int(args[1]) if len(args) == 2 else 0
+        tpl = _render(name, lambda c: build(c, mode), ("date",), (mode,))
+        return tpl.fill(args[:1], store)
+
+    return lower
+
+
+def _refuse(message: str):
+    def lower(name: str, args: list[str], store: list[str]) -> str:
+        raise ValueError(message)
+
+    return lower
+
+
+def _field(name: str, args: list[str], store: list[str]) -> str:
+    """FIELD(x, a, b, ...): 1-based index of x in the list, 0 when
+    absent or x NULL (func_field semantics match array_position's
+    not-found = 0 with a NULL-x coalesce)."""
+    if len(args) < 2:
+        raise ValueError("FIELD expects at least 2 arguments")
+    return (
+        f"coalesce(array_position(array({', '.join(args[1:])}), "
+        f"{args[0]}), 0)"
+    )
+
+
+def _make_set(name: str, args: list[str], store: list[str]) -> str:
+    """MAKE_SET(bits, s1, ..., sn): comma-join of the strings whose bit
+    is set; NULL items are skipped (concat_ws semantics = MariaDB's)."""
+    if len(args) < 2:
+        raise ValueError("MAKE_SET expects at least 2 arguments")
+    items = ", ".join(
+        f"(CASE WHEN (shiftright(cast({args[0]} as bigint), {k})"
+        f" & 1) = 1 THEN {a} END)"
+        for k, a in enumerate(args[1:])
+    )
+    return f"concat_ws(',', {items})"
+
+
+def _char(name: str, args: list[str], store: list[str]) -> str | None:
+    """CHAR(c1, c2, ...): per-code-point chars concatenated, NULL args
+    skipped (MariaDB CHAR); single-arg CHAR is Spark-native."""
+    if len(args) <= 1:
+        return None
+    return f"concat_ws('', {', '.join(f'char({a})' for a in args)})"
+
+
+#: GET_FORMAT lookup (func_get_format.cpp; the MySQL/MariaDB table).
+_GET_FORMATS = {
+    ("DATE", "USA"): "%m.%d.%Y",
+    ("DATE", "JIS"): "%Y-%m-%d",
+    ("DATE", "ISO"): "%Y-%m-%d",
+    ("DATE", "EUR"): "%d.%m.%Y",
+    ("DATE", "INTERNAL"): "%Y%m%d",
+    ("DATETIME", "USA"): "%Y-%m-%d %H.%i.%s",
+    ("DATETIME", "JIS"): "%Y-%m-%d %H:%i:%s",
+    ("DATETIME", "ISO"): "%Y-%m-%d %H:%i:%s",
+    ("DATETIME", "EUR"): "%Y-%m-%d %H.%i.%s",
+    ("DATETIME", "INTERNAL"): "%Y%m%d%H%i%s",
+    ("TIME", "USA"): "%h:%i:%s %p",
+    ("TIME", "JIS"): "%H:%i:%s",
+    ("TIME", "ISO"): "%H:%i:%s",
+    ("TIME", "EUR"): "%H.%i.%s",
+    ("TIME", "INTERNAL"): "%H%i%s",
+}
+
+
+def _get_format(name: str, args: list[str], store: list[str]) -> str:
+    """GET_FORMAT(DATE|TIME|DATETIME|TIMESTAMP, <region>) → a CASE
+    over the region string with the documented literal formats
+    (NULL for unknown regions, matching MariaDB)."""
+    _arity(name, args, 2)
+    kw = args[0].upper()
+    kw = "DATETIME" if kw == "TIMESTAMP" else kw
+    whens = " ".join(
+        f"WHEN '{r}' THEN '{f}'" for (k, r), f in _GET_FORMATS.items()
+        if k == kw
+    )
+    if not whens:
+        raise ValueError(
+            f"GET_FORMAT first argument must be DATE/TIME/"
+            f"DATETIME/TIMESTAMP, got {args[0]!r}"
+        )
+    return f"(CASE UPPER({args[1]}) {whens} ELSE NULL END)"
+
+
+#: MariaDB functions Spark SQL lacks or spells differently, one
+#: lowering each. TO_DAYS epoch per func_to_days.cpp — Gregorian dates
+#: only.
+_FUNCTIONS = {
     # JSON_VALUE (func_json_value.cpp; MCOL-5607): scalar at path,
     # NULL when the path lands on an object/array. JSON_QUERY is the
     # mirror (fragment at path, NULL for scalars). get_json_object
@@ -346,152 +480,63 @@ _FN_TEMPLATES: tuple[tuple[str, int, str], ...] = (
     # merely LOOKS brace-y ('{x}') classifies correctly — the only
     # misclassification left is a scalar string whose unquoted text IS
     # valid JSON ('"[1]"'), which MariaDB itself treats as scalar.
-    (
-        "JSON_VALUE",
+    "JSON_VALUE": _sql(
         2,
         "(CASE WHEN json_object_keys(get_json_object({0}, {1}))"
         " IS NOT NULL"
         " OR json_array_length(get_json_object({0}, {1})) IS NOT NULL"
         " THEN NULL ELSE get_json_object({0}, {1}) END)",
     ),
-    (
-        "JSON_QUERY",
+    "JSON_QUERY": _sql(
         2,
         "(CASE WHEN json_object_keys(get_json_object({0}, {1}))"
         " IS NOT NULL"
         " OR json_array_length(get_json_object({0}, {1})) IS NOT NULL"
         " THEN get_json_object({0}, {1}) ELSE NULL END)",
     ),
-    ("TIME_TO_SEC", 1, "(hour({0}) * 3600 + minute({0}) * 60 + second({0}))"),
-    (
-        "SEC_TO_TIME",
-        1,
-        "concat(lpad(cast(cast(floor(({0}) / 3600) as bigint) as string),"
-        " 2, '0'), ':',"
-        " lpad(cast(cast(floor((({0}) % 3600) / 60) as bigint) as string),"
-        " 2, '0'), ':',"
-        " lpad(cast(cast(({0}) % 60 as bigint) as string), 2, '0'))",
-    ),
-    ("TO_DAYS", 1, "(datediff({0}, DATE'1970-01-01') + 719528)"),
+    "TO_DAYS": _sql(1, "(datediff({0}, DATE'1970-01-01') + 719528)"),
     # TO_SECONDS (mcs250): seconds since year 0 = unix epoch seconds +
     # 719528 days * 86400 (= 62167219200). The argument is bound exactly
     # ONCE: the session runs UTC (session.py), so unix_timestamp round-
     # trips the wall-clock value and an expensive or non-deterministic
     # argument (TO_SECONDS(NOW()) near midnight) can't mix date and time
     # from different evaluations.
-    (
-        "TO_SECONDS",
+    "TO_SECONDS": _sql(
         1,
         "(cast(floor(unix_timestamp(cast({0} as timestamp))) as bigint)"
         " + 62167219200)",
     ),
-    (
-        "FROM_DAYS",
-        1,
-        "date_add(DATE'1970-01-01', cast(({0}) - 719528 as int))",
+    "FROM_DAYS": _sql(
+        1, "date_add(DATE'1970-01-01', cast(({0}) - 719528 as int))"
     ),
-    ("FORMAT", 2, "format_number({0}, {1})"),
-    (
-        "INET_ATON",
-        1,
-        "(cast(element_at(split({0}, '\\\\.'), 1) as bigint) * 16777216"
-        " + cast(element_at(split({0}, '\\\\.'), 2) as bigint) * 65536"
-        " + cast(element_at(split({0}, '\\\\.'), 3) as bigint) * 256"
-        " + cast(element_at(split({0}, '\\\\.'), 4) as bigint))",
-    ),
-    (
-        "INET_NTOA",
-        1,
-        "concat(cast(cast(floor(({0}) / 16777216) % 256 as bigint) as"
-        " string), '.',"
-        " cast(cast(floor(({0}) / 65536) % 256 as bigint) as string), '.',"
-        " cast(cast(floor(({0}) / 256) % 256 as bigint) as string), '.',"
-        " cast(cast(({0}) % 256 as bigint) as string))",
-    ),
+    "FORMAT": _sql(2, "format_number({0}, {1})"),
     # func_strcmp.cpp: -1/0/1 three-way compare, NULL-propagating
-    (
-        "STRCMP",
+    "STRCMP": _sql(
         2,
         "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL"
         " WHEN ({0}) < ({1}) THEN -1 WHEN ({0}) = ({1}) THEN 0"
         " ELSE 1 END)",
     ),
-    ("SPACE", 1, "repeat(' ', {0})"),
-    ("OCT", 1, "conv(cast({0} as string), 10, 8)"),
+    "SPACE": _sql(1, "repeat(' ', {0})"),
+    "OCT": _sql(1, "conv(cast({0} as string), 10, 8)"),
     # MariaDB string functions coerce numeric args to their string
     # form (Item_str_func; mcs7092 md5(d_datekey)); Spark's md5/sha
     # require binary and reverse requires string/array — the cast is a
     # no-op for string args and supplies the MariaDB read for numbers
-    ("MD5", 1, "md5(cast({0} as string))"),
-    ("SHA1", 1, "sha1(cast({0} as string))"),
-    ("SHA", 1, "sha1(cast({0} as string))"),
-    ("SHA2", 2, "sha2(cast({0} as string), cast({1} as int))"),
-    ("REVERSE", 1, "reverse(cast({0} as string))"),
-    # func_makedate.cpp: Jan 1 of year + (doy - 1); NULL when doy < 1
-    (
-        "MAKEDATE",
-        2,
-        "(CASE WHEN ({1}) < 1 THEN NULL ELSE"
-        " date_add(make_date(cast({0} as int), 1, 1),"
-        " cast(({1}) - 1 as int)) END)",
-    ),
-    # PERIOD_ADD / PERIOD_DIFF (func_period_diff.test; two-digit-year
-    # periods century-resolved with the 70 cutoff, dialect._period_months)
-    (
-        "PERIOD_ADD",
-        2,
-        "(CASE WHEN ({MONTHS0}) + cast({1} as bigint) = 0 THEN 0 ELSE"
-        " (CASE WHEN (({MONTHS0}) + cast({1} as bigint)) div 12 < 70"
-        "   THEN (({MONTHS0}) + cast({1} as bigint)) div 12 + 2000"
-        "  WHEN (({MONTHS0}) + cast({1} as bigint)) div 12 < 100"
-        "   THEN (({MONTHS0}) + cast({1} as bigint)) div 12 + 1900"
-        "  ELSE (({MONTHS0}) + cast({1} as bigint)) div 12 END) * 100"
-        " + (({MONTHS0}) + cast({1} as bigint)) % 12 + 1 END)",
-    ),
-    ("PERIOD_DIFF", 2, "(({MONTHS0}) - ({MONTHS1}))"),
-    # ADDTIME/SUBTIME shift by a non-negative 'HH:MM:SS' offset (the
-    # signed form needs dialect.add_time, same caveat as SEC_TO_TIME)
-    (
-        "ADDTIME",
-        2,
-        "timestampadd(SECOND,"
-        " (hour({1}) * 3600 + minute({1}) * 60 + second({1})), {0})",
-    ),
-    (
-        "SUBTIME",
-        2,
-        "timestampadd(SECOND,"
-        " -(hour({1}) * 3600 + minute({1}) * 60 + second({1})), {0})",
-    ),
-    # TIMEDIFF → signed 'HH:MM:SS' (sign-aware, unlike SEC_TO_TIME)
-    (
-        "TIMEDIFF",
-        2,
-        "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL ELSE"
-        " concat(CASE WHEN cast(cast({0} as timestamp) as bigint)"
-        "   < cast(cast({1} as timestamp) as bigint) THEN '-' ELSE ''"
-        "  END,"
-        " lpad(cast(abs(cast(cast({0} as timestamp) as bigint)"
-        "   - cast(cast({1} as timestamp) as bigint)) div 3600"
-        "   as string), 2, '0'), ':',"
-        " lpad(cast(abs(cast(cast({0} as timestamp) as bigint)"
-        "   - cast(cast({1} as timestamp) as bigint)) % 3600 div 60"
-        "   as string), 2, '0'), ':',"
-        " lpad(cast(abs(cast(cast({0} as timestamp) as bigint)"
-        "   - cast(cast({1} as timestamp) as bigint)) % 60"
-        "   as string), 2, '0')) END)",
-    ),
+    "MD5": _sql(1, "md5(cast({0} as string))"),
+    "SHA1": _sql(1, "sha1(cast({0} as string))"),
+    "SHA": _sql(1, "sha1(cast({0} as string))"),
+    "SHA2": _sql(2, "sha2(cast({0} as string), cast({1} as int))"),
+    "REVERSE": _sql(1, "reverse(cast({0} as string))"),
     # TRUNCATE(X, D) toward zero in DECIMAL arithmetic (func_truncate
-    # .cpp; double×10^d would turn 0.29*100 into 28.999…996 — mirrors
-    # dialect.truncate_number's decimal path incl. negative D, which
-    # truncates left of the point: TRUNCATE(123.45, -1) = 120). The
-    # D>=0 branch is X − X % 10^(−D): SQL % follows the dividend's
-    # sign so the remainder-strip truncates toward zero for BOTH
-    # signs, the mod never widens past the operand scale, and — unlike
-    # the old floor(X·10^D) form — a large X (TRUNCATE of a REGR_SXX
+    # .cpp; double×10^d would turn 0.29*100 into 28.999…996), incl.
+    # negative D, which truncates left of the point: TRUNCATE(123.45,
+    # -1) = 120. The D>=0 branch is X − X % 10^(−D): SQL % follows the
+    # dividend's sign so the remainder-strip truncates toward zero for
+    # BOTH signs, the mod never widens past the operand scale, and —
+    # unlike a floor(X·10^D) form — a large X (TRUNCATE of a REGR_SXX
     # in the e12 range, mcs6203) can't overflow the 38-digit product.
-    (
-        "TRUNCATE",
+    "TRUNCATE": _sql(
         2,
         "cast((CASE WHEN ({1}) >= 0 THEN"
         " cast({0} as decimal(38,15))"
@@ -510,8 +555,7 @@ _FN_TEMPLATES: tuple[tuple[str, int, str], ...] = (
     # INSERT(str, pos, len, newstr) (func_insert.cpp edge semantics:
     # pos out of 1..len(str) → unchanged; len < 0 or past end →
     # replace the rest; NULL in → NULL out via concat/substr nulls)
-    (
-        "INSERT",
+    "INSERT": _sql(
         4,
         "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL OR ({2}) IS NULL"
         "   OR ({3}) IS NULL THEN NULL"
@@ -521,7 +565,7 @@ _FN_TEMPLATES: tuple[tuple[str, int, str], ...] = (
         " ELSE concat(substr({0}, 1, ({1}) - 1), {3},"
         "   substr({0}, ({1}) + ({2}))) END)",
     ),
-    ("MID", 3, "substring({0}, {1}, {2})"),
+    "MID": _sql(3, "substring({0}, {1}, {2})"),
     # CONVERT_TZ with named IANA zones OR fixed offsets (func_convert_tz
     # .cpp — the reference inherits mysqld's tz tables; Spark's zone
     # parser accepts both 'America/New_York' and '+05:30'). The dt
@@ -529,205 +573,187 @@ _FN_TEMPLATES: tuple[tuple[str, int, str], ...] = (
     # it as UTC, from_utc_timestamp renders it in to_tz — DST-correct on
     # both legs (verified at the 2021-03-14 US spring-forward boundary,
     # tests/test_dialect.py).
-    (
-        "CONVERT_TZ",
-        3,
-        "from_utc_timestamp(to_utc_timestamp({0}, {1}), {2})",
+    "CONVERT_TZ": _sql(
+        3, "from_utc_timestamp(to_utc_timestamp({0}, {1}), {2})"
     ),
     # ORD == ASCII for single-byte charsets (func_ascii; the multibyte
     # leading-byte arithmetic form is out of scope — documents ASCII)
-    ("ORD", 1, "ascii({0})"),
-)
+    "ORD": _sql(1, "ascii({0})"),
+    "FIELD": _field,
+    "MAKE_SET": _make_set,
+    "CHAR": _char,
+    "GET_FORMAT": _get_format,
+    # the dialect helpers: TIME is rendered as its 'HH:MM:SS' string
+    # (sign-aware, hours past 24), periods are YYYYMM or YYMM
+    "SEC_TO_TIME": _helper(dialect.sec_to_time, "bigint"),
+    "TIME_TO_SEC": _helper(dialect.time_to_sec, "string"),
+    "ADDTIME": _helper(dialect.add_time, "timestamp", "string"),
+    "SUBTIME": _helper(dialect.subtime, "timestamp", "string"),
+    "TIMEDIFF": _helper(dialect.timediff, "timestamp", "timestamp"),
+    "MAKEDATE": _helper(dialect.makedate, "bigint", "bigint"),
+    "MAKETIME": _helper(dialect.maketime, "bigint", "bigint", "bigint"),
+    "PERIOD_ADD": _helper(dialect.period_add, "bigint", "bigint"),
+    "PERIOD_DIFF": _helper(dialect.period_diff, "bigint", "bigint"),
+    "INET_ATON": _helper(dialect.inet_aton, "string"),
+    "INET_NTOA": _helper(dialect.inet_ntoa, "bigint"),
+    "DATE_FORMAT": _format_helper(dialect.date_format_mariadb, "timestamp"),
+    # TIME_FORMAT is DATE_FORMAT restricted to time specifiers
+    # (func_time_format via funcexp.cpp dispatch)
+    "TIME_FORMAT": _format_helper(dialect.date_format_mariadb, "timestamp"),
+    "STR_TO_DATE": _format_helper(dialect.str_to_date, "string"),
+    "WEEK": _week_helper(dialect.week_mode),
+    "YEARWEEK": _week_helper(dialect.yearweek_mode),
+    # JSON formatters (func_json_format.cpp + json_normalize)
+    "JSON_COMPACT": _helper(json_ext.json_compact, "string"),
+    "JSON_LOOSE": _helper(json_ext.json_loose, "string"),
+    "JSON_DETAILED": _refuse(
+        "JSON_DETAILED (multi-line pretty print) has no Spark "
+        "translation; use JSON_LOOSE for readable one-line form"
+    ),
+    # json_ext.json_normalize exists as a Column function, but its
+    # higher-order lambdas don't render to re-parseable SQL text —
+    # honest refusal instead of a mistranslation
+    "JSON_NORMALIZE": _refuse(
+        "JSON_NORMALIZE is available on the DataFrame surface "
+        "(functions.json_ext.json_normalize); its lambda-based "
+        "implementation has no SQL-text rendering"
+    ),
+}
 
-#: absolute month count of a period argument slot (mirrors
-#: dialect._period_months: YYMM century rule, period 0 → month 0)
-_PERIOD_MONTHS = (
-    "(CASE WHEN cast({n} as bigint) = 0 THEN 0 ELSE"
-    " (CASE WHEN cast({n} as bigint) div 100 < 70"
-    "   THEN cast({n} as bigint) div 100 + 2000"
-    "  WHEN cast({n} as bigint) div 100 < 100"
-    "   THEN cast({n} as bigint) div 100 + 1900"
-    "  ELSE cast({n} as bigint) div 100 END) * 12"
-    " + cast({n} as bigint) % 100 - 1 END)"
-)
+_rewrite_functions = _call_pass(_FUNCTIONS)
 
 
-def _rewrite_fn_templates(masked: str, store: list[str]) -> str:
-    for name, n_args, template in _FN_TEMPLATES:
-        pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-        out, i = [], 0
-        while True:
-            m = pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-            if len(args) != n_args:
-                raise ValueError(f"{name} expects {n_args} argument(s)")
-            a = [x.strip() for x in args]
-            tpl = template
-            # {MONTHSn} slots expand to the period-months formula of
-            # argument n (PERIOD_ADD/PERIOD_DIFF)
-            for slot in range(n_args):
-                tpl = tpl.replace(
-                    "{MONTHS%d}" % slot,
-                    _PERIOD_MONTHS.replace("{n}", "{%d}" % slot),
-                )
-            out.append(masked[i : m.start()])
-            out.append(tpl.format(*a))
-            i = end
-        masked = "".join(out)
-    # FIELD(x, a, b, ...) — variadic: 1-based index of x in the list,
-    # 0 when absent or x NULL (func_field semantics match
-    # array_position's not-found = 0 with a NULL-x coalesce)
-    pat = re.compile(r"\bFIELD\s*\(", re.IGNORECASE)
-    out, i = [], 0
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = [
-            x.strip()
-            for x in _split_top_level_commas(masked[open_at + 1 : end - 1])
-        ]
-        if len(args) < 2:
-            raise ValueError("FIELD expects at least 2 arguments")
-        out.append(masked[i : m.start()])
-        out.append(
-            f"coalesce(array_position(array({', '.join(args[1:])}), "
-            f"{args[0]}), 0)"
+def _group_concat(name: str, args: list[str], store: list[str]) -> str:
+    inner = ", ".join(args)
+    distinct = ""
+    dm = re.match(r"DISTINCT\b", inner, re.IGNORECASE)
+    if dm:
+        distinct = "DISTINCT "
+        inner = inner[dm.end() :].strip()
+
+    limit = None
+    lm = _top_level_search(r"\bLIMIT\s+(\d+)\s*$", inner)
+    if lm:
+        limit = int(lm.group(1))
+        inner = inner[: lm.start()].strip()
+    elif _top_level_search(r"\bLIMIT\b", inner):
+        raise ValueError(
+            "GROUP_CONCAT LIMIT must be a trailing integer literal"
         )
-        i = end
-    masked = "".join(out)
-    # MAKE_SET(bits, s1, ..., sn): comma-join of the strings whose bit
-    # is set; NULL items are skipped (concat_ws semantics = MariaDB's)
-    pat = re.compile(r"\bMAKE_SET\s*\(", re.IGNORECASE)
-    out, i = [], 0
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = [
-            x.strip()
-            for x in _split_top_level_commas(masked[open_at + 1 : end - 1])
-        ]
-        if len(args) < 2:
-            raise ValueError("MAKE_SET expects at least 2 arguments")
-        items = ", ".join(
-            f"(CASE WHEN (shiftright(cast({args[0]} as bigint), {k})"
-            f" & 1) = 1 THEN {a} END)"
-            for k, a in enumerate(args[1:])
+
+    sep = "','"
+    sm = _top_level_search(r"\bSEPARATOR\b", inner)
+    if sm:
+        sep = inner[sm.end() :].strip()
+        inner = inner[: sm.start()].strip()
+
+    order = ""
+    order_key, order_asc = None, True
+    om = _top_level_search(r"\bORDER\s+BY\b", inner)
+    if om:
+        spec = inner[om.end() :].strip()
+        order = f" WITHIN GROUP (ORDER BY {spec})"
+        inner = inner[: om.start()].strip()
+        am = re.fullmatch(
+            r"(.+?)\s+(ASC|DESC)", spec, re.IGNORECASE | re.DOTALL
         )
-        out.append(masked[i : m.start()])
-        out.append(f"concat_ws(',', {items})")
-        i = end
-    masked = "".join(out)
-    # CHAR(c1, c2, ...): per-code-point chars concatenated, NULL args
-    # skipped (MariaDB CHAR); single-arg CHAR is Spark-native
-    pat = re.compile(r"\bCHAR\s*\(", re.IGNORECASE)
-    out, i = [], 0
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = [
-            x.strip()
-            for x in _split_top_level_commas(masked[open_at + 1 : end - 1])
-        ]
-        out.append(masked[i : m.start()])
-        if len(args) <= 1:
-            out.append(masked[m.start() : end])
-        else:
-            chars = ", ".join(f"char({a})" for a in args)
-            out.append(f"concat_ws('', {chars})")
-        i = end
-    masked = "".join(out)
-    return masked
+        order_key = am.group(1) if am else spec
+        order_asc = not (am and am.group(2).upper() == "DESC")
+
+    if _top_level_search(r",", inner):
+        # GROUP_CONCAT(e1, e2, ...) concatenates the expressions
+        # per row (MariaDB expr-list form) — left as-is, e2 would
+        # silently become listagg's separator
+        inner = (
+            "concat("
+            + ", ".join(p.strip() for p in _split_top_level_commas(inner))
+            + ")"
+        )
+    if limit is None and not (distinct and order_key is not None):
+        return f"listagg({distinct}{inner}, {sep}){order}"
+    # GROUP_CONCAT(... LIMIT n) — MariaDB 10.6 extension
+    # (dbcon/joblist/groupconcat.cpp's limit): first n of the
+    # ordered (deduped) list — and DISTINCT with ORDER BY,
+    # which listagg rejects for non-string input (it casts its
+    # input to string, which then no longer matches the order
+    # key: MISMATCH_WITH_DISTINCT_INPUT). Both are spelled as
+    # the collect → sort → [distinct] → [slice] pipeline
+    # dialect.group_concat builds.
+    if order_key is None:
+        coll = (
+            f"collect_set({inner})" if distinct
+            else f"collect_list({inner})"
+        )
+        vals = f"sort_array({coll})"
+    else:
+        if _top_level_search(r",", order_key):
+            raise ValueError(
+                "GROUP_CONCAT with LIMIT or DISTINCT supports"
+                " one ORDER BY key"
+            )
+        asc = "true" if order_asc else "false"
+        vals = (
+            f"transform(sort_array(collect_list(struct("
+            f"({order_key}) AS k, ({inner}) AS v)), {asc}),"
+            " s -> s.v)"
+        )
+        if distinct:
+            vals = f"array_distinct({vals})"
+    if limit is not None:
+        return f"array_join(slice({vals}, 1, {limit}), {sep})"
+    # fold the non-NULL values from a NULL start, so a group of only
+    # NULLs stays NULL, as in listagg
+    return (
+        f"aggregate(array_compact({vals}),"
+        " CAST(NULL AS STRING),"
+        f" (acc, s) -> concat_ws({sep}, acc,"
+        " CAST(s AS STRING)))"
+    )
 
 
-_NULL_FNS_RE = re.compile(
-    r"\b(?:(GREATEST|LEAST)|SYSDATE)\s*\(", re.IGNORECASE
-)
+_rewrite_group_concat = _call_pass({"GROUP_CONCAT": _group_concat})
 
 
-def _rewrite_null_fns(masked: str) -> str:
+def _null_fn(name: str, args: list[str], store: list[str]) -> str:
     """GREATEST/LEAST return NULL when any argument is NULL
     (func_case.cpp least/greatest family), where Spark's skip NULLs;
     SYSDATE([p]) is the statement's timestamp at precision ``p``
     (default 0) — Spark fixes ``current_timestamp`` per query, which
-    rules out true per-call wall-clock time. A statement without these
-    names costs one regex scan."""
-    out, i = [], 0
-    while m := _NULL_FNS_RE.search(masked, i):
-        open_at = m.end() - 1
-        end = _find_balanced(masked, open_at)
-        inner = masked[open_at + 1 : end - 1].strip()
-        out.append(masked[i : m.start()])
-        if m.group(1):
-            args = [
-                _rewrite_null_fns(a.strip())
-                for a in _split_top_level_commas(inner)
-            ]
-            nulls = " OR ".join(f"({a}) IS NULL" for a in args)
-            out.append(
-                f"(CASE WHEN {nulls} THEN NULL "
-                f"ELSE {m.group(1).lower()}({', '.join(args)}) END)"
-            )
-        else:
-            digits = 6 - int(inner or 0)
-            if digits <= 0:
-                out.append("current_timestamp()")
-            else:
-                out.append(
-                    "timestamp_micros(unix_micros(current_timestamp()) "
-                    f"div {10 ** digits} * {10 ** digits})"
-                )
-        i = end
-    out.append(masked[i:])
-    return "".join(out)
+    rules out true per-call wall-clock time."""
+    if name == "SYSDATE":
+        digits = 6 - int(args[0] if args else 0)
+        if digits <= 0:
+            return "current_timestamp()"
+        return (
+            "timestamp_micros(unix_micros(current_timestamp()) "
+            f"div {10 ** digits} * {10 ** digits})"
+        )
+    nulls = " OR ".join(f"({a}) IS NULL" for a in args)
+    return (
+        f"(CASE WHEN {nulls} THEN NULL "
+        f"ELSE {name.lower()}({', '.join(args)}) END)"
+    )
 
 
-def _rewrite_interval_arith(masked: str, store: list[str]) -> str:
+_rewrite_null_fns = _call_pass(
+    dict.fromkeys(("GREATEST", "LEAST", "SYSDATE"), _null_fn)
+)
+
+
+def _interval_arith(name: str, args: list[str], store: list[str]):
     """DATE_ADD/DATE_SUB/ADDDATE/SUBDATE with an INTERVAL second argument
     → plain interval arithmetic (Spark's date_add only takes day counts;
-    the integer-days form parses natively and is left alone)."""
-    for names, op in ((("DATE_ADD", "ADDDATE"), "+"), (("DATE_SUB", "SUBDATE"), "-")):
-        for name in names:
-            pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-            out, i = [], 0
-            while True:
-                m = pat.search(masked, i)
-                if not m:
-                    out.append(masked[i:])
-                    break
-                open_at = masked.index("(", m.start())
-                end = _find_balanced(masked, open_at)
-                args = _split_top_level_commas(
-                    masked[open_at + 1 : end - 1]
-                )
-                out.append(masked[i : m.start()])
-                if len(args) == 2 and re.match(
-                    r"\s*INTERVAL\b", args[1], re.IGNORECASE
-                ):
-                    out.append(
-                        f"({args[0].strip()} {op} {args[1].strip()})"
-                    )
-                else:  # integer-days form: Spark-native, keep verbatim
-                    out.append(masked[m.start() : end])
-                i = end
-            masked = "".join(out)
-    return masked
+    the integer-days form parses natively and is left as written)."""
+    if len(args) == 2 and re.match(r"INTERVAL\b", args[1], re.IGNORECASE):
+        op = "+" if name in ("DATE_ADD", "ADDDATE") else "-"
+        return f"({args[0]} {op} {args[1]})"
+    return None
+
+
+_rewrite_interval_arith = _call_pass(
+    dict.fromkeys(("DATE_ADD", "ADDDATE", "DATE_SUB", "SUBDATE"),
+                  _interval_arith)
+)
 
 
 def _rewrite_with_rollup(masked: str, store: list[str]) -> str:
@@ -846,8 +872,8 @@ def _loose_numeric_cast_emit(
     round-trip, including E-notation into decimal casts).
 
     The emission is MASKED text: its quoted literals are stashed as
-    placeholders so later pipeline passes (fn templates, CORR, week
-    functions) still rewrite any MariaDB spellings INSIDE the operand
+    placeholders so later pipeline passes (the function table, CORR)
+    still rewrite any MariaDB spellings INSIDE the operand
     copies, while no masked-text scan can misread the literals.
     """
 
@@ -1306,6 +1332,75 @@ def _loose_cast_pass(
     return "".join(out)
 
 
+_ZERO_DATE_CAST_RE = re.compile(
+    r"\bCAST\s*\(\s*(\x00\d+\x00)\s+AS\s+(DATE|TIMESTAMP)\s*\)",
+    re.IGNORECASE,
+)
+_ZERO_DATE_RE = re.compile(r"0000-00-00(?: 00:00:00(?:\.0*)?)?")
+
+
+def _cast_char_n(name: str, args: list[str], store: list[str]):
+    """CAST(expr AS CHAR(n)) → an explicit truncation that wraps the
+    whole expr (MariaDB truncates where Spark's CHAR(n) pads)."""
+    inner = ", ".join(args)
+    am = re.search(
+        r"\bAS\s+CHAR\s*\(\s*(\d+)\s*\)\s*$", inner, re.IGNORECASE
+    )
+    if not am:
+        return None
+    expr = inner[: am.start()].strip()
+    return f"substring(CAST({expr} AS STRING), 1, {am.group(1)})"
+
+
+_rewrite_cast_char_n = _call_pass({"CAST": _cast_char_n})
+
+
+def _convert(name: str, args: list[str], store: list[str]) -> str:
+    """MariaDB ``CONVERT(expr, type)`` → ``CAST(expr AS type)``, and
+    ``CONVERT(expr USING charset)``: every Spark string is UTF-8, so a
+    charset transcode is a documented no-op cast-to-string (binary
+    target keeps bytes)."""
+    if len(args) == 1:
+        um = re.match(
+            r"(.+)\s+USING\s+(\w+)\s*$", args[0], re.IGNORECASE | re.DOTALL
+        )
+        if not um:
+            raise ValueError("CONVERT expects 2 arguments")
+        cs = um.group(2).lower()
+        if cs not in (
+            "utf8", "utf8mb3", "utf8mb4", "latin1", "ascii",
+            "ucs2", "utf16", "utf32", "binary",
+        ):
+            raise ValueError(f"CONVERT USING: unknown charset {cs!r}")
+        target = "BINARY" if cs == "binary" else "STRING"
+        return f"CAST({um.group(1).strip()} AS {target})"
+    if len(args) != 2:
+        raise ValueError("CONVERT expects 1 or 2 arguments")
+    expr, t = args[0], args[1].upper()
+    cm = re.fullmatch(r"CHAR\s*\(\s*(\d+)\s*\)", t)
+    if cm:
+        # MariaDB CHAR(n) cast TRUNCATES to n chars (Spark's CHAR(n)
+        # pads instead) — emit the truncation explicitly
+        return f"substring(CAST({expr} AS STRING), 1, {cm.group(1)})"
+    targets = dict(_CAST_TARGETS)
+    if t in targets:
+        t = targets[t]
+    elif not re.fullmatch(
+        r"(DEC(IMAL)?(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?|"
+        r"DOUBLE(\s+PRECISION)?|REAL|"
+        r"SIGNED(\s+INT(EGER)?)?|UNSIGNED(\s+INT(EGER)?)?|"
+        r"FLOAT|DATE|TIMESTAMP|BIGINT|INT|BINARY)",
+        t,
+    ):
+        raise ValueError(f"CONVERT: unsupported target type {t!r}")
+    # numeric MariaDB targets stay in their MariaDB spelling here —
+    # the loose cast pass owns their lowering
+    return f"CAST({expr} AS {t})"
+
+
+_rewrite_convert = _call_pass({"CONVERT": _convert})
+
+
 def _rewrite_cast_targets(
     masked: str, store: list[str],
     numeric_columns: frozenset[str] = frozenset(),
@@ -1314,122 +1409,22 @@ def _rewrite_cast_targets(
     ``AS CHAR[(n)]`` → Spark-typed CAST targets (CHAR(n) spelled as an
     explicit truncation — MariaDB truncates where Spark's CHAR(n) pads),
     and the MariaDB two-argument ``CONVERT(expr, type)`` form →
-    ``CAST(expr AS type)``. Both rewrites loop to a fixpoint so nested
-    calls — CONVERT(CONVERT(x, CHAR), SIGNED) — fully translate."""
+    ``CAST(expr AS type)``. The call scanner lowers nested calls —
+    CONVERT(CONVERT(x, CHAR), SIGNED) — innermost-first."""
     for mdb, spark_t in _CAST_TARGETS:
         masked = re.sub(
             rf"\bAS\s+{mdb}\s*\)", f"AS {spark_t})", masked, flags=re.I
         )
-    # CAST(expr AS CHAR(n)): balanced parse (the regex pass above only
-    # handles length-less targets); truncation must wrap the whole expr
-    cast_pat = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
-    changed = True
-    while changed:
-        changed = False
-        out, i = [], 0
-        while True:
-            m = cast_pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            inner = masked[open_at + 1 : end - 1]
-            am = re.search(
-                r"\bAS\s+CHAR\s*\(\s*(\d+)\s*\)\s*$", inner, re.IGNORECASE
-            )
-            out.append(masked[i : m.start()])
-            if am:
-                expr = inner[: am.start()].strip()
-                out.append(
-                    f"substring(CAST({expr} AS STRING), 1, {am.group(1)})"
-                )
-                changed = True
-                i = end
-            else:
-                # not a CHAR(n) cast — emit just the head and keep
-                # scanning INSIDE (a nested CAST .. AS CHAR(n) may hide
-                # in the arguments)
-                out.append(masked[m.start() : open_at + 1])
-                i = open_at + 1
-        masked = "".join(out)
-    # CONVERT(expr, type) — balanced parse; loop to fixpoint because the
-    # emitted CAST embeds args[0] verbatim, which may itself contain a
-    # CONVERT (nested calls)
-    pat = re.compile(r"\bCONVERT\s*\(", re.IGNORECASE)
-    changed = True
-    while changed:
-        changed = False
-        out, i = [], 0
-        while True:
-            m = pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-            if len(args) == 1:
-                # CONVERT(expr USING charset): every Spark string is
-                # UTF-8, so a charset transcode is a documented no-op
-                # cast-to-string (binary target keeps bytes)
-                um = re.match(
-                    r"(.+)\s+USING\s+(\w+)\s*$",
-                    args[0].strip(),
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not um:
-                    raise ValueError("CONVERT expects 2 arguments")
-                cs = um.group(2).lower()
-                if cs not in (
-                    "utf8", "utf8mb3", "utf8mb4", "latin1", "ascii",
-                    "ucs2", "utf16", "utf32", "binary",
-                ):
-                    raise ValueError(
-                        f"CONVERT USING: unknown charset {cs!r}"
-                    )
-                target = "BINARY" if cs == "binary" else "STRING"
-                out.append(masked[i : m.start()])
-                out.append(f"CAST({um.group(1).strip()} AS {target})")
-                changed = True
-                i = end
-                continue
-            if len(args) != 2:
-                raise ValueError("CONVERT expects 1 or 2 arguments")
-            t = args[1].strip().upper()
-            expr = args[0].strip()
-            out.append(masked[i : m.start()])
-            cm = re.fullmatch(r"CHAR\s*\(\s*(\d+)\s*\)", t)
-            if cm:
-                # MariaDB CHAR(n) cast TRUNCATES to n chars (Spark's
-                # CHAR(n) pads instead) — emit the truncation explicitly
-                out.append(
-                    f"substring(CAST({expr} AS STRING), 1, {cm.group(1)})"
-                )
-                changed = True
-                i = end
-                continue
-            for mdb, spark_t in _CAST_TARGETS:
-                if t == mdb:
-                    t = spark_t
-                    break
-            else:
-                if not re.fullmatch(
-                    r"(DEC(IMAL)?(\s*\(\s*\d+\s*(,\s*\d+\s*)?\))?|"
-                    r"DOUBLE(\s+PRECISION)?|REAL|"
-                    r"SIGNED(\s+INT(EGER)?)?|UNSIGNED(\s+INT(EGER)?)?|"
-                    r"FLOAT|DATE|TIMESTAMP|BIGINT|INT|BINARY)",
-                    t,
-                ):
-                    raise ValueError(
-                        f"CONVERT: unsupported target type {t!r}"
-                    )
-            # numeric MariaDB targets stay in their MariaDB spelling
-            # here — the loose pass below owns their lowering
-            out.append(f"CAST({expr} AS {t})")
-            changed = True
-            i = end
-        masked = "".join(out)
+    masked = _rewrite_cast_char_n(masked, store)
+    masked = _rewrite_convert(masked, store)
+    # a zero-date literal is MariaDB's zero date, which a client reads
+    # as NULL; Spark rejects the text, so it becomes a typed NULL
+    masked = _ZERO_DATE_CAST_RE.sub(
+        lambda m: f"CAST(NULL AS {m.group(2).upper()})"
+        if _ZERO_DATE_RE.fullmatch(_literal_text(m.group(1), store) or "")
+        else m.group(0),
+        masked,
+    )
     # LAST: MariaDB loose string→number cast semantics for the numeric
     # targets (runs after CHAR(n)/CONVERT so every nested cast spelling
     # inside an operand is already normalized)
@@ -1871,98 +1866,58 @@ def _oracle_concat_chain(masked: str) -> str:
         masked = masked[:start] + repl + masked[end:]
 
 
-def _oracle_concat_fn(masked: str) -> str:
+def _oracle_concat_fn(name: str, args: list[str], store: list[str]):
     """CONCAT(...) under Oracle mode maps to the same null-skipping
     concat (funcexp.cpp:98 registers concat_operator_oracle; the
     reference's oracle/func_concat_oracle.test runs
     ``SELECT CONCAT('a'||'b'||'c')`` and the .result shows the server
     lowering BOTH the function and the operator to the oracle concat).
-    Rewrite each call into a parenthesized ||-chain and let
-    ``_oracle_concat_chain`` (which runs next in the prepass) expand
-    the null-skipping semantics. Every arg is parenthesized so
+    Each call becomes a parenthesized ||-chain that
+    ``_oracle_concat_chain`` (which runs next in the prepass) expands
+    to the null-skipping semantics. Every arg is parenthesized so
     operator precedence inside an arg can never re-associate across
-    the chain. CONCAT()/empty args are left verbatim so Spark errors
+    the chain. CONCAT()/empty args are left as written so Spark errors
     loudly, mirroring the MariaDB parse error."""
-    pat = re.compile(r"\bCONCAT\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(masked, pos)
-        if not m:
-            return masked
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = [a.strip() for a in
-                _split_top_level_commas(masked[open_at + 1 : end - 1])]
-        if not args or not all(args):
-            pos = open_at + 1
-            continue
-        repl = "(" + " || ".join(f"({a})" for a in args) + ")"
-        masked = masked[: m.start()] + repl + masked[end:]
-        # re-scan from the replacement: CONCATs nested inside the args
-        # are still present verbatim and get found on the next pass
-        pos = m.start()
+    if not args or not all(args):
+        return None
+    return "(" + " || ".join(f"({a})" for a in args) + ")"
 
 
-def _oracle_decode(masked: str) -> str:
-    """DECODE(expr, s1, r1[, s2, r2 ...][, default]) → null-safe CASE
-    (func_case.cpp decode_oracle; MDEV-13863: two NULLs are
-    equivalent, unlike CASE equality)."""
-    pat = re.compile(r"\bDECODE\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        m = pat.search(masked, pos)
-        if not m:
-            return masked
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = [a.strip() for a in
-                _split_top_level_commas(masked[open_at + 1 : end - 1])]
-        if len(args) < 3:
-            # MariaDB errors on <3 args; leave THIS call verbatim so
-            # Spark errors loudly too — but keep scanning so later
-            # well-formed DECODEs in the same statement still get the
-            # null-safe rewrite (r11 ADVICE #4)
-            pos = open_at + 1
-            continue
-        expr, rest = args[0], args[1:]
-        default = rest.pop() if len(rest) % 2 == 1 else "NULL"
-        whens = "".join(
-            f" WHEN ({expr}) <=> ({rest[i]}) THEN {rest[i + 1]}"
-            for i in range(0, len(rest), 2)
-        )
-        repl = f"(CASE{whens} ELSE {default} END)"
-        masked = masked[: m.start()] + repl + masked[end:]
+def _oracle_decode(name: str, args: list[str], store: list[str]):
+    """DECODE(expr, s1, r1[, s2, r2 ...][, default]) → dialect
+    .decode_oracle, a null-safe CASE (func_case.cpp decode_oracle;
+    MDEV-13863: two NULLs are equivalent, unlike CASE equality).
+    MariaDB errors on <3 args; such a call is left as written so Spark
+    errors loudly too, and the scan goes on."""
+    if len(args) < 3:
+        return None
+    tpl = _render(name, dialect.decode_oracle, ("void",) * len(args))
+    return tpl.fill(args, store)
 
 
-def _oracle_empty_to_null_fns(masked: str) -> str:
+def _oracle_empty_to_null(name: str, args: list[str], store: list[str]):
     """TRIM/LTRIM/RTRIM (incl. [BOTH|LEADING|TRAILING x FROM y]) and
     REPLACE under Oracle mode: '' IS NULL, so an empty RESULT collapses
     to NULL (func_trim.cpp / func_replace.cpp *_oracle;
     func_trim_oracle.result shows TRIM('  ') → NULL). REPLACE
     additionally treats a NULL search as a no-op and a NULL
     replacement as deletion (func_replace_oracle.result)."""
-    calls = [
-        (m.start(), masked.index("(", m.start()),
-         m.group(1).upper())
-        for m in re.finditer(
-            r"\b(TRIM|LTRIM|RTRIM|REPLACE)\s*\(", masked, re.IGNORECASE)
-    ]
-    # rewrite right-to-left so earlier offsets stay valid; each call
-    # is wrapped exactly once (the wrapper's own text contains no
-    # TRIM/REPLACE tokens)
-    for start, open_at, fn in reversed(calls):
-        end = _find_balanced(masked, open_at)
-        call = masked[start:end]
-        if fn == "REPLACE":
-            args = [a.strip() for a in
-                    _split_top_level_commas(masked[open_at + 1 : end - 1])]
-            if len(args) != 3:
-                continue
-            call = (f"replace({args[0]}, coalesce({args[1]}, ''),"
-                    f" coalesce({args[2]}, ''))")
-        masked = (masked[:start] + f"nullif({call}, '')"
-                  + masked[end:])
-    return masked
+    if name != "REPLACE":
+        return f"nullif({name}({', '.join(args)}), '')"
+    if len(args) != 3:
+        return None
+    return (
+        f"nullif(replace({args[0]}, coalesce({args[1]}, ''),"
+        f" coalesce({args[2]}, '')), '')"
+    )
+
+
+_oracle_functions = _call_pass({
+    "DECODE": _oracle_decode,
+    "CONCAT": _oracle_concat_fn,
+    **dict.fromkeys(("TRIM", "LTRIM", "RTRIM", "REPLACE"),
+                    _oracle_empty_to_null),
+})
 
 
 def oracle_mode_prepass(sql: str) -> str:
@@ -1985,9 +1940,7 @@ def oracle_mode_prepass(sql: str) -> str:
     ||-operand shapes (DIV/MOD adjacency, malformed arithmetic) raise
     rather than silently emitting semantics-changing SQL."""
     masked, store = _mask(sql)
-    masked = _oracle_decode(masked)
-    masked = _oracle_empty_to_null_fns(masked)
-    masked = _oracle_concat_fn(masked)
+    masked = _oracle_functions(masked, store)
     masked = _oracle_concat_chain(masked)
     masked = re.sub(r"\bNVL\s*\(", "coalesce(", masked,
                     flags=re.IGNORECASE)
@@ -2127,7 +2080,7 @@ def translate_statement(
     masked = _rewrite_loose_string_args(masked, store, string_columns)
     # user-written GREATEST/LEAST/SYSDATE only: runs before any pass
     # emits its own least(greatest(...)) clamps
-    masked = _rewrite_null_fns(masked)
+    masked = _rewrite_null_fns(masked, store)
     masked = _rewrite_with_rollup(masked, store)
     masked = _rewrite_cast_targets(masked, store, numeric_columns)
     # inline collation forms run AFTER cast targets so CAST(x AS
@@ -2136,10 +2089,8 @@ def translate_statement(
     masked = _rewrite_inline_collate(masked, store)
     masked = _rewrite_binary_operator(masked, store)
     masked = _rewrite_group_concat(masked, store)
-    masked = _rewrite_format_calls(masked, store)
     masked = _rewrite_interval_arith(masked, store)
-    masked = _rewrite_fn_templates(masked, store)
-    masked = _rewrite_get_format(masked, store)
+    masked = _rewrite_functions(masked, store)
     # MariaDB's bare STDDEV()/STD()/VARIANCE() are the POPULATION
     # variants (MySQL heritage; utils/windowfunction/wf_stats.cpp
     # divides by n for W__STDDEV/W__VARIANCE) while Spark's STDDEV/
@@ -2171,12 +2122,6 @@ def translate_statement(
     # its source expr are already translated) and stores its generated
     # SQL as one mask token (no later pass can fire inside it)
     masked = _rewrite_json_table(masked, store)
-    # JSON formatters render through Catalyst but stash their SQL as
-    # mask tokens, so later scans never see their quoted regexes
-    masked = _rewrite_json_format_functions(masked, store)
-    # LAST: Catalyst-rendered rewrites inject raw SQL (with quotes), so
-    # no masked-text scan may run after them
-    masked = _rewrite_week_functions(masked, store)
     masked = re.sub(r";\s*$", "", masked)
 
     return _unmask(masked, store)
@@ -2217,114 +2162,6 @@ def split_script(script: str) -> list[str]:
         if stmt:
             out.append(stmt)
     return out
-
-
-# ---- Catalyst-rendered rewrites -------------------------------------------
-#
-# WEEK(d[,mode]) / YEARWEEK(d[,mode]) and week-based DATE_FORMAT
-# specifiers have no one-line Spark spelling, but the dialect layer
-# already implements them as (unit-tested) Column expressions
-# (dialect.week_mode / yearweek_mode / date_format_mariadb). The bridge
-# below renders those Columns to SQL text through Catalyst's analyzed
-# plan, so the SQL front end reuses EXACTLY the tested semantics instead
-# of a hand-maintained parallel formula. Requires an active SparkSession
-# at translate time (Engine.sql always has one); rendered templates are
-# cached per (function, mode/format).
-
-_ARG = "__mcs_arg__"
-_TPL_CACHE: dict = {}
-
-
-def _render_column_sql(build, *, arg_type: str = "date"):
-    """SQL text of ``build(F.col(_ARG))`` with ``{0}`` at the arg slot.
-    ``arg_type`` types the probe column so analysis doesn't wrap the
-    slot in spurious implicit casts (date for WEEK/…, string for the
-    JSON formatters)."""
-    from pyspark.sql import SparkSession
-    import pyspark.sql.functions as F
-
-    # getActiveSession() resolves through a JVM-thread-local, and py4j
-    # maps each *Python* thread to its own JVM thread — so a worker
-    # thread that never built the session sees None even while the
-    # process has one running (surfaced by the 8-thread concurrency
-    # probe: sql_mariadb_front_end2 failed only under interleaving,
-    # only on a cold template cache). Fall back to the process-global
-    # instantiated session (set on creation, cleared on stop); the
-    # truly-session-less error stays for the no-session case.
-    spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    if spark is None:
-        raise ValueError(
-            "WEEK/YEARWEEK/JSON-format translation needs an active "
-            "SparkSession (use Engine.sql, or start a session first)"
-        )
-    probe = (
-        F.lit("2000-01-01").cast("date")
-        if arg_type == "date"
-        else F.lit("{}").cast(arg_type)
-    )
-    df = spark.range(1).select(probe.alias(_ARG)).select(
-        build(F.col(_ARG)).alias("__out__")
-    )
-    expr = df._jdf.queryExecution().analyzed().expressions().apply(0)
-    return "(" + expr.child().sql().replace(_ARG, "({0})") + ")"
-
-
-def _rewrite_json_format_functions(masked: str, store: list[str]) -> str:
-    """``JSON_COMPACT(x)`` / ``JSON_LOOSE(x)`` / ``JSON_NORMALIZE(x)``
-    (func_json_format.cpp + json_normalize) → the json_ext Column
-    implementations rendered to SQL text through Catalyst, so the SQL
-    spelling reuses exactly the unit-tested semantics. Rendered SQL is
-    stashed as one mask token (it contains quoted regexes no later scan
-    may touch). JSON_DETAILED (multi-line pretty print) is refused, not
-    mistranslated."""
-    if re.search(r"\bJSON_DETAILED\s*\(", masked, re.IGNORECASE):
-        raise ValueError(
-            "JSON_DETAILED (multi-line pretty print) has no Spark "
-            "translation; use JSON_LOOSE for readable one-line form"
-        )
-    if re.search(r"\bJSON_NORMALIZE\s*\(", masked, re.IGNORECASE):
-        # json_ext.json_normalize exists as a Column function, but its
-        # higher-order lambdas don't render to re-parseable SQL text —
-        # honest refusal instead of a mistranslation
-        raise ValueError(
-            "JSON_NORMALIZE is available on the DataFrame surface "
-            "(functions.json_ext.json_normalize); its lambda-based "
-            "implementation has no SQL-text rendering"
-        )
-    from mariadb_columnstore_engine_spark.functions import json_ext
-
-    for name, builder in (
-        ("JSON_COMPACT", json_ext.json_compact),
-        ("JSON_LOOSE", json_ext.json_loose),
-    ):
-        pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-        out, i = [], 0
-        while True:
-            m = pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-            if len(args) != 1:
-                raise ValueError(f"{name} expects exactly 1 argument")
-            if name not in _TPL_CACHE:
-                _TPL_CACHE[name] = _render_column_sql(
-                    builder, arg_type="string"
-                )
-            # literal slot replacement, NOT str.format — the rendered
-            # regexes contain `{n}` quantifiers format would mangle
-            rendered = _TPL_CACHE[name].replace(
-                "({0})", "(" + _unmask(args[0].strip(), store) + ")"
-            )
-            ph = _PH.format(len(store))
-            store.append(rendered)
-            out.append(masked[i : m.start()])
-            out.append(ph)
-            i = end
-        masked = "".join(out)
-    return masked
 
 
 def _collate_operand_start(masked: str, end: int) -> int:
@@ -2768,109 +2605,6 @@ def _rewrite_suffix_frames(masked: str, store: list[str]) -> str:
         out.append(f"{swap.get(fn, m.group(1))}({args}) OVER ({spec})")
         i = new_end
     return "".join(out)
-
-
-#: GET_FORMAT lookup (func_get_format.cpp; the MySQL/MariaDB table).
-_GET_FORMATS = {
-    ("DATE", "USA"): "%m.%d.%Y",
-    ("DATE", "JIS"): "%Y-%m-%d",
-    ("DATE", "ISO"): "%Y-%m-%d",
-    ("DATE", "EUR"): "%d.%m.%Y",
-    ("DATE", "INTERNAL"): "%Y%m%d",
-    ("DATETIME", "USA"): "%Y-%m-%d %H.%i.%s",
-    ("DATETIME", "JIS"): "%Y-%m-%d %H:%i:%s",
-    ("DATETIME", "ISO"): "%Y-%m-%d %H:%i:%s",
-    ("DATETIME", "EUR"): "%Y-%m-%d %H.%i.%s",
-    ("DATETIME", "INTERNAL"): "%Y%m%d%H%i%s",
-    ("TIME", "USA"): "%h:%i:%s %p",
-    ("TIME", "JIS"): "%H:%i:%s",
-    ("TIME", "ISO"): "%H:%i:%s",
-    ("TIME", "EUR"): "%H.%i.%s",
-    ("TIME", "INTERNAL"): "%H%i%s",
-}
-
-
-def _rewrite_get_format(masked: str, store: list[str]) -> str:
-    """GET_FORMAT(DATE|TIME|DATETIME|TIMESTAMP, <region>) → a CASE
-    over the region string with the documented literal formats
-    (NULL for unknown regions, matching MariaDB)."""
-    pat = re.compile(r"\bGET_FORMAT\s*\(", re.IGNORECASE)
-    out, i = [], 0
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-        if len(args) != 2:
-            raise ValueError("GET_FORMAT expects 2 arguments")
-        kw = args[0].strip().upper()
-        if kw == "TIMESTAMP":
-            kw = "DATETIME"
-        table = {
-            r: f for (k2, r), f in _GET_FORMATS.items() if k2 == kw
-        }
-        if not table:
-            raise ValueError(
-                f"GET_FORMAT first argument must be DATE/TIME/"
-                f"DATETIME/TIMESTAMP, got {args[0].strip()!r}"
-            )
-        whens = []
-        for region, fmt in table.items():
-            rp = _PH.format(len(store))
-            store.append(f"'{region}'")
-            fp = _PH.format(len(store))
-            store.append(f"'{fmt}'")
-            whens.append(f"WHEN {rp} THEN {fp}")
-        rendered = (
-            f"(CASE UPPER({args[1].strip()}) "
-            + " ".join(whens)
-            + " ELSE NULL END)"
-        )
-        out.append(masked[i : m.start()])
-        out.append(rendered)
-        i = end
-    return "".join(out)
-
-
-def _rewrite_week_functions(masked: str, store: list[str]) -> str:
-    from mariadb_columnstore_engine_spark.functions import dialect
-
-    for name, builder in (
-        ("WEEK", dialect.week_mode),
-        ("YEARWEEK", dialect.yearweek_mode),
-    ):
-        pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-        out, i = [], 0
-        while True:
-            m = pat.search(masked, i)
-            if not m:
-                out.append(masked[i:])
-                break
-            open_at = masked.index("(", m.start())
-            end = _find_balanced(masked, open_at)
-            args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-            mode = 0
-            if len(args) == 2:
-                if not re.fullmatch(r"\s*[0-7]\s*", args[1]):
-                    raise ValueError(
-                        f"{name} mode must be a literal 0-7"
-                    )
-                mode = int(args[1])
-            elif len(args) != 1:
-                raise ValueError(f"{name} expects 1 or 2 arguments")
-            key = (name, mode)
-            if key not in _TPL_CACHE:
-                _TPL_CACHE[key] = _render_column_sql(
-                    lambda c, _m=mode, _b=builder: _b(c, _m)
-                )
-            out.append(masked[i : m.start()])
-            out.append(_TPL_CACHE[key].format(args[0].strip()))
-            i = end
-        masked = "".join(out)
-    return masked
 
 
 _AGG_FNS = (
@@ -3699,6 +3433,11 @@ _STRINGISH_EXPR_RE = re.compile(
 )
 
 
+_LOOSE_NUM_ARG_RE = re.compile(
+    r"\b(" + "|".join(_LOOSE_NUM_ARG_FNS) + r")\s*\(", re.IGNORECASE
+)
+
+
 def _loose_double_read(x: str, store: list[str]) -> str:
     """String expression → DOUBLE via the my_strtod leading-prefix
     parse: NULL stays NULL, no numeric prefix reads 0."""
@@ -3725,22 +3464,10 @@ def _rewrite_loose_string_args(
       the prefix-parse ``<> 0`` truthiness instead of Spark's ANSI
       string→boolean runtime cast.
     """
-    pat = re.compile(
-        r"\b(" + "|".join(_LOOSE_NUM_ARG_FNS) + r")\s*\(",
-        re.IGNORECASE,
-    )
-    out, i = [], 0
-    while True:
-        m = pat.search(masked, i)
-        if not m:
-            out.append(masked[i:])
-            break
-        fn = m.group(1).upper()
-        open_at = masked.index("(", m.start())
-        end = _find_balanced(masked, open_at)
-        args = _split_top_level_commas(masked[open_at + 1 : end - 1])
-        loose_idx = [
-            k for k in _LOOSE_NUM_ARG_FNS[fn]
+
+    def lower(name: str, args: list[str], store: list[str]) -> str | None:
+        loose = [
+            k for k in _LOOSE_NUM_ARG_FNS[name]
             if k < len(args)
             and (
                 _is_string_literal(args[k], store)
@@ -3748,16 +3475,18 @@ def _rewrite_loose_string_args(
                 or _STRINGISH_EXPR_RE.match(args[k])
             )
         ]
-        out.append(masked[i : m.start()])
-        if not loose_idx:
-            out.append(masked[m.start() : open_at + 1])
-            i = open_at + 1
-            continue
-        for k in loose_idx:
-            args[k] = _loose_double_read(args[k].strip(), store)
-        out.append(f"{m.group(1)}({', '.join(a.strip() for a in args)})")
-        i = end
-    masked = "".join(out)
+        if not loose:
+            return None
+        args = [
+            _loose_double_read(a, store) if k in loose else a
+            for k, a in enumerate(args)
+        ]
+        return f"{name}({', '.join(args)})"
+
+    masked = _scan_calls(
+        masked, store, _LOOSE_NUM_ARG_RE,
+        dict.fromkeys(_LOOSE_NUM_ARG_FNS, lower),
+    )
 
     if not string_columns:
         return masked

@@ -188,7 +188,7 @@ def test_oracle_concat_function_null_skipping(ora):
     assert one_row(ora, "SELECT CONCAT('n', 1 + 2)") == ("n3",)
 
 
-def test_oracle_decode_continues_past_malformed_call():
+def test_oracle_decode_continues_past_malformed_call(spark):
     """r12 (r11 ADVICE #4): a <3-arg DECODE is left verbatim (Spark
     errors loudly, like MariaDB) but must not stop the scan — later
     well-formed DECODEs in the same statement still get the

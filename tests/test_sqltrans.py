@@ -85,18 +85,29 @@ def test_group_concat_limit_rewrites():
         translate_statement("SELECT GROUP_CONCAT(a LIMIT n) FROM t")
 
 
-def test_date_format_translated():
+def test_date_format_translated(spark):
     assert (
         translate_statement("SELECT DATE_FORMAT(o_orderdate, '%Y-%m') FROM orders")
         == "SELECT date_format(o_orderdate, 'yyyy\\'-\\'MM') FROM orders"
     )
 
 
-def test_str_to_date_translated():
-    assert (
-        translate_statement("SELECT STR_TO_DATE(s, '%d/%m/%Y') FROM t")
-        == "SELECT to_timestamp(s, 'dd\\'/\\'MM\\'/\\'yyyy') FROM t"
+def test_str_to_date_translated(spark):
+    # MariaDB's type contract (func_str_to_date.cpp): DATE for a
+    # date-only format, DATETIME when the format has a time part
+    import datetime
+
+    q = translate_statement(
+        "SELECT STR_TO_DATE('04/03/2020', '%d/%m/%Y') AS d,"
+        " STR_TO_DATE('04/03/2020 10:11', '%d/%m/%Y %H:%i') AS ts"
     )
+    df = spark.sql(q)
+    assert [f.dataType.simpleString() for f in df.schema] == [
+        "date", "timestamp"
+    ]
+    row = df.collect()[0]
+    assert row.d == datetime.date(2020, 3, 4)
+    assert row.ts == datetime.datetime(2020, 3, 4, 10, 11)
 
 
 def test_week_specifier_needs_session():
