@@ -74,9 +74,9 @@ def sec_to_time(col: Column) -> Column:
     """MariaDB SEC_TO_TIME (func_sec_to_time): seconds → 'HH:MM:SS'
     string (the reference's TIME is interval-like, SURVEY §1.2 — we
     render the canonical string form). Negative inputs get a '-' sign
-    like MariaDB."""
+    like MariaDB, and the result clamps to TIME's range, ±838:59:59."""
     secs = col.cast("long")
-    a = F.abs(secs)
+    a = F.least(F.abs(secs), F.lit(838 * 3600 + 59 * 60 + 59))
     # format_string pads without truncating (lpad would cut 100+ hours)
     body = F.format_string(
         "%02d:%02d:%02d",
@@ -88,18 +88,26 @@ def sec_to_time(col: Column) -> Column:
 
 
 def time_to_sec(col: Column) -> Column:
-    """MariaDB TIME_TO_SEC: a TIME string ('HH:MM:SS', signed, hours
-    past 24) or the time part of a DATETIME → whole seconds. The string
-    form of a DATETIME is 'YYYY-MM-DD HH:MM:SS[.f]', so the time part
-    is what follows the last space."""
+    """MariaDB TIME_TO_SEC: a TIME string ('HH:MM:SS' or 'HH:MM',
+    signed, hours past 24) or the time part of a DATETIME → whole
+    seconds; a DATE is midnight, 0. The string form of a DATETIME is
+    'YYYY-MM-DD HH:MM:SS[.f]', so the time part is what follows the
+    last space."""
     t = F.substring_index(col.cast("string"), " ", -1)
-    p = F.split(F.regexp_replace(t, "^-", ""), ":")
+    # 'HH:MM' has no seconds: pad the parts so the third always exists
+    p = F.concat(
+        F.split(F.regexp_replace(t, "^-", ""), ":"), F.array(F.lit("0"))
+    )
     secs = (
         F.element_at(p, 1).cast("long") * 3600
         + F.element_at(p, 2).cast("long") * 60
         + F.element_at(p, 3).cast("double").cast("long")
     )
-    return F.when(t.startswith("-"), -secs).otherwise(secs)
+    return (
+        F.when(t.rlike(r"^\d+-\d+-\d+$"), F.lit(0).cast("long"))
+        .when(t.startswith("-"), -secs)
+        .otherwise(secs)
+    )
 
 
 def inet_aton(col: Column) -> Column:

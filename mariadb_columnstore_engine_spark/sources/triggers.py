@@ -18,15 +18,16 @@ INSERT:
   single codegen'd projection — no UDF, no driver loop.
 - ``AFTER INSERT/UPDATE/DELETE`` bodies run ONCE per statement against
   a relation of the affected rows exposed through the ``NEW.x`` /
-  ``OLD.x`` spellings (rewritten to columns of that relation). A body
-  statement like ``INSERT INTO audit VALUES (NEW.id, ...)`` becomes an
-  ``INSERT .. SELECT`` over the affected rows — the set-based audit
-  pattern. ``IF <cond over NEW/OLD> THEN <stmts> END IF`` quantifies
-  existentially: the branch fires iff ANY affected row satisfies the
+  ``OLD.x`` spellings (rewritten to columns of that relation by
+  ``rewrite_row_refs``). The interpreter in procedures.py runs them: a
+  body statement like ``INSERT INTO audit VALUES (NEW.id, ...)``
+  becomes an ``INSERT .. SELECT`` over the affected rows — the
+  set-based audit pattern — and ``IF``/``CASE`` over NEW/OLD quantify
+  existentially: a branch fires iff ANY affected row satisfies its
   condition (the only coherent statement-level reading of the MTR's
   ``IF NEW.j = 30 THEN SET @fired = 'Yes'`` idiom).
 
-Anything else (WHILE loops in bodies, SET NEW from subqueries,
+Anything else (loops and cursors in bodies, SET NEW from subqueries,
 statement kinds the set reading cannot honor) is refused at CREATE
 TRIGGER time — honest refusal over silent row-order-dependent
 mistranslation.
@@ -42,10 +43,10 @@ __all__ = [
 ]
 
 
-def _subst_refs(expr: str, env: dict[str, str], allow_old: bool) -> str:
-    """Rewrite NEW.x (and, for UPDATE, OLD.x) references in ``expr`` to
-    the current symbolic expression for x. Mask-aware: a dotted
-    spelling inside a string literal never rewrites."""
+def _subst_refs(expr: str, env: dict[str, str]) -> str:
+    """Rewrite NEW.x references in ``expr`` to the current symbolic
+    expression for x, and OLD.x (UPDATE) to the bare column. Mask-aware:
+    a dotted spelling inside a string literal never rewrites."""
     from mariadb_columnstore_engine_spark.functions.sqltrans import (
         _mask,
         _unmask,
@@ -65,10 +66,6 @@ def _subst_refs(expr: str, env: dict[str, str], allow_old: bool) -> str:
                     f"trigger references unknown column NEW.{col}"
                 )
             return f"({env[col]})"
-        if not allow_old:
-            raise ValueError(
-                "OLD.x is only valid in UPDATE/DELETE triggers"
-            )
         return f"`{col}`"
 
     out = re.sub(
@@ -84,22 +81,20 @@ def compile_before_transform(
     body_nodes,
     columns: list[str],
     *,
-    event: str,
     base_env: dict[str, str] | None = None,
 ) -> dict[str, str]:
     """Symbolically evaluate a BEFORE-trigger body into one SQL
     expression per (modified) column.
 
-    ``body_nodes`` is the node tree from Engine._parse_proc_body —
-    the same parser stored procedures use, so IF/ELSEIF/ELSE nesting
-    and mask-aware splitting are shared. Returns {column: expr_sql}
+    ``body_nodes`` is the trigger's parsed body (``statements.parse``
+    gives stored procedures the same node tree). Returns {column: expr_sql}
     for every column any path modifies; expressions reference the
     incoming row's ORIGINAL columns by (backticked) name, so the
     caller applies them as one parallel projection (CASE WHEN nests
     encode branch conditions — MariaDB's sequential SET visibility is
     preserved because each SET substitutes the env built so far).
 
-    For UPDATE triggers (``event='UPDATE'``), ``base_env`` carries the
+    For UPDATE triggers, ``base_env`` carries the
     user UPDATE's assignment expressions (NEW.x starts as the assigned
     value; unassigned columns start as OLD values) and OLD.x references
     stay bare column names — the caller evaluates the result against
@@ -111,20 +106,18 @@ def compile_before_transform(
         else {c.lower(): f"`{c}`" for c in columns}
     )
     colcase = {c.lower(): c for c in columns}
-    allow_old = event in ("UPDATE", "DELETE")
 
     def run(nodes, env: dict[str, str]) -> dict[str, str]:
         for node in nodes:
-            kind = node[0]
-            if kind == "stmt":
+            if node.kind == "stmt":
                 sm = re.match(
-                    r"\s*SET\s+(.+)$", node[1], re.IGNORECASE | re.DOTALL
+                    r"\s*SET\s+(.+)$", node.sql, re.IGNORECASE | re.DOTALL
                 )
                 if not sm:
                     raise ValueError(
                         "BEFORE triggers support only SET NEW.col = "
                         f"expr statements and IF blocks; got: "
-                        f"{node[1][:60]!r}"
+                        f"{node.sql[:60]!r}"
                     )
                 for part in _split_commas(sm.group(1)):
                     am = re.match(
@@ -143,18 +136,17 @@ def compile_before_transform(
                             f"trigger SET targets unknown column "
                             f"NEW.{col}"
                         )
-                    env[col] = _subst_refs(am.group(2), env, allow_old)
-            elif kind == "if":
-                _, branches, else_nodes = node
+                    env[col] = _subst_refs(am.group(2), env)
+            elif node.kind == "if":
                 # evaluate every branch against the env BEFORE the IF
                 # (MariaDB evaluates conditions on entry), then merge
                 # into per-column CASE expressions
                 arms = []
-                for cond, bnodes in branches:
-                    cond_sql = _subst_refs(cond, env, allow_old)
-                    arm_env = run(list(bnodes), dict(env))
+                for cond, bnodes in node.arms:
+                    cond_sql = _subst_refs(cond, env)
+                    arm_env = run(bnodes, dict(env))
                     arms.append((cond_sql, arm_env))
-                else_env = run(list(else_nodes), dict(env))
+                else_env = run(node.orelse or [], dict(env))
                 touched = set()
                 for _, e in arms:
                     touched |= {c for c in e if e[c] != env[c]}
@@ -173,11 +165,12 @@ def compile_before_transform(
             else:
                 raise ValueError(
                     f"unsupported construct in BEFORE trigger body: "
-                    f"{kind} (loops have no set-based row transform)"
+                    f"{node.kind} (only SET NEW.col and IF have a "
+                    "set-based row transform)"
                 )
         return env
 
-    final = run(list(body_nodes), env)
+    final = run(body_nodes, env)
     orig = (
         dict(base_env)
         if base_env is not None
@@ -199,13 +192,12 @@ def _split_commas(text: str) -> list[str]:
     return [_unmask(p, store) for p in _split_top_level_commas(masked)]
 
 
-def rewrite_row_refs(
-    stmt: str, *, view: str, has_old: bool, has_new: bool = True
-) -> str:
+def rewrite_row_refs(stmt: str, *, view: str) -> str:
     """Rewrite NEW.x / OLD.x in an AFTER-trigger body statement to
     columns of the affected-rows relation registered as ``view``:
     NEW.x → <view>.x, OLD.x → <view>.__old_x (the relation carries
-    pre-image columns under the __old_ prefix for UPDATE/DELETE).
+    pre-image columns under the __old_ prefix for UPDATE/DELETE;
+    statements.parse refuses the row image an event lacks).
     Mask-aware: literals never rewrite."""
     from mariadb_columnstore_engine_spark.functions.sqltrans import (
         _mask,
@@ -214,25 +206,11 @@ def rewrite_row_refs(
 
     masked, store = _mask(stmt)
 
-    def _new(mo):
-        if not has_new:
-            raise ValueError(
-                "NEW.x is not valid in DELETE triggers"
-            )
-        return f"{view}.`{mo.group(1).strip('`').lower()}`"
+    def _ref(mo):
+        old = "__old_" if mo.group(1).upper() == "OLD" else ""
+        return f"{view}.`{old}{mo.group(2).strip('`').lower()}`"
 
     masked = re.sub(
-        r"\bNEW\s*\.\s*([\w`]+)", _new, masked, flags=re.IGNORECASE
-    )
-
-    def _old(mo):
-        if not has_old:
-            raise ValueError(
-                "OLD.x is only valid in UPDATE/DELETE triggers"
-            )
-        return f"{view}.`__old_{mo.group(1).strip('`').lower()}`"
-
-    masked = re.sub(
-        r"\bOLD\s*\.\s*([\w`]+)", _old, masked, flags=re.IGNORECASE
+        r"\b(NEW|OLD)\s*\.\s*([\w`]+)", _ref, masked, flags=re.IGNORECASE
     )
     return _unmask(masked, store)

@@ -247,14 +247,158 @@ class AddPrimaryKey:
     columns: list[str]
 
 
+# --- compound-statement bodies (CREATE PROCEDURE / CREATE TRIGGER) -----
+# A body parses to a list of the typed nodes below (see ``_Body``);
+# procedures.py runs it, and sources/triggers.compile_before_transform
+# compiles BEFORE INSERT/UPDATE bodies from it. Every SQL fragment a
+# node holds is unmasked text.
+
+
+class Node:
+    """A node of a body tree; ``blocks`` are its nested statement lists."""
+
+    kind: ClassVar[str]
+
+    def blocks(self) -> list[list]:
+        return []
+
+
+@dataclass
+class Stmt(Node):
+    """One statement, routed like any other."""
+
+    kind: ClassVar[str] = "stmt"
+    sql: str
+
+
+@dataclass
+class If(Node):
+    """IF/ELSEIF/ELSE: the first arm whose condition holds runs, else
+    ``orelse`` (None: there is no ELSE)."""
+
+    kind: ClassVar[str] = "if"
+    arms: list[tuple[str, list]]
+    orelse: list | None = None
+
+    def blocks(self) -> list[list]:
+        return [body for _, body in self.arms] + [self.orelse or []]
+
+
+@dataclass
+class Case(If):
+    """Procedural CASE. With a ``subject``, each arm holds a value to
+    compare it with; no arm taken and no ELSE raises ER 1339."""
+
+    kind: ClassVar[str] = "case"
+    subject: str | None = None
+
+
+@dataclass
+class Loop(Node):
+    """WHILE (``cond`` checked before each pass), REPEAT (UNTIL
+    ``cond`` checked after) or LOOP (no condition); ``label`` names it
+    for LEAVE/ITERATE."""
+
+    kind: ClassVar[str] = "loop"
+    loop: str  # "while" | "repeat" | "loop"
+    cond: str | None
+    body: list
+    label: str | None = None
+
+    def blocks(self) -> list[list]:
+        return [self.body]
+
+
+@dataclass
+class Jump(Node):
+    kind: ClassVar[str] = "jump"
+    verb: str  # "leave" | "iterate"
+    label: str
+
+
+@dataclass
+class Declare(Node):
+    kind: ClassVar[str] = "declare"
+    names: list[str]
+    default: str | None = None
+
+
+@dataclass
+class DeclareCursor(Node):
+    kind: ClassVar[str] = "cursor"
+    name: str
+    sql: str
+
+
+#: a condition: ("class", "not_found" | "sqlexception" | "sqlwarning"),
+#: ("sqlstate", "45000"), ("errno", 1329) or ("name", declared name)
+Condition = tuple[str, object]
+
+
+@dataclass
+class DeclareCondition(Node):
+    kind: ClassVar[str] = "condition"
+    name: str
+    value: Condition  # a sqlstate or an errno
+
+
+@dataclass
+class Handler(Node):
+    kind: ClassVar[str] = "handler"
+    action: str  # "CONTINUE" | "EXIT"
+    conditions: list[Condition]
+    body: list
+
+    def blocks(self) -> list[list]:
+        return [self.body]
+
+
+@dataclass
+class Signal(Node):
+    """SIGNAL ``condition`` (a sqlstate or a name), or RESIGNAL when
+    ``condition`` is None."""
+
+    kind: ClassVar[str] = "signal"
+    condition: Condition | None
+    message: str | None = None
+    errno: int | None = None
+
+
+@dataclass
+class Open(Node):
+    kind: ClassVar[str] = "open"
+    cursor: str
+
+
+@dataclass
+class Fetch(Node):
+    kind: ClassVar[str] = "fetch"
+    cursor: str
+    into: list[str]
+
+
+@dataclass
+class Close(Node):
+    kind: ClassVar[str] = "close"
+    cursor: str
+
+
+def walk(nodes: list):
+    """Every node of a body tree, depth first."""
+    for node in nodes:
+        yield node
+        for block in node.blocks():
+            yield from walk(block)
+
+
 @dataclass
 class CreateProcedure:
-    """CREATE PROCEDURE head; the body is interpreted by the engine."""
+    """CREATE PROCEDURE: the head and the parsed body."""
 
     kind: ClassVar[str] = "create_procedure"
     name: str
     params: list[tuple[str, str, str]]  # (IN|OUT|INOUT, name, Spark type)
-    body: str  # the text between BEGIN and END
+    body: list[Node]  # the statements between BEGIN and END
     comment: str | None = None
     or_replace: bool = False
     if_not_exists: bool = False
@@ -276,7 +420,7 @@ class CreateTrigger:
     timing: str  # "BEFORE" | "AFTER"
     event: str  # "INSERT" | "UPDATE" | "DELETE"
     table: str
-    body: str  # statement list, BEGIN .. END unwrapped
+    body: list[Node]  # the BEGIN .. END statements, or the one statement
     replace: bool = False
     if_not_exists: bool = False
 
@@ -570,6 +714,218 @@ def _parse_column_defs(name: str, body: str, store: list[str]):
     )
 
 
+#: a condition in a handler list, DECLARE … CONDITION FOR or SIGNAL
+_CONDITION = (
+    r"(?P<cls>NOT\s+FOUND|SQLEXCEPTION|SQLWARNING)\b"
+    r"|SQLSTATE\s+(?:VALUE\s+)?(?P<state>\x00\d+\x00)"
+    r"|(?P<errno>\d+)\b|(?P<name>[A-Za-z_]\w*)"
+)
+
+#: the END of a BEGIN … END handler body (not END IF, END LOOP, …)
+_BLOCK_END = r"END(?!\s+(?:IF|WHILE|REPEAT|CASE|LOOP)\b)"
+
+
+class _Body:
+    """Recursive-descent parser of a masked compound-statement body.
+
+    The body is masked with its statement's store, so a literal never
+    fakes a keyword. Tokens are its ``;``-separated pieces. A header
+    (``IF c THEN``, ``ELSE``, ``WHILE c DO``, …) is taken off the front
+    of its token; the rest of the token is the first statement of the
+    block it opens."""
+
+    def __init__(self, masked: str, store: list[str]):
+        self.toks = [t.strip() for t in masked.split(";")]
+        self.store = store
+
+    def text(self, masked: str) -> str:
+        return _unmask(masked, self.store).strip()
+
+    def peek(self, pattern: str) -> re.Match | None:
+        if not self.toks:
+            return None
+        return re.match(pattern, self.toks[0], re.IGNORECASE | re.DOTALL)
+
+    def take(self, pattern: str) -> re.Match | None:
+        """Match ``pattern`` at the front of the current token and
+        consume what it matched."""
+        m = self.peek(pattern)
+        if m:
+            self.toks[0] = self.toks[0][m.end() :].strip()
+        return m
+
+    def block(self, *ends: str) -> list[Node]:
+        """Statements up to a token that starts with one of ``ends``
+        (left in place); with no ``ends``, up to the end of the body."""
+        nodes = []
+        while self.toks:
+            if not self.toks[0]:
+                self.toks.pop(0)
+            elif ends and self.peek(rf"(?:{'|'.join(ends)})\b"):
+                return nodes
+            else:
+                nodes.append(self.statement())
+        if ends:
+            expected = (re.sub(r"\\s\+|\(\?!.*", " ", e).strip() for e in ends)
+            raise ValueError(
+                "procedure body block not closed (expected "
+                + " or ".join(expected)
+                + ")"
+            )
+        return nodes
+
+    def closed(self, end: str) -> list[Node]:
+        """A block and the ``end`` [label] that closes it."""
+        body = self.block(end)
+        self.take(rf"{end}(?:\s+\w+)?")
+        return body
+
+    def arms(self, cond: str, word: str, end: str):
+        """The arms of an IF (``word`` ELSEIF) or a CASE (WHEN) whose
+        first condition is ``cond``, and its ELSE block (None without
+        ELSE); consumes the ``end``."""
+        arms = []
+        while cond is not None:
+            arms.append((self.text(cond), self.block(word, "ELSE", end)))
+            m = self.take(rf"{word}\s+(.+?)\s+THEN\b")
+            cond = m and m.group(1)
+        orelse = self.closed(end) if self.take(r"ELSE\b") else None
+        if orelse is None and not self.take(end):
+            raise ValueError(
+                f"unexpected token in {word} block: "
+                f"{self.text(self.toks[0])[:40]!r}"
+            )
+        return arms, orelse
+
+    def condition(self, *allowed: str) -> Condition:
+        m = self.take(_CONDITION)
+        kind = next((k for k, v in m.groupdict().items() if v), "") if m else ""
+        if kind not in allowed:
+            raise ValueError(
+                "bad condition: "
+                f"{self.text(m.group(0) if m else self.toks[0])[:40]!r}"
+            )
+        if kind == "cls":
+            return ("class", re.sub(r"\s+", "_", m["cls"].lower()))
+        if kind == "state":
+            return ("sqlstate", _literal_text(m["state"], self.store))
+        if kind == "errno":
+            return ("errno", int(m["errno"]))
+        return ("name", m["name"].lower())
+
+    def signal(self, condition: Condition | None) -> Signal:
+        """The rest of a SIGNAL/RESIGNAL: [SET MESSAGE_TEXT = '…'
+        [, MYSQL_ERRNO = n]] (other condition items are diagnostics-area
+        metadata with no analogue here)."""
+        node, m = Signal(condition), self.take(r"(?:SET\s+(.+))?$")
+        if m is None:
+            raise ValueError(f"bad SIGNAL: {self.text(self.toks[0])[:40]!r}")
+        for item in m.group(1).split(",") if m.group(1) else ():
+            im = re.fullmatch(
+                r"\s*(?:MESSAGE_TEXT\s*=\s*(\x00\d+\x00)"
+                r"|MYSQL_ERRNO\s*=\s*(\d+))\s*",
+                item,
+                re.IGNORECASE,
+            )
+            if not im:
+                raise ValueError(
+                    "unsupported SIGNAL item (MESSAGE_TEXT / "
+                    f"MYSQL_ERRNO only): {self.text(item)!r}"
+                )
+            if im.group(1):
+                node.message = _literal_text(im.group(1), self.store)
+            else:
+                node.errno = int(im.group(2))
+        return node
+
+    def statement(self) -> Node:
+        label = self.take(r"([A-Za-z_]\w*)\s*:\s*(?=(?:LOOP|WHILE|REPEAT)\b)")
+        label = label and label.group(1).lower()
+        if m := self.take(r"WHILE\b\s*(.+?)\s+DO\b"):
+            body = self.closed(r"END\s+WHILE")
+            return Loop("while", self.text(m.group(1)), body, label)
+        if self.take(r"REPEAT\b"):
+            body = self.block("UNTIL")
+            m = self.take(r"UNTIL\s+(.+?)\s+END\s+REPEAT\b(?:\s+\w+)?$")
+            if not m:
+                raise ValueError(
+                    "REPEAT block missing UNTIL .. END REPEAT in procedure "
+                    "body"
+                )
+            return Loop("repeat", self.text(m.group(1)), body, label)
+        if self.take(r"LOOP\b"):
+            body = self.closed(r"END\s+LOOP")
+            return Loop("loop", None, body, label)
+        if m := self.take(r"(LEAVE|ITERATE)\s+(\w+)$"):
+            return Jump(m.group(1).lower(), m.group(2).lower())
+        if m := self.take(r"IF\b\s*(.+?)\s+THEN\b"):
+            return If(*self.arms(m.group(1), "ELSEIF", r"END\s+IF"))
+        if m := self.take(r"CASE\b\s*(.*?)\s*WHEN\s+(.+?)\s+THEN\b"):
+            arms, orelse = self.arms(m.group(2), "WHEN", r"END\s+CASE")
+            return Case(arms, orelse, self.text(m.group(1)) or None)
+        if self.peek(r"BEGIN\b"):
+            raise ValueError(
+                "nested BEGIN … END blocks are not supported in a "
+                f"stored-program body: {self.text(self.toks[0])[:60]!r}"
+            )
+        if m := self.take(r"DECLARE\s+(\w+)\s+CURSOR\s+FOR\s+(.+)$"):
+            return DeclareCursor(m.group(1).lower(), self.text(m.group(2)))
+        if m := self.take(r"DECLARE\s+(\w+)\s+CONDITION\s+FOR\s+"):
+            node = DeclareCondition(
+                m.group(1).lower(), self.condition("state", "errno")
+            )
+            if self.toks[0]:
+                raise ValueError(
+                    f"bad condition declaration: {self.text(self.toks[0])!r}"
+                )
+            return node
+        if m := self.take(r"DECLARE\s+(CONTINUE|EXIT|UNDO)\s+HANDLER\s+FOR\s+"):
+            if m.group(1).upper() == "UNDO":
+                raise ValueError(
+                    "UNDO handlers are not supported (no statement-level "
+                    "undo log); use CONTINUE or EXIT"
+                )
+            conds = [self.condition("cls", "state", "errno", "name")]
+            while self.take(","):
+                conds.append(self.condition("cls", "state", "errno", "name"))
+            if not self.toks[0]:
+                raise ValueError("handler is missing its statement")
+            body = (
+                self.closed(_BLOCK_END)
+                if self.take(r"BEGIN\b")
+                else [self.statement()]
+            )
+            return Handler(m.group(1).upper(), conds, body)
+        if self.take(r"SIGNAL\s+"):
+            return self.signal(self.condition("state", "name"))
+        if self.take(r"RESIGNAL\b"):
+            return self.signal(None)
+        if m := self.take(r"(OPEN|CLOSE)\s+(\w+)$"):
+            op = Open if m.group(1).upper() == "OPEN" else Close
+            return op(m.group(2).lower())
+        if m := self.take(
+            r"FETCH\s+(?:NEXT\s+FROM\s+|FROM\s+)?(\w+)\s+INTO\s+(.+)$"
+        ):
+            into = [v.strip().lower() for v in m.group(2).split(",")]
+            return Fetch(m.group(1).lower(), into)
+        if self.peek(r"(?:OPEN|FETCH|CLOSE)\b|DECLARE\s+\w+\s+CURSOR\b"):
+            # fail HERE, not as a Spark error when the body runs
+            raise ValueError(
+                "malformed cursor statement in procedure body: "
+                f"{self.text(self.toks[0])[:80]!r} (expected DECLARE c "
+                "CURSOR FOR <select> / OPEN c / FETCH c INTO v,... / "
+                "CLOSE c)"
+            )
+        if m := self.take(
+            r"DECLARE\s+(.+?)\s+(\w+(?:\s*\([^)]*\))?(?:\s+UNSIGNED)?)"
+            r"(?:\s+DEFAULT\s+(.+))?$"
+        ):
+            names = [n.strip().lower() for n in m.group(1).split(",")]
+            default = self.text(m.group(3)) if m.group(3) else None
+            return Declare(names, default)
+        return Stmt(self.text(self.take(".*").group(0)))
+
+
 def _parse_unbound(masked: str, store: list[str]):
     """Forms whose @names are targets or run-time references, not values
     to bind now: stored-program heads (their bodies run later), prepared
@@ -613,7 +969,7 @@ def _parse_unbound(masked: str, store: list[str]):
         return CreateProcedure(
             name=_ident(m.group(3), store).lower(),
             params=params,
-            body=_unmask(tm.group(2), store).strip(),
+            body=_Body(tm.group(2), store).block(),
             comment=_unmask(tm.group(1), store)[1:-1] if tm.group(1) else None,
             or_replace=bool(m.group(1)),
             if_not_exists=bool(m.group(2)),
@@ -640,18 +996,23 @@ def _parse_unbound(masked: str, store: list[str]):
         re.IGNORECASE | re.DOTALL,
     )
     if m:
-        body = m.group(7).strip()
-        bm = re.match(r"BEGIN\b(.*)\bEND\s*$", body, re.IGNORECASE | re.DOTALL)
-        if bm:
-            body = bm.group(1).strip()
-        elif not body.endswith(";"):
-            body += ";"
+        timing, event, body = m.group(4).upper(), m.group(5).upper(), m.group(7)
+        bm = re.match(
+            r"\s*BEGIN\b(.*)\bEND\s*$", body, re.IGNORECASE | re.DOTALL
+        )
+        # no row image to read (MariaDB ER_TRG_NO_SUCH_ROW_IN_TRG)
+        row = {"INSERT": "OLD", "DELETE": "NEW"}.get(event)
+        if row and re.search(rf"\b{row}\s*\.", body, re.IGNORECASE):
+            raise ValueError(
+                f"{timing} {event} trigger bodies cannot reference {row}.x "
+                f"(no {row.lower()} row image)"
+            )
         return CreateTrigger(
             name=_ident(m.group(3), store).lower(),
-            timing=m.group(4).upper(),
-            event=m.group(5).upper(),
+            timing=timing,
+            event=event,
             table=_ident(m.group(6), store).lower(),
-            body=_unmask(body, store),
+            body=_Body(bm.group(1) if bm else body, store).block(),
             replace=bool(m.group(1)),
             if_not_exists=bool(m.group(2)),
         )

@@ -26,11 +26,13 @@ _TS = "TIMESTAMP '2020-01-01 00:00:00'"
 #: values and times past 24 hours where the function takes them.
 _AGREEMENT = {
     "SEC_TO_TIME": ("SEC_TO_TIME({})", dialect.sec_to_time, [
-        ("-3661",), ("400000",), ("59",), ("NULL",),
+        ("-3661",), ("400000",), ("59",), ("NULL",), ("4000000",),
+        ("-4000000",),
     ]),
     "TIME_TO_SEC": ("TIME_TO_SEC({})", dialect.time_to_sec, [
         ("'-01:00:00'",), ("'100:00:00'",),
-        ("TIMESTAMP '2000-01-01 22:23:00'",), ("NULL",),
+        ("TIMESTAMP '2000-01-01 22:23:00'",), ("NULL",), ("'10:30'",),
+        ("DATE '2000-01-01'",),
     ]),
     "ADDTIME": ("ADDTIME({})", dialect.add_time, [
         (_TS, "'-01:00:00'"), (_TS, "'25:30:00'"), (_TS, "NULL"),
@@ -152,6 +154,12 @@ _DT = datetime.datetime
         ("TIME_TO_SEC('-01:00:00')", -3600),
         ("TIME_TO_SEC('100:00:00')", 360000),
         ("TIME_TO_SEC(TIMESTAMP '2000-01-01 22:23:00')", 80580),
+        # MariaDB's TIME range ends at 838:59:59; a short 'HH:MM' reads
+        # as hours and minutes; a DATE has time 00:00:00
+        ("SEC_TO_TIME(4000000)", "838:59:59"),
+        ("SEC_TO_TIME(-4000000)", "-838:59:59"),
+        ("TIME_TO_SEC('10:30')", 37800),
+        ("TIME_TO_SEC(DATE '2000-01-01')", 0),
         (f"ADDTIME({_TS}, '-01:00:00')", _DT(2019, 12, 31, 23, 0)),
         (f"SUBTIME({_TS}, '-01:00:00')", _DT(2020, 1, 1, 1, 0)),
         ("MAKETIME(10, 30, 0)", "10:30:00"),

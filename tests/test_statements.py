@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from mariadb_columnstore_engine_spark import procedures
 from mariadb_columnstore_engine_spark import statements as st
 
 
@@ -82,7 +83,7 @@ def test_parse_rejects_unsupported():
         ("CREATE PROCEDURE p(IN a INT, OUT b BIGINT) BEGIN SELECT a INTO b; "
          "END", "create_procedure",
          {"name": "p", "params": [("IN", "a", "int"), ("OUT", "b", "bigint")],
-          "body": "SELECT a INTO b;"}),
+          "body": [st.Stmt("SELECT a INTO b")]}),
         ("DROP PROCEDURE IF EXISTS p", "drop_procedure_if_exists",
          {"arg": "p"}),
         ("SHOW PROCEDURE STATUS", "show_procedure_status", {}),
@@ -90,7 +91,7 @@ def test_parse_rejects_unsupported():
         ("CREATE TRIGGER trg BEFORE INSERT ON t1 FOR EACH ROW "
          "SET NEW.a = 1", "create_trigger",
          {"name": "trg", "timing": "BEFORE", "event": "INSERT",
-          "table": "t1", "body": "SET NEW.a = 1;"}),
+          "table": "t1", "body": [st.Stmt("SET NEW.a = 1")]}),
         ("DROP TRIGGER trg", "drop_trigger", {"arg": "trg"}),
         ("SHOW TRIGGERS", "show_triggers", {}),
         ("SELECT n FROM t1 WHERE n > @lo", "user_var_refs",
@@ -1519,7 +1520,7 @@ def test_procedure_if_branch_side_effects_isolated(engine_with_table):
     eng.execute("DELETE FROM t1 WHERE id = 900")
 
 
-def test_procedure_while_loop_and_cap(engine_with_table):
+def test_procedure_while_loop_and_cap(engine_with_table, monkeypatch):
     """WHILE <cond> DO … END WHILE over @session variables, plus the
     runaway-loop guard (hard iteration cap raises instead of hanging).
     Mirrors the MTR shape of a counter loop."""
@@ -1553,8 +1554,8 @@ def test_procedure_while_loop_and_cap(engine_with_table):
     )
     eng.execute("CALL podd(7, @o)")
     assert eng.execute("SELECT @o AS o").collect()[0].o == 3
-    # runaway guard: condition never goes false. Instance-level cap
-    # override keeps this fast — the guard logic is cap-value-agnostic,
+    # runaway guard: condition never goes false. A low cap keeps this
+    # fast — the guard logic is cap-value-agnostic,
     # and the default 10k cap would mean 10k interpreter round-trips.
     eng.execute(
         "CREATE PROCEDURE pinf () BEGIN "
@@ -1562,12 +1563,9 @@ def test_procedure_while_loop_and_cap(engine_with_table):
         "WHILE @x > 0 DO SET @x = @x + 1; END WHILE; "
         "END"
     )
-    eng._PROC_WHILE_CAP = 25
-    try:
-        with pytest.raises(ValueError, match="iterations"):
-            eng.execute("CALL pinf()")
-    finally:
-        del eng._PROC_WHILE_CAP
+    monkeypatch.setattr(procedures, "WHILE_CAP", 25)
+    with pytest.raises(ValueError, match="iterations"):
+        eng.execute("CALL pinf()")
     for p in ("ploop", "podd", "pinf"):
         eng.execute(f"DROP PROCEDURE {p}")
 
@@ -1652,7 +1650,7 @@ def test_procedure_local_never_rebinds_bare_alias(engine_with_table):
     eng.execute("DROP PROCEDURE palias")
 
 
-def test_procedure_repeat_until_loop(engine_with_table):
+def test_procedure_repeat_until_loop(engine_with_table, monkeypatch):
     """REPEAT .. UNTIL .. END REPEAT: body-first execution (runs once
     even when the condition starts true), loop accumulation over
     locals, and the runaway cap."""
@@ -1688,14 +1686,11 @@ def test_procedure_repeat_until_loop(engine_with_table):
         "REPEAT SET i = i + 1; UNTIL 1 = 0 END REPEAT; "
         "END"
     )
-    # instance-level cap override keeps the guard test fast; the guard
-    # itself is cap-value-agnostic
-    eng._PROC_WHILE_CAP = 25
-    try:
-        with pytest.raises(ValueError, match="iterations"):
-            eng.execute("CALL pinf2()")
-    finally:
-        del eng._PROC_WHILE_CAP
+    # a low cap keeps the guard test fast; the guard itself is
+    # cap-value-agnostic
+    monkeypatch.setattr(procedures, "WHILE_CAP", 25)
+    with pytest.raises(ValueError, match="iterations"):
+        eng.execute("CALL pinf2()")
     with pytest.raises(ValueError, match="UNTIL"):
         eng.execute(
             "CREATE PROCEDURE pbad2 () BEGIN "
@@ -1869,7 +1864,7 @@ def test_procedure_signal_and_handlers(engine_with_table):
     named conditions resolve, and RESIGNAL passes outward."""
     import pytest
 
-    from mariadb_columnstore_engine_spark.engine import SqlSignal
+    from mariadb_columnstore_engine_spark.procedures import SqlSignal
 
     eng = engine_with_table
     # unhandled SIGNAL propagates as a typed error
@@ -1976,13 +1971,13 @@ def test_procedure_signal_and_handlers(engine_with_table):
         eng.execute(f"DROP PROCEDURE {p}")
 
 
-def test_procedure_labeled_loops_and_case(engine_with_table):
+def test_procedure_labeled_loops_and_case(engine_with_table, monkeypatch):
     """Labeled LOOP / LEAVE / ITERATE and the procedural CASE
     statement (r8 — completes the mcs17 compound surface; formerly
     refused at CREATE)."""
     import pytest
 
-    from mariadb_columnstore_engine_spark.engine import SqlSignal
+    from mariadb_columnstore_engine_spark.procedures import SqlSignal
 
     eng = engine_with_table
     # LOOP with LEAVE + ITERATE: sum odd numbers 1..9
@@ -2027,12 +2022,10 @@ def test_procedure_labeled_loops_and_case(engine_with_table):
         "spin: LOOP SET i = i + 1; END LOOP spin; "
         "END"
     )
-    eng._PROC_WHILE_CAP = 25  # keep the cap trip fast in-test
-    try:
-        with pytest.raises(ValueError, match="runaway"):
-            eng.execute("CALL pinf()")
-    finally:
-        del eng._PROC_WHILE_CAP
+    # keep the cap trip fast in-test
+    monkeypatch.setattr(procedures, "WHILE_CAP", 25)
+    with pytest.raises(ValueError, match="runaway"):
+        eng.execute("CALL pinf()")
     # LEAVE naming a label that doesn't enclose it
     eng.execute(
         "CREATE PROCEDURE pbadlabel () BEGIN "

@@ -309,3 +309,59 @@ def test_before_delete_existential_if(eng):
     eng.execute("DELETE FROM t1 WHERE i = 5")  # j=30: fires
     assert eng.execute("SELECT @flag AS f").collect()[0].f == "Yes"
     eng.execute("DROP TRIGGER predel2")
+
+
+def test_after_insert_case_body_runs(eng):
+    """A procedural CASE in an AFTER body runs, existential like IF."""
+    eng.execute("CREATE TABLE audit (v INT)")
+    eng.execute(
+        "CREATE TRIGGER tc AFTER INSERT ON t1 FOR EACH ROW BEGIN "
+        "CASE WHEN NEW.j > 0 THEN INSERT INTO audit VALUES (NEW.j); "
+        "ELSE INSERT INTO audit VALUES (-1); END CASE; END"
+    )
+    eng.execute("INSERT INTO t1 VALUES (1, 5)")
+    eng.execute("INSERT INTO t1 VALUES (2, -3)")
+    got = sorted(r.v for r in eng.execute("SELECT v FROM audit").collect())
+    assert got == [-1, 5]
+
+
+def test_after_insert_signal_raises_from_the_insert(eng):
+    from mariadb_columnstore_engine_spark.procedures import SqlSignal
+
+    eng.execute(
+        "CREATE TRIGGER ts AFTER INSERT ON t1 FOR EACH ROW "
+        "SIGNAL SQLSTATE '45000' SET MESSAGE_TEXT = 'no'"
+    )
+    with pytest.raises(SqlSignal, match="45000.*no") as ei:
+        eng.execute("INSERT INTO t1 VALUES (1, 5)")
+    assert ei.value.errno == 1644
+
+
+def test_after_insert_declare_binds_a_local(eng):
+    eng.execute("CREATE TABLE audit (v INT)")
+    eng.execute(
+        "CREATE TRIGGER td AFTER INSERT ON t1 FOR EACH ROW BEGIN "
+        "DECLARE v INT DEFAULT 7; INSERT INTO audit VALUES (v); END"
+    )
+    eng.execute("INSERT INTO t1 VALUES (1, 5)")
+    assert [r.v for r in eng.execute("SELECT v FROM audit").collect()] == [7]
+
+
+def test_loops_and_cursors_refused_anywhere_in_a_trigger_body(eng):
+    """The accepted node kinds are checked over the whole tree: a loop
+    inside a CASE or a cursor inside a handler is refused at CREATE,
+    as it is at top level."""
+    with pytest.raises(ValueError, match="loops in trigger"):
+        eng.execute(
+            "CREATE TRIGGER tl AFTER INSERT ON t1 FOR EACH ROW BEGIN "
+            "CASE WHEN NEW.j > 0 THEN "
+            "WHILE 1 = 0 DO SET @x = 1; END WHILE; END CASE; END"
+        )
+    with pytest.raises(ValueError, match="cursors in trigger"):
+        eng.execute(
+            "CREATE TRIGGER tk AFTER INSERT ON t1 FOR EACH ROW BEGIN "
+            "DECLARE c CURSOR FOR SELECT 1; "
+            "DECLARE CONTINUE HANDLER FOR SQLEXCEPTION BEGIN OPEN c; END; "
+            "SET @x = 1; END"
+        )
+    assert eng.execute("SHOW TRIGGERS") == []
