@@ -4,9 +4,13 @@ Reference analogue: the system catalog (dbcon/execplan/calpontsystemcatalog.h:79
 SYSTABLE/SYSCOLUMN) plus the BRM extent map (versioning/BRM/extentmap.h:127-183)
 which stores per-extent min/max for scan pruning. On Spark both jobs are done
 by Parquet itself: footers carry the schema, row-group statistics carry the
-min/max, and Catalyst prunes files/row groups from pushed predicates.
+min/max, and Catalyst prunes files/row groups from pushed predicates. As
+ColumnStore never runs a PrimProc job to learn a schema, the catalog reads
+each table's schema from its footer in the driver
+(``manifest.read_parquet``): the footers of all tables an Engine registers
+are read in one batch, and no Spark job runs.
 
-``load_table`` also owns the one piece of real schema work in the test
+``load_tables`` also owns the one piece of real schema work in the test
 fixtures: ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark
 will not decode natively. With ``spark.sql.legacy.parquet.nanosAsLong`` the
 column arrives as int64 nanoseconds and we rebuild a TIMESTAMP_NTZ with pure
@@ -18,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+
+from mariadb_columnstore_engine_spark.sources import manifest
 
 #: Tables of the driver fixture set (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -66,21 +72,23 @@ def _stat_key(path: str):
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, normalizing physical quirks.
+    """Load one fixture table (see ``load_tables``)."""
+    return load_tables(spark, sf_dir, (name,))[name]
+
+
+def load_tables(spark: SparkSession, sf_dir: str,
+                names: tuple[str, ...]) -> dict[str, DataFrame]:
+    """Load fixture tables, normalizing physical quirks.
 
     Plan-metadata reuse (NOT data caching): the reference engine keeps
     table/column metadata in its system catalog and never re-reads it
     per statement (dbcon/execplan/calpontsystemcatalog.h SYSTABLE /
-    SYSCOLUMN); re-creating the DataFrame on every query forces Spark
-    to re-infer the parquet schema from the footer each time (~0.2 s
-    of driver-side work per table, measured r12 — it dominated the
-    sub-second bench queries). Cache the LAZY DataFrame per session,
-    fingerprinted by (size, mtime_ns) so any rewrite of the fixture
-    file invalidates the entry. The DataFrame holds no rows — every
-    execution still scans the parquet input."""
-    key = (sf_dir.rstrip("/"), name)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    stat = _stat_key(path)
+    SYSCOLUMN). Cache the LAZY DataFrame per session, fingerprinted by
+    (size, mtime_ns) so any rewrite of the fixture file invalidates the
+    entry; the tables not cached are built with their footers read in
+    one batch in the driver, without a Spark job. The DataFrame holds no
+    rows — every execution still scans the parquet input."""
+    sf_dir = sf_dir.rstrip("/")
     cache = getattr(spark, "_mcs_plan_cache", None)
     if cache is None:
         cache = {}
@@ -88,21 +96,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark._mcs_plan_cache = cache
         except AttributeError:  # frozen session wrapper — skip caching
             cache = None
-    if cache is not None and stat is not None:
-        hit = cache.get(key)
-        if hit is not None and hit[0] == stat:
-            if name == "events":
-                # The cached lazy DataFrame decodes TIMESTAMP(NANOS)
-                # only while the session conf holds; _read_table set it
-                # on the miss, but anything may have reset it since —
-                # re-assert on every hit (cheap conf get) so execution
-                # of the cached plan cannot misdecode (ADVICE r12).
-                _ensure_nanos_conf(spark)
-            return hit[1]
-    df = _read_table(spark, sf_dir, name)
-    if cache is not None and stat is not None:
-        cache[key] = (stat, df)
-    return df
+    out: dict[str, DataFrame] = {}
+    stats = {n: _stat_key(f"{sf_dir}/{n}.parquet") for n in names}
+    for name, stat in stats.items():
+        hit = (cache or {}).get((sf_dir, name))
+        if stat is not None and hit is not None and hit[0] == stat:
+            out[name] = hit[1]
+    if "events" in names:
+        # The cached lazy DataFrame decodes TIMESTAMP(NANOS) only while
+        # the session conf holds; anything may have reset it since a
+        # miss set it — re-assert on every load (cheap conf get) so
+        # execution of the cached plan cannot misdecode (ADVICE r12).
+        _ensure_nanos_conf(spark)
+    miss = [n for n in names if n not in out]
+    dfs = manifest.read_parquet(
+        spark, [f"{sf_dir}/{n}.parquet" for n in miss]
+    )
+    for name, df in zip(miss, dfs):
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.expr(_TS_NTZ_FROM_NANOS))
+        out[name] = df
+        if cache is not None and stats[name] is not None:
+            cache[(sf_dir, name)] = (stats[name], df)
+    return out
 
 
 def _ensure_nanos_conf(spark: SparkSession) -> None:
@@ -117,16 +133,6 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        _ensure_nanos_conf(spark)
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr(_TS_NTZ_FROM_NANOS))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 class Catalog:
     """Lazy table access: ``Catalog(spark, sf_dir).lineitem`` → DataFrame.
 
@@ -139,11 +145,16 @@ class Catalog:
         self._cache: dict[str, DataFrame] = {}
 
     def table(self, name: str) -> DataFrame:
-        if name not in TABLES and name not in OPTIONAL_TABLES:
-            raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-        if name not in self._cache:
-            self._cache[name] = load_table(self._spark, self._sf_dir, name)
+        self._load((name,))
         return self._cache[name]
+
+    def _load(self, names: tuple[str, ...]) -> None:
+        for name in names:
+            if name not in TABLES and name not in OPTIONAL_TABLES:
+                raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+        miss = tuple(n for n in names if n not in self._cache)
+        if miss:
+            self._cache.update(load_tables(self._spark, self._sf_dir, miss))
 
     def optional_tables_present(self) -> tuple[str, ...]:
         """OPTIONAL_TABLES whose parquet exists in this fixture dir."""
@@ -165,8 +176,9 @@ class Catalog:
         is the driver tables plus any optional tables present."""
         if names is None:
             names = TABLES + self.optional_tables_present()
+        self._load(names)
         for name in names:
-            self.table(name).createOrReplaceTempView(name)
+            self._cache[name].createOrReplaceTempView(name)
 
     def tables_referenced(self, sql: str) -> tuple[str, ...]:
         """Catalog tables whose names appear as identifier tokens in

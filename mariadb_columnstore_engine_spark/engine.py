@@ -40,7 +40,12 @@ from mariadb_columnstore_engine_spark import statements as st
 from mariadb_columnstore_engine_spark.catalog import TABLES, Catalog
 from mariadb_columnstore_engine_spark.functions.udf import register_all
 from mariadb_columnstore_engine_spark.session import get_session
-from mariadb_columnstore_engine_spark.sources import dml, manifest
+from mariadb_columnstore_engine_spark.sources import (
+    dml,
+    ingest,
+    maintenance,
+    manifest,
+)
 
 # Stored-SQL-function bookkeeping, keyed on the SparkSession: the
 # TEMPORARY FUNCTIONs themselves live on the shared session, so their
@@ -56,6 +61,9 @@ _SQL_FUNCTIONS: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
 def _session_sql_functions(spark: SparkSession) -> set[str]:
     return _SQL_FUNCTIONS.setdefault(spark, set())
 
+
+#: the row-position column AUTO_INCREMENT numbers VALUES rows by
+_ROW = "__mcs_row"
 
 #: statement kind (statements.KINDS) → the Engine method that runs it
 _HANDLERS: dict = {}
@@ -1796,7 +1804,7 @@ class Engine:
                 # mcol-5505 cpimport-parquet: LDI of a parquet file —
                 # columns map POSITIONALLY like the delimited path
                 # (cpimport contract), types re-cast below
-                pq_src = self.spark.read.parquet(p.path)
+                pq_src = manifest.read_parquet(self.spark, [p.path])[0]
                 if len(pq_src.columns) != len(file_fields):
                     raise ValueError(
                         f"parquet file has {len(pq_src.columns)} "
@@ -1811,7 +1819,7 @@ class Engine:
                     delimiter=p.delimiter, quote=p.quote, escape=p.escape,
                     line_sep=p.line_sep, skip_rows=p.skip_rows,
                 )
-                src = self.spark.read.parquet(dest)
+                src = manifest.read_parquet(self.spark, [dest])[0]
             out = src.select(*[
                 _cast(
                     F.expr(gen[f.name]) if f.name in gen else F.col(f.name),
@@ -1895,17 +1903,31 @@ class Engine:
         if ai:
             # AUTO_INCREMENT assignment (BRM autoincrement-manager
             # analogue): omitted or NULL values draw from the stored
-            # counter; explicit values pass through and push the
-            # counter past them (MariaDB semantics, gaps allowed).
-            # The row_number window makes the batch single-partition
-            # for numbering — a sequential sequence is inherently a
-            # serialization point; at bulk-load scale use explicit
-            # keys instead (the reference's cpimport does the same:
-            # one counter reservation per import).
+            # counter, the row at position i (in statement order)
+            # taking next + i; explicit values pass through and push
+            # the counter past them (MariaDB semantics, gaps allowed).
             from pyspark.sql import Window
 
             acol = ai["column"]
-            if out.where(F.col(acol).isNull()).count() > 0:
+            # VALUES rows are numbered in the driver: the optimizer
+            # evaluates a projection over a LocalRelation as one
+            # partition, where monotonically_increasing_id() is the
+            # row's position, and as_local fixes the result
+            local = ingest.as_local(
+                out.withColumn(_ROW, F.monotonically_increasing_id())
+            )
+            if local is not None:
+                out, pos = local, F.col(_ROW)
+            else:
+                # a sequence over distributed rows is a serialization
+                # point: the row_number window makes the batch one
+                # partition (at bulk-load scale use explicit keys, as
+                # the reference's cpimport reserves one range per
+                # import)
+                pos = F.row_number().over(
+                    Window.orderBy(F.monotonically_increasing_id())
+                ) - 1
+            if not out.where(F.col(acol).isNull()).isEmpty():
                 # LAST_INSERT_ID(): first auto-generated value of
                 # the batch (MariaDB contract)
                 self._last_insert_id = int(ai["next"])
@@ -1913,14 +1935,11 @@ class Engine:
                 acol,
                 F.when(
                     F.col(acol).isNull(),
-                    (
-                        F.lit(int(ai["next"]) - 1)
-                        + F.row_number().over(
-                            Window.orderBy(F.monotonically_increasing_id())
-                        )
-                    ).cast(target.schema[acol].dataType),
+                    (F.lit(int(ai["next"])) + pos).cast(
+                        target.schema[acol].dataType
+                    ),
                 ).otherwise(F.col(acol)),
-            )
+            ).drop(_ROW)
         checks = evo.get("checks", [])
         if not p.ignore:
             validate_checks(out, checks)
@@ -1931,10 +1950,9 @@ class Engine:
             # for NOT NULL violations; here NOT NULL is modelled as a
             # CHECK, so such rows are skipped too (deterministic, no
             # silent zero-fill).
-            n_before = out.count()
+            n_skipped = ingest.check_violations(out, checks)[1]
             for c in checks:
                 out = out.where(F.coalesce(F.expr(c["expr"]), F.lit(True)))
-            n_skipped = n_before - out.count()
             if n_skipped:
                 self._warnings = [(
                     "Warning",
@@ -1979,14 +1997,22 @@ class Engine:
             n = self._append(path, out, rows=local_src)
         if ai:
             # counter = table max + 1 (covers both assigned and explicit
-            # values; parquet footer stats make the max a metadata-only
-            # scan)
-            mx = (
-                self.spark.read.schema(manifest.state(self.spark, path).schema)
-                .parquet(path)
-                .agg(F.max(ai["column"]))
-                .first()[0]
-            )
+            # values), from the footers' max statistics; a scan only
+            # when a row group has none (and is not all NULL)
+            stats = maintenance.extent_map(self.spark, path, [ai["column"]])
+            if all(e["max"] is not None or e["null_count"] == e["num_rows"]
+                   for e in stats):
+                mx = max((e["max"] for e in stats if e["max"] is not None),
+                         default=None)
+            else:
+                mx = (
+                    self.spark.read.schema(
+                        manifest.state(self.spark, path).schema
+                    )
+                    .parquet(path)
+                    .agg(F.max(ai["column"]))
+                    .first()[0]
+                )
             evo["autoinc"] = {
                 "column": ai["column"],
                 "next": int(mx) + 1 if mx is not None else int(ai["next"]),

@@ -22,8 +22,8 @@ table's next read schema, so a DELETE or UPDATE runs one Spark job, the
 write. Every manifest use checks the recorded file set against a
 listing of the directory; anything else that changes the directory
 (another process, ROLLBACK) makes the next use rebuild the
-state with one ``mergeSchema`` read, so correctness never depends on a
-writer remembering to record.
+state from the files' footers, read in the driver without a Spark job,
+so correctness never depends on a writer remembering to record.
 
 Scale notes: the rewrite is a full scan + write of affected data only if
 you partition wisely — pass ``partition_filter`` to rewrite only the

@@ -156,6 +156,29 @@ def _arrow_type(dt):
     }.get(type(dt))
 
 
+def _local_plan(df: DataFrame):
+    """``df``'s optimized plan when it is a LocalRelation — the optimizer
+    then computed its rows in the driver, and collecting them runs no
+    Spark job — else None."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan if plan.getClass().getSimpleName() == "LocalRelation" else None
+
+
+def as_local(df: DataFrame) -> DataFrame | None:
+    """``df`` as the LocalRelation it optimizes to, its rows fixed as
+    the optimizer computed them; None when it does not optimize to one."""
+    plan = _local_plan(df)
+    if plan is None:
+        return None
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, plan
+        ),
+        spark,
+    )
+
+
 def append_rows(spark: SparkSession, path: str, df: DataFrame,
                 before) -> bool:
     """Append a literal row set as one Parquet file written by pyarrow,
@@ -206,8 +229,7 @@ def append_rows(spark: SparkSession, path: str, df: DataFrame,
         fmt = to_int.get(type(f.dataType))
         exprs.append(f"{fmt.format(c)} AS {c}" if fmt else c)
     ints = df.selectExpr(*exprs)
-    plan = ints._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
+    if _local_plan(ints) is None:
         return False
     rows = ints.collect()
     if not rows:
@@ -472,7 +494,8 @@ def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
     the directory checked against the recorded file set, then
     ``spark.read.schema(...)`` — no schema-merge job. When the listing
     does not match (another writer, a swapped directory, a first read)
-    the manifest rebuilds with one ``mergeSchema`` read first. While
+    the manifest rebuilds first, from the files' footers read in the
+    driver, also without a Spark job. While
     neither the files nor the sidecar change, every call returns the
     same DataFrame (``manifest.evolved``)."""
     from mariadb_columnstore_engine_spark.sources import manifest
@@ -597,15 +620,39 @@ def add_check_constraint(path: str, name: str, expr_sql: str) -> None:
     _write_evolution(path, evo)
 
 
-def validate_checks(df: DataFrame, checks: list[dict]) -> None:
-    """Raise if any row of ``df`` violates any constraint (predicate
-    evaluates to FALSE; NULL passes, per SQL CHECK semantics)."""
+def check_violations(df: DataFrame,
+                     checks: list[dict]) -> tuple[list[int], int]:
+    """Rows of ``df`` that violate each constraint of ``checks``
+    (predicate FALSE; NULL passes, per SQL CHECK semantics), and rows
+    that violate any. Over a LocalRelation (an ``INSERT … VALUES``) the
+    optimizer evaluates the predicates in the driver and no Spark job
+    runs; any other source runs one aggregation for all the checks."""
+    import functools
+    import operator
+
     import pyspark.sql.functions as F
 
-    for c in checks:
-        bad = df.where(
-            ~F.coalesce(F.expr(c["expr"]), F.lit(True))
-        ).count()
+    names = [f"c{i}" for i in range(len(checks))]
+    flags = df.select(*[
+        (~F.coalesce(F.expr(c["expr"]), F.lit(True))).alias(n)
+        for c, n in zip(checks, names)
+    ])
+    anyone = functools.reduce(operator.or_, map(F.col, names))
+    if _local_plan(flags) is not None:
+        rows = flags.where(anyone).collect()
+        return [sum(r[n] for r in rows) for n in names], len(rows)
+    counts = flags.agg(
+        *[F.count_if(F.col(n)) for n in names], F.count_if(anyone)
+    ).first()
+    return list(counts[:-1]), counts[-1]
+
+
+def validate_checks(df: DataFrame, checks: list[dict]) -> None:
+    """Raise if any row of ``df`` violates any constraint of ``checks``
+    (``check_violations``)."""
+    if not checks:
+        return
+    for c, bad in zip(checks, check_violations(df, checks)[0]):
         if bad:
             raise ValueError(
                 f"CHECK constraint {c['name']!r} ({c['expr']}) violated "

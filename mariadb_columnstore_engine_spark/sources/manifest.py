@@ -2,7 +2,8 @@
 from the data it describes.
 
 Reference analogue: the extent map (``EMEntry`` HWM and casual-partition
-min/max, versioning/BRM/extentmap.h). ColumnStore records a table's
+min/max, versioning/BRM/extentmap.h) and the system catalog
+(``SYSCOLUMN``, calpontsystemcatalog.h). ColumnStore records a table's
 state when data is written and never scans the data to rediscover it.
 Here the state of a Parquet table directory is:
 
@@ -13,16 +14,20 @@ Here the state of a Parquet table directory is:
   nullable, as Spark reads Parquet back) — a pure function of that file
   set and the disabled-partition set.
 
+Schemas come from the files' footers, read in the driver JVM with
+Spark's own footer reader and type mapping (``file_schemas``), so no
+Spark job runs to learn one: not for a fixture table (``read_parquet``),
+nor for a table directory.
+
 Invariant: every use lists the directory (``os.walk`` + ``stat``) and
 compares. A mismatch — another process wrote the directory, a
-ROLLBACK swapped it, or the table was just attached —
-rebuilds the state with one ``mergeSchema`` read plus local footer
-reads, so no writer has to know about the manifest for reads to stay
-correct. Writers that do (INSERT / LOAD DATA appends, copy-on-write
-rewrites and compactions) ``record`` the files they just wrote from those files'
-footers, which keeps the next statement from launching a schema-merge
-job or a ``count()``. ``read`` turns the state into the table's
-physical relation (``spark.read.schema(...)`` over the enabled files).
+ROLLBACK swapped it, or the table was just attached — rebuilds the
+state from the footers, so no writer has to know about the manifest for
+reads to stay correct. Writers that do (INSERT / LOAD DATA appends,
+copy-on-write rewrites and compactions) ``record`` the files they just
+wrote from those files' footers alone. ``read`` turns the state into the
+table's physical relation (``spark.read.schema(...)`` over the enabled
+files).
 
 Only the current files of each path are held (a rewrite replaces the
 entry; nothing is cached per file across versions). Beside each state
@@ -31,7 +36,7 @@ sits the table's logical relation (``evolved``): one DataFrame per
 sidecar has changed, so a statement builds its table's relation once,
 after its own write. The state lives in this process and is not
 persisted. Paths that list no local files (``s3a://`` URIs) are never
-cached: every use pays the Spark read.
+cached: every use pays Spark's ``mergeSchema`` read.
 """
 
 from __future__ import annotations
@@ -44,7 +49,6 @@ from types import MappingProxyType
 from typing import Callable, Mapping
 
 from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -213,21 +217,86 @@ def _merge(left: StructType, right: StructType) -> StructType | None:
     return StructType(fields)
 
 
-def _footers_merged(path: str, rels: list[str]) -> StructType | None:
-    """``_merge`` over the footer schemas of the files ``rels``; None
-    when a file is not Spark-written or sits in a partition directory
-    (Spark infers partition columns), or the schemas do not merge."""
-    schema = None
-    for rel in rels:
-        file_schema = _footer(os.path.join(path, rel))[1]
-        if os.path.dirname(rel) or file_schema is None:
+def file_schemas(spark: SparkSession, files: list[str]) -> list:
+    """Spark's schema of each Parquet file of ``files``, as JVM
+    ``StructType`` objects: the footers are read in the driver JVM by
+    Spark's own reader and type mapping, through py4j
+    (``ParquetFileFormat.readParquetFootersInParallel``, then
+    ``readSchemaFromFooter`` under the session's Parquet conf). That is
+    what Spark's schema inference runs in a job; here no job runs."""
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    fmt = getattr(getattr(parquet, "ParquetFileFormat$"), "MODULE$")
+    session = spark._jsparkSession.sessionState()
+    conf = session.newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path
+    fs = path(files[0]).getFileSystem(conf)
+    footers = fmt.readParquetFootersInParallel(
+        conf, jvm.PythonUtils.toSeq([fs.getFileStatus(path(f)) for f in files]),
+        False,
+    )
+    converter = parquet.ParquetToSparkSchemaConverter(session.conf())
+    return [
+        fmt.readSchemaFromFooter(footers.apply(i), converter)
+        for i in range(len(files))
+    ]
+
+
+def _python(schema) -> StructType:
+    """A JVM ``StructType`` as read back (``asNullable``), in Python."""
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def _first_file(path: str) -> str | None:
+    """The data file Spark infers ``path``'s schema from without
+    ``mergeSchema``: the path itself, or the first data file by path."""
+    if os.path.isfile(path):
+        return path
+    files = sorted(partitions(path).values())
+    return files[0] if files else None
+
+
+def read_parquet(spark: SparkSession, paths: list[str]) -> list[DataFrame]:
+    """``[spark.read.parquet(p) for p in paths]`` without a schema
+    inference job per path: each relation is built with the schema that
+    inference gives, that of the path's first data file (``k=v``
+    partition columns are still inferred from the directory names), and
+    the footers of all paths are read in one batch. A path with no local
+    data file is left to Spark's read."""
+    firsts = {p: _first_file(p) for p in paths}
+    local = [f for f in firsts.values() if f is not None]
+    schemas = dict(zip(local, file_schemas(spark, local))) if local else {}
+    return [
+        spark.read.schema(_python(schemas[firsts[p]])).parquet(p)
+        if firsts[p] is not None else spark.read.parquet(p)
+        for p in paths
+    ]
+
+
+def _merged(spark: SparkSession, files: list[str]) -> StructType | None:
+    """The schema a ``mergeSchema`` read of ``files`` gives (partition
+    columns aside): their footer schemas merged in path order with
+    Spark's ``StructType.merge`` under the session's case sensitivity,
+    as that read merges them. Where Spark refuses a pair its reader
+    widens on read, ``_merge`` stands in; None when that fails too."""
+    schemas = file_schemas(spark, sorted(files))
+    case_sensitive = (
+        spark._jsparkSession.sessionState().conf().caseSensitiveAnalysis()
+    )
+    merged = schemas[0]
+    try:
+        for schema in schemas[1:]:
+            merged = merged.merge(schema, case_sensitive)
+    except Py4JJavaError:
+        merged = None
+    if merged is not None:
+        return _python(merged)
+    out = None
+    for schema in map(_python, schemas):
+        out = schema if out is None else _merge(out, schema)
+        if out is None:
             return None
-        schema = file_schema if schema is None else _merge(
-            schema, file_schema
-        )
-        if schema is None:
-            return None
-    return schema
+    return out
 
 
 def _matches(st: TableState, listing: dict, disabled: frozenset) -> bool:
@@ -257,20 +326,23 @@ def _scan(reader: DataFrameReader, path: str, live: list[str],
 
 def _rebuild(spark: SparkSession, path: str, listing: dict,
              disabled: frozenset) -> TableState:
-    """The one ``mergeSchema`` read, plus local footer reads for the
-    row counts. Where Spark refuses to merge types its reader widens on
-    read, the footers' widened merge stands in."""
+    """The state from the files: the merged footer schema of the enabled
+    files (of all files while none is enabled) and their row counts, no
+    Spark job. ``k=v`` partition columns come from the relation built
+    over that schema, as Spark infers them from the directory names.
+    Spark's ``mergeSchema`` read stands in where no file is local, and
+    where the schemas do not merge (it merges them or raises)."""
     live_rels = [rel for rel in listing if rel not in disabled]
     live = [os.path.join(path, rel) for rel in live_rels]
-    reader = spark.read.option("mergeSchema", "true")
-    try:
-        schema = _scan(reader, path, live, disabled).schema
-    except (Py4JJavaError, PySparkException) as e:
-        schema = "CANNOT_MERGE_SCHEMAS" in str(e) and _footers_merged(
-            path, live_rels
-        )
-        if not schema:
-            raise
+    rels = live_rels or list(listing)
+    schema = _merged(spark, [os.path.join(path, r) for r in rels]) \
+        if rels else None
+    if schema is None:
+        schema = _scan(spark.read.option("mergeSchema", "true"), path,
+                       live, disabled).schema
+    elif any(os.path.dirname(rel) for rel in rels):
+        schema = _scan(spark.read.schema(schema), path, live,
+                       disabled).schema
     files = {
         rel: DataFile(size, mtime, _footer(os.path.join(path, rel))[0])
         for rel, (size, mtime) in listing.items()

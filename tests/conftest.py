@@ -11,6 +11,7 @@ import contextlib
 import os
 import sys
 import threading
+import uuid
 
 import pytest
 
@@ -78,3 +79,21 @@ def py4j_calls(spark):
             del client.send_command
 
     return counting
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → (``fn()``, the Spark jobs it ran): the jobs
+    of a private job group set on this thread around the call."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -13,7 +13,6 @@
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 
@@ -34,18 +33,6 @@ _VALUES = (
     "(-5, -1, -0.01, -2.5e10, '0001-01-01', '1900-01-01 00:00:00', "
     "'1970-01-01 00:00:00', '')"
 )
-
-
-def _jobs(spark, fn):
-    """(result, Spark jobs fn ran) under a private job group."""
-    sc = spark.sparkContext
-    group = f"small-dml-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -73,24 +60,23 @@ def _typed_table(spark, eng, tmp_path, name):
 
 
 def test_row_path_reads_back_like_spark_path(spark, eng, tmp_path,
-                                             monkeypatch):
+                                             monkeypatch, spark_jobs):
     rows_path = _typed_table(spark, eng, tmp_path, "by_rows")
     spark_path = _typed_table(spark, eng, tmp_path, "by_spark")
-    n, jobs = _jobs(
-        spark, lambda: eng.execute(f"INSERT INTO by_rows VALUES {_VALUES}")
+    n, jobs = spark_jobs(
+        lambda: eng.execute(f"INSERT INTO by_rows VALUES {_VALUES}")
     )
     assert (n, jobs) == (3, 0)
     with monkeypatch.context() as m:
         m.setattr(ingest, "append_rows", lambda *a: False)
-        n, jobs = _jobs(
-            spark,
+        n, jobs = spark_jobs(
             lambda: eng.execute(f"INSERT INTO by_spark VALUES {_VALUES}"),
         )
     assert (n, jobs) == (3, 1)
     want = _rows(read_table_evolved(spark, spark_path))
     assert len(want) == 3
     # warm: the footer's Spark schema recorded the file, no schema read
-    warm, jobs = _jobs(spark, lambda: read_table_evolved(spark, rows_path))
+    warm, jobs = spark_jobs(lambda: read_table_evolved(spark, rows_path))
     assert jobs == 0
     assert warm.schema == read_table_evolved(spark, spark_path).schema
     assert _rows(warm) == want
@@ -103,10 +89,10 @@ def test_row_path_reads_back_like_spark_path(spark, eng, tmp_path,
     assert _rows(plain) == _rows(spark.read.parquet(spark_path))
 
 
-def test_row_path_writes_one_part_file(spark, eng):
+def test_row_path_writes_one_part_file(spark, eng, spark_jobs):
     path = eng._user_tables["sd"]["path"]
     before = set(os.listdir(path))
-    assert _jobs(spark, lambda: eng.execute(
+    assert spark_jobs(lambda: eng.execute(
         "INSERT INTO sd VALUES (3, 30, 'c'), (4, 40, 'd')"
     )) == (4, 0)
     added = set(os.listdir(path)) - before
@@ -116,10 +102,92 @@ def test_row_path_writes_one_part_file(spark, eng):
     assert manifest.state(spark, path).files[name].rows == 2
 
 
-def test_insert_select_keeps_spark_path(spark, eng):
-    assert _jobs(spark, lambda: eng.execute(
+def test_insert_select_keeps_spark_path(eng, spark_jobs):
+    assert spark_jobs(lambda: eng.execute(
         "INSERT INTO sd SELECT id + 2, amount, tag FROM sd"
     )) == (4, 1)
+
+
+def test_not_null_values_insert_runs_no_job(eng, spark_jobs):
+    """A VALUES list's CHECKs (NOT NULL included) are evaluated over its
+    LocalRelation in the driver (one Spark job per CHECK before)."""
+    eng.execute("CREATE TABLE nn (id INT NOT NULL, v INT)")
+    assert spark_jobs(
+        lambda: eng.execute("INSERT INTO nn VALUES (1, 2)")
+    ) == (1, 0)
+    with pytest.raises(ValueError, match="id_not_null"):
+        eng.execute("INSERT INTO nn VALUES (3, 4), (NULL, 5)")
+    assert spark_jobs(lambda: eng.execute(
+        "INSERT IGNORE INTO nn VALUES (NULL, 6), (7, 8)"
+    )) == (2, 0)
+    assert [w[1] for w in eng._warnings] == [4025]
+    assert sorted(
+        tuple(r) for r in eng.execute("SELECT * FROM nn").collect()
+    ) == [(1, 2), (7, 8)]
+
+
+def test_checks_over_a_query_share_one_aggregation(eng, spark_jobs):
+    """An INSERT … SELECT evaluates all CHECKs in one aggregation: a
+    second CHECK adds no Spark job (two before: a count per CHECK)."""
+    eng.execute("CREATE TABLE ck (id INT NOT NULL, v INT)")
+    sql = "INSERT INTO ck SELECT id, amount FROM sd"
+    one = spark_jobs(lambda: eng.execute(sql))
+    eng.execute("ALTER TABLE ck ADD CONSTRAINT v_pos CHECK (v > 0)")
+    two = spark_jobs(lambda: eng.execute(sql))
+    assert (one[0], two[0]) == (2, 4)
+    assert two[1] == one[1]
+    with pytest.raises(ValueError, match="v_pos.*by 2 row"):
+        eng.execute("INSERT INTO ck SELECT id, -amount FROM sd")
+
+
+def test_auto_increment_values_insert_runs_no_job(eng, spark_jobs,
+                                                  monkeypatch):
+    """VALUES rows are numbered in the driver and the counter advances
+    from footer statistics (six Spark jobs before); the rows get the ids
+    the Spark path gives them."""
+    eng.execute("CREATE TABLE ai (id INT AUTO_INCREMENT PRIMARY KEY, v INT)")
+    eng.execute("CREATE TABLE ai2 (id INT AUTO_INCREMENT PRIMARY KEY, v INT)")
+    assert spark_jobs(
+        lambda: eng.execute("INSERT INTO ai (v) VALUES (2)")
+    ) == (1, 0)
+    mixed = "(id, v) VALUES (NULL, 3), (50, 4), (NULL, 5)"
+    assert spark_jobs(
+        lambda: eng.execute(f"INSERT INTO ai {mixed}")
+    ) == (4, 0)
+    assert eng.execute("SELECT LAST_INSERT_ID()") == 2
+    eng.execute("INSERT INTO ai (v) VALUES (6)")
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "as_local", lambda df: None)
+        eng.execute("INSERT INTO ai2 (v) VALUES (2)")
+        eng.execute(f"INSERT INTO ai2 {mixed}")
+        assert eng.execute("SELECT LAST_INSERT_ID()") == 2
+        eng.execute("INSERT INTO ai2 (v) VALUES (6)")
+    got = sorted(tuple(r) for r in eng.execute("SELECT * FROM ai").collect())
+    assert got == [(1, 2), (2, 3), (4, 5), (50, 4), (51, 6)]
+    assert got == sorted(
+        tuple(r) for r in eng.execute("SELECT * FROM ai2").collect()
+    )
+
+
+def test_auto_increment_scans_a_file_without_statistics(eng, spark_jobs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng.execute("CREATE TABLE ai (id INT AUTO_INCREMENT PRIMARY KEY, v INT)")
+    eng.execute("INSERT INTO ai (v) VALUES (1)")
+    path = eng._user_tables["ai"]["path"]
+    pq.write_table(
+        pa.table({"id": pa.array([70], pa.int32()),
+                  "v": pa.array([7], pa.int32())}),
+        os.path.join(path, "part-nostats.parquet"), write_statistics=False,
+    )
+    # the counter scans the table for its max, 70
+    n, jobs = spark_jobs(lambda: eng.execute("INSERT INTO ai (v) VALUES (2)"))
+    assert n == 3 and jobs > 0
+    eng.execute("INSERT INTO ai (v) VALUES (3)")
+    assert sorted(
+        tuple(r) for r in eng.execute("SELECT * FROM ai").collect()
+    ) == [(1, 1), (2, 2), (70, 7), (71, 3)]
 
 
 def test_rollback_across_row_path_file(spark, eng):
